@@ -2,11 +2,20 @@
 ``BirliContext::from_args``, src/cli.rs:622-1518) so a user of the
 reference can switch with the flags they already use. Staged semantic
 analysis into plain context structs — the same "IR" design (SURVEY.md
-§3.1) — then a Spark plan assembled from the operator library.
+§3.1) — then ONE flowchart (:func:`build_baked`) assembled from the
+operator library as named stages: select → rule-flag → gate → correct →
+RFI → geometry → calibrate → bake, then chunking/averaging
+(:func:`build_plan`) and the sinks.
+
+The stages run over an :class:`Observation`: the synthetic sf directory
+(TESTDATA.md) or a metafits + gpubox archive (``real_input.py``).
+:func:`run` builds it and the baked plan once; every sink reads that
+one plan.
 
 Supported subset (the operators implemented in this engine):
 selection (``--sel-time``, ``--sel-ants``, ``--sel-chan-ranges``,
-``--no-sel-autos``, ``--no-sel-flagged-ants``), flagging
+``--no-sel-autos``, ``--no-sel-flagged-ants``, ``--timestep-limit``,
+``--baseline-limit``), flagging
 (``--flag-times``, ``--flag-antennas``, ``--flag-fine-chans``,
 ``--flag-coarse-chans``, ``--flag-edge-chans``/``--flag-edge-width``,
 ``--flag-dc``/``--no-flag-dc``, ``--flag-autos``,
@@ -16,22 +25,19 @@ corrections (``--no-cable-delay``, ``--no-digital-gains``,
 ``--pfb-gains``/``--passband-gains`` incl. auto/oversampled/deripple
 arms), ``--apply-di-cal``, averaging (``--avg-time-factor``,
 ``--avg-freq-factor``, resolution variants), chunking
-(``--time-chunk``, ``--max-memory``), sinks (``-f`` mwaf template dir,
-``-u`` uvfits path, ``-M`` MS MAIN-schema parquet dir,
-``--flag-parquet``), ``--dry-run``.
-
-Input is the synthetic sf directory (stands in for metafits+gpubox; the
-gpubox FITS path exists via ``sources/gpubox.py`` but the driver test
-data is parquet).
+(``--time-chunk``, ``--max-memory``), sinks (``-f`` mwaf dir, ``-u``
+uvfits path, ``-M`` MS dir, ``--flag-parquet``), ``--dry-run``.
 """
 
 from __future__ import annotations
 
 import argparse
+import math
 import sys
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from birli_spark import pipeline
@@ -418,8 +424,6 @@ def parse_args(argv: list[str]) -> Context:
             if a.flag_edge_width is not None else a.flag_edge_chans),
         flag_dc=pipeline.IS_LEGACY if a.flag_dc is None else a.flag_dc,
         flag_autos=a.flag_autos,
-        # steps variants override the seconds forms (reference converts
-        # N steps to N * int_time seconds, src/cli.rs:1141-1146)
         # steps variants carry through RAW: they convert to seconds
         # with the OBSERVATION's int_time (reference src/cli.rs:
         # 1141-1146), which in real mode comes from the metafits, not
@@ -502,10 +506,12 @@ def _selected_dims(ctx: Context) -> tuple[int, int, int] | None:
     return n_t, n_bl, n_chan
 
 
-def build_plan(spark: SparkSession, ctx: Context) -> DataFrame:
+def build_plan(spark: SparkSession, ctx: Context,
+               baked: DataFrame | None = None) -> DataFrame:
     """Assemble the DataFrame plan from the context (reference
-    ``BirliContext::run``, src/cli.rs:1584-1954)."""
-    vis = build_baked(spark, ctx)
+    ``BirliContext::run``, src/cli.rs:1584-1954): the baked flowchart
+    (``baked``, or :func:`build_baked`'s) chunked and averaged."""
+    vis = baked if baked is not None else build_baked(spark, ctx)
     chunk = ctx.time_chunk
     if chunk is None and ctx.max_memory_gib is not None:
         # --max-memory estimates --time-chunk from a per-chunk budget
@@ -531,60 +537,177 @@ def build_plan(spark: SparkSession, ctx: Context) -> DataFrame:
     return vis
 
 
-def build_baked(spark: SparkSession, ctx: Context) -> DataFrame:
-    """The context-built pipeline up to (and including) flag→weight
-    baking, before chunking/averaging — the state every sink consumes,
-    so -u and -M outputs of one invocation agree on the same plan."""
+class Observation:
+    """The flowchart's input and everything that differs between inputs;
+    :func:`build_baked` reads its input through these members only.
+    Implemented by :class:`SyntheticObservation` and
+    ``real_input.ArchiveObservation``.
+
+    Scalars: ``gps_start``, ``int_time_s``, ``obs_end_gps`` (end of the
+    timestep flag window), ``n_fine`` (per coarse channel), ``n_chan``,
+    ``quack_s`` (when the CLI sets none), ``vv_sample_scale``,
+    ``rfi_payload`` (pol dtype at the slim RFI-island boundary), the
+    sinks' time anchors ``uvfits_gps`` / ``ms_gps`` and
+    ``uvfits_uvw_unit_m``. Dims: ``antennas``, ``timesteps`` (every
+    scan), ``digital_gains``. Methods: ``scan()`` (the canonical vis
+    relation), ``provided_channels(vis)``, ``cell_gate(spark, rules,
+    bl_pred)`` (the v0.18 gate, or None to aggregate it from the fact),
+    ``derived_columns()`` (freq_hz / ts_gps / weight over the keys),
+    ``part_uvw(spark, ctx)`` (None when no phase centre is known).
+    """
+
+
+class SyntheticObservation(Observation):
+    """The synthetic sf-dir surface: module-constant dims, a fact whose
+    rows carry pre-existing flags and duplicate cells."""
+
+    gps_start = syn.GPS_START
+    int_time_s = syn.INT_TIME_S
+    obs_end_gps = pipeline.OBS_END_GPS
+    n_fine = syn.NUM_FC
+    n_chan = syn.NUM_CC * syn.NUM_FC
+    quack_s = 0.0
+    vv_sample_scale = syn.VV_SAMPLE_SCALE
+    rfi_payload = "double"
+    uvfits_gps = ms_gps = syn.GPS_START
+    uvfits_uvw_unit_m = 1.0
+
+    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
+        self.spark, self.sf_dir = spark, sf_dir
+        self.antennas = syn.load_dim(spark, "antennas")
+        self.timesteps = syn.load_dim(spark, "timesteps")
+        self.digital_gains = syn.load_dim(spark, "digital_gains")
+
+    def scan(self) -> DataFrame:
+        return syn.load_vis(self.spark, self.sf_dir)
+
+    def provided_channels(self, vis: DataFrame) -> DataFrame:
+        provided = [r.cc for r in vis.select("cc").distinct().collect()]
+        return vis.filter(F.col("cc").isin(provided))
+
+    def cell_gate(self, spark, rules, bl_pred) -> None:
+        # the fact's own pre-existing flags and duplicate cells are not
+        # described by the rule dims: aggregate the gate from the fact
+        return None
+
+    def derived_columns(self) -> dict:
+        return {
+            "freq_hz": F.expr(f"CAST({syn.BASE_FREQ_HZ:.1f} + chan * "
+                              f"{syn.FINE_CHAN_WIDTH_HZ:.1f} AS DOUBLE)"),
+            "ts_gps": F.expr(f"CAST({syn.GPS_START:.1f} + t * "
+                             f"{syn.INT_TIME_S} + {syn.INT_TIME_S / 2}"
+                             f" AS DOUBLE)"),
+            "weight": F.lit(syn.WEIGHT_FACTOR).cast("double"),
+        }
+
+    def part_uvw(self, spark, ctx) -> DataFrame:
+        if not (ctx.phase_centre or ctx.pointing_centre):
+            return syn.load_dim(spark, "part_uvw")
+        from birli_spark.operators import precession as prc
+
+        # default pointing centre for the synthetic obs: zenith-ish
+        ra_deg, dec_deg = ctx.phase_centre or (75.0, -26.7)
+        lat = prc.COTTER_LAT_RAD if ctx.emulate_cotter else prc.MWA_LAT_RAD
+        lon = prc.COTTER_LON_RAD if ctx.emulate_cotter else prc.MWA_LON_RAD
+        if ctx.precess:
+            return precessed_part_uvw(
+                spark, self.antennas, ra_deg, dec_deg, syn.GPS_START,
+                syn.INT_TIME_S, syn.NUM_T, ctx.dut1, lon, lat)
+        from birli_spark.operators import geometry
+        return geometry.part_uvw_table(
+            spark, self.antennas, syn.NUM_T,
+            ra_rad=math.radians(ra_deg), dec_rad=math.radians(dec_deg),
+            lst0_rad=1.0, int_time_s=syn.INT_TIME_S, lat_rad=lat)
+
+
+def observation(spark: SparkSession, ctx: Context) -> Observation:
+    """The invocation's input: a metafits + gpubox archive, or the
+    synthetic sf directory."""
     if ctx.metafits and ctx.gpubox:
         from birli_spark import real_input
-        baked, _meta = real_input.build_baked_real(
-            spark, ctx, ctx.metafits, ctx.gpubox)
-        return baked
-    vis = syn.load_vis(spark, ctx.sf_dir)
+        return real_input.ArchiveObservation(spark, ctx.metafits,
+                                             ctx.gpubox)
+    return SyntheticObservation(spark, ctx.sf_dir)
 
-    # selection (P1-P4)
+
+def precessed_part_uvw(spark: SparkSession, antennas: DataFrame,
+                       ra_deg: float, dec_deg: float, gps_start: float,
+                       int_time_s: float, num_t: int, dut1_s: float,
+                       lon_rad: float, lat_rad: float) -> DataFrame:
+    """Partial UVWs through the IAU-2006 precessed chain
+    (operators/precession.py)."""
+    from birli_spark.functions import textsql as X
+    from birli_spark.operators import precession as prc
+
+    antennas.createOrReplaceTempView("flowchart_antennas")
+    return spark.sql(prc.part_uvw_precessed_sql(
+        X.SPARK, ra_rad=math.radians(ra_deg),
+        dec_rad=math.radians(dec_deg), gps_start=gps_start,
+        int_time_s=int_time_s, num_t=num_t,
+        antennas="flowchart_antennas", dut1_s=dut1_s,
+        lon_rad=lon_rad, lat_rad=lat_rad))
+
+
+class RuleDims(NamedTuple):
+    """(t, ts_flag), (ant1, ant2, bl_flag), the (cc, fc) predicate."""
+    ts: DataFrame
+    bl: DataFrame
+    chan_pred: Column
+
+
+def baseline_predicate(ctx: Context, obs: Observation):
+    """The selected baselines (selection.baseline_selection_predicate),
+    shared by the vis-side selection and the archive gate pool."""
+    flagged = ([r.ant for r in obs.antennas.filter("flagged").collect()]
+               if ctx.no_sel_flagged_ants else None)
+    return selection.baseline_selection_predicate(
+        ctx.sel_ants, flagged, ctx.no_sel_autos, ctx.baseline_limit)
+
+
+def stage_select(ctx: Context, obs: Observation, vis: DataFrame,
+                 bl_pred) -> DataFrame:
+    """P1-P4 plus the --timestep-limit / --baseline-limit truncations."""
     if ctx.sel_time:
         vis = selection.select_ranges(vis, t_min=ctx.sel_time[0],
                                       t_max=ctx.sel_time[1] + 1)
+    if ctx.timestep_limit is not None:
+        vis = selection.select_ranges(vis, t_max=ctx.timestep_limit)
     if ctx.sel_chan_ranges:
         from birli_spark.operators import picket
         ccs = [cc for lo, hi in picket.parse_ranges(ctx.sel_chan_ranges)
                for cc in range(lo, hi + 1)]
-        vis = vis.filter(F.col("cc").isin(ccs))
-    if ctx.sel_ants:
-        vis = selection.retain_antennas(vis, tuple(ctx.sel_ants))
-    if ctx.no_sel_flagged_ants:
-        ants = syn.load_dim(spark, "antennas").filter(F.col("flagged"))
-        vis = selection.filter_antennas(vis, ants)
-    if ctx.no_sel_autos:
-        vis = selection.filter_autos(vis)
-    if ctx.timestep_limit is not None:
-        vis = vis.filter(F.col("t") < ctx.timestep_limit)
-    if ctx.baseline_limit is not None:
-        vis = vis.filter(F.col("bl") < ctx.baseline_limit)
+        vis = selection.select_ranges(vis, coarse_chans=ccs)
+    if bl_pred is not None:
+        vis = vis.filter(bl_pred)
     if ctx.provided_chan_ranges and not ctx.sel_chan_ranges:
-        # restrict to the coarse channels the input actually carries —
-        # meaningful on picket-fence inputs with absent gpubox files
-        provided = [r.cc for r in vis.select("cc").distinct().collect()]
-        vis = vis.filter(F.col("cc").isin(provided))
+        vis = obs.provided_channels(vis)
+    return vis
 
-    # flags (F1-F7) precede the corrections: since v0.18.0 the
-    # reference gates Van Vleck / cable / digital / passband on the
-    # cell's unflagged timestep ranges (src/preprocessing.rs:249-253,
-    # RELEASES.md:17-19), so the flag state must exist first
-    ts = syn.load_dim(spark, "timesteps")
-    ants = syn.load_dim(spark, "antennas")
-    quack_s = (ctx.flag_init_steps * syn.INT_TIME_S
-               if ctx.flag_init_steps is not None
-               else (ctx.quack_time or 0.0))
-    flag_end_s = (ctx.flag_end_steps * syn.INT_TIME_S
+
+def stage_rule_flags(ctx: Context, obs: Observation, vis: DataFrame
+                     ) -> tuple[DataFrame, RuleDims]:
+    """F1-F7 OR-ed into the fact. They precede the corrections: since
+    v0.18.0 the reference gates Van Vleck / cable / digital / passband
+    on the cell's unflagged timestep ranges (src/preprocessing.rs:
+    249-253, RELEASES.md:17-19), so the flag state must exist first."""
+    # None = the observation's default; an explicit --quack-time 0
+    # DISABLES quack (reference --flag-init). Steps variants convert
+    # with THIS observation's int_time (src/cli.rs:1141-1146).
+    if ctx.flag_init_steps is not None:
+        quack_s = ctx.flag_init_steps * obs.int_time_s
+    elif ctx.quack_time is not None:
+        quack_s = ctx.quack_time
+    else:
+        quack_s = obs.quack_s
+    flag_end_s = (ctx.flag_end_steps * obs.int_time_s
                   if ctx.flag_end_steps is not None else ctx.flag_end)
     ts_f = flags.flag_timesteps_quack(
-        ts, syn.GPS_START, pipeline.OBS_END_GPS,
+        obs.timesteps, obs.gps_start, obs.obs_end_gps,
         quack_s=quack_s, flag_end_s=flag_end_s)
     if ctx.flag_times:
         ts_f = ts_f.withColumn(
             "ts_flag", F.col("ts_flag") | F.col("t").isin(ctx.flag_times))
+    ants = obs.antennas
     if ctx.no_flag_metafits:
         # ignore antenna flags in the metadata; explicit --flag-antennas
         # still applies (reference src/cli.rs:1029)
@@ -593,114 +716,139 @@ def build_baked(spark: SparkSession, ctx: Context) -> DataFrame:
         ants = ants.withColumn(
             "flagged", F.col("flagged") | F.col("ant").isin(ctx.flag_antennas))
     bl_f = flags.baseline_flags(ants, flag_autos=ctx.flag_autos)
-    fc_pred = flags.flag_fine_channels(
-        syn.NUM_FC, n_edge=ctx.flag_edge_chans, is_legacy=ctx.flag_dc,
+    chan_pred = flags.flag_fine_channels(
+        obs.n_fine, n_edge=ctx.flag_edge_chans, is_legacy=ctx.flag_dc,
         explicit_fcs=tuple(ctx.flag_fine_chans))
-    cc_f = None
     if ctx.flag_coarse_chans:
-        # coarse-chan flags expand to all their fine chans through the
-        # (cc) join key (reference src/flags.rs:195-204)
-        cc_f = spark.createDataFrame(
-            [(cc, True) for cc in ctx.flag_coarse_chans], "cc int, cc_flag boolean")
-    vis = flags.set_flags(vis, ts_f, bl_f, fc_pred, cc_flags=cc_f)
+        # coarse-chan flags cover all their fine chans
+        # (reference src/flags.rs:195-204)
+        chan_pred = chan_pred | F.col("cc").isin(list(ctx.flag_coarse_chans))
+    rules = RuleDims(ts_f, bl_f, chan_pred)
+    return flags.set_flags(vis, ts_f, bl_f, chan_pred), rules
 
-    # corrections (C1, C2, C4, C5, C3, C6) under the v0.18.0 flag gate
-    vis = corrections.attach_cell_gate(vis)
+
+def stage_gate(spark: SparkSession, obs: Observation, vis: DataFrame,
+               rules: RuleDims, bl_pred) -> DataFrame:
+    """The v0.18 (t, cc) flag gate the corrections run under."""
+    return corrections.attach_cell_gate(
+        vis, gate=obs.cell_gate(spark, rules, bl_pred))
+
+
+def stage_correct(spark: SparkSession, ctx: Context, obs: Observation,
+                  vis: DataFrame) -> DataFrame:
+    """C1 Van Vleck, C2 cable, C4 digital gains, C5 passband — each
+    gated — then the gate column leaves."""
     if ctx.van_vleck:
         from birli_spark.operators import vanvleck
         vis = vanvleck.correct_van_vleck(
-            vis, syn.VV_SAMPLE_SCALE, flagged_ants=ctx.flag_antennas or None,
+            vis, obs.vv_sample_scale, flagged_ants=ctx.flag_antennas or None,
             gate_col=corrections.GATE_COL)
     if not ctx.no_cable_delay:
-        vis = corrections.correct_cable_lengths(vis, ants, gated=True)
+        vis = corrections.correct_cable_lengths(vis, obs.antennas, gated=True)
     if not ctx.no_digital_gains:
-        vis = corrections.correct_digital_gains(
-            vis, syn.load_dim(spark, "digital_gains"), gated=True)
+        vis = corrections.correct_digital_gains(vis, obs.digital_gains,
+                                                gated=True)
     if ctx.pfb_gains != "none":
-        if ctx.pfb_gains in ("cotter", "jake", "jake_oversampled"):
-            # the REAL published tables (the legacy one validated
-            # against the reference's pfb-cotter-40 golden dump),
-            # scrunched onto the synthetic obs's fine grid: legacy =
-            # Simple block mean, MWAX = center-symmetric window
-            from birli_spark.functions import pfb_tables as PT
-            table = {"cotter": PT.PFB_COTTER_2014_10KHZ,
-                     "jake": PT.PFB_JAKE_2022_200HZ,
-                     "jake_oversampled": PT.OSPFB_JAKE_2025_200HZ}[
-                ctx.pfb_gains]
-            # fine_gain_rows raises on a non-divisible channelization
-            # (the reference rejects it with BadArrayShape,
-            # src/corrections.rs:489) instead of letting floor division
-            # silently misalign the scrunched curve
-            rows = corrections.fine_gain_rows(
-                table, syn.NUM_FC,
-                center_symmetric=ctx.pfb_gains != "cotter")
-            fine_gains = spark.createDataFrame(
-                rows, "fc int, gain double")
-        else:
-            fine_gains = spark.sql(
-                corrections.fine_gains_values_sql(pipeline.FINE_GAIN_ROWS))
-        vis = corrections.correct_passband_gains(vis, fine_gains, gated=True)
-    vis = vis.drop(corrections.GATE_COL)
-    if not ctx.no_rfi:
-        if ctx.ssins:
-            from birli_spark.operators import ssins as ssins_op
-            vis = ssins_op.ssins_flag_vis(vis, threshold=ctx.ssins_threshold)
-        elif ctx.rfi_iterative or ctx.rfi_strategy == "generic":
-            from birli_spark.operators import rfi
-            vis = rfi.flag_rfi_strategy(
-                vis, base_sensitivity=ctx.rfi_sensitivity,
-                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2)
-        elif ctx.rfi_strategy == "mwa":
-            # the reference's DEFAULT: FindStrategyFileMWA ->
-            # mwa-default.lua via FFI (src/flags.rs:354-437)
-            from birli_spark.operators import rfi
-            vis = rfi.flag_rfi_mwa(
-                vis, base_sensitivity=ctx.rfi_sensitivity,
-                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2,
-                impl=ctx.rfi_impl)
-        else:
-            from birli_spark.operators import rfi
-            vis = rfi.flag_rfi(vis, base_sensitivity=ctx.rfi_sensitivity,
-                               sir_eta=ctx.sir_eta)
-    if not ctx.no_geometric_delay:
-        if ctx.phase_centre or ctx.pointing_centre:
-            import math
+        # the REAL published tables, scrunched onto the observation's
+        # fine grid (fine_gain_rows raises on a non-divisible
+        # channelization, the reference's BadArrayShape)
+        from birli_spark.functions import pfb_tables as PT
+        table = {"cotter": PT.PFB_COTTER_2014_10KHZ,
+                 "jake": PT.PFB_JAKE_2022_200HZ,
+                 "jake_oversampled": PT.OSPFB_JAKE_2025_200HZ}[ctx.pfb_gains]
+        rows = corrections.fine_gain_rows(
+            table, obs.n_fine, center_symmetric=ctx.pfb_gains != "cotter")
+        vis = corrections.correct_passband_gains(
+            vis, spark.createDataFrame(rows, "fc int, gain double"),
+            gated=True)
+    return vis.drop(corrections.GATE_COL)
 
-            # default pointing centre for the synthetic obs: zenith-ish
-            ra_deg, dec_deg = (ctx.phase_centre if ctx.phase_centre
-                               else (75.0, -26.7))
-            from birli_spark.operators import precession as prc
-            lat = (prc.COTTER_LAT_RAD if ctx.emulate_cotter
-                   else prc.MWA_LAT_RAD)
-            lon = (prc.COTTER_LON_RAD if ctx.emulate_cotter
-                   else prc.MWA_LON_RAD)
-            if ctx.precess:
-                from birli_spark.functions import textsql as X
-                spark.sql("CREATE OR REPLACE TEMP VIEW cli_antennas AS "
-                          + syn.ANTENNAS_SQL)
-                part_uvw = spark.sql(prc.part_uvw_precessed_sql(
-                    X.SPARK, ra_rad=math.radians(ra_deg),
-                    dec_rad=math.radians(dec_deg),
-                    gps_start=float(syn.GPS_START),
-                    int_time_s=syn.INT_TIME_S, num_t=syn.NUM_T,
-                    antennas="cli_antennas", dut1_s=ctx.dut1,
-                    lon_rad=lon, lat_rad=lat))
-            else:
-                from birli_spark.operators import geometry
-                part_uvw = geometry.part_uvw_table(
-                    spark, syn.load_dim(spark, "antennas"), syn.NUM_T,
-                    ra_rad=math.radians(ra_deg),
-                    dec_rad=math.radians(dec_deg),
-                    lst0_rad=1.0, int_time_s=syn.INT_TIME_S,
-                    lat_rad=lat)
-        else:
-            part_uvw = syn.load_dim(spark, "part_uvw")
-        vis = corrections.correct_geometry(vis, part_uvw)
-    if ctx.apply_di_cal:
-        calsols = aocal.calsols_df(spark, ctx.apply_di_cal)
-        vis = calibration.apply_di_calsol(vis, calsols, pipeline.CAL_RATIO)
 
-    # bake (F10); chunking/averaging happen in build_plan
+def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
+    """F9: SSINS, the iterative/generic strategy, the mwa-default
+    orchestration (the reference's default, FindStrategyFileMWA,
+    src/flags.rs:354-437) or plain SumThreshold at the preset or numeric
+    sensitivity."""
+    if ctx.no_rfi:
+        return vis
+    from birli_spark.operators import rfi
+    eta = ctx.sir_eta if ctx.sir_eta is not None else 0.2
+    if ctx.ssins:
+        from birli_spark.operators import ssins
+        return ssins.ssins_flag_vis(vis, threshold=ctx.ssins_threshold)
+    if ctx.rfi_iterative or ctx.rfi_strategy == "generic":
+        return rfi.flag_rfi_strategy(
+            vis, base_sensitivity=ctx.rfi_sensitivity, eta=eta)
+    if ctx.rfi_strategy != "mwa":
+        return rfi.flag_rfi(vis, base_sensitivity=ctx.rfi_sensitivity,
+                            sir_eta=ctx.sir_eta)
+    # The island's exchange + sort + Arrow boundary carries only what
+    # the flagger consumes: keys, prior flag, pols at the observation's
+    # payload dtype (f32 is lossless on archives: the corrections
+    # f32-demote and raw payloads are f32-native). cc / fc / freq_hz /
+    # ts_gps / weight come back as JVM projections of (chan, t), except
+    # a passband-scaled weight (weight *= gain), which rides along —
+    # >2x fewer shuffled+sorted+transferred bytes on the 11.4 GB run.
+    from birli_spark.functions.complex import VIS_COLS
+    carried = ["weight"] if ctx.pfb_gains != "none" else []
+    slim = vis.select("t", "chan", "ant1", "ant2", "bl", "flag", *carried,
+                      *[F.col(c).cast(obs.rfi_payload).alias(c)
+                        for c in VIS_COLS])
+    flagged = rfi.flag_rfi_mwa(slim, base_sensitivity=ctx.rfi_sensitivity,
+                               eta=eta, impl=ctx.rfi_impl)
+    keyed = flagged.select(
+        "*", F.expr(f"CAST(chan DIV {obs.n_fine} AS INT)").alias("cc"),
+        F.expr(f"CAST(chan % {obs.n_fine} AS INT)").alias("fc"))
+    back = {**obs.derived_columns(),
+            **{c: F.col(c).cast("double") for c in VIS_COLS}}
+    for c in carried:
+        del back[c]
+    return keyed.select(*[back.get(c, F.col(c)).alias(c)
+                          for c in vis.columns])
+
+
+def stage_geometry(spark: SparkSession, ctx: Context, obs: Observation,
+                   vis: DataFrame) -> DataFrame:
+    """C3: baseline UVWs, always attached (zero when the input names no
+    phase centre); ``--no-geometric-delay`` skips only the phase
+    rotation, as the reference does (its nocorrect outputs carry real
+    UVWs)."""
+    part_uvw = obs.part_uvw(spark, ctx)
+    if part_uvw is None:
+        return vis.select("*", *[F.lit(0.0).alias(c) for c in "uvw"])
+    if ctx.no_geometric_delay:
+        return corrections.attach_uvw(vis, part_uvw)
+    return corrections.correct_geometry(vis, part_uvw)
+
+
+def stage_calibrate(spark: SparkSession, ctx: Context, obs: Observation,
+                    vis: DataFrame) -> DataFrame:
+    """--apply-di-cal; the calsol channels upsample onto the
+    observation's fine channels by the ratio of the two counts."""
+    if not ctx.apply_di_cal:
+        return vis
+    n_sol = aocal.read_mwaocal(ctx.apply_di_cal)[0].shape[2]
+    return calibration.apply_di_calsol(
+        vis, aocal.calsols_df(spark, ctx.apply_di_cal),
+        max(1, obs.n_chan // max(1, n_sol)))
+
+
+def build_baked(spark: SparkSession, ctx: Context,
+                obs: Observation | None = None) -> DataFrame:
+    """The flowchart up to (and including) flag→weight baking, before
+    chunking/averaging — the state every sink consumes: select →
+    rule-flag → gate → correct → RFI → geometry → calibrate → bake over
+    ``obs`` (default: the context's input)."""
+    if obs is None:
+        obs = observation(spark, ctx)
+    bl_pred = baseline_predicate(ctx, obs)
+    vis = stage_select(ctx, obs, obs.scan(), bl_pred)
+    vis, rules = stage_rule_flags(ctx, obs, vis)
+    vis = stage_gate(spark, obs, vis, rules, bl_pred)
+    vis = stage_correct(spark, ctx, obs, vis)
+    vis = stage_rfi(ctx, obs, vis)
+    vis = stage_geometry(spark, ctx, obs, vis)
+    vis = stage_calibrate(spark, ctx, obs, vis)
     return weights.bake_flags_into_weights(vis)
 
 
@@ -754,74 +902,36 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
                       file=sys.stderr)
 
     try:
-        real_mode = bool(ctx.metafits and ctx.gpubox)
-        if real_mode:
-            from birli_spark import real_input
-            _meta, _ = real_input.load_obs(ctx.metafits)
-            gps_start, int_time_s = _meta.gps_start, _meta.int_time_s
-
-            def _load_vis():
-                return real_input.load_vis_real(
-                    spark, _meta, ctx.gpubox, metafits_path=ctx.metafits)
-        else:
-            gps_start, int_time_s = syn.GPS_START, syn.INT_TIME_S
-
-            def _load_vis():
-                return syn.load_vis(spark, ctx.sf_dir)
+        obs = observation(spark, ctx)
         if ctx.dry_run:
-            summary = describe.describe(spark, _load_vis()).collect()
+            summary = describe.describe(spark, obs.scan()).collect()
             for row in summary:
                 print(f"{row.stat:>16}: {row.value}")
             return {"dry_run": True, "stats": len(summary)}
-        out = build_plan(spark, ctx)
+        # every sink shares ONE context-built baked plan, so CLI options
+        # reach every file
+        baked = build_baked(spark, ctx, obs)
+        out = build_plan(spark, ctx, baked)
         result: dict = {}
-        # every sink shares ONE context-built baked plan (the SAME plan
-        # as every other surface — CLI options must reach the files
-        # too), computed lazily and only when a sink needs it
-        baked_shared = None
 
-        def get_baked():
-            nonlocal baked_shared
-            if baked_shared is None:
-                b = build_baked(spark, ctx)
-                for c in ("u", "v", "w"):
-                    if c not in b.columns:
-                        # --no-geometric-delay: no UVWs were derived
-                        b = b.withColumn(c, F.lit(0.0))
-                baked_shared = b
-            return baked_shared
-
-        def real_flags(*cols):
-            # real mode: the run's OWN flags (rules + RFI), derived
-            # from the baked relation's weight signs — the synthetic
-            # rule dims (syn timesteps/antennas/quack) do not describe
-            # a real observation
-            return get_baked().select(
-                *cols, (F.col("weight") < 0).alias("flag"))
+        def run_flags(*cols):
+            # the run's OWN flags (rules + RFI), from the baked weight signs
+            return baked.select(*cols, (F.col("weight") < 0).alias("flag"))
 
         if ctx.mwaf_out:
             from birli_spark.sinks import mwaf
-            if real_mode:
-                flagged = real_flags("t", "bl", "cc", "fc")
-            else:
-                flagged = pipeline.rule_flags(
-                    spark, syn.load_vis(spark, ctx.sf_dir))
             # distributed writer: one executor task per coarse channel
             # (byte-identical to the driver-loop writer)
             with _stage("write mwaf"):
                 result["mwaf_files"] = mwaf.write_mwaf_set_distributed(
-                    flagged, ctx.mwaf_out,
-                    gps_start=gps_start).count()
+                    run_flags("t", "bl", "cc", "fc"), ctx.mwaf_out,
+                    gps_start=obs.gps_start).count()
         if ctx.flag_parquet_out:
             from birli_spark.sinks import flagsink
-            if real_mode:
-                flagged = real_flags("t", "bl", "ant1", "ant2",
-                                     "cc", "fc", "chan")
-            else:
-                flagged = pipeline.rule_flags(spark, _load_vis())
             with _stage("write flag parquet"):
-                flagsink.write_flags(flagged, ctx.flag_parquet_out,
-                                     gps_start=gps_start)
+                flagsink.write_flags(
+                    run_flags("t", "bl", "ant1", "ant2", "cc", "fc", "chan"),
+                    ctx.flag_parquet_out, gps_start=obs.gps_start)
             result["flag_parquet"] = ctx.flag_parquet_out
         # the physical uvfits sink materializes the SAME averaged
         # relation into a localCheckpoint — at scale a standalone
@@ -840,58 +950,36 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
             result["dump_csv"] = _dump_csv(out, ctx)
 
         if ctx.ms_out:
-            from birli_spark.sinks import ms
-            ms_gps = gps_start
-            if real_mode:
-                # real observations: MS TIME/TIME_CENTROID are UTC casa
-                # seconds (cotter/casacore convention; the reference's
-                # compare_ms_with_csv golden times are UTC) on the DATA
-                # grid. The sink's time expr adds the fixed GPS-TAI 19 s
-                # (the synthetic surface's oracle convention), so the
-                # anchor absorbs it along with leap and the grid offset.
-                from birli_spark import real_input as _ri
-                _a = _ri.grid_anchor(ctx.gpubox, gps_start, int_time_s)
-                ms_gps = (gps_start + _a["offset_s"] - _a["leap_s"]
-                          - ms.GPS_TAI_OFFSET_S)
+            # MS TIME/TIME_CENTROID: the observation's ms_gps anchor (on
+            # archives UTC casa seconds on the DATA grid, absorbing the
+            # sink's fixed GPS-TAI 19 s)
             if ctx.ms_out.rstrip("/").endswith(".ms"):
                 from birli_spark.sinks import ms_file
                 with _stage("write ms"):
                     ms_file.write_ms_casa(
-                        spark, get_baked(), ctx.ms_out, ctx.avg_time,
-                        ctx.avg_freq, gps_start=ms_gps,
-                        int_time_s=int_time_s)
+                        spark, baked, ctx.ms_out, ctx.avg_time,
+                        ctx.avg_freq, gps_start=obs.ms_gps,
+                        int_time_s=obs.int_time_s)
             else:
+                from birli_spark.sinks import ms
                 ms.write_ms_parquet(
-                    get_baked(), ctx.ms_out, ctx.avg_time,
-                    ctx.avg_freq, gps_start=ms_gps,
-                    int_time_s=int_time_s)
+                    baked, ctx.ms_out, ctx.avg_time, ctx.avg_freq,
+                    gps_start=obs.ms_gps, int_time_s=obs.int_time_s)
             result["ms_path"] = ctx.ms_out
         if ctx.uvfits_out:
-            if ctx.uvfits_out.rstrip("/").endswith(".uvfits"):
-                # the PHYSICAL random-groups file, executor-parallel
+            if physical_uvfits:
+                # the PHYSICAL random-groups file, executor-parallel;
+                # DATE params from the observation's uvfits_gps anchor,
+                # UVWs in its UVFITS unit (seconds on archives, per the
+                # random-groups standard)
                 from birli_spark.sinks import uvfits as uvsink
-                uv_baked = get_baked()
-                uv_gps = gps_start
-                if real_mode:
-                    # real observations: DATE group params are UTC JDs
-                    # (shift the GPS anchor by the leap offset — the
-                    # reference gets this via mwalib/casacore), stamped
-                    # on the DATA grid (real_input.grid_anchor), and
-                    # UVWs go out in seconds per the random-groups
-                    # standard (the pipeline computes them in meters)
-                    from birli_spark import real_input as _ri
-                    _a = _ri.grid_anchor(ctx.gpubox, gps_start,
-                                         int_time_s)
-                    uv_gps = gps_start + _a["offset_s"] - _a["leap_s"]
-                    _c = 299792458.0
-                    uv_baked = (uv_baked
-                                .withColumn("u", F.col("u") / _c)
-                                .withColumn("v", F.col("v") / _c)
-                                .withColumn("w", F.col("w") / _c))
+                unit = obs.uvfits_uvw_unit_m
+                uv_baked = baked.withColumns(
+                    {c: F.col(c) / unit for c in ("u", "v", "w")})
                 with _stage("preprocess"):
                     rows = uvsink.uvfits_group_rows(
                         uv_baked, ctx.avg_time, ctx.avg_freq,
-                        uv_gps, int_time_s).localCheckpoint(
+                        obs.uvfits_gps, obs.int_time_s).localCheckpoint(
                             eager=True)
                     # cheap: counts the checkpoint, not the pipeline.
                     # result['rows'] is OUTPUT-GRID rows — one per
@@ -910,7 +998,7 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
                     # against the declared GCOUNT internally
                     uvsink.write_uvfits_distributed(
                         rows, ctx.uvfits_out, n_chan,
-                        jd_zero=uvsink.obs_jd_zero(uv_gps))
+                        jd_zero=uvsink.obs_jd_zero(obs.uvfits_gps))
             else:
                 out.orderBy(
                     *[c for c in ("t_out", "t") if c in out.columns],

@@ -85,14 +85,13 @@ def set_flags(
     ts_flags: DataFrame | None = None,
     bl_flags: DataFrame | None = None,
     fc_pred=None,
-    cc_flags: DataFrame | None = None,
 ) -> DataFrame:
     """F7 — combine dimension flags into the fact table:
-    ``flag = flag | ts_flag | chan_flag | bl_flag`` (reference set_flags,
-    src/flags.rs:179-224; coarse-chan flags expand to all fine chans via the
-    (cc) join key, :195-204).
+    ``flag = flag | ts_flag | bl_flag | chan_flag`` (reference set_flags,
+    src/flags.rs:179-224). ``fc_pred`` is a Column predicate over
+    (cc, fc): coarse-chan flags (:195-204) OR in as ``cc IN (...)``.
 
-    All dimension inputs are broadcast — the plan is scan → 2-3 broadcast
+    All dimension inputs are broadcast — the plan is scan → 2 broadcast
     hash joins → project, one codegen stage, zero fact-table shuffles at any
     scale.
     """
@@ -104,12 +103,9 @@ def set_flags(
     if bl_flags is not None:
         out = out.join(F.broadcast(bl_flags), ["ant1", "ant2"], "left")
         pred = pred | F.coalesce(F.col("bl_flag"), F.lit(False))
-    if cc_flags is not None:
-        out = out.join(F.broadcast(cc_flags.select("cc", "cc_flag")), "cc", "left")
-        pred = pred | F.coalesce(F.col("cc_flag"), F.lit(False))
     if fc_pred is not None:
         pred = pred | fc_pred
-    drop = [c for c in ("ts_flag", "bl_flag", "cc_flag") if c in out.columns]
+    drop = [c for c in ("ts_flag", "bl_flag") if c in out.columns]
     return out.withColumn("flag", pred).drop(*drop)
 
 
@@ -146,10 +142,9 @@ def baseline_flags_oracle_select(antennas: str, flag_autos: bool = False) -> str
 
 def set_flags_oracle_select(vis: str, ts_flags: str | None, bl_flags: str | None,
                             fc_pred_sql: str | None,
-                            vis_columns: Sequence[str],
-                            cc_flags: str | None = None) -> str:
+                            vis_columns: Sequence[str]) -> str:
     """Oracle SQL for F7 — mirrors the OR-chain order of :func:`set_flags`
-    (flag | ts | bl | fc | cc)."""
+    (flag | ts | bl | fc)."""
     pred = "v.flag"
     joins = ""
     if ts_flags is not None:
@@ -160,9 +155,6 @@ def set_flags_oracle_select(vis: str, ts_flags: str | None, bl_flags: str | None
         pred += " OR COALESCE(bf.bl_flag, FALSE)"
     if fc_pred_sql is not None:
         pred += f" OR {fc_pred_sql}"
-    if cc_flags is not None:
-        joins += f" LEFT JOIN {cc_flags} cf ON v.cc = cf.cc"
-        pred += " OR COALESCE(cf.cc_flag, FALSE)"
     cols = ", ".join(
         f"({pred}) AS flag" if c == "flag" else f"v.{c}" for c in vis_columns
     )

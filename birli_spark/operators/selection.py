@@ -78,15 +78,17 @@ def baseline_selection_predicate(
     sel_ants: Sequence[int] | None = None,
     flagged_ants: Sequence[int] | None = None,
     no_autos: bool = False,
+    baseline_limit: int | None = None,
 ):
-    """P2∘P3∘P4 as ONE literal predicate over ``(ant1, ant2)``.
+    """P2∘P3∘P4 and ``--baseline-limit`` as ONE literal predicate over
+    ``(ant1, ant2, bl)``.
 
-    The single source of truth for "which baselines are selected",
-    shared by the CLI's vis-side selection and the real-input rule-dim
-    gate pool (``real_input.py``) — the two MUST agree or the v0.18
-    cell gate diverges from the fact's actual flag aggregate. Any new
-    baseline-affecting selection option belongs here. Returns ``None``
-    when no baseline selection is active.
+    The single source of truth for "which baselines are selected": the
+    CLI's vis-side selection filters by it, and so does the archive
+    rule-dim gate pool (``real_input.ArchiveObservation.cell_gate``) —
+    the two MUST agree or the v0.18 cell gate diverges from the fact's
+    actual flag aggregate. Any new baseline-affecting selection option
+    belongs here. Returns ``None`` when no baseline selection is active.
     """
     pred = None
 
@@ -103,4 +105,8 @@ def baseline_selection_predicate(
                     ~F.col("ant1").isin(bad) & ~F.col("ant2").isin(bad))
     if no_autos:
         pred = _and(pred, F.col("ant1") != F.col("ant2"))
+    if baseline_limit is not None:
+        # dev/debug truncation to the first N baselines (reference
+        # src/cli.rs:3445)
+        pred = _and(pred, F.col("bl") < baseline_limit)
     return pred

@@ -26,7 +26,8 @@ def fanout_materialize(df: DataFrame, big: bool = False) -> DataFrame:
     once per action instead of once per consumer (guide §5).
 
     The spelling follows the materialization's SIZE, which the caller
-    knows (``big``); SPARK_GRAFT_FANOUT_PERSIST forces one globally.
+    knows (``big``); SPARK_GRAFT_FANOUT_PERSIST=local|reliable forces
+    one globally (any other value raises).
 
     - small (``local``): ``localCheckpoint`` — deserialized blocks on
       the executors, no serialize/file round trip; measured fastest on
@@ -42,20 +43,20 @@ def fanout_materialize(df: DataFrame, big: bool = False) -> DataFrame:
       blocks (17-33 s vs 27-77 s wall across box states: the
       block-manager heap residency pays this host's page-fault tax,
       files + page cache do not). This is the 100 TB spelling.
-    - ``disk``: ``persist(DISK_ONLY)`` — lineage survives executor
-      loss (lost blocks recompute); kept for comparison: the
-      InMemoryRelation columnar encode + per-consumer decode made it
-      the slowest measured spelling at every size (x16 71 s).
+
+    ``persist(DISK_ONLY)`` was measured the slowest spelling at every
+    size (x16 71 s: the InMemoryRelation columnar encode plus a decode
+    per consumer) and is not offered.
     """
     import os
     import tempfile
 
     mode = os.environ.get("SPARK_GRAFT_FANOUT_PERSIST") or (
         "reliable" if big else "local")
-    if mode == "disk":
-        from pyspark import StorageLevel
-
-        return df.persist(StorageLevel.DISK_ONLY)
+    if mode not in ("local", "reliable"):
+        raise ValueError(
+            f"SPARK_GRAFT_FANOUT_PERSIST={mode!r}: expected 'local' or "
+            f"'reliable'")
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:

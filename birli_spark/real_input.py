@@ -1,39 +1,36 @@
-"""REAL-FORMAT CLI input: ``-m obs.metafits --gpubox 'dir/*.fits'`` —
-the invocation shape a user of the reference actually has (reference
+"""Archive CLI input: ``-m obs.metafits --gpubox 'dir/*.fits'`` — the
+invocation shape a user of the reference actually has (reference
 BirliContext::from_args consumes a metafits plus gpubox files,
-src/cli.rs:622-700). The synthetic sf-dir path stays the driver/test
-surface; this module assembles the SAME operator chain from the real
-observation metadata:
+src/cli.rs:622-700). :class:`ArchiveObservation` feeds the CLI's one
+flowchart (``cli.build_baked``) from the real observation metadata:
 
 - dims from the metafits TILEDATA (antennas with electrical lengths,
   metafits flag states, /64 digital gains; timesteps from
-  GPSTIME/INTTIME/NSCANS),
+  GPSTIME/INTTIME/NSCANS, extended to every captured scan),
 - the visibility fact from the distributed gpubox scan
-  (sources/gpubox.py — one task per coarse-channel file),
+  (sources/gpubox.py, sources/legacy_gpubox.py — one task per file),
 - fine-channel frequencies from the receiver channel list
   (centre = rec_chan * 1.28 MHz; fine f = centre - 0.64 MHz +
   fc * fine_width, the mwalib ascending-sky convention),
 - geometry from the metafits phase centre through the IAU-2006
   precessed partial-UVW chain (operators/precession.py),
 - the Cotter weight factor fine_width/10 kHz * int_time
-  (src/flags.rs:570-575).
-
-Scope: the preprocessing flowchart the reference runs by default —
-selection, quack/edge/DC/metafits flags, RFI (the float mwa-default
-orchestration), cable, digital gains, passband, geometry, baking,
-averaging, and every sink. Van Vleck and DI-calibration are accepted
-with real inputs too (sample scale derives as int_time x fine_width;
-the calsol ratio from the channel counts).
+  (src/flags.rs:570-575),
+- the v0.18 flag gate derived from the rule dims (no second decode),
+  the f32 RFI-island boundary, the metafits quack default and the
+  Van Vleck scale int_time x fine_width x gpubox BSCALE,
+- one time-grid anchor (:func:`grid_anchor`) for the scan, the UVW
+  table and the sinks' UTC time stamps.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from birli_spark import cli
 from birli_spark.sources import gpubox, metafits as mf
 
 #: MWA coarse channel width (Hz) — 1.28 MHz, fixed by the instrument
@@ -57,16 +54,15 @@ class ObsMeta:
     quack_s: float
     phase_ra_deg: float | None
     phase_dec_deg: float | None
+    #: the RA/DEC POINTING centre (the --pointing-centre target)
+    pointing_ra_deg: float | None
+    pointing_dec_deg: float | None
     n_ants: int
     #: offline-averaging centre offset (metafits._freq_offset_hz)
     freq_offset_hz: float = 0.0
     #: CHANSEL positions into the full CHANNELS/gains lists (picket
     #: fence); None = full band. Digital gains index by THESE.
     sel_chan_positions: list | None = None
-
-    @property
-    def obs_end_gps(self) -> float:
-        return self.gps_start + self.num_t * self.int_time_s
 
     @property
     def weight_factor(self) -> float:
@@ -76,19 +72,6 @@ class ObsMeta:
     @property
     def n_chan_total(self) -> int:
         return self.n_fine_per_coarse * len(self.coarse_channels)
-
-
-def meta_pointing(metafits_path: str) -> tuple[float, float]:
-    """(RA, DEC) of the metafits POINTING centre (the RA/DEC keys, vs
-    the RAPHASE/DECPHASE phase centre) — the --pointing-centre target."""
-    primary, _ = mf.read_metafits(metafits_path)
-    octx = mf.obs_context(primary)
-    if octx["pointing_ra_deg"] is None or octx["pointing_dec_deg"] is None:
-        raise SystemExit(
-            f"--pointing-centre: metafits {metafits_path} carries no "
-            "RA/DEC pointing keys")
-    return (float(octx["pointing_ra_deg"]),
-            float(octx["pointing_dec_deg"]))
 
 
 def load_obs(metafits_path: str) -> tuple[ObsMeta, dict]:
@@ -103,6 +86,8 @@ def load_obs(metafits_path: str) -> tuple[ObsMeta, dict]:
         quack_s=octx["quack_s"],
         phase_ra_deg=octx["phase_ra_deg"],
         phase_dec_deg=octx["phase_dec_deg"],
+        pointing_ra_deg=octx["pointing_ra_deg"],
+        pointing_dec_deg=octx["pointing_dec_deg"],
         n_ants=octx["n_ants"],
         freq_offset_hz=octx.get("freq_offset_hz", 0.0),
         sel_chan_positions=mf.selected_channel_positions(primary))
@@ -139,20 +124,26 @@ def detect_format(gpubox_glob: str) -> str:
     return "synthetic"
 
 
-def _finish_vis(scan: DataFrame, meta: ObsMeta,
-                offset_s: float = 0.0) -> DataFrame:
-    """Project a (t, ant1, ant2, bl, cc, fc, chan, pols) scan onto the
-    19-column canonical vis relation. ``offset_s`` shifts the stamped
-    centroids onto the data grid (see :func:`data_offset_s`)."""
+def derived_columns(meta: ObsMeta, offset_s: float = 0.0) -> dict:
+    """freq_hz, ts_gps (the scan centroid, shifted onto the data grid by
+    ``offset_s``, see :func:`grid_anchor`) and the Cotter weight as
+    Columns over (t, cc, fc)."""
     ts = (f"CAST({meta.gps_start + offset_s!r} AS DOUBLE)"
           f" + t * CAST({meta.int_time_s!r} AS DOUBLE)"
           f" + CAST({meta.int_time_s / 2.0!r} AS DOUBLE)")
+    return {"freq_hz": F.expr(freq_expr(meta)), "ts_gps": F.expr(ts),
+            "weight": F.lit(float(meta.weight_factor)).cast("double")}
+
+
+def _finish_vis(scan: DataFrame, meta: ObsMeta,
+                offset_s: float = 0.0) -> DataFrame:
+    """Project a (t, ant1, ant2, bl, cc, fc, chan, pols) scan onto the
+    19-column canonical vis relation."""
+    d = derived_columns(meta, offset_s)
     return scan.select(
         "t", "ant1", "ant2", "bl", "cc", "fc", "chan",
-        F.expr(freq_expr(meta)).alias("freq_hz"),
-        F.expr(ts).alias("ts_gps"),
-        F.lit(float(meta.weight_factor)).cast("double").alias("weight"),
-        F.lit(False).alias("flag"),
+        d["freq_hz"].alias("freq_hz"), d["ts_gps"].alias("ts_gps"),
+        d["weight"].alias("weight"), F.lit(False).alias("flag"),
         "xx_re", "xx_im", "xy_re", "xy_im",
         "yx_re", "yx_im", "yy_re", "yy_im")
 
@@ -247,49 +238,27 @@ def gpubox_header_meta(gpubox_glob: str) -> dict:
             "bscale": 1.0 if bscale is None else bscale}
 
 
-def data_time_range(gpubox_glob: str) -> tuple[int, int]:
-    m = gpubox_header_meta(gpubox_glob)
-    return m["min_ms"], m["max_ms"]
-
-
-def data_num_t(gpubox_glob: str, obs_start_unix_ms: int,
-               int_time_ms: int, num_t_scheduled: int) -> int:
-    """Timestep count covering BOTH the scheduled window and every scan
-    actually captured. Real captures can outrun the scheduled NSCANS
-    (the reference's own 1196175296 fixture does), and the per-(t, ant)
-    UVW table must cover the data or the geometry join would silently
-    drop those scans."""
-    _, max_ms = data_time_range(gpubox_glob)
-    if max_ms < obs_start_unix_ms:
-        return num_t_scheduled
-    t_last = (max_ms - obs_start_unix_ms) // int_time_ms
-    return max(num_t_scheduled, int(t_last) + 1)
-
-
-def data_offset_s(gpubox_glob: str, obs_start_unix_ms: int,
-                  int_time_ms: int) -> float:
-    """Sub-scan offset of the DATA grid from the scheduled grid, in
-    seconds: real archives can start mid-scan relative to the obsid
-    (the reference's 1254670392_avg scans start at obsid+1 s with a 2 s
-    integration — witnessed independently by the Cotter and pyuvdata
-    golden dumps, whose DATE params are centroids at obsid+2/+4). The
-    timestep INDEX still floors onto the scheduled grid; this offset
-    shifts every stamped time (ts_gps, the UVW table, the UVFITS DATE
-    params) onto the true scan centroids."""
-    min_ms, _ = data_time_range(gpubox_glob)
-    if min_ms < obs_start_unix_ms:
-        raise ValueError(
-            f"gpubox data starts before the metafits obs start: "
-            f"{min_ms} < {obs_start_unix_ms}")
-    return ((min_ms - obs_start_unix_ms) % int_time_ms) / 1000.0
-
-
 def grid_anchor(gpubox_glob: str, gps_start: float, int_time_s: float,
                 num_t_scheduled: int = 0) -> dict:
-    """ONE derivation of the real-mode time-grid anchor, shared by the
-    vis load, the UVW table, every sink, and the CLI: format detection,
-    the GPS-UTC leap offset at the obs epoch, the sub-scan data-grid
-    offset, the data-covering timestep count, and the gpubox BSCALE.
+    """ONE derivation of the archive time-grid anchor, shared by the vis
+    load, the UVW table and every sink: format detection, the GPS-UTC
+    leap offset at the obs epoch, and from the scan headers
+    (:func:`gpubox_header_meta`) the gpubox BSCALE plus
+
+    - ``offset_s``, the sub-scan offset of the DATA grid from the
+      scheduled grid: real archives can start mid-scan relative to the
+      obsid (the reference's 1254670392_avg scans start at obsid+1 s
+      with a 2 s integration — witnessed independently by the Cotter
+      and pyuvdata golden dumps, whose DATE params are centroids at
+      obsid+2/+4). The timestep INDEX still floors onto the scheduled
+      grid; this offset shifts every stamped time (ts_gps, the UVW
+      table, the UVFITS DATE params) onto the true scan centroids.
+    - ``num_t_data``, the timestep count covering BOTH the scheduled
+      window and every scan actually captured: captures can outrun the
+      scheduled NSCANS (the reference's own 1196175296 fixture does),
+      and the UVW table must cover the data or the geometry join would
+      silently drop those scans.
+
     Synthetic-format inputs (whose HDUs carry no TIME scan cards)
     anchor on the schedule with zero offset and BSCALE 1."""
     from birli_spark.functions import timeutil
@@ -302,16 +271,20 @@ def grid_anchor(gpubox_glob: str, gps_start: float, int_time_s: float,
            "offset_s": 0.0, "num_t_data": num_t_scheduled,
            "bscale": 1.0}
     if fmt in ("mwax", "legacy"):
-        out["offset_s"] = data_offset_s(gpubox_glob, start_ms, int_ms)
-        out["num_t_data"] = data_num_t(gpubox_glob, start_ms, int_ms,
-                                       num_t_scheduled)
-        out["bscale"] = gpubox_header_meta(gpubox_glob)["bscale"]
+        hdr = gpubox_header_meta(gpubox_glob)
+        if hdr["min_ms"] < start_ms:
+            raise ValueError(
+                f"gpubox data starts before the metafits obs start: "
+                f"{hdr['min_ms']} < {start_ms}")
+        out["offset_s"] = ((hdr["min_ms"] - start_ms) % int_ms) / 1000.0
+        out["num_t_data"] = max(num_t_scheduled,
+                                (hdr["max_ms"] - start_ms) // int_ms + 1)
+        out["bscale"] = hdr["bscale"]
     return out
 
 
 def load_vis_real(spark: SparkSession, meta: ObsMeta,
                   gpubox_glob: str, metafits_path: str | None = None,
-                  fmt: str = "auto",
                   anchor: dict | None = None) -> DataFrame:
     """The canonical vis relation from real gpubox files of any
     supported format. ``anchor`` reuses a grid_anchor already derived
@@ -319,8 +292,7 @@ def load_vis_real(spark: SparkSession, meta: ObsMeta,
     if anchor is None:
         anchor = grid_anchor(gpubox_glob, meta.gps_start,
                              meta.int_time_s, meta.num_t)
-    if fmt == "auto":
-        fmt = anchor["fmt"]
+    fmt = anchor["fmt"]
     nf = meta.n_fine_per_coarse
     start_ms = anchor["start_unix_ms"]
     offset_s = anchor["offset_s"]
@@ -348,280 +320,135 @@ def load_vis_real(spark: SparkSession, meta: ObsMeta,
     return _finish_vis(scan, meta, offset_s=offset_s)
 
 
-def build_baked_real(spark: SparkSession, ctx, metafits_path: str,
-                     gpubox_glob: str) -> tuple[DataFrame, ObsMeta]:
-    """The context-built pipeline over REAL inputs, up to flag->weight
-    baking — the real-format mirror of cli.build_baked with dims from
-    the metafits instead of the synthetic tables."""
-    from birli_spark import pipeline
-    from birli_spark.operators import (corrections, flags, selection,
-                                       weights)
+class ArchiveObservation(cli.Observation):
+    """A metafits + gpubox archive as the flowchart's input: dims from the
+    metafits, the scan from the distributed gpubox decode, every time
+    stamped on ONE grid anchor (:func:`grid_anchor` scans the gpubox
+    headers, and every consumer must agree on the data-grid offset and
+    the captured-scan count anyway)."""
 
-    meta, tiledata = load_obs(metafits_path)
-    # ONE grid anchor for the whole build (vis load, timestep dim,
-    # UVW table): it scans the gpubox headers, and every consumer must
-    # agree on the data-grid offset and captured-scan count anyway
-    anchor = grid_anchor(gpubox_glob, meta.gps_start, meta.int_time_s,
-                         meta.num_t)
-    vis = load_vis_real(spark, meta, gpubox_glob,
-                        metafits_path=metafits_path, anchor=anchor)
-    ants = mf.antennas_df(spark, tiledata)
+    rfi_payload = "float"
+    #: UVFITS UVWs go out in seconds (the pipeline computes metres)
+    uvfits_uvw_unit_m = 299792458.0
 
-    if ctx.sel_time:
-        vis = selection.select_ranges(vis, t_min=ctx.sel_time[0],
-                                      t_max=ctx.sel_time[1] + 1)
-    if ctx.sel_chan_ranges:
-        from birli_spark.operators import picket
-        ccs = [cc for lo, hi in picket.parse_ranges(ctx.sel_chan_ranges)
-               for cc in range(lo, hi + 1)]
-        vis = vis.filter(F.col("cc").isin(ccs))
-    if ctx.sel_ants:
-        vis = selection.retain_antennas(vis, tuple(ctx.sel_ants))
-    if ctx.no_sel_flagged_ants:
-        vis = selection.filter_antennas(
-            vis, ants.filter(F.col("flagged")))
-    if ctx.no_sel_autos:
-        vis = selection.filter_autos(vis)
+    def __init__(self, spark: SparkSession, metafits_path: str,
+                 gpubox_glob: str) -> None:
+        from birli_spark.sinks import ms
 
-    # the timestep flag dim must cover every CAPTURED scan: a capture
-    # that outruns the schedule (the reference's 1196175296 fixture
-    # does) still needs ts-level flags for t >= the scheduled NSCANS
-    # (set_flags left-joins, so missing dim rows silently unflag)
-    n_t_all = max(meta.num_t, anchor["num_t_data"])
-    ts = mf.timesteps_df(spark, {"NSCANS": n_t_all,
-                                 "GPSTIME": meta.gps_start,
-                                 "INTTIME": meta.int_time_s})
-    # None = the metafits QUACKTIM default; an explicit --quack-time 0
-    # DISABLES quack (reference --flag-init semantics). Steps variants
-    # convert with THIS observation's int_time (reference converts
-    # N steps to N * int_time seconds, src/cli.rs:1141-1146).
-    if ctx.flag_init_steps is not None:
-        quack = ctx.flag_init_steps * meta.int_time_s
-    elif ctx.quack_time is not None:
-        quack = ctx.quack_time
-    else:
-        quack = meta.quack_s
-    flag_end_s = (ctx.flag_end_steps * meta.int_time_s
-                  if ctx.flag_end_steps is not None else ctx.flag_end)
-    # end flags anchor at the end of the DATA (the reference flags the
-    # trailing timesteps of the actual capture), which equals the
-    # scheduled end except when the capture outran the schedule
-    ts_f = flags.flag_timesteps_quack(
-        ts, meta.gps_start,
-        meta.gps_start + n_t_all * meta.int_time_s, quack_s=quack,
-        flag_end_s=flag_end_s)
-    if ctx.flag_times:
-        ts_f = ts_f.withColumn(
-            "ts_flag", F.col("ts_flag") | F.col("t").isin(ctx.flag_times))
-    ants_f = ants
-    if ctx.no_flag_metafits:
-        ants_f = ants_f.withColumn("flagged", F.lit(False))
-    if ctx.flag_antennas:
-        ants_f = ants_f.withColumn(
-            "flagged",
-            F.col("flagged") | F.col("ant").isin(ctx.flag_antennas))
-    bl_f = flags.baseline_flags(ants_f, flag_autos=ctx.flag_autos)
-    fc_pred = flags.flag_fine_channels(
-        meta.n_fine_per_coarse, n_edge=ctx.flag_edge_chans,
-        is_legacy=ctx.flag_dc,
-        explicit_fcs=tuple(ctx.flag_fine_chans))
-    if ctx.flag_coarse_chans:
-        fc_pred = fc_pred | F.col("cc").isin(list(ctx.flag_coarse_chans))
-    vis = flags.set_flags(vis, ts_f, bl_f, fc_pred)
-
-    # v0.18 unflagged-range gate (t, cc, _caf) from the RULE DIMS, not
-    # an aggregate over the fact: before RFI, flag is the star-schema
-    # disjunction ts | bl | fc over separable axes, so
-    #   bool_and(flag) over (bl, fc) = ts_flag OR bool_and(bl_flag)
-    #                                  OR bool_and(fc_flag within cc),
-    # with the baseline pool restricted to the SELECTED baselines. The
-    # generic cell_gate(vis) re-aggregates the fact — free on a
-    # columnar parquet fact (column-pruned rescan) but a SECOND FULL
-    # DECODE of the archive here, where the scan is a binary
-    # mapInPandas with no column pruning (measured: it doubled the
-    # scale-e2e read cost).
-    sel_bl = bl_f
-    # ONE shared predicate with the vis-side selection above
-    # (selection.baseline_selection_predicate): the gate pool and the
-    # fact filter must agree or the gate diverges from the fact's
-    # actual flag aggregate (ADVICE r7)
-    flagged_set = ([r["ant"] for r in
-                    ants.filter(F.col("flagged")).collect()]
-                   if ctx.no_sel_flagged_ants else None)
-    bl_pred = selection.baseline_selection_predicate(
-        ctx.sel_ants, flagged_set, ctx.no_sel_autos)
-    if bl_pred is not None:
-        sel_bl = sel_bl.filter(bl_pred)
-    all_bl = sel_bl.agg(F.expr("bool_and(bl_flag)").alias("_all_bl"))
-    n_cc_sel = len(meta.coarse_channels)
-    fc_grid = spark.range(0, n_cc_sel, 1, 1).selectExpr(
-        "CAST(id AS INT) AS cc").crossJoin(
-        spark.range(0, meta.n_fine_per_coarse, 1, 1).selectExpr(
-            "CAST(id AS INT) AS fc"))
-    cc_all = (fc_grid.select("cc", fc_pred.alias("_fcf"))
-              .groupBy("cc").agg(F.expr("bool_and(_fcf)").alias("_all_fc")))
-    gate = (ts_f.select("t", "ts_flag").crossJoin(F.broadcast(cc_all))
-            .crossJoin(F.broadcast(all_bl))
-            .select("t", "cc",
-                    (F.col("ts_flag") | F.coalesce(F.col("_all_bl"),
-                                                   F.lit(True))
-                     | F.col("_all_fc")).alias(corrections.GATE_COL)))
-    vis = corrections.attach_cell_gate(vis, gate=gate)
-    if ctx.van_vleck:
-        from birli_spark.operators import vanvleck
+        self.spark = spark
+        self.metafits_path, self.gpubox_glob = metafits_path, gpubox_glob
+        self.meta, self.tiledata = load_obs(metafits_path)
+        m = self.meta
+        self.anchor = a = grid_anchor(gpubox_glob, m.gps_start,
+                                      m.int_time_s, m.num_t)
+        self.gps_start, self.int_time_s = m.gps_start, m.int_time_s
+        self.n_fine, self.n_chan = m.n_fine_per_coarse, m.n_chan_total
+        self.quack_s = m.quack_s
+        # the timestep flag dim covers every CAPTURED scan: a capture
+        # that outruns the schedule (the reference's 1196175296 fixture
+        # does) still needs ts-level flags for t >= the scheduled
+        # NSCANS (set_flags left-joins, so missing dim rows silently
+        # unflag); end flags anchor at the end of the DATA
+        n_t = max(m.num_t, a["num_t_data"])
+        self.obs_end_gps = m.gps_start + n_t * m.int_time_s
+        self.timesteps = mf.timesteps_df(spark, {
+            "NSCANS": n_t, "GPSTIME": m.gps_start, "INTTIME": m.int_time_s})
+        self.antennas = mf.antennas_df(spark, self.tiledata)
+        # the vis cc indexes the CHANSEL-selected coarse list — the gains
+        # dim is remapped to the same positions (picket fence)
+        self.digital_gains = mf.digital_gains_df(
+            spark, self.tiledata, sel_positions=m.sel_chan_positions)
         # the reference's scale: fine_width_hz * int_time_ms / 500 *
         # gpubox BSCALE (src/van_vleck.rs:318-329, get_vv_sample_scale)
-        bscale = grid_anchor(gpubox_glob, meta.gps_start,
-                             meta.int_time_s, meta.num_t)["bscale"]
-        scale = (meta.fine_chan_width_hz
-                 * (meta.int_time_s * 1000.0) / 500.0 * bscale)
-        vis = vanvleck.correct_van_vleck(
-            vis, scale, flagged_ants=ctx.flag_antennas or None,
-            gate_col=corrections.GATE_COL)
-    if not ctx.no_cable_delay:
-        vis = corrections.correct_cable_lengths(vis, ants, gated=True)
-    if not ctx.no_digital_gains:
-        # the vis cc indexes the CHANSEL-selected coarse list — the
-        # gains dim must be remapped to the same positions (picket)
-        vis = corrections.correct_digital_gains(
-            vis, mf.digital_gains_df(
-                spark, tiledata,
-                sel_positions=meta.sel_chan_positions), gated=True)
-    if ctx.pfb_gains and ctx.pfb_gains != "none":
-        from birli_spark.functions import pfb_tables as PT
-        table = {"cotter": PT.PFB_COTTER_2014_10KHZ,
-                 "jake": PT.PFB_JAKE_2022_200HZ,
-                 "jake_oversampled": PT.OSPFB_JAKE_2025_200HZ}[
-                     ctx.pfb_gains]
-        rows = corrections.fine_gain_rows(
-            table, meta.n_fine_per_coarse,
-            center_symmetric=ctx.pfb_gains != "cotter")
-        fine_gains = spark.createDataFrame(rows, "fc int, gain double")
-        vis = corrections.correct_passband_gains(vis, fine_gains,
-                                                 gated=True)
-    vis = vis.drop(corrections.GATE_COL)
+        self.vv_sample_scale = (m.fine_chan_width_hz
+                                * (m.int_time_s * 1000.0) / 500.0
+                                * a["bscale"])
+        # UVFITS DATE params are UTC JDs on the DATA grid (shift the GPS
+        # anchor by the leap offset — the reference gets this via
+        # mwalib/casacore); MS times are UTC casa seconds on the same
+        # grid, and the MS sink's time expr adds the fixed GPS-TAI 19 s
+        self.uvfits_gps = m.gps_start + a["offset_s"] - a["leap_s"]
+        self.ms_gps = self.uvfits_gps - ms.GPS_TAI_OFFSET_S
 
-    if not ctx.no_rfi:
-        from birli_spark.operators import rfi
-        if ctx.ssins:
-            from birli_spark.operators import ssins as ssins_op
-            vis = ssins_op.ssins_flag_vis(vis,
-                                          threshold=ctx.ssins_threshold)
-        elif ctx.rfi_strategy == "generic" or ctx.rfi_iterative:
-            vis = rfi.flag_rfi_strategy(
-                vis, base_sensitivity=ctx.rfi_sensitivity,
-                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2)
-        else:
-            # Scale lever (r8): the island's exchange + sort + Arrow
-            # boundary carries ONLY what the flagger consumes — the
-            # (t, chan, ant1, ant2, bl) keys, the prior flag, and the
-            # 8 pol payloads at f32 — instead of the full 19-column
-            # f64 row. The f32 cast is lossless here by construction:
-            # every upstream correction f32-demotes its outputs
-            # (functions.complex.f32, the reference's own per-operator
-            # demotion) and the raw archive payloads are f32-native.
-            # freq_hz / ts_gps / weight / cc / fc are pure functions
-            # of (chan, t) and come back as JVM projections after the
-            # island — measured >2x less shuffled+sorted+transferred
-            # bytes on the 11.4 GB scale run.
-            from birli_spark.functions.complex import VIS_COLS
-            slim = vis.select(
-                "t", "chan", "ant1", "ant2", "bl", "flag",
-                *[F.col(c).cast("float").alias(c) for c in VIS_COLS])
-            # Scale lever (r9, VERDICT r8 item 2): stage the slim
-            # corrected fact as a parquet table BUCKETED by the
-            # island's grouping keys and run the island over the
-            # staged table — the groupBy(ant1, ant2) applyInPandas
-            # exchange disappears (tests/test_bucketing.py pins the
-            # plan shape). The trade is a bucketed write+scan of the
-            # slim fact instead of a full shuffle of it: the right
-            # shape on a network-bound cluster — the bucketed write
-            # needs NO shuffle (each decode task streams rows into its
-            # bucket files), the island reads each bucket locally, and
-            # any RERUN (new thresholds, new strategy) starts from the
-            # staged layout without re-decoding the archive. Off by
-            # default in local mode, where a shuffle is a tmpfs memcpy
-            # and the parquet encode would be pure overhead:
-            # SPARK_GRAFT_BUCKETED_FACT=1 enables with
-            # spark.sql.shuffle.partitions buckets, =N picks N.
-            import os as _os
-            nb_env = _os.environ.get("SPARK_GRAFT_BUCKETED_FACT", "0")
-            if nb_env != "0":
-                n_buckets = (int(nb_env) if int(nb_env) > 1 else int(
-                    spark.conf.get("spark.sql.shuffle.partitions")))
-                spark.sql("DROP TABLE IF EXISTS birli_fact_staged")
-                (slim.write.mode("overwrite")
-                     .bucketBy(n_buckets, "ant1", "ant2")
-                     .sortBy("ant1", "ant2")
-                     .saveAsTable("birli_fact_staged"))
-                slim = spark.table("birli_fact_staged")
-            flagged = rfi.flag_rfi_mwa(
-                slim, base_sensitivity=ctx.rfi_sensitivity,
-                eta=ctx.sir_eta if ctx.sir_eta is not None else 0.2,
-                impl=ctx.rfi_impl)
-            nf = meta.n_fine_per_coarse
-            ts = (f"CAST({meta.gps_start + anchor['offset_s']!r}"
-                  f" AS DOUBLE)"
-                  f" + t * CAST({meta.int_time_s!r} AS DOUBLE)"
-                  f" + CAST({meta.int_time_s / 2.0!r} AS DOUBLE)")
-            widened = flagged.select(
-                "t",
-                F.expr(f"CAST(chan DIV {nf} AS INT)").alias("cc"),
-                "ant1", "ant2", "bl",
-                F.expr(f"CAST(chan % {nf} AS INT)").alias("fc"),
-                "chan", "flag",
-                *[F.col(c).cast("double").alias(c) for c in VIS_COLS])
-            vis = widened.select(
-                "t", "ant1", "ant2", "bl", "cc", "fc", "chan",
-                F.expr(freq_expr(meta)).alias("freq_hz"),
-                F.expr(ts).alias("ts_gps"),
-                F.lit(float(meta.weight_factor)).cast("double")
-                 .alias("weight"),
-                "flag", *VIS_COLS)
+    def scan(self) -> DataFrame:
+        return load_vis_real(self.spark, self.meta, self.gpubox_glob,
+                             metafits_path=self.metafits_path,
+                             anchor=self.anchor)
 
-    # phase centre precedence (reference src/cli.rs:1353 / RADec
-    # plumbing): explicit --phase-centre > --pointing-centre (the
-    # metafits RA/DEC pointing) > the metafits RAPHASE/DECPHASE
-    if ctx.phase_centre:
-        ra_deg, dec_deg = float(ctx.phase_centre[0]), float(
-            ctx.phase_centre[1])
-    elif ctx.pointing_centre:
-        ra_deg, dec_deg = meta_pointing(metafits_path)
-    elif meta.phase_ra_deg is not None:
-        ra_deg, dec_deg = (float(meta.phase_ra_deg),
-                           float(meta.phase_dec_deg))
-    else:
-        ra_deg = None
-    if ra_deg is not None:
-        from birli_spark.functions import textsql as X
+    def provided_channels(self, vis: DataFrame) -> DataFrame:
+        # the scan yields only the coarse channels whose files exist
+        return vis
+
+    def derived_columns(self) -> dict:
+        return derived_columns(self.meta, self.anchor["offset_s"])
+
+    def cell_gate(self, spark: SparkSession, rules, bl_pred) -> DataFrame:
+        """The v0.18 gate from the RULE DIMS, not an aggregate over the
+        fact: before RFI, flag is the star-schema disjunction
+        ts | bl | chan over separable axes, so
+          bool_and(flag) over (bl, fc) = ts_flag OR bool_and(bl_flag)
+                                         OR bool_and(chan flag within cc),
+        with the baseline pool restricted to the SELECTED baselines by
+        the vis side's own predicate. An aggregate over the fact would
+        be a SECOND FULL DECODE of the archive, whose scan is a binary
+        mapInPandas with no column pruning (measured: it doubled the
+        scale-e2e read cost)."""
+        from birli_spark.operators import corrections
+
+        sel_bl = rules.bl
+        if bl_pred is not None:
+            # the archive's baseline index: upper triangle incl. autos
+            # in (ant1, ant2) order, as every gpubox reader numbers it
+            n = self.meta.n_ants
+            sel_bl = (sel_bl.filter("ant1 <= ant2").withColumn(
+                "bl", F.expr(f"CAST(ant1 * {n} - ant1 * (ant1 - 1) DIV 2"
+                             f" + ant2 - ant1 AS INT)")).filter(bl_pred))
+        all_bl = sel_bl.agg(F.expr("bool_and(bl_flag)").alias("_all_bl"))
+        fc_grid = spark.range(0, len(self.meta.coarse_channels), 1, 1) \
+            .selectExpr("CAST(id AS INT) AS cc").crossJoin(
+                spark.range(0, self.n_fine, 1, 1).selectExpr(
+                    "CAST(id AS INT) AS fc"))
+        cc_all = (fc_grid.select("cc", rules.chan_pred.alias("_fcf"))
+                  .groupBy("cc").agg(F.expr("bool_and(_fcf)").alias("_all_fc")))
+        return (rules.ts.select("t", "ts_flag")
+                .crossJoin(F.broadcast(cc_all))
+                .crossJoin(F.broadcast(all_bl))
+                .select("t", "cc",
+                        (F.col("ts_flag") | F.coalesce(F.col("_all_bl"),
+                                                       F.lit(True))
+                         | F.col("_all_fc")).alias(corrections.GATE_COL)))
+
+    def part_uvw(self, spark: SparkSession, ctx) -> DataFrame | None:
+        """Precessed partial UVWs spanning every CAPTURED scan on the
+        DATA grid. Phase centre precedence (reference src/cli.rs:1353):
+        explicit --phase-centre > --pointing-centre (the metafits RA/DEC
+        pointing) > the metafits RAPHASE/DECPHASE."""
         from birli_spark.operators import precession as prc
-        ants.createOrReplaceTempView("real_antennas")
-        # the UVW table must span every CAPTURED scan, not just the
-        # scheduled NSCANS, and its times must sit on the DATA grid
-        # (grid_anchor — zero offset for synthetic-format inputs)
-        n_t_uvw = anchor["num_t_data"]
-        off_s = anchor["offset_s"]
-        part_uvw = spark.sql(prc.part_uvw_precessed_sql(
-            X.SPARK, ra_rad=math.radians(ra_deg),
-            dec_rad=math.radians(dec_deg),
-            gps_start=float(meta.gps_start) + off_s,
-            int_time_s=meta.int_time_s, num_t=n_t_uvw,
-            antennas="real_antennas", dut1_s=ctx.dut1,
-            lon_rad=prc.MWA_LON_RAD, lat_rad=prc.MWA_LAT_RAD))
-        if ctx.no_geometric_delay:
-            # UVW group params are always computed and written; the
-            # flag gates only the phase rotation (reference cli.rs:
-            # the nocorrect tests compare real UVWs in 'none' output)
-            vis = corrections.attach_uvw(vis, part_uvw)
+
+        m = self.meta
+        if ctx.phase_centre:
+            ra_deg, dec_deg = map(float, ctx.phase_centre)
+        elif ctx.pointing_centre:
+            if m.pointing_ra_deg is None or m.pointing_dec_deg is None:
+                raise SystemExit(
+                    f"--pointing-centre: metafits {self.metafits_path} "
+                    "carries no RA/DEC pointing keys")
+            ra_deg, dec_deg = (float(m.pointing_ra_deg),
+                               float(m.pointing_dec_deg))
+        elif m.phase_ra_deg is not None:
+            ra_deg, dec_deg = float(m.phase_ra_deg), float(m.phase_dec_deg)
         else:
-            vis = corrections.correct_geometry(vis, part_uvw)
+            return None
+        return cli.precessed_part_uvw(
+            spark, self.antennas, ra_deg, dec_deg,
+            float(m.gps_start) + self.anchor["offset_s"], m.int_time_s,
+            self.anchor["num_t_data"], ctx.dut1,
+            prc.MWA_LON_RAD, prc.MWA_LAT_RAD)
 
-    if ctx.apply_di_cal:
-        from birli_spark.operators import calibration
-        from birli_spark.sources import aocal
-        calsols = aocal.calsols_df(spark, ctx.apply_di_cal)
-        n_sol = calsols.select("chan").distinct().count()
-        ratio = max(1, meta.n_chan_total // max(1, n_sol))
-        vis = calibration.apply_di_calsol(vis, calsols, ratio)
 
-    return weights.bake_flags_into_weights(vis), meta
+def build_baked_real(spark: SparkSession, ctx, metafits_path: str,
+                     gpubox_glob: str) -> tuple[DataFrame, ObsMeta]:
+    """The CLI flowchart (cli.build_baked) over an archive, up to
+    flag->weight baking, with the observation's metadata."""
+    obs = ArchiveObservation(spark, metafits_path, gpubox_glob)
+    return cli.build_baked(spark, ctx, obs), obs.meta

@@ -82,11 +82,10 @@ def get_spark(app_name: str = "birli_spark", cpus: int | None = None,
         .config("spark.sql.requireAllClusterKeysForCoPartition",
                 os.environ.get("SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS",
                                "0") == "1" and "true" or "false")
-        # warehouse for staged bucketed tables (the CLI's
-        # SPARK_GRAFT_BUCKETED_FACT fact staging, real_input.py; the
-        # bucketing tests): a tmp path, never the caller's cwd — a
-        # scale run would otherwise drop a fact-sized spark-warehouse
-        # into the repo checkout
+        # warehouse for saveAsTable (the bucketed tables of
+        # tests/test_bucketing.py): a tmp path, never the caller's cwd —
+        # a fact-sized table would otherwise land as a spark-warehouse
+        # in the repo checkout
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR") or os.path.join(
                     __import__("tempfile").gettempdir(),

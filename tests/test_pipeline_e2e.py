@@ -93,3 +93,15 @@ def test_physical_uvfits_written(rows):
     want = np.sort(np.repeat(pdf.bl_code.unique(),
                              E.NUM_T // E.AVG_TIME))
     assert (got == want).all()
+
+
+@pytest.mark.parametrize("spelling", ["disk", "memory", "LOCAL"])
+def test_fanout_persist_rejects_unknown_spelling(spark, monkeypatch,
+                                                 spelling):
+    """SPARK_GRAFT_FANOUT_PERSIST takes 'local' or 'reliable'; any other
+    value raises instead of silently falling back to 'local'."""
+    from birli_spark import pipeline
+
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_PERSIST", spelling)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_FANOUT_PERSIST"):
+        pipeline.fanout_materialize(spark.range(3))

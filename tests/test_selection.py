@@ -55,15 +55,17 @@ def test_baseline_selection_predicate_matches_operators(spark):
     spelling; this pins it to the operator composition so a change to
     either is caught."""
     from birli_spark.operators import selection
-    bl = spark.createDataFrame(
-        [(a1, a2) for a1 in range(6) for a2 in range(a1, 6)],
-        "ant1 int, ant2 int")
+    pairs = [(a1, a2) for a1 in range(6) for a2 in range(a1, 6)]
+    bl = spark.createDataFrame([(*p, i) for i, p in enumerate(pairs)],
+                               "ant1 int, ant2 int, bl int")
     flagged = spark.createDataFrame([(2,), (5,)], "ant int")
-    via_ops = selection.filter_autos(
+    via_ops = selection.select_ranges(selection.filter_autos(
         selection.filter_antennas(
-            selection.retain_antennas(bl, [0, 1, 2, 3, 5]), flagged))
+            selection.retain_antennas(bl, [0, 1, 2, 3, 5]), flagged)),
+        baselines=range(8))
     pred = selection.baseline_selection_predicate(
-        sel_ants=[0, 1, 2, 3, 5], flagged_ants=[2, 5], no_autos=True)
+        sel_ants=[0, 1, 2, 3, 5], flagged_ants=[2, 5], no_autos=True,
+        baseline_limit=8)
     key = lambda r: (r["ant1"], r["ant2"])  # noqa: E731
     assert (sorted(map(key, via_ops.collect()))
             == sorted(map(key, bl.filter(pred).collect())))
