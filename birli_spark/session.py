@@ -5,6 +5,16 @@ Arrow for pandas UDFs, UTC session timezone for oracle comparability) are
 what we would set on a real cluster. `spark.sql.shuffle.partitions` is set
 to the local core count — on a 1000-executor cluster this would be tuned to
 ~2-3x total cores or left to AQE's coalescing.
+
+Python workers fork from :mod:`birli_spark.pyworker`, set through Spark's
+own ``spark.python.daemon.module``. Every Python island (archive decode,
+the RFI island, the UVFITS/MS/mwaf writers) pays PySpark's per-task
+``importlib.invalidate_caches()``, which on CPython < 3.12 re-reads the
+directory of Spark's ``pyspark.zip`` once per cached zipimporter (16 per
+worker, ~0.22 CPU-s per task). The daemon re-reads an archive only when
+it changed, as CPython 3.12 does; it is otherwise ``pyspark.daemon``. On
+a cluster the package must be on the executors' Python path; a caller's
+``extra_conf`` can override the module like any conf.
 """
 
 from __future__ import annotations
@@ -54,6 +64,8 @@ def get_spark(app_name: str = "birli_spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # fork Python workers from our daemon (see module docstring)
+        .config("spark.python.daemon.module", "birli_spark.pyworker")
         # local-mode shuffle tuning: spill/shuffle blocks to tmpfs and
         # skip compression — local shuffles are memory-to-memory copies,
         # so lz4 and disk latency are pure overhead at this scale. On a

@@ -29,6 +29,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from birli_spark.sources import fitscore as fc
 
@@ -375,15 +376,20 @@ def scan_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
     filesystem mounted identically cluster-wide). Object-store URIs
     (s3://, hdfs://) are not handled here — use ``spark.read.format(
     "binaryFile")`` for those schemes; driver-side ``glob.glob`` and
-    worker-side ``open()`` both assume a mounted filesystem."""
+    worker-side ``open()`` both assume a mounted filesystem.
+
+    Partition ``i`` holds exactly the ``i``-th sorted path: a ``range``
+    with one slice per file, projected through the path array: no
+    exchange, no empty task and no task decoding two files."""
     import glob as _g
 
-    from birli_spark.sources.metafits import values_df
     paths = sorted(_g.glob(path_glob))
     if not paths:
         raise FileNotFoundError(f"no files match {path_glob!r}")
-    df = values_df(spark, [(p,) for p in paths], "path string")
-    return df.repartition(len(paths))
+    n = len(paths)
+    return spark.range(0, n, 1, n).select(F.element_at(
+        F.array(*[F.lit(p) for p in paths]),
+        (F.col("id") + 1).cast("int")).alias("path"))
 
 
 def _mmap_bytes(path: str) -> bytes:

@@ -60,6 +60,20 @@ def test_missing_hdu_detectable(spark, tmp_path):
     ts = sorted(r.t for r in df.select("t").distinct().collect())
     assert ts == [0, 1, 3]  # flag_missing_slabs (S2) fills the gap downstream
 
+def test_scan_paths_one_file_per_task(spark, tmp_path):
+    """24 files -> 24 tasks of exactly one file each, in sorted path
+    order, with no exchange in the plan."""
+    names = [f"gpubox{i:02d}_00.fits" for i in range(1, 25)]
+    for name in names:
+        (tmp_path / name).write_bytes(b"")
+    files = gpubox.scan_paths_df(spark, str(tmp_path / "*.fits"))
+    parts = files.rdd.glom().collect()
+    assert [len(p) for p in parts] == [1] * 24
+    assert [p[0].path for p in parts] == [str(tmp_path / n) for n in names]
+    plan = files._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
 def test_python_datasource_matches_mapinpandas(spark, gpubox_dir):
     """spark.read.format("gpubox") — the registered Python DataSource —
     must produce exactly the binaryFile+mapInPandas scan's rows, with
