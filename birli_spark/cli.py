@@ -992,12 +992,12 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
                     # parquet branch at avg 1/1 counts raw rows
                     # instead.
                     result["rows"] = rows.count()
-                n_chan = rows.select("chan_out").distinct().count()
                 with _stage("write uvfits"):
-                    # the writer validates the written group count
+                    # the writer probes the output grid (n_chan
+                    # included) and validates the written group count
                     # against the declared GCOUNT internally
                     uvsink.write_uvfits_distributed(
-                        rows, ctx.uvfits_out, n_chan,
+                        rows, ctx.uvfits_out,
                         jd_zero=uvsink.obs_jd_zero(obs.uvfits_gps))
             else:
                 out.orderBy(

@@ -152,12 +152,14 @@ def e2e_rows(spark: SparkSession, write_path: str | None = None,
     # scan Spark can neither column-prune nor share, so every action
     # paid THREE full archive decodes (guide §5: persist at the
     # fan-out). Rows are unchanged; only the plan shape is. The
-    # materialization spelling (localCheckpoint vs lineage-keeping
-    # persist vs reliable checkpoint) is deployment-selected — see
-    # pipeline.fanout_materialize. Lazy either way: the first action
-    # computes each partition once and every other consumer reads the
-    # stored block (bench timing still covers the materialization —
-    # the noop action runs inside the timer).
+    # materialization spelling follows the fact's size — see
+    # pipeline.fanout_materialize. The small one, localCheckpoint
+    # (eager=False), is lazy: the first action computes each partition
+    # once and every other consumer reads the stored block. The big
+    # one, the reliable checkpoint(eager=True), is eager: it writes the
+    # checkpoint files here, in this call, and every consumer reads
+    # them back. Bench timing covers the materialization either way:
+    # this call and the forcing action both run inside the timer.
     from birli_spark.pipeline import fanout_materialize
     # big above ~4M rows: the x4 probe (3.3M) still favors executor
     # blocks (6.0-7.3 s vs 7.7-8.2 s), the x16 one (13.4M) clearly

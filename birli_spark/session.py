@@ -15,6 +15,20 @@ worker, ~0.22 CPU-s per task). The daemon re-reads an archive only when
 it changed, as CPython 3.12 does; it is otherwise ``pyspark.daemon``. On
 a cluster the package must be on the executors' Python path; a caller's
 ``extra_conf`` can override the module like any conf.
+
+Spark caches each whole-stage-codegen class it compiles, keyed by the
+generated source, in a Guava cache bounded by
+``spark.sql.codegen.cache.maxEntries`` (default 100). Guava splits that
+bound into 4 segments of 25 entries, and one flowchart run generates
+about as many distinct classes (78 on the CLI's legacy chain, 98 on the
+SSINS e2e chain, counted with Spark's ``CodegenMetrics``), so at the
+default every later e2e run in the same session recompiled 32 evicted
+classes. A recompiled class is a new class: its hot loops restart in
+the interpreter and climb the JIT again, which cost the second e2e run
+~9 of its ~49 process-tree CPU-s on a 4-core host.
+:data:`CODEGEN_CACHE_ENTRIES` keeps the whole working set, so a session
+compiles each class once; a one-shot process compiles the same classes
+in its first run either way.
 """
 
 from __future__ import annotations
@@ -22,6 +36,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``: Guava splits it into 4
+#: segments, so 1000 gives 250 entries per segment against the ~100
+#: classes of the largest measured flowchart run (module docstring)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(app_name: str = "birli_spark", cpus: int | None = None,
@@ -64,6 +83,10 @@ def get_spark(app_name: str = "birli_spark", cpus: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # keep every generated class of a flowchart run compiled for the
+        # session's later runs (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # fork Python workers from our daemon (see module docstring)
         .config("spark.python.daemon.module", "birli_spark.pyworker")
         # local-mode shuffle tuning: spill/shuffle blocks to tmpfs and

@@ -228,7 +228,8 @@ def _pwrite_contiguous(fd: int, rec: np.ndarray, gidx: np.ndarray,
                   header_len + int(gidx[a]) * rec_size)
 
 
-def write_uvfits_distributed(rows: DataFrame, path: str, n_chan: int,
+def write_uvfits_distributed(rows: DataFrame, path: str,
+                             n_chan: int | None = None,
                              object_name: str = "synthetic",
                              jd_zero: float = GPS_EPOCH_JD) -> DataFrame:
     """Executor-parallel random-groups writer: group records are FIXED
@@ -241,8 +242,12 @@ def write_uvfits_distributed(rows: DataFrame, path: str, n_chan: int,
     validated against GCOUNT. Byte-identical to :func:`write_uvfits`
     (tests/test_sources_sinks.py).
 
-    ``rows`` is :func:`uvfits_group_rows` output. The write action runs
-    INSIDE this call and the written groups are validated against the
+    ``rows`` is :func:`uvfits_group_rows` output. The (t_out, bl,
+    chan_out) grid comes from ONE aggregate job over ``rows``; ``n_chan``
+    defaults to its distinct chan_out count, and a caller that knows the
+    expected count passes it to have the grid checked against it.
+
+    The write action runs INSIDE this call and the written groups are validated against the
     declared GCOUNT (a missing (t_out, bl) group would otherwise ship
     as a silent all-zero record) — DISTRIBUTEDLY: a per-t_out
     aggregation proves every t_out wrote exactly its contiguous
@@ -256,11 +261,13 @@ def write_uvfits_distributed(rows: DataFrame, path: str, n_chan: int,
     import pandas as pd
     from pyspark.sql import functions as F
 
-    t_dim = sorted(r[0] for r in rows.select("t_out").distinct().collect())
-    bl_dim = sorted(r[0] for r in rows.select("bl").distinct().collect())
-    chan_dim = sorted(
-        r[0] for r in rows.select("chan_out").distinct().collect())
-    if len(chan_dim) != n_chan:
+    dims = rows.agg(*[F.collect_set(c).alias(c)
+                      for c in ("t_out", "bl", "chan_out")]).first()
+    t_dim, bl_dim, chan_dim = (
+        sorted(dims[c]) for c in ("t_out", "bl", "chan_out"))
+    if n_chan is None:
+        n_chan = len(chan_dim)
+    elif len(chan_dim) != n_chan:
         raise ValueError(
             f"{len(chan_dim)} distinct chan_out vs n_chan={n_chan}")
     n_groups = len(t_dim) * len(bl_dim)
@@ -556,10 +563,10 @@ def uvfits_file_rows(spark, rows: DataFrame, path: str,
     The read-back is driver-side over the AVERAGED output (groups x
     chans, orders of magnitude below the fact scan); the write itself
     is executor-parallel."""
-    # materialize the averaged relation ONCE: the dim probes below plus
-    # write_uvfits_distributed's own three distinct collects and the
-    # write action would otherwise each re-run the whole upstream
-    # pipeline (5 executions of the fact plan for one file)
+    # materialize the averaged relation ONCE: the dim probe below plus
+    # write_uvfits_distributed's own grid probe and the write action
+    # would otherwise each re-run the whole upstream pipeline (3
+    # executions of the fact plan for one file)
     rows = rows.localCheckpoint(eager=True)
     n_chan = rows.select("chan_out").distinct().count()
     write_uvfits_distributed(rows, path, n_chan, jd_zero=jd_zero).count()

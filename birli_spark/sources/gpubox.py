@@ -373,16 +373,28 @@ def scan_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
 
     Requirement: ``path_glob`` must name a POSIX path visible on every
     worker (local disk in local mode, or a shared/distributed
-    filesystem mounted identically cluster-wide). Object-store URIs
-    (s3://, hdfs://) are not handled here — use ``spark.read.format(
-    "binaryFile")`` for those schemes; driver-side ``glob.glob`` and
-    worker-side ``open()`` both assume a mounted filesystem.
+    filesystem mounted identically cluster-wide). A ``file:`` URI names
+    such a path and is accepted; any other scheme (s3://, hdfs://)
+    raises ``ValueError`` — use ``spark.read.format("binaryFile")`` for
+    those; driver-side ``glob.glob`` and worker-side ``open()`` both
+    assume a mounted filesystem.
 
     Partition ``i`` holds exactly the ``i``-th sorted path: a ``range``
     with one slice per file, projected through the path array: no
     exchange, no empty task and no task decoding two files."""
     import glob as _g
+    import re
+    from urllib.parse import urlsplit
 
+    scheme = urlsplit(path_glob).scheme
+    if scheme == "file":
+        # not urlsplit's path: it would cut the glob at '?' or '#'
+        path_glob = re.sub(r"^file:(//(localhost)?(?=/))?", "", path_glob,
+                           flags=re.IGNORECASE)
+    elif scheme:
+        raise ValueError(
+            f"scan_paths_df reads mounted POSIX paths, not {scheme}:// "
+            f"URIs ({path_glob!r}); use spark.read.format('binaryFile')")
     paths = sorted(_g.glob(path_glob))
     if not paths:
         raise FileNotFoundError(f"no files match {path_glob!r}")

@@ -74,6 +74,29 @@ def test_scan_paths_one_file_per_task(spark, tmp_path):
     assert "Exchange" not in plan
 
 
+def test_scan_paths_file_uri_is_the_local_path(spark, tmp_path):
+    """A file: URI names a local path: the scan strips the scheme and
+    globs it like the bare path ('?' included)."""
+    for name in ("gpubox01_00.fits", "gpubox02_00.fits"):
+        (tmp_path / name).write_bytes(b"")
+    want = [str(tmp_path / n) for n in ("gpubox01_00.fits",
+                                        "gpubox02_00.fits")]
+    for uri in (f"file://{tmp_path}/gpubox0?_00.fits",
+                f"file:{tmp_path}/*.fits"):
+        got = [r.path for r in gpubox.scan_paths_df(spark, uri).collect()]
+        assert got == want
+
+
+@pytest.mark.parametrize("uri", ["s3://bucket/obs/*.fits",
+                                 "hdfs://nn:8020/obs/*.fits"])
+def test_scan_paths_rejects_remote_scheme(spark, uri):
+    """The driver-side glob cannot see object stores: a remote scheme
+    raises naming the scheme, not a misleading 'no files match'."""
+    scheme = uri.split(":")[0]
+    with pytest.raises(ValueError, match=f"{scheme}://"):
+        gpubox.scan_paths_df(spark, uri)
+
+
 def test_python_datasource_matches_mapinpandas(spark, gpubox_dir):
     """spark.read.format("gpubox") — the registered Python DataSource —
     must produce exactly the binaryFile+mapInPandas scan's rows, with

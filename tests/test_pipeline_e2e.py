@@ -95,6 +95,29 @@ def test_physical_uvfits_written(rows):
     assert (got == want).all()
 
 
+def test_rerun_compiles_no_new_class(rows, spark, tmp_path):
+    """A second flowchart run in the same session reuses every
+    whole-stage-codegen class of the first: the codegen cache holds the
+    run's working set (session.CODEGEN_CACHE_ENTRIES; at Spark's default
+    of 100 entries the rerun recompiled ~50 evicted classes)."""
+    import pandas as pd
+
+    from birli_spark import session
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES)
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    before = compiles.getCount()
+    again = E.e2e_rows(spark, write_path=str(tmp_path / "again.uvfits")
+                       ).toPandas()
+    assert compiles.getCount() - before == 0
+    key = ["t_out", "bl", "chan_out"]
+    pd.testing.assert_frame_equal(
+        again.sort_values(key, ignore_index=True),
+        rows[0].sort_values(key, ignore_index=True))
+
+
 @pytest.mark.parametrize("spelling", ["disk", "memory", "LOCAL"])
 def test_fanout_persist_rejects_unknown_spelling(spark, monkeypatch,
                                                  spelling):
