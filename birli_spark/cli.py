@@ -775,7 +775,10 @@ def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
     eta = ctx.sir_eta if ctx.sir_eta is not None else 0.2
     if ctx.ssins:
         from birli_spark.operators import ssins
-        return ssins.ssins_flag_vis(vis, threshold=ctx.ssins_threshold)
+        # the mask aggregate and the join-back probe both consume vis:
+        # materialize it once so the archive decodes once per action
+        return ssins.ssins_flag_vis(pipeline.fanout_materialize(vis),
+                                    threshold=ctx.ssins_threshold)
     if ctx.rfi_iterative or ctx.rfi_strategy == "generic":
         return rfi.flag_rfi_strategy(
             vis, base_sensitivity=ctx.rfi_sensitivity, eta=eta)

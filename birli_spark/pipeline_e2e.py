@@ -114,18 +114,11 @@ def scan_dir(num_t: int = NUM_T) -> str:
     return d
 
 
-def vis_from_scan(scan: DataFrame) -> DataFrame:
-    """Project the gpubox scan onto the standard 19-column vis schema
-    (adds freq/epoch/weight/flag via the SAME fragments the oracle
-    uses)."""
-    return scan.select(
-        "t", "ant1", "ant2", "bl", "cc", "fc", "chan",
-        F.expr(FREQ_EXPR).alias("freq_hz"),
-        F.expr(TS_EXPR).alias("ts_gps"),
-        F.lit(WEIGHT).cast("double").alias("weight"),
-        F.lit(False).alias("flag"),
-        *[c for c in _COLS if c.endswith("_re") or c.endswith("_im")],
-    ).select(*_COLS)
+def derived_columns() -> dict:
+    """freq_hz, ts_gps and the weight as Columns over the scan — the
+    SAME fragments the oracle uses (see gpubox.vis_relation)."""
+    return {"freq_hz": F.expr(FREQ_EXPR), "ts_gps": F.expr(TS_EXPR),
+            "weight": F.lit(WEIGHT).cast("double")}
 
 
 def e2e_rows(spark: SparkSession, write_path: str | None = None,
@@ -134,8 +127,9 @@ def e2e_rows(spark: SparkSession, write_path: str | None = None,
     the PHYSICAL executor-parallel random-groups write (the reference
     e2e's write stage — byte-gated separately as o1b/mo4). ``num_t``
     scales the observation 4x/16x for the scale-slope probe."""
-    vis = vis_from_scan(
-        gpubox.read_gpubox(spark, scan_dir(num_t) + "/*.fits"))
+    vis = gpubox.vis_relation(
+        gpubox.read_gpubox(spark, scan_dir(num_t) + "/*.fits"),
+        derived_columns())
     ants = spark.sql(antennas_values_sql())
     ts = spark.sql(timesteps_values_sql(num_t))
     part_uvw = spark.sql(part_uvw_values_sql(num_t))

@@ -109,19 +109,8 @@ def freq_expr(meta: ObsMeta) -> str:
 
 
 def detect_format(gpubox_glob: str) -> str:
-    """'mwax' (..._chNNN_BBB.fits), 'legacy' (..._gpuboxNN_BB.fits) or
-    'synthetic' (this repo's teaching format) by filename shape."""
-    import glob as _glob
-    import re as _re
-    paths = sorted(_glob.glob(gpubox_glob))
-    if not paths:
-        raise FileNotFoundError(f"no gpubox files match {gpubox_glob!r}")
-    name = paths[0]
-    if _re.search(r"_ch\d+_\d+\.fits$", name):
-        return "mwax"
-    if _re.search(r"gpubox\d+_\d+\.fits$", name):
-        return "legacy"
-    return "synthetic"
+    """'mwax', 'legacy' or 'synthetic' (:func:`gpubox.list_gpubox`)."""
+    return gpubox.list_gpubox(gpubox_glob)[0]
 
 
 def derived_columns(meta: ObsMeta, offset_s: float = 0.0) -> dict:
@@ -133,19 +122,6 @@ def derived_columns(meta: ObsMeta, offset_s: float = 0.0) -> dict:
           f" + CAST({meta.int_time_s / 2.0!r} AS DOUBLE)")
     return {"freq_hz": F.expr(freq_expr(meta)), "ts_gps": F.expr(ts),
             "weight": F.lit(float(meta.weight_factor)).cast("double")}
-
-
-def _finish_vis(scan: DataFrame, meta: ObsMeta,
-                offset_s: float = 0.0) -> DataFrame:
-    """Project a (t, ant1, ant2, bl, cc, fc, chan, pols) scan onto the
-    19-column canonical vis relation."""
-    d = derived_columns(meta, offset_s)
-    return scan.select(
-        "t", "ant1", "ant2", "bl", "cc", "fc", "chan",
-        d["freq_hz"].alias("freq_hz"), d["ts_gps"].alias("ts_gps"),
-        d["weight"].alias("weight"), F.lit(False).alias("flag"),
-        "xx_re", "xx_im", "xy_re", "xy_im",
-        "yx_re", "yx_im", "yy_re", "yy_im")
 
 
 def _with_global_t(scan: DataFrame, int_time_ms: int,
@@ -187,13 +163,11 @@ def gpubox_header_meta(gpubox_glob: str) -> dict:
     this is one metadata pass, same as the reference's context
     construction. ``bscale`` is the scan-image BSCALE (the reference's
     Van Vleck scale multiplies by it, src/van_vleck.rs:318-329)."""
-    import glob as _glob
-
     from birli_spark.sources import fitscore as fc
     min_ms = None
     max_ms = None
     bscale = None
-    for path in sorted(_glob.glob(gpubox_glob)):
+    for path in gpubox.list_gpubox(gpubox_glob)[1]:
         with open(path, "rb") as f:
             raw = f.read(fc.BLOCK)
             # walk header-by-header: parse each header unit (possibly
@@ -317,7 +291,7 @@ def load_vis_real(spark: SparkSession, meta: ObsMeta,
                 .drop("gpubox"))
     else:
         scan = gpubox.read_gpubox(spark, gpubox_glob)
-    return _finish_vis(scan, meta, offset_s=offset_s)
+    return gpubox.vis_relation(scan, derived_columns(meta, offset_s))
 
 
 class ArchiveObservation(cli.Observation):

@@ -8,12 +8,16 @@ one file per coarse channel — with buffer layout
 (src/io/mod.rs:248-254). Baselines are upper-triangular including autos
 in mwalib order.
 
-Spark shape: ``spark.read.format("binaryFile")`` distributes whole files
-to executors; an Arrow-batched ``mapInPandas`` parses each file's HDUs
-into the long-format fact rows. File-level parallelism matches the
-reference's per-coarse-channel rayon loop — and scales out: 24 files × N
-obs spread over the cluster, no driver bottleneck. A production MWAX
-layout (one HDU per timestep, ~100 MB–1 GB files) maps 1:1.
+Spark shape: every gpubox format goes through one archive scan
+(:func:`scan_archive`). The driver lists the glob once
+(:func:`list_gpubox`) into a relation of file paths with one partition
+per file, and an Arrow-batched ``mapInPandas`` hands each path to the
+format's decode, which reads the file in the Python worker and parses
+its HDUs into long-format fact rows. Archive bytes never pass through
+the JVM. File-level parallelism matches the reference's
+per-coarse-channel rayon loop and scales out: 24 files × N obs spread
+over the cluster, no driver bottleneck. A production MWAX layout (one
+HDU per timestep, ~100 MB–1 GB files) maps 1:1.
 
 The synthetic fixture writer mirrors the reference's coordinate-encoded
 test data design (reference tests/data/README.md: every cell value is a
@@ -24,7 +28,10 @@ oracle-checked against pure SQL that generates the same coordinates.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import glob as globmod
+import re
+from collections.abc import Callable, Iterable, Iterator
+from urllib.parse import urlsplit
 
 import numpy as np
 import pandas as pd
@@ -32,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from birli_spark.sources import fitscore as fc
+from birli_spark.sources import synthetic as syn
 
 FLOATS_PER_CHAN = 8  # 4 pols x (re, im) — src/io/mod.rs:195-199
 
@@ -96,15 +104,148 @@ def write_gpubox(path: str, cc_idx: int, num_ants: int, num_fine: int,
         f.write(b"".join(blobs))
 
 
+# ------------------------------------------------- the one archive scan ---
+
+#: filename shape -> format, with the channel the name carries: MWAX
+#: ``..._chNNN_BBB.fits`` (receiver coarse channel NNN) and legacy
+#: ``..._gpuboxNN_BB.fits`` (gpubox number NN)
+_NAME_FORMATS = (("mwax", re.compile(r"_ch(\d+)_\d+\.fits$")),
+                 ("legacy", re.compile(r"gpubox(\d+)_\d+\.fits$")))
+
+
+def gpubox_name(path: str) -> tuple[str, int | None]:
+    """(format, channel) of a gpubox file from its name: ('mwax',
+    receiver channel), ('legacy', gpubox number) or ('synthetic', None)
+    for this repo's teaching format, whose header carries CC_IDX.
+    mwalib derives channel identity from the filename the same way."""
+    for fmt, pattern in _NAME_FORMATS:
+        m = pattern.search(path)
+        if m:
+            return fmt, int(m.group(1))
+    return "synthetic", None
+
+
+def list_gpubox(path_glob: str) -> tuple[str, list[str]]:
+    """The one listing of a gpubox glob: (format, sorted paths).
+
+    ``path_glob`` must name a POSIX path visible on every worker (local
+    disk in local mode, or a shared/distributed filesystem mounted
+    identically cluster-wide): the driver globs it and each worker
+    opens its own file. A ``file:`` URI names such a path and is
+    accepted; any other scheme (s3://, hdfs://) raises ``ValueError``.
+    No match raises ``FileNotFoundError``; a glob whose files name more
+    than one format raises ``ValueError`` naming them."""
+    scheme = urlsplit(path_glob).scheme
+    if scheme == "file":
+        # not urlsplit's path: it would cut the glob at '?' or '#'
+        path_glob = re.sub(r"^file:(//(localhost)?(?=/))?", "", path_glob,
+                           flags=re.IGNORECASE)
+    elif scheme:
+        raise ValueError(
+            f"gpubox scans read mounted POSIX paths, not {scheme}:// "
+            f"URIs ({path_glob!r})")
+    paths = sorted(globmod.glob(path_glob))
+    if not paths:
+        raise FileNotFoundError(f"no gpubox files match {path_glob!r}")
+    fmts = sorted({gpubox_name(p)[0] for p in paths})
+    if len(fmts) > 1:
+        raise ValueError(
+            f"{path_glob!r} mixes gpubox formats: {' and '.join(fmts)}")
+    return fmts[0], paths
+
+
+def scan_paths_df(spark: SparkSession, path_glob: str,
+                  fmt: str | None = None) -> DataFrame:
+    """One row per listed file (:func:`list_gpubox`) in a ``path``
+    column. Partition ``i`` holds exactly the ``i``-th sorted path: a
+    ``range`` with one slice per file, projected through the path
+    array, so there is no exchange, no empty task and no task decoding
+    two files. ``fmt``, when given, is the format the caller decodes;
+    files of another format raise ``ValueError``.
+
+    Only paths cross the JVM (round-8 scale run): shipping file bytes
+    through it (``binaryFile``) at 24 concurrent ~340 MB files collapsed
+    into JVM-side lock contention — executor task threads burned >9 CPU
+    cores of futex churn while every Python worker starved — and JVM
+    RSS grew by the whole archive."""
+    found, paths = list_gpubox(path_glob)
+    if fmt is not None and found != fmt:
+        raise ValueError(f"{path_glob!r} holds {found} gpubox files, "
+                         f"not {fmt}")
+    n = len(paths)
+    return spark.range(0, n, 1, n).select(F.element_at(
+        F.array(*[F.lit(p) for p in paths]),
+        (F.col("id") + 1).cast("int")).alias("path"))
+
+
+#: a format's decode: (file bytes, channel from the file name) -> the
+#: file's fact rows as pandas frames
+Decode = Callable[[bytes, int | None], Iterable[pd.DataFrame]]
+
+
+def decode_file(path: str, decode: Decode) -> Iterable[pd.DataFrame]:
+    """The per-file scan body every reader shares: read ``path`` whole
+    and decode it with the channel its name carries.
+
+    One large sequential read into the process heap, deliberately NOT
+    mmap: a fresh per-file mapping takes a minor fault on every 4 KiB
+    page at first touch, and N workers faulting concurrently serialize
+    on the host's page-fault path — the round-8 scale run measured
+    s1h_scale_x16 going 20→92 s with 8 cores BEATING 32 (VERDICT r8
+    item 1). A buffered read copies from the page cache inside one
+    syscall per file into heap pages that the malloc tuning
+    (session._tune_malloc: MALLOC_MMAP_MAX_=0, no trim) keeps mapped, so
+    each long-lived reused worker faults its high-water mark once and
+    recycles the same pages for every subsequent file."""
+    with open(path, "rb") as f:
+        content = f.read()
+    return decode(content, gpubox_name(path)[1])
+
+
+def scan_archive(spark: SparkSession, path_glob: str, schema: str,
+                 decode: Decode, fmt: str | None = None) -> DataFrame:
+    """The one distributed archive scan: one task per listed file (=
+    coarse channel), like the reference's per-coarse-channel parallel
+    read; each task runs :func:`decode_file` and ships the frames back
+    as Arrow batches of ``schema``. ``fmt`` as in :func:`scan_paths_df`."""
+    files = scan_paths_df(spark, path_glob, fmt)
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for path in pdf["path"]:
+                yield from decode_file(str(path), decode)
+
+    return files.mapInPandas(scan, schema=schema)
+
+
+def _one_frame(frames: list[pd.DataFrame]) -> list[pd.DataFrame]:
+    """A file's scan frames joined into one: the file ships to the JVM
+    as one Arrow batch, not one per scan with its own framing."""
+    return [pd.concat(frames, ignore_index=True)] if frames else []
+
+
+def vis_relation(scan: DataFrame, derived: dict) -> DataFrame:
+    """Project a (t, ant1, ant2, bl, cc, fc, chan, pols) scan onto the
+    19-column canonical vis relation: ``derived`` supplies freq_hz,
+    ts_gps and weight as Columns, and flag starts False."""
+    cols = {"flag": F.lit(False), **derived}
+    return scan.select(*[cols[c].alias(c) if c in cols else c
+                         for c in syn.VIS_COLUMNS])
+
+
+# ------------------------------------- synthetic (teaching) gpubox format ---
+
 _SCAN_SCHEMA = ("t int, ant1 int, ant2 int, bl int, cc int, fc int, "
                 "chan int, xx_re double, xx_im double, xy_re double, "
                 "xy_im double, yx_re double, yx_im double, yy_re double, "
                 "yy_im double")
 
 
-def parse_gpubox_bytes(content: bytes) -> pd.DataFrame:
-    """Parse one gpubox file into long-format rows (numpy-vectorized —
-    no per-cell Python)."""
+def parse_gpubox_bytes(content: bytes,
+                       channel: int | None = None) -> list[pd.DataFrame]:
+    """Decode one synthetic gpubox file into long-format rows, one frame
+    per file (numpy-vectorized — no per-cell Python). The coarse
+    channel is the header's CC_IDX; ``channel`` is unused."""
     header, off = fc.parse_header(content)
     cc = int(header["CC_IDX"])
     num_fine = int(header["NCHANS"])
@@ -132,32 +273,12 @@ def parse_gpubox_bytes(content: bytes) -> pd.DataFrame:
             "yx_re": flat[:, 4], "yx_im": flat[:, 5],
             "yy_re": flat[:, 6], "yy_im": flat[:, 7],
         }))
-    if not frames:
-        return pd.DataFrame(
-            columns=["t", "ant1", "ant2", "bl", "cc", "fc", "chan",
-                     "xx_re", "xx_im", "xy_re", "xy_im",
-                     "yx_re", "yx_im", "yy_re", "yy_im"])
-    return pd.concat(frames, ignore_index=True)
+    return _one_frame(frames)
 
 
 def read_gpubox(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed gpubox scan: one task per file (= coarse channel),
-    like the reference's per-coarse-channel parallel read. Ships file
-    PATHS to the workers (see :func:`scan_paths_df`) — each Python
-    worker mmap-reads its own file, so archive bytes never transit the
-    JVM (the round-8 fix the MWAX/legacy readers already carry: the
-    ``binaryFile`` route serialized every byte through executor threads
-    and an Arrow transfer before the parse even started)."""
-    files = scan_paths_df(spark, path_glob)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                out = parse_gpubox_bytes(_mmap_bytes(str(path)))
-                if len(out):
-                    yield out
-
-    return files.mapInPandas(parse, schema=_SCAN_SCHEMA)
+    """Distributed scan of synthetic gpubox files (:func:`scan_archive`)."""
+    return scan_archive(spark, path_glob, _SCAN_SCHEMA, parse_gpubox_bytes)
 
 
 # --------------------------------------------- Python DataSource (V2) ---
@@ -179,12 +300,13 @@ try:
         """``spark.read.format("gpubox").load(glob)`` — the gpubox FITS
         scan as a first-class Spark (Python) data source.
 
-        Planning: the driver globs the path into one
-        :class:`InputPartition` per file, so parallelism = file count —
-        the same per-coarse-channel task split as the reference's read
-        (src/io/mod.rs:248-254) and as :func:`read_gpubox`. Each task
-        parses its file numpy-vectorized and ships Arrow record batches
-        to the JVM (no per-row Python). Register once per session:
+        Planning: the driver lists the path (:func:`list_gpubox`) into
+        one :class:`InputPartition` per file, so parallelism = file
+        count — the same per-coarse-channel task split as the
+        reference's read (src/io/mod.rs:248-254) and as
+        :func:`read_gpubox`. Each task runs the shared per-file scan
+        (:func:`decode_file`) and ships Arrow record batches to the JVM
+        (no per-row Python). Register once per session:
         ``spark.dataSource.register(GpuboxDataSource)``.
         """
 
@@ -205,21 +327,14 @@ try:
                 raise ValueError("gpubox source requires a path")
 
         def partitions(self):
-            import glob as globmod
-            files = sorted(globmod.glob(self._path))
-            if not files:
-                raise FileNotFoundError(
-                    f"no gpubox files match {self._path}")
-            return [InputPartition(f) for f in files]
+            return [InputPartition(f) for f in list_gpubox(self._path)[1]]
 
         def read(self, partition):
             import pyarrow as pa
-            with open(partition.value, "rb") as f:
-                content = f.read()
-            pdf = parse_gpubox_bytes(content)
-            table = pa.Table.from_pandas(
-                pdf, preserve_index=False).cast(_arrow_scan_schema())
-            yield from table.to_batches()
+            for pdf in decode_file(partition.value, parse_gpubox_bytes):
+                yield from pa.Table.from_pandas(
+                    pdf, preserve_index=False).cast(
+                    _arrow_scan_schema()).to_batches()
 
 except ImportError:  # pragma: no cover — pyspark < 4 fallback
     GpuboxDataSource = None
@@ -271,12 +386,14 @@ _MWAX_SCHEMA = ("cc_recv int, unix_ms bigint, t int, ant1 int, ant2 int, "
                 "w_xx double, w_xy double, w_yx double, w_yy double")
 
 
-def parse_mwax_gpubox_bytes(content: bytes, cc_recv: int) -> pd.DataFrame:
-    """Parse one REAL MWAX gpubox file (correlator v2 — the format the
-    reference reads via mwalib; validated against the reference's own
-    test data ``tests/data/1297526432_mwax``): a primary metadata HDU
-    (CORR_VER/TIME/MILLITIM/NFINECHS/NINPUTS), then per scan an
-    alternating pair of image HDUs — visibilities with row layout
+def parse_mwax_gpubox_bytes(content: bytes,
+                            cc_recv: int) -> list[pd.DataFrame]:
+    """Decode one REAL MWAX gpubox file, one frame per file (correlator
+    v2 — the format the reference reads via mwalib; validated against
+    the reference's own test data ``tests/data/1297526432_mwax``): a
+    primary metadata HDU (CORR_VER/TIME/MILLITIM/NFINECHS/NINPUTS), then
+    per scan an alternating pair of image HDUs — visibilities with row
+    layout
     ``[baseline][finechan][pol][r, i]`` and per-baseline-per-pol
     weights (reference src/io/mod.rs:284-294 consumes exactly
     8 floats/chan; NAXIS1 = nfine × 4 pol × 2).
@@ -338,107 +455,15 @@ def parse_mwax_gpubox_bytes(content: bytes, cc_recv: int) -> pd.DataFrame:
         raise ValueError(
             "truncated MWAX gpubox file: trailing visibility HDU "
             f"(unix_ms={vis[0]}) has no weights HDU")
-    if not frames:
-        return pd.DataFrame(columns=_MWAX_SCHEMA.replace(
-            " int", "").replace(" bigint", "").replace(
-            " double", "").split(", "))
-    return pd.concat(frames, ignore_index=True)
-
-
-def _recv_channel_of(path: str) -> int:
-    """Receiver coarse channel from the gpubox filename
-    (``..._chNNN_BBB.fits`` — mwalib derives channel identity from the
-    filename the same way)."""
-    import re as _re
-    m = _re.search(r"_ch(\d+)_", path)
-    if not m:
-        raise ValueError(f"no _chNNN_ receiver channel in {path!r}")
-    return int(m.group(1))
-
-
-def scan_paths_df(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One row per matched archive file, one partition per file — the
-    whole-file task split of the ``binaryFile`` source WITHOUT moving
-    the bytes through the JVM. Each Python worker mmap-reads its own
-    file from shared storage (page-cache backed, zero-copy until
-    touched), so the JVM never holds archive bytes at all.
-
-    Motivation (round-8 scale run): at 24 concurrent ~340 MB files the
-    binaryFile route collapsed into JVM-side lock contention — executor
-    task threads burned >9 CPU cores of pure system-time futex churn
-    while every Python worker starved on an empty socket — and JVM RSS
-    grew by the whole archive. Paths-only sidesteps both, and is also
-    the right 1000-executor shape: the bytes move straight from the
-    distributed filesystem into the worker that decodes them.
-
-    Requirement: ``path_glob`` must name a POSIX path visible on every
-    worker (local disk in local mode, or a shared/distributed
-    filesystem mounted identically cluster-wide). A ``file:`` URI names
-    such a path and is accepted; any other scheme (s3://, hdfs://)
-    raises ``ValueError`` — use ``spark.read.format("binaryFile")`` for
-    those; driver-side ``glob.glob`` and worker-side ``open()`` both
-    assume a mounted filesystem.
-
-    Partition ``i`` holds exactly the ``i``-th sorted path: a ``range``
-    with one slice per file, projected through the path array: no
-    exchange, no empty task and no task decoding two files."""
-    import glob as _g
-    import re
-    from urllib.parse import urlsplit
-
-    scheme = urlsplit(path_glob).scheme
-    if scheme == "file":
-        # not urlsplit's path: it would cut the glob at '?' or '#'
-        path_glob = re.sub(r"^file:(//(localhost)?(?=/))?", "", path_glob,
-                           flags=re.IGNORECASE)
-    elif scheme:
-        raise ValueError(
-            f"scan_paths_df reads mounted POSIX paths, not {scheme}:// "
-            f"URIs ({path_glob!r}); use spark.read.format('binaryFile')")
-    paths = sorted(_g.glob(path_glob))
-    if not paths:
-        raise FileNotFoundError(f"no files match {path_glob!r}")
-    n = len(paths)
-    return spark.range(0, n, 1, n).select(F.element_at(
-        F.array(*[F.lit(p) for p in paths]),
-        (F.col("id") + 1).cast("int")).alias("path"))
-
-
-def _mmap_bytes(path: str) -> bytes:
-    """Read an archive file with ONE large sequential read into the
-    process heap (name kept from the round-8 mmap spelling).
-
-    Deliberately NOT mmap: a fresh per-file mapping takes a minor
-    fault on every 4 KiB page at first touch, and N workers faulting
-    concurrently serialize on the host's page-fault path — round-8
-    driver ground truth was s1h_scale_x16 going 20→92 s with 8 cores
-    BEATING 32 (VERDICT r8 item 1). A buffered read copies from the
-    page cache inside one syscall per file into heap pages that the
-    malloc tuning (session._tune_malloc: MALLOC_MMAP_MAX_=0, no trim)
-    keeps mapped, so each long-lived reused worker faults its
-    high-water mark once and recycles the same pages for every
-    subsequent file. Also closes the round-8 ADVICE note about the
-    never-closed mmap handle: plain bytes, no handle to leak."""
-    with open(path, "rb") as f:
-        return f.read()
+    return _one_frame(frames)
 
 
 def read_mwax_gpubox(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed scan of REAL MWAX gpubox files: one task per file
-    (= per coarse-channel batch), Arrow-batched parse — the same
-    per-file task split as the reference's rayon read loop. Workers
-    read their own file (see :func:`scan_paths_df`)."""
-    files = scan_paths_df(spark, path_glob)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                out = parse_mwax_gpubox_bytes(
-                    _mmap_bytes(str(path)), _recv_channel_of(str(path)))
-                if len(out):
-                    yield out
-
-    return files.mapInPandas(parse, schema=_MWAX_SCHEMA)
+    """Distributed scan of REAL MWAX gpubox files (:func:`scan_archive`):
+    one task per (coarse channel, batch) file, the receiver channel
+    taken from the ``_chNNN_`` file name."""
+    return scan_archive(spark, path_glob, _MWAX_SCHEMA,
+                        parse_mwax_gpubox_bytes, fmt="mwax")
 
 
 def mwax_expected_sql(recv_channels: tuple[int, ...] = (117, 118),
@@ -517,10 +542,12 @@ try:
             self._min_age_s = float(options.get("min_age_s", "0"))
 
         def _files(self):
-            import glob as globmod
             import os as osmod
             import time as timemod
-            names = sorted(globmod.glob(self._path))
+            try:
+                names = list_gpubox(self._path)[1]
+            except FileNotFoundError:
+                return []  # nothing has arrived yet
             if not self._min_age_s:
                 return names
             cutoff = timemod.time() - self._min_age_s
@@ -544,8 +571,7 @@ try:
             return [InputPartition(f) for f in end.get("files", [])
                     if f not in seen]
 
-        # shares the batch reader's parse body (GpuboxReader.read):
-        # one divergence point for the open/parse/cast/batch chain
+        # the batch reader's per-file body (GpuboxReader.read)
         read = GpuboxReader.read
 
         def commit(self, end):

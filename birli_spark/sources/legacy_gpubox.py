@@ -23,8 +23,9 @@ The legacy format is the quirky one (reference tests/data/README.md:
 - coarse channels map receiver channel → sky order with the MWA
   spectral-flip rule: channels ≤ 128 ascend, channels > 128 descend.
 
-Spark shape: like the MWAX reader, ``binaryFile`` distributes whole
-files; the slot gather is one vectorized numpy take per tile (no
+Spark shape: like the MWAX reader, the shared archive scan
+(``gpubox.scan_archive``) runs one task per file, and the worker reads
+its own file; the slot gather is one vectorized numpy take per scan (no
 per-cell Python). The (ant1, ant2, pol) → (slot, conj) mapping is a
 per-obs constant built from the metafits input table and broadcast with
 the task closure.
@@ -40,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from birli_spark.sources import fitscore as fc
+from birli_spark.sources import gpubox
 from birli_spark.sources import metafits as mf
 
 #: pol combos in output column order; combo (p1, p2) reads input
@@ -213,49 +215,35 @@ def read_legacy_gpubox(spark: SparkSession, path_glob: str,
     n_fine = ctx["n_fine_per_coarse"]
     order = sky_channel_order(ctx["coarse_channels"])
     sky_of_gpubox = {gi + 1: si for si, gi in enumerate(order)}
-    from birli_spark.sources.gpubox import _mmap_bytes, scan_paths_df
-    files = scan_paths_df(spark, path_glob)
+    n_bl = len(a1s)
+    bl_idx = np.arange(n_bl, dtype=np.int32)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import re as _re
-        n_bl = len(a1s)
-        bl_idx = np.arange(n_bl, dtype=np.int32)
-        for pdf in batches:
-            for path in pdf["path"]:
-                m = _re.search(r"gpubox(\d+)_", str(path))
-                if not m:
-                    raise ValueError(f"no gpuboxNN in {path!r}")
-                gp = int(m.group(1))
-                sky_cc = sky_of_gpubox[gp]
-                for unix_ms, tiles in iter_legacy_scans(
-                        _mmap_bytes(str(path))):
-                    # one frame per scan (all fine chans tiled), not one
-                    # per (scan, chan): a 128-fine-chan obs would
-                    # otherwise pay Arrow batch overhead 128x per scan
-                    nf = tiles.shape[0]
-                    cols = {}
-                    for pi, name in enumerate(("xx", "xy", "yx", "yy")):
-                        s = slots[:, pi]
-                        # one fancy gather over the whole (fine, slot)
-                        # plane — fcn-major order, identical to the
-                        # former per-fine-channel concat loop but one
-                        # numpy take instead of nf Python iterations
-                        cols[f"{name}_re"] = tiles[:, s, 0].reshape(-1)
-                        cols[f"{name}_im"] = (
-                            tiles[:, s, 1] * signs[None, :, pi]
-                        ).reshape(-1)
-                    yield pd.DataFrame({
-                        "chan": np.repeat(
-                            sky_cc * n_fine + np.arange(nf), n_bl
-                        ).astype(np.int32),
-                        "gpubox": np.int32(gp),
-                        "unix_ms": np.int64(unix_ms),
-                        "ant1": np.tile(a1s, nf),
-                        "ant2": np.tile(a2s, nf),
-                        "bl": np.tile(bl_idx, nf),
-                        "fc": np.repeat(
-                            np.arange(nf), n_bl).astype(np.int32),
-                        **cols,
-                    })
+    def decode(content: bytes, gp: int) -> Iterator[pd.DataFrame]:
+        sky_cc = sky_of_gpubox[gp]
+        for unix_ms, tiles in iter_legacy_scans(content):
+            # one frame per scan (all fine chans tiled), not one per
+            # (scan, chan): a 128-fine-chan obs would otherwise pay
+            # Arrow batch overhead 128x per scan
+            nf = tiles.shape[0]
+            cols = {}
+            for pi, name in enumerate(("xx", "xy", "yx", "yy")):
+                s = slots[:, pi]
+                # one fancy gather over the whole (fine, slot) plane,
+                # fcn-major order
+                cols[f"{name}_re"] = tiles[:, s, 0].reshape(-1)
+                cols[f"{name}_im"] = (
+                    tiles[:, s, 1] * signs[None, :, pi]).reshape(-1)
+            yield pd.DataFrame({
+                "chan": np.repeat(
+                    sky_cc * n_fine + np.arange(nf), n_bl).astype(np.int32),
+                "gpubox": np.int32(gp),
+                "unix_ms": np.int64(unix_ms),
+                "ant1": np.tile(a1s, nf),
+                "ant2": np.tile(a2s, nf),
+                "bl": np.tile(bl_idx, nf),
+                "fc": np.repeat(np.arange(nf), n_bl).astype(np.int32),
+                **cols,
+            })
 
-    return files.mapInPandas(parse, schema=_LEGACY_SCHEMA)
+    return gpubox.scan_archive(spark, path_glob, _LEGACY_SCHEMA, decode,
+                               fmt="legacy")

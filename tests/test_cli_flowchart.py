@@ -209,6 +209,44 @@ def test_archive_gate_pool_honours_baseline_limit(spark, obs):
         aggregated.sort_values(keys, ignore_index=True))
 
 
+def test_archive_ssins_decodes_once(spark, obs, tmp_path, monkeypatch):
+    """--ssins feeds the decoded fact to the SSINS mask aggregate and to
+    the join-back probe; the archive decode still runs once per file."""
+    import glob
+
+    from birli_spark import cli
+    from birli_spark.sources import gpubox
+
+    decoded = spark.sparkContext.accumulator(0)
+    decode_file = gpubox.decode_file
+
+    def counted(path, decode):
+        decoded.add(1)
+        return decode_file(path, decode)
+
+    # the scan task pickles the module global it calls, so the count
+    # travels to the Python workers with it
+    monkeypatch.setattr(gpubox, "decode_file", counted)
+    cli.run(_argv("arc/ssins", str(tmp_path), obs, ""), spark=spark)
+    assert decoded.value / len(glob.glob(obs["glob"])) == 1.0
+
+
+def test_archive_file_uri_matches_bare_path(spark, obs, tmp_path):
+    """--gpubox accepts a file: URI and writes the same UVFITS bytes as
+    the bare path."""
+    from birli_spark import cli
+
+    written = []
+    for tag, glob_ in (("bare", obs["glob"]),
+                       ("uri", "file://" + obs["glob"])):
+        out = str(tmp_path / f"{tag}.uvfits")
+        cli.run(["-m", obs["metafits"], "--gpubox", glob_, "--no-rfi",
+                 "-u", out, "--no-draw-progress"], spark=spark)
+        with open(out, "rb") as f:
+            written.append(f.read())
+    assert written[0] == written[1]
+
+
 def test_synthetic_flag_sinks_follow_cli_options(spark, sf_dir, tmp_path):
     """-f and --flag-parquet write the run's own flags (from the baked
     weights): an extra --flag-antennas reaches both files."""

@@ -142,7 +142,7 @@ def test_real_input_plan_shape(spark):
     import re
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
     # cross joins must sit over local (dim) relations, never the scan
-    assert "Scan parquet" not in plan  # real mode reads binaryFile
+    assert "Scan parquet" not in plan  # real mode scans the gpubox files
 
 
 def test_cli_real_input_flag_parquet_uses_real_flags(spark, tmp_path):

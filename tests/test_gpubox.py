@@ -60,9 +60,10 @@ def test_missing_hdu_detectable(spark, tmp_path):
     ts = sorted(r.t for r in df.select("t").distinct().collect())
     assert ts == [0, 1, 3]  # flag_missing_slabs (S2) fills the gap downstream
 
-def test_scan_paths_one_file_per_task(spark, tmp_path):
+def test_scan_paths_one_file_per_task(spark, tmp_path, gpubox_dir):
     """24 files -> 24 tasks of exactly one file each, in sorted path
-    order, with no exchange in the plan."""
+    order, with no exchange in the plan; every reader's scan is that
+    relation under exactly one MapInPandas over ``path``."""
     names = [f"gpubox{i:02d}_00.fits" for i in range(1, 25)]
     for name in names:
         (tmp_path / name).write_bytes(b"")
@@ -72,6 +73,49 @@ def test_scan_paths_one_file_per_task(spark, tmp_path):
     assert [p[0].path for p in parts] == [str(tmp_path / n) for n in names]
     plan = files._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+    from perfbench import inputs
+
+    from birli_spark.sources import legacy_gpubox as lg
+
+    legacy = inputs.legacy_obs(str(tmp_path / "legacy"), 0,
+                               inputs.LegacyShape(2, 2, 2))
+    mwax = tmp_path / "mwax"
+    mwax.mkdir()
+    for ci, ch in enumerate((117, 118)):
+        write_mwax(str(mwax / f"1297526432_20210216160014_ch{ch}_000.fits"),
+                   hdu0=ci * 2)
+    for scan, n_files in (
+            (gpubox.read_gpubox(spark, gpubox_dir + "/*.fits"), N_CC),
+            (gpubox.read_mwax_gpubox(spark, str(mwax / "*.fits")), 2),
+            (lg.read_legacy_gpubox(spark, legacy["glob"],
+                                   legacy["metafits"]), 24)):
+        plan = scan._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1 and "(path#" in plan
+        assert "Exchange" not in plan
+        assert scan.rdd.getNumPartitions() == n_files
+
+
+def test_list_gpubox_formats(tmp_path):
+    """One listing names each glob's format from its file names and
+    refuses a glob that mixes formats."""
+    for name in ("1297526432_20210216160014_ch117_000.fits",
+                 "1196175296_20171205150149_gpubox01_00.fits",
+                 "gpubox_00.fits"):
+        (tmp_path / name).write_bytes(b"")
+    assert gpubox.list_gpubox(str(tmp_path / "*_ch*.fits")) == (
+        "mwax", [str(tmp_path / "1297526432_20210216160014_ch117_000.fits")])
+    assert gpubox.list_gpubox(str(tmp_path / "*_gpubox*.fits"))[0] == \
+        "legacy"
+    assert gpubox.list_gpubox(str(tmp_path / "gpubox_*.fits"))[0] == \
+        "synthetic"
+    with pytest.raises(ValueError, match="legacy and mwax"):
+        gpubox.list_gpubox(str(tmp_path / "1*.fits"))
+    with pytest.raises(FileNotFoundError):
+        gpubox.list_gpubox(str(tmp_path / "none_*.fits"))
+    assert gpubox.gpubox_name("x/obs_ch101_001.fits") == ("mwax", 101)
+    assert gpubox.gpubox_name("x/obs_gpubox07_01.fits") == ("legacy", 7)
+    assert gpubox.gpubox_name("x/aaa_gpubox.fits") == ("synthetic", None)
 
 
 def test_scan_paths_file_uri_is_the_local_path(spark, tmp_path):
@@ -99,8 +143,8 @@ def test_scan_paths_rejects_remote_scheme(spark, uri):
 
 def test_python_datasource_matches_mapinpandas(spark, gpubox_dir):
     """spark.read.format("gpubox") — the registered Python DataSource —
-    must produce exactly the binaryFile+mapInPandas scan's rows, with
-    one input partition per file."""
+    must produce exactly the mapInPandas scan's rows, with one input
+    partition per file."""
     gpubox.register_gpubox_source(spark)
     via_ds = (spark.read.format("gpubox")
               .load(gpubox_dir + "/*.fits"))
@@ -142,6 +186,69 @@ def test_mwax_real_reference_files(spark):
         assert r.w_xx == 1.0 and r.w_yy == 1.0
     # scan index within file
     assert set(pdf.t) == {0, 1}
+
+
+def write_mwax(path: str, hdu0: int, n_scans: int = 2, num_ants: int = 2,
+               num_fine: int = 2, obs_unix: int = 1613491214,
+               truncate: bool = False) -> None:
+    """A small MWAX (v2) gpubox file in the reference's coordinate
+    encoding (reference tests/data/README.md): scan ``s`` is global HDU
+    ``hdu0 + s`` and each int32 cell is ``0x41<<16 | hdu<<8 | offset``
+    with offset ``bl*16 + fc*8 + pol*2 + reim``; unit weights; scans
+    every 500 ms. ``truncate`` drops the last scan's weights HDU."""
+    from birli_spark.sources import fitscore as fc
+
+    n_bl = num_ants * (num_ants + 1) // 2
+    blobs = [fc.pad_block(b"".join([
+        fc.card("SIMPLE", True), fc.card("BITPIX", 8), fc.card("NAXIS", 0),
+        fc.card("CORR_VER", 2), fc.card("NFINECHS", num_fine),
+        fc.card("NINPUTS", 2 * num_ants), fc.end_card()]))]
+
+    def hdu(bitpix, naxis1, data, s):
+        blobs.append(fc.pad_block(b"".join([
+            fc.card("XTENSION", "IMAGE"), fc.card("BITPIX", bitpix),
+            fc.card("NAXIS", 2), fc.card("NAXIS1", naxis1),
+            fc.card("NAXIS2", n_bl), fc.card("PCOUNT", 0),
+            fc.card("GCOUNT", 1), fc.card("TIME", obs_unix),
+            fc.card("MILLITIM", s * 500), fc.end_card()])))
+        blobs.append(fc.pad_block(data.tobytes(), b"\x00"))
+
+    offset = (np.arange(n_bl)[:, None] * 16
+              + np.arange(num_fine * 8)[None, :])
+    for s in range(n_scans):
+        hdu(32, num_fine * 8,
+            ((0x41 << 16) + (hdu0 + s) * 256 + offset).astype(">i4"), s)
+        if not (truncate and s == n_scans - 1):
+            hdu(-32, 4, np.ones((n_bl, 4), dtype=">f4"), s)
+    with open(path, "wb") as f:
+        f.write(b"".join(blobs))
+
+
+def test_mwax_scan_matches_closed_form_oracle(spark, tmp_path):
+    """Two receiver channels x two scans of generated MWAX files decode
+    to exactly the closed-form DuckDB twin of the encoding."""
+    import duckdb
+
+    for ci, ch in enumerate((117, 118)):
+        write_mwax(str(tmp_path / f"1297526432_20210216160014_ch{ch}_000"
+                       ".fits"), hdu0=ci * 2)
+    keys = ["cc_recv", "unix_ms", "bl", "fc"]
+    got = (gpubox.read_mwax_gpubox(spark, str(tmp_path / "*.fits"))
+           .toPandas().sort_values(keys, ignore_index=True))
+    exp = duckdb.sql(gpubox.mwax_expected_sql(
+        (117, 118), n_batches=1, scans_per_batch=2)).df().sort_values(
+        keys, ignore_index=True)
+    assert len(got) == 2 * 2 * 3 * 2
+    assert got.equals(exp.astype(got.dtypes.to_dict()))
+
+
+def test_mwax_truncated_file_raises(tmp_path):
+    """A trailing visibility HDU without its weights HDU (a file still
+    being written) fails loudly instead of dropping the scan."""
+    path = tmp_path / "1297526432_20210216160014_ch117_000.fits"
+    write_mwax(str(path), hdu0=0, truncate=True)
+    with pytest.raises(ValueError, match="truncated MWAX"):
+        gpubox.parse_mwax_gpubox_bytes(path.read_bytes(), 117)
 
 
 def test_mwax_rejects_legacy(spark):

@@ -54,8 +54,9 @@ def test_all_flagged_block_carries_raw_values(rows, spark):
 
     # recompute the expected raw mean for one cross baseline, one
     # output channel, directly from the scan + ungated geometry
-    vis = E.vis_from_scan(
-        gpubox.read_gpubox(spark, E.scan_dir() + "/*.fits"))
+    vis = gpubox.vis_relation(
+        gpubox.read_gpubox(spark, E.scan_dir() + "/*.fits"),
+        E.derived_columns())
     part_uvw = spark.sql(E.part_uvw_values_sql())
     geo = corrections.correct_geometry(
         vis.filter("t < 2 AND ant1 = 0 AND ant2 = 1 AND chan < 2"),
