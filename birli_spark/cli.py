@@ -34,13 +34,14 @@ from __future__ import annotations
 import argparse
 import math
 import sys
+import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from birli_spark import pipeline
 from birli_spark.operators import (averaging, calibration, chunking,
                                    corrections, describe, flags, selection,
                                    weights)
@@ -80,7 +81,6 @@ class Context:
     dut1: float = 0.0
     rfi_sensitivity: float = 6.0
     rfi_strategy: str = "mwa"
-    rfi_impl: str = "float"
     no_draw_progress: bool = False
     rfi_iterative: bool = False
     sir_eta: float | None = None
@@ -203,13 +203,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "stderr (the reference's flag of the same "
                         "name; stage detail remains in the Spark UI "
                         "via job descriptions)")
-    p.add_argument("--rfi-impl", type=str, default="float",
-                   choices=("float", "ticks"),
-                   help="mwa-strategy arithmetic: 'float' (DEFAULT — "
-                        "AOFlagger's own statistics; measured 0.9837 "
-                        "agreement / 0.9195 recall vs the reference's "
-                        "cotter golden) or 'ticks' (the integer-tick "
-                        "mode that hash-matches the relational plan)")
     p.add_argument("--no-cable-delay", action="store_true")
     p.add_argument("--no-digital-gains", action="store_true")
     p.add_argument("--no-geometric-delay", action="store_true")
@@ -347,6 +340,8 @@ def _pfb_obs_state(a, octx: dict | None) -> dict:
     e.g. the reference's 1439922144 fixture auto-disables the pfb
     correction because DERIPPLE=1), the explicit flags OR on top; the
     synthetic surface keeps its module constant."""
+    from birli_spark import pipeline
+
     if octx is not None:
         return {
             "mwa_version": octx["mwa_version"],
@@ -374,6 +369,8 @@ def _check_flag_window_multiple(value: float, int_time_s: float,
 
 
 def parse_args(argv: list[str]) -> Context:
+    from birli_spark import pipeline
+
     a = build_parser().parse_args(argv)
     # real mode resolves every time/frequency-denominated option
     # against the OBSERVATION's metafits facts, not the synthetic
@@ -443,7 +440,6 @@ def parse_args(argv: list[str]) -> Context:
         rfi_strategy=(a.aoflagger_strategy
                       if a.aoflagger_strategy in ("mwa", "generic")
                       else "sumthreshold"),
-        rfi_impl=a.rfi_impl,
         no_draw_progress=a.no_draw_progress,
         rfi_iterative=a.rfi_iterative,
         sir_eta=a.sir_eta,
@@ -465,53 +461,15 @@ def parse_args(argv: list[str]) -> Context:
         flag_parquet_out=a.flag_parquet, dry_run=a.dry_run)
 
 
-def _selected_dims(ctx: Context) -> tuple[int, int, int] | None:
-    """(n_t, n_bl, n_chan) of the selection from METADATA alone —
-    the reference sizes --max-memory from its metadata context without
-    touching data (src/cli.rs:1306-1308), and so do we: the synthetic
-    constants or the metafits header, narrowed by the plain
-    selections. None = a selection this helper cannot size
-    (limits, explicit channel subsets, flagged-ant pruning on a real
-    obs), in which case the caller falls back to one distinct-count
-    scan."""
-    if (ctx.timestep_limit or ctx.baseline_limit
-            or ctx.sel_chan_ranges or ctx.provided_chan_ranges):
-        return None
-    if ctx.metafits:
-        from birli_spark.sources import metafits as mf
-        if ctx.no_sel_flagged_ants:
-            return None      # needs the TILEDATA flag column
-        primary, _ = mf.read_metafits(ctx.metafits)
-        octx = mf.obs_context(primary)
-        n_t = octx["n_scans"]
-        n_ants = (len(set(ctx.sel_ants)) if ctx.sel_ants
-                  else octx["n_ants"])
-        # real scans emit each undirected pair once (ant1 <= ant2)
-        n_bl = (n_ants * (n_ants - 1) // 2 if ctx.no_sel_autos
-                else n_ants * (n_ants + 1) // 2)
-        n_chan = octx["n_fine_per_coarse"] * len(octx["coarse_channels"])
-    else:
-        n_t = syn.NUM_T
-        n_ants = (len(set(ctx.sel_ants)) if ctx.sel_ants
-                  else syn.NUM_ANTS)
-        # the synthetic fact carries ordered pairs (both directions)
-        n_bl = (n_ants * n_ants - n_ants if ctx.no_sel_autos
-                else n_ants * n_ants)
-        n_chan = syn.NUM_CC * syn.NUM_FC
-    if ctx.sel_time:
-        # clamp the window to the observation before differencing
-        # (the reference sizes from the clamped vis_sel.timestep_range)
-        lo, hi = ctx.sel_time
-        n_t = max(0, min(hi, n_t - 1) - max(lo, 0) + 1)
-    return n_t, n_bl, n_chan
-
-
 def build_plan(spark: SparkSession, ctx: Context,
-               baked: DataFrame | None = None) -> DataFrame:
+               baked: DataFrame | None = None,
+               obs: Observation | None = None) -> DataFrame:
     """Assemble the DataFrame plan from the context (reference
     ``BirliContext::run``, src/cli.rs:1584-1954): the baked flowchart
     (``baked``, or :func:`build_baked`'s) chunked and averaged."""
-    vis = baked if baked is not None else build_baked(spark, ctx)
+    if obs is None:
+        obs = observation(spark, ctx)
+    vis = baked if baked is not None else build_baked(spark, ctx, obs)
     chunk = ctx.time_chunk
     if chunk is None and ctx.max_memory_gib is not None:
         # --max-memory estimates --time-chunk from a per-chunk budget
@@ -519,7 +477,7 @@ def build_plan(spark: SparkSession, ctx: Context,
         # (src/cli.rs:1297-1321); None = the whole selection fits.
         # Dims come from metadata when the selection allows (no extra
         # pass over the data); otherwise one distinct-count scan.
-        dims = _selected_dims(ctx)
+        dims = obs.selected_dims(ctx)
         if dims is not None:
             n_t, n_bl, n_chan = dims
             chunk = chunking.chunk_size_from_memory(
@@ -540,21 +498,113 @@ def build_plan(spark: SparkSession, ctx: Context,
 class Observation:
     """The flowchart's input and everything that differs between inputs;
     :func:`build_baked` reads its input through these members only.
-    Implemented by :class:`SyntheticObservation` and
-    ``real_input.ArchiveObservation``.
+    Implemented by :class:`SyntheticObservation`,
+    ``real_input.ArchiveObservation``, ``pipeline.OracleObservation``
+    and ``pipeline_e2e.E2EObservation``.
 
     Scalars: ``gps_start``, ``int_time_s``, ``obs_end_gps`` (end of the
-    timestep flag window), ``n_fine`` (per coarse channel), ``n_chan``,
-    ``quack_s`` (when the CLI sets none), ``vv_sample_scale``,
-    ``rfi_payload`` (pol dtype at the slim RFI-island boundary), the
-    sinks' time anchors ``uvfits_gps`` / ``ms_gps`` and
-    ``uvfits_uvw_unit_m``. Dims: ``antennas``, ``timesteps`` (every
-    scan), ``digital_gains``. Methods: ``scan()`` (the canonical vis
-    relation), ``provided_channels(vis)``, ``cell_gate(spark, rules,
-    bl_pred)`` (the v0.18 gate, or None to aggregate it from the fact),
-    ``derived_columns()`` (freq_hz / ts_gps / weight over the keys),
-    ``part_uvw(spark, ctx)`` (None when no phase centre is known).
+    timestep flag window), ``n_ants``, ``n_scans`` (scheduled
+    timesteps), ``n_fine`` (per coarse channel), ``n_chan``, ``quack_s``
+    (when the CLI sets none), ``vv_sample_scale``, ``rfi_payload`` (pol
+    dtype at the slim RFI-island boundary), the sinks' ``uvfits_gps`` /
+    ``ms_gps`` time anchors, ``uvfits_uvw_unit_m`` and
+    ``uvfits_object``. Dims: ``antennas``, ``timesteps`` (every scan),
+    ``digital_gains``. Methods: ``scan()`` (the canonical vis relation),
+    ``provided_channels(vis)``, ``derived_columns()`` (freq_hz / ts_gps
+    / weight over the keys), ``part_uvw(spark, ctx)`` (None when no
+    phase centre is known), and the defaulted ones below.
     """
+
+    quack_s = 0.0
+    uvfits_uvw_unit_m = 1.0
+    uvfits_object = "synthetic"
+    #: directions the scan emits each cross pair in (gpubox readers: once,
+    #: ant1 <= ant2)
+    pair_directions = 1
+
+    def selected_dims(self, ctx: Context) -> tuple[int, int, int] | None:
+        """(n_t, n_bl, n_chan) of the selection from METADATA alone —
+        the reference sizes --max-memory from its metadata context
+        without touching data (src/cli.rs:1306-1308), and so do we: the
+        observation's dims narrowed by the plain selections. None = a
+        selection this cannot size (limits, explicit channel subsets,
+        flagged-antenna pruning); the caller then falls back to one
+        distinct-count scan."""
+        if (ctx.timestep_limit or ctx.baseline_limit
+                or ctx.sel_chan_ranges or ctx.provided_chan_ranges
+                or ctx.no_sel_flagged_ants):
+            return None
+        n_ants = len(set(ctx.sel_ants)) if ctx.sel_ants else self.n_ants
+        n_t = self.n_scans
+        if ctx.sel_time:
+            # clamp the window to the observation before differencing
+            # (the reference sizes from the clamped vis_sel.timestep_range)
+            lo, hi = ctx.sel_time
+            n_t = max(0, min(hi, n_t - 1) - max(lo, 0) + 1)
+        n_bl = (n_ants * (n_ants - 1) // 2 * self.pair_directions
+                + (0 if ctx.no_sel_autos else n_ants))
+        return n_t, n_bl, self.n_chan
+
+    def cell_gate(self, spark: SparkSession, rules: RuleDims,
+                  bl_pred) -> DataFrame | None:
+        """The v0.18 gate from the RULE DIMS, not an aggregate over the
+        fact (None would aggregate it): before RFI, flag is the
+        star-schema disjunction ts | bl | chan over separable axes, so
+          bool_and(flag) over (bl, fc) = ts_flag OR bool_and(bl_flag)
+                                         OR bool_and(chan flag within cc),
+        with the baseline pool restricted to the SELECTED baselines by
+        the vis side's own predicate. An aggregate over the fact would
+        be a SECOND FULL DECODE of an archive, whose scan is a binary
+        mapInPandas with no column pruning (measured: it doubled the
+        scale-e2e read cost).
+
+        The dimension-sized terms are resolved on the driver: as stages of
+        the consuming query, AQE numbered them in broadcast completion
+        order, so a rerun recompiled identical classes under new ids."""
+        sel_bl = rules.bl
+        if bl_pred is not None:
+            # the archive's baseline index: upper triangle incl. autos
+            # in (ant1, ant2) order, as every gpubox reader numbers it
+            n = self.n_ants
+            sel_bl = (sel_bl.filter("ant1 <= ant2").withColumn(
+                "bl", F.expr(f"CAST(ant1 * {n} - ant1 * (ant1 - 1) DIV 2"
+                             f" + ant2 - ant1 AS INT)")).filter(bl_pred))
+        all_bl = sel_bl.agg(F.expr("bool_and(bl_flag)")).first()[0]
+        all_bl = True if all_bl is None else all_bl  # no baseline selected
+        fc_grid = spark.range(0, self.n_chan, 1, 1).selectExpr(
+            f"CAST(id DIV {self.n_fine} AS INT) AS cc",
+            f"CAST(id % {self.n_fine} AS INT) AS fc")
+        all_fc = dict(fc_grid.select("cc", rules.chan_pred.alias("_fcf"))
+                      .groupBy("cc").agg(F.expr("bool_and(_fcf)")).collect())
+        rows = [(t, cc, bool(ts_flag or all_bl or all_fc[cc]))
+                for t, ts_flag in rules.ts.select("t", "ts_flag").collect()
+                for cc in sorted(all_fc)]
+        return spark.createDataFrame(
+            rows, f"t int, cc int, {corrections.GATE_COL} boolean")
+
+    def fine_gains(self, ctx: Context) -> list[tuple[int, float]] | None:
+        """``--pfb-gains``'s published table as (fc, gain) rows scrunched
+        onto the fine grid (raises on a non-divisible channelization,
+        the reference's BadArrayShape); None = no passband stage."""
+        if ctx.pfb_gains == "none":
+            return None
+        from birli_spark.functions import pfb_tables as PT
+        table = {"cotter": PT.PFB_COTTER_2014_10KHZ,
+                 "jake": PT.PFB_JAKE_2022_200HZ,
+                 "jake_oversampled": PT.OSPFB_JAKE_2025_200HZ}[ctx.pfb_gains]
+        return corrections.fine_gain_rows(
+            table, self.n_fine, center_symmetric=ctx.pfb_gains != "cotter")
+
+    def calsols(self, spark: SparkSession, ctx: Context
+                ) -> tuple[DataFrame, int] | None:
+        """``--apply-di-cal``'s solutions and the ratio upsampling them onto
+        the fine channels (the calsol channel count comes from the file
+        header: no Spark job); None = no calibration stage."""
+        if not ctx.apply_di_cal:
+            return None
+        n_sol = aocal.read_mwaocal(ctx.apply_di_cal)[0].shape[2]
+        return (aocal.calsols_df(spark, ctx.apply_di_cal),
+                max(1, self.n_chan // max(1, n_sol)))
 
 
 class SyntheticObservation(Observation):
@@ -563,16 +613,17 @@ class SyntheticObservation(Observation):
 
     gps_start = syn.GPS_START
     int_time_s = syn.INT_TIME_S
-    obs_end_gps = pipeline.OBS_END_GPS
+    obs_end_gps = syn.GPS_START + syn.NUM_T * syn.INT_TIME_S
+    n_ants = syn.NUM_ANTS
+    n_scans = syn.NUM_T
     n_fine = syn.NUM_FC
     n_chan = syn.NUM_CC * syn.NUM_FC
-    quack_s = 0.0
     vv_sample_scale = syn.VV_SAMPLE_SCALE
     rfi_payload = "double"
     uvfits_gps = ms_gps = syn.GPS_START
-    uvfits_uvw_unit_m = 1.0
+    pair_directions = 2
 
-    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
+    def __init__(self, spark: SparkSession, sf_dir: str | None) -> None:
         self.spark, self.sf_dir = spark, sf_dir
         self.antennas = syn.load_dim(spark, "antennas")
         self.timesteps = syn.load_dim(spark, "timesteps")
@@ -748,20 +799,18 @@ def stage_correct(spark: SparkSession, ctx: Context, obs: Observation,
     if not ctx.no_digital_gains:
         vis = corrections.correct_digital_gains(vis, obs.digital_gains,
                                                 gated=True)
-    if ctx.pfb_gains != "none":
-        # the REAL published tables, scrunched onto the observation's
-        # fine grid (fine_gain_rows raises on a non-divisible
-        # channelization, the reference's BadArrayShape)
-        from birli_spark.functions import pfb_tables as PT
-        table = {"cotter": PT.PFB_COTTER_2014_10KHZ,
-                 "jake": PT.PFB_JAKE_2022_200HZ,
-                 "jake_oversampled": PT.OSPFB_JAKE_2025_200HZ}[ctx.pfb_gains]
-        rows = corrections.fine_gain_rows(
-            table, obs.n_fine, center_symmetric=ctx.pfb_gains != "cotter")
+    rows = obs.fine_gains(ctx)
+    if rows is not None:
         vis = corrections.correct_passband_gains(
             vis, spark.createDataFrame(rows, "fc int, gain double"),
             gated=True)
     return vis.drop(corrections.GATE_COL)
+
+
+#: rows above which a fan-out takes the reliable checkpoint: the e2e
+#: x4 probe (3.3 M rows) still favoured executor blocks (6.0-7.3 s vs
+#: 7.7-8.2 s), the x16 one (13.4 M) the checkpoint (17-33 s vs 27-77 s)
+FANOUT_BIG_ROWS = 4_000_000
 
 
 def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
@@ -774,11 +823,17 @@ def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
     from birli_spark.operators import rfi
     eta = ctx.sir_eta if ctx.sir_eta is not None else 0.2
     if ctx.ssins:
+        from birli_spark import pipeline
         from birli_spark.operators import ssins
+
         # the mask aggregate and the join-back probe both consume vis:
-        # materialize it once so the archive decodes once per action
-        return ssins.ssins_flag_vis(pipeline.fanout_materialize(vis),
-                                    threshold=ctx.ssins_threshold)
+        # materialize it once so the input decodes once per action, in
+        # the spelling the selection's size calls for
+        dims = obs.selected_dims(ctx)
+        big = dims is not None and math.prod(dims) > FANOUT_BIG_ROWS
+        return ssins.ssins_flag_vis(
+            pipeline.fanout_materialize(vis, big=big),
+            threshold=ctx.ssins_threshold)
     if ctx.rfi_iterative or ctx.rfi_strategy == "generic":
         return rfi.flag_rfi_strategy(
             vis, base_sensitivity=ctx.rfi_sensitivity, eta=eta)
@@ -793,12 +848,12 @@ def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
     # a passband-scaled weight (weight *= gain), which rides along —
     # >2x fewer shuffled+sorted+transferred bytes on the 11.4 GB run.
     from birli_spark.functions.complex import VIS_COLS
-    carried = ["weight"] if ctx.pfb_gains != "none" else []
+    carried = ["weight"] if obs.fine_gains(ctx) is not None else []
     slim = vis.select("t", "chan", "ant1", "ant2", "bl", "flag", *carried,
                       *[F.col(c).cast(obs.rfi_payload).alias(c)
                         for c in VIS_COLS])
     flagged = rfi.flag_rfi_mwa(slim, base_sensitivity=ctx.rfi_sensitivity,
-                               eta=eta, impl=ctx.rfi_impl)
+                               eta=eta)
     keyed = flagged.select(
         "*", F.expr(f"CAST(chan DIV {obs.n_fine} AS INT)").alias("cc"),
         F.expr(f"CAST(chan % {obs.n_fine} AS INT)").alias("fc"))
@@ -826,22 +881,23 @@ def stage_geometry(spark: SparkSession, ctx: Context, obs: Observation,
 
 def stage_calibrate(spark: SparkSession, ctx: Context, obs: Observation,
                     vis: DataFrame) -> DataFrame:
-    """--apply-di-cal; the calsol channels upsample onto the
-    observation's fine channels by the ratio of the two counts."""
-    if not ctx.apply_di_cal:
+    """DI calibration with the observation's solutions, if any
+    (--apply-di-cal)."""
+    cal = obs.calsols(spark, ctx)
+    if cal is None:
         return vis
-    n_sol = aocal.read_mwaocal(ctx.apply_di_cal)[0].shape[2]
-    return calibration.apply_di_calsol(
-        vis, aocal.calsols_df(spark, ctx.apply_di_cal),
-        max(1, obs.n_chan // max(1, n_sol)))
+    return calibration.apply_di_calsol(vis, *cal)
 
 
 def build_baked(spark: SparkSession, ctx: Context,
-                obs: Observation | None = None) -> DataFrame:
+                obs: Observation | None = None,
+                rfi: Callable[[DataFrame], DataFrame] | None = None
+                ) -> DataFrame:
     """The flowchart up to (and including) flag→weight baking, before
     chunking/averaging — the state every sink consumes: select →
     rule-flag → gate → correct → RFI → geometry → calibrate → bake over
-    ``obs`` (default: the context's input)."""
+    ``obs`` (default: the context's input). ``rfi`` replaces the RFI
+    stage (the oracle surface's relational SumThreshold)."""
     if obs is None:
         obs = observation(spark, ctx)
     bl_pred = baseline_predicate(ctx, obs)
@@ -849,7 +905,7 @@ def build_baked(spark: SparkSession, ctx: Context,
     vis, rules = stage_rule_flags(ctx, obs, vis)
     vis = stage_gate(spark, obs, vis, rules, bl_pred)
     vis = stage_correct(spark, ctx, obs, vis)
-    vis = stage_rfi(ctx, obs, vis)
+    vis = rfi(vis) if rfi is not None else stage_rfi(ctx, obs, vis)
     vis = stage_geometry(spark, ctx, obs, vis)
     vis = stage_calibrate(spark, ctx, obs, vis)
     return weights.bake_flags_into_weights(vis)
@@ -877,32 +933,65 @@ def _dump_csv(out: DataFrame, ctx: Context) -> str:
     return ctx.dump_csv
 
 
+@contextmanager
+def _stage(spark: SparkSession, ctx: Context, name: str):
+    """One ACTION stage's progress/timing (the reference draws a
+    progress bar per stage and logs durations): a Spark-UI job
+    description, so cluster users see the stage names in the UI, and
+    one stderr line unless --no-draw-progress."""
+    spark.sparkContext.setJobDescription(f"birli_spark: {name}")
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        dt = time.perf_counter() - t0
+        spark.sparkContext.setJobDescription(None)
+        if not ctx.no_draw_progress:
+            print(f"[birli_spark] {name}: {dt:.2f}s", file=sys.stderr)
+
+
+def uvfits_rows(ctx: Context, obs: Observation,
+                baked: DataFrame) -> DataFrame:
+    """UVFITS output-grid group rows: DATE params from the observation's
+    uvfits_gps anchor, UVWs in its unit (seconds on archives)."""
+    from birli_spark.sinks import uvfits as uvsink
+
+    unit = obs.uvfits_uvw_unit_m
+    return uvsink.uvfits_group_rows(
+        baked.withColumns({c: F.col(c) / unit for c in ("u", "v", "w")}),
+        ctx.avg_time, ctx.avg_freq, obs.uvfits_gps, obs.int_time_s)
+
+
+def write_uvfits(spark: SparkSession, ctx: Context, obs: Observation,
+                 baked: DataFrame, path: str) -> tuple[DataFrame, int]:
+    """The PHYSICAL random-groups file, executor-parallel. The group
+    rows are checkpointed FIRST: their count, the writer's grid probe
+    and the write all read that one materialization (a standalone
+    count() would re-run the whole pipeline, decode included). Returns
+    the rows and their count, one per (t_out, chan_out, bl): build_plan's
+    count wherever each (t, bl, chan) cell has one row (every real
+    observation; test_rows_agree_between_plan_and_uvfits_groups), not
+    on the synthetic fact's duplicate cells."""
+    from birli_spark.sinks import uvfits as uvsink
+
+    with _stage(spark, ctx, "preprocess"):
+        rows = uvfits_rows(ctx, obs, baked).localCheckpoint(eager=True)
+        n_rows = rows.count()
+    with _stage(spark, ctx, "write uvfits"):
+        # the writer probes the output grid (n_chan included) and
+        # validates the written group count against the declared GCOUNT
+        uvsink.write_uvfits_distributed(
+            rows, path, object_name=obs.uvfits_object,
+            jd_zero=uvsink.obs_jd_zero(obs.uvfits_gps))
+    return rows, n_rows
+
+
 def run(argv: list[str], spark: SparkSession | None = None) -> dict:
     ctx = parse_args(argv)
     own_session = spark is None
     if spark is None:
         from birli_spark.session import get_spark
         spark = get_spark("birli_spark_cli")
-
-    # per-stage progress/timing (the reference draws a progress bar per
-    # stage and logs durations; here: one stderr line per ACTION stage,
-    # plus a Spark-UI job description so cluster users see the stage
-    # names in the UI). --no-draw-progress silences the stderr lines.
-    import time as _time
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _stage(name: str):
-        spark.sparkContext.setJobDescription(f"birli_spark: {name}")
-        t0 = _time.perf_counter()
-        try:
-            yield
-        finally:
-            dt = _time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            if not ctx.no_draw_progress:
-                print(f"[birli_spark] {name}: {dt:.2f}s",
-                      file=sys.stderr)
 
     try:
         obs = observation(spark, ctx)
@@ -914,7 +1003,7 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
         # every sink shares ONE context-built baked plan, so CLI options
         # reach every file
         baked = build_baked(spark, ctx, obs)
-        out = build_plan(spark, ctx, baked)
+        out = build_plan(spark, ctx, baked, obs)
         result: dict = {}
 
         def run_flags(*cols):
@@ -925,29 +1014,27 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
             from birli_spark.sinks import mwaf
             # distributed writer: one executor task per coarse channel
             # (byte-identical to the driver-loop writer)
-            with _stage("write mwaf"):
+            with _stage(spark, ctx, "write mwaf"):
                 result["mwaf_files"] = mwaf.write_mwaf_set_distributed(
                     run_flags("t", "bl", "cc", "fc"), ctx.mwaf_out,
                     gps_start=obs.gps_start).count()
         if ctx.flag_parquet_out:
             from birli_spark.sinks import flagsink
-            with _stage("write flag parquet"):
+            with _stage(spark, ctx, "write flag parquet"):
                 flagsink.write_flags(
                     run_flags("t", "bl", "ant1", "ant2", "cc", "fc", "chan"),
                     ctx.flag_parquet_out, gps_start=obs.gps_start)
             result["flag_parquet"] = ctx.flag_parquet_out
-        # the physical uvfits sink materializes the SAME averaged
-        # relation into a localCheckpoint — at scale a standalone
-        # count() would re-run the whole pipeline (decode included)
-        # once more for a number the checkpoint already holds, so the
-        # count is deferred to that branch (validate_chunk_size pins
-        # chunk length to a multiple of avg_time, so build_plan's
-        # output and uvfits_group_rows agree on the output grid)
+        # the physical uvfits sink counts its own checkpoint of the SAME
+        # averaged relation (write_uvfits), so the count is deferred to
+        # that branch (validate_chunk_size pins chunk length to a
+        # multiple of avg_time, so build_plan's output and
+        # uvfits_group_rows agree on the output grid)
         physical_uvfits = bool(
             ctx.uvfits_out and ctx.uvfits_out.rstrip("/")
             .endswith(".uvfits"))
         if not physical_uvfits:
-            with _stage("preprocess"):
+            with _stage(spark, ctx, "preprocess"):
                 result["rows"] = out.count()
         if ctx.dump_csv:
             result["dump_csv"] = _dump_csv(out, ctx)
@@ -958,7 +1045,7 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
             # sink's fixed GPS-TAI 19 s)
             if ctx.ms_out.rstrip("/").endswith(".ms"):
                 from birli_spark.sinks import ms_file
-                with _stage("write ms"):
+                with _stage(spark, ctx, "write ms"):
                     ms_file.write_ms_casa(
                         spark, baked, ctx.ms_out, ctx.avg_time,
                         ctx.avg_freq, gps_start=obs.ms_gps,
@@ -971,37 +1058,8 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
             result["ms_path"] = ctx.ms_out
         if ctx.uvfits_out:
             if physical_uvfits:
-                # the PHYSICAL random-groups file, executor-parallel;
-                # DATE params from the observation's uvfits_gps anchor,
-                # UVWs in its UVFITS unit (seconds on archives, per the
-                # random-groups standard)
-                from birli_spark.sinks import uvfits as uvsink
-                unit = obs.uvfits_uvw_unit_m
-                uv_baked = baked.withColumns(
-                    {c: F.col(c) / unit for c in ("u", "v", "w")})
-                with _stage("preprocess"):
-                    rows = uvsink.uvfits_group_rows(
-                        uv_baked, ctx.avg_time, ctx.avg_freq,
-                        obs.uvfits_gps, obs.int_time_s).localCheckpoint(
-                            eager=True)
-                    # cheap: counts the checkpoint, not the pipeline.
-                    # result['rows'] is OUTPUT-GRID rows — one per
-                    # (t_out, chan_out, bl). Identical to build_plan's
-                    # out.count() whenever the input carries one row
-                    # per (t, bl, chan) cell (every real observation;
-                    # pinned by test_rows_agree_between_plan_and_
-                    # uvfits_groups). The synthetic oracle fact has
-                    # duplicate cells by construction, so there the
-                    # parquet branch at avg 1/1 counts raw rows
-                    # instead.
-                    result["rows"] = rows.count()
-                with _stage("write uvfits"):
-                    # the writer probes the output grid (n_chan
-                    # included) and validates the written group count
-                    # against the declared GCOUNT internally
-                    uvsink.write_uvfits_distributed(
-                        rows, ctx.uvfits_out,
-                        jd_zero=uvsink.obs_jd_zero(obs.uvfits_gps))
+                _, result["rows"] = write_uvfits(spark, ctx, obs, baked,
+                                                 ctx.uvfits_out)
             else:
                 out.orderBy(
                     *[c for c in ("t_out", "t") if c in out.columns],

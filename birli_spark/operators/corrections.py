@@ -60,6 +60,14 @@ def cell_gate_oracle_select(flagged: str = "flagged") -> str:
             f" FROM {flagged} GROUP BY t, cc")
 
 
+def attach_cell_gate_oracle_select(flagged: str = "flagged") -> str:
+    """Oracle SQL twin of :func:`attach_cell_gate` (the gate CTE is
+    ``cell_gate``)."""
+    return (f"SELECT /*+ BROADCAST(g) */ f.*, g.{GATE_COL}"
+            f" FROM {flagged} f"
+            f" JOIN cell_gate g ON f.t = g.t AND f.cc = g.cc")
+
+
 def _gate_frags(frags: dict[str, str]) -> dict[str, str]:
     """Wrap each corrected fragment in the v0.18.0 flag gate: a
     fully-flagged cell passes the raw column through."""

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from birli_spark import pipeline
 from birli_spark.functions.complex import VIS_COLS
-from birli_spark.operators import calibration, corrections, flags
+from birli_spark.operators import calibration, corrections, flags, weights
 from birli_spark.sources import synthetic as syn
 
 N_OBS = 3
@@ -249,9 +249,7 @@ def mo_baked_ctes(lineitem: str = "lineitem", ssins: bool = False,
     # comment)
     cols_g = tuple(cols) + (corrections.GATE_COL,)
     gate = corrections.cell_gate_oracle_select("flagged")
-    flaggedg = (f"SELECT /*+ BROADCAST(g) */ f.*, g.{corrections.GATE_COL}"
-                f" FROM flagged f"
-                f" JOIN cell_gate g ON f.t = g.t AND f.cc = g.cc")
+    flaggedg = corrections.attach_cell_gate_oracle_select("flagged")
     cable = corrections.cable_oracle_select("flaggedg", "antennas", cols_g,
                                             gated=True)
     digital = corrections.digital_oracle_select(
@@ -283,10 +281,7 @@ def mo_baked_ctes(lineitem: str = "lineitem", ssins: bool = False,
     geom = corrections.geom_oracle_select(geom_in, "part_uvw", cols)
     cal = calibration.calibration_oracle_select(
         "geomed", "calsols", pipeline.CAL_RATIO, cols_uvw)
-    baked_cols = ", ".join(
-        "CASE WHEN flag THEN -ABS(weight) ELSE ABS(weight) END AS weight"
-        if c == "weight" else c
-        for c in cols_uvw)
+    baked_cols = weights.bake_oracle_columns(cols_uvw)
     return (
         f"vis AS ({multi_vis_cte(lineitem, n_obs)}),"
         f" antennas AS ({syn.ANTENNAS_SQL}),"

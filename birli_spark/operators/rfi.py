@@ -1088,21 +1088,19 @@ MWA_FLOAT_KW = dict(rf=1, windows=AOF_WINDOWS_FULL, form="subst",
 
 
 def flag_rfi_mwa(vis: DataFrame, base_sensitivity: float = 6.0,
-                 eta: float | None = 0.2,
-                 impl: str = "float") -> DataFrame:
+                 eta: float | None = 0.2) -> DataFrame:
     """F9e as the 100 TB UDF island (same shape as
     :func:`flag_rfi_strategy`): per-baseline polarization images via ONE
     ``groupBy(ant1, ant2).applyInPandas`` shuffle, each run through the
     mwa-default orchestration; the joined mask ORs into ``flag``.
 
-    ``impl='float'`` (default, the CLI path) runs the
-    AOFlagger-statistics float mode (:func:`mwa_strategy_mask_pols_float`
-    with :data:`MWA_FLOAT_KW`) — measured at 0.9837 cell agreement /
-    0.9195 recall against the reference's own cotter mwa-default golden,
-    with every disagreeing cell within 2x of the decision threshold
-    (tests/test_golden_mwa_flags.py). ``impl='ticks'`` runs the
-    integer-tick twin that hash-matches the relational plan
-    (rfi_sql.mwa_strategy_steps)."""
+    The island runs the AOFlagger-statistics float mode
+    (:func:`mwa_strategy_mask_pols_float` with :data:`MWA_FLOAT_KW`) —
+    measured at 0.9837 cell agreement / 0.9195 recall against the
+    reference's own cotter mwa-default golden, with every disagreeing
+    cell within 2x of the decision threshold
+    (tests/test_golden_mwa_flags.py), which compare it against the
+    integer-tick twin :func:`mwa_strategy_mask_pols`."""
     cols = list(vis.columns)
     schema = vis.schema
 
@@ -1126,16 +1124,10 @@ def flag_rfi_mwa(vis: DataFrame, base_sensitivity: float = 6.0,
         present[rows, cs] = True
         prior = np.zeros(shape, dtype=bool)
         prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        if impl == "float":
-            mask = mwa_strategy_mask_pols_float(
-                pol_imgs, base_sensitivity=base_sensitivity,
-                existing=prior, valid=present, eta=eta,
-                chan_values=chans, **MWA_FLOAT_KW)
-        else:
-            mask = mwa_strategy_mask_pols(
-                pol_imgs, base_sensitivity=base_sensitivity,
-                existing=prior, valid=present, eta=eta,
-                chan_values=chans)
+        mask = mwa_strategy_mask_pols_float(
+            pol_imgs, base_sensitivity=base_sensitivity,
+            existing=prior, valid=present, eta=eta,
+            chan_values=chans, **MWA_FLOAT_KW)
         out = pdf.copy()
         out["flag"] = pdf["flag"].to_numpy(dtype=bool) | mask[rows, cs]
         return out[cols]

@@ -280,3 +280,16 @@ def ssins_flag_vis(vis: DataFrame,
     return joined.withColumn(
         "flag", F.col("flag") | F.coalesce(F.col("_ssins_flag"), F.lit(False))
     ).select(*vis.columns)
+
+
+def ssins_flag_vis_oracle_ctes(vis: str, vis_columns) -> str:
+    """Oracle CTE chain twin of :func:`ssins_flag_vis` over the ``vis``
+    CTE, ending in ``rfid`` (each CTE space-led and comma-terminated)."""
+    ctes, final = ssins_parts(vis, median_fn="quantile_cont")
+    rfid_cols = ", ".join(
+        "(p.flag OR COALESCE(m.rfi_flag, FALSE)) AS flag"
+        if c == "flag" else f"p.{c}" for c in vis_columns)
+    return (f" {ctes},"
+            f" ssins_mask AS ({final}),"
+            f" rfid AS (SELECT {rfid_cols} FROM {vis} p"
+            f" LEFT JOIN ssins_mask m ON p.t = m.t AND p.chan = m.chan),")

@@ -27,3 +27,10 @@ def bake_flags_into_weights(vis: DataFrame) -> DataFrame:
         "weight",
         F.when(F.col("flag"), -F.abs(F.col("weight"))).otherwise(F.abs(F.col("weight"))),
     )
+
+
+def bake_oracle_columns(vis_columns) -> str:
+    """Oracle SQL select list twin of :func:`bake_flags_into_weights`."""
+    return ", ".join(
+        "CASE WHEN flag THEN -ABS(weight) ELSE ABS(weight) END AS weight"
+        if c == "weight" else c for c in vis_columns)

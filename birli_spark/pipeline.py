@@ -1,24 +1,32 @@
-"""End-to-end preprocessing pipeline (reference
-``PreprocessContext::preprocess``, src/preprocessing.rs:178-361, and
-``BirliContext::run``, src/cli.rs:1584-1954).
+"""The DuckDB-oracle surface of the flowchart (reference
+``PreprocessContext::preprocess``, src/preprocessing.rs:178-361).
 
-Stage order follows the README flowchart (reference README.md:498-543):
-  rule flags → (van vleck) → cable → digital gains → passband → (RFI) →
-  geometry → DI calibration → bake flags into weights → average → sink.
+:func:`preprocess_baked`, :func:`preprocess`, :func:`preprocess_full`
+and :func:`preprocess_full_rel` run the CLI's one flowchart
+(:func:`cli.build_baked`) over an :class:`OracleObservation` under fixed
+rule choices (:func:`_context`), in the README flowchart's order
+(reference README.md:498-543): rule flags → (van vleck) → cable →
+digital gains → passband → (RFI) → geometry → DI calibration → bake
+flags into weights → average.
 
-In Spark all per-cell corrections fuse into a single whole-stage-codegen
-projection over the scan + broadcast joins; the only fact-table shuffle is
-the final averaging groupBy. The same composition is available as one
-DuckDB SQL string (:func:`preprocess_oracle_sql`) for the correctness
-oracle.
+Each composition is also one DuckDB SQL text
+(:func:`preprocess_oracle_sql`, :func:`preprocess_full_oracle_sql`)
+built from the shared dual-dialect stage fragments; those texts are the
+spec the Spark plans are checked against. In Spark all per-cell
+corrections fuse into a single whole-stage-codegen projection over the
+scan + broadcast joins; the only fact-table shuffle is the final
+averaging groupBy.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from birli_spark.operators import averaging, calibration, corrections, flags, weights
+from birli_spark import cli
+from birli_spark.operators import (averaging, calibration, corrections, flags,
+                                   weights)
 from birli_spark.sources import synthetic as syn
+
 
 def fanout_materialize(df: DataFrame, big: bool = False) -> DataFrame:
     """Materialize a relation that feeds several consumers so the
@@ -79,7 +87,7 @@ IS_LEGACY = True
 AVG_TIME = 4
 AVG_FREQ = 2
 CAL_RATIO = (syn.NUM_CC * syn.NUM_FC) // syn.NUM_CHAN_SOL
-OBS_END_GPS = syn.GPS_START + syn.NUM_T * syn.INT_TIME_S
+OBS_END_GPS = cli.SyntheticObservation.obs_end_gps
 
 # scrunched PFB fine-channel gains, computed once driver-side
 # (reference src/corrections.rs:502) and inlined as a literal dim
@@ -87,15 +95,84 @@ _UFC_GAINS = [(50 + u) / 100 for u in range(syn.NUM_UFC)]
 FINE_GAIN_ROWS = corrections.fine_gain_rows(_UFC_GAINS, syn.NUM_FC, center_symmetric=False)
 
 
+class OracleObservation(cli.SyntheticObservation):
+    """The synthetic surface as the DuckDB oracles spell it: a
+    :data:`QUACK_S` quack, the :data:`FINE_GAIN_ROWS` passband, the
+    ``calsols`` dim at :data:`CAL_RATIO`, and optionally a ``scan``
+    override and a precomputed v0.18 ``gate``."""
+
+    quack_s = QUACK_S
+
+    def __init__(self, spark: SparkSession, sf_dir: str | None,
+                 scan: DataFrame | None = None,
+                 gate: DataFrame | None = None) -> None:
+        super().__init__(spark, sf_dir)
+        self._scan, self._gate = scan, gate
+
+    def scan(self) -> DataFrame:
+        return super().scan() if self._scan is None else self._scan
+
+    def cell_gate(self, spark, rules, bl_pred) -> DataFrame | None:
+        return self._gate
+
+    def fine_gains(self, ctx) -> list[tuple[int, float]]:
+        return FINE_GAIN_ROWS
+
+    def calsols(self, spark, ctx) -> tuple[DataFrame, int]:
+        return syn.load_dim(spark, "calsols"), CAL_RATIO
+
+
+def _context(sf_dir: str | None = None, **kw) -> cli.Context:
+    """The oracle flowchart's rule choices (:data:`N_EDGE` edge channels,
+    the DC flag) plus ``kw``; every other option keeps the CLI default."""
+    return cli.Context(sf_dir=sf_dir, flag_edge_chans=N_EDGE,
+                       flag_dc=IS_LEGACY, **kw)
+
+
 def rule_flags(spark: SparkSession, vis: DataFrame) -> DataFrame:
     """F1-F7: quack timestep flags + metafits baseline flags + edge/DC fine
     channel flags, OR-combined into the fact table via broadcast joins."""
-    ts = syn.load_dim(spark, "timesteps")
-    ants = syn.load_dim(spark, "antennas")
-    ts_f = flags.flag_timesteps_quack(ts, syn.GPS_START, OBS_END_GPS, quack_s=QUACK_S)
-    bl_f = flags.baseline_flags(ants)
-    fc_pred = flags.flag_fine_channels(syn.NUM_FC, n_edge=N_EDGE, is_legacy=IS_LEGACY)
-    return flags.set_flags(vis, ts_f, bl_f, fc_pred)
+    return cli.stage_rule_flags(_context(), OracleObservation(spark, None),
+                                vis)[0]
+
+
+def relational_sumthreshold(vis: DataFrame) -> DataFrame:
+    """F9 as one relational plan: the SumThreshold mask of the
+    cell-unique reduction (operators/rfi_sql.py), OR-ed onto every row
+    of its cell."""
+    from birli_spark.operators import rfi_sql
+
+    spark = vis.sparkSession
+    cols = tuple(vis.columns)
+    # the corrected fact feeds TWO consumers (the cell-unique image
+    # and the mask join-back): materialize it once so the upstream
+    # head (notably the relational Van Vleck chain in
+    # preprocess_full_rel) is not evaluated twice — the same
+    # persist-at-the-fan-out a cluster job would use
+    vis = vis.localCheckpoint(eager=True)
+    vis.createOrReplaceTempView("ppf_passbanded")
+    # the cell-unique image is (bl x t x chan)-sized — checkpoint it
+    # so the 24-layer window chain doesn't drag (and re-analyze) the
+    # whole upstream corrections plan behind each layer
+    spark.sql(rfi_sql.cell_dedup_select("ppf_passbanded", cols)) \
+         .localCheckpoint(eager=True) \
+         .createOrReplaceTempView("st_cell")
+    st_ctes, st_mask = rfi_sql.sumthreshold_parts(
+        "st_cell", median_fn="percentile")
+    rfid_cols = ", ".join(
+        "(p.flag OR m.det) AS flag" if c == "flag" else f"p.{c}"
+        for c in cols)
+    # mask side leaves the ladder (ant1, ant2)-partitioned; hash the
+    # checkpointed fact ONCE the same way so the cell-mask join-back
+    # is subset co-partitioned (guide §2.4/§3) — one fact exchange
+    # on the coarse key instead of a 4-key exchange of BOTH sides
+    return spark.sql(
+        f"WITH {st_ctes}, st_maskr AS ({st_mask})"
+        f" SELECT {rfid_cols} FROM"
+        f" (SELECT /*+ REPARTITION(ant1, ant2) */ *"
+        f" FROM ppf_passbanded) p"
+        f" JOIN st_maskr m ON p.ant1 = m.ant1 AND p.ant2 = m.ant2"
+        f" AND p.t = m.t AND p.chan = m.chan")
 
 
 def preprocess_baked(spark: SparkSession, sf_dir: str,
@@ -103,79 +180,19 @@ def preprocess_baked(spark: SparkSession, sf_dir: str,
                      ssins_rfi: bool = False,
                      st_rfi: bool = False,
                      gate: DataFrame | None = None) -> DataFrame:
-    """Pipeline up to (and including) flag→weight baking, before the
-    averaging shuffle — the corrections chain fused as one projection.
-    ``vis`` overrides the default scan (used by picket-fence ranges).
-    Output keeps the u/v/w columns the geometry stage emits (consumed by
-    the UVFITS sink).
-
-    C2/C4/C5 run under the v0.18.0 flag gate (corrections only touch
-    unflagged (t, cc) cells — RELEASES.md:17-19,
-    src/preprocessing.rs:249-253); ``gate`` supplies a precomputed
-    (t, cc, _caf) relation (the full-relational pipeline reuses its
-    pre-Van-Vleck gate so the gate aggregate never re-executes the
-    Van Vleck chain)."""
-    if vis is None:
-        vis = syn.load_vis(spark, sf_dir)
-    vis = rule_flags(spark, vis)
-    vis = corrections.attach_cell_gate(vis, gate=gate)
-    vis = corrections.correct_cable_lengths(
-        vis, syn.load_dim(spark, "antennas"), gated=True)
-    vis = corrections.correct_digital_gains(
-        vis, syn.load_dim(spark, "digital_gains"), gated=True)
-    fine_gains = spark.sql(corrections.fine_gains_values_sql(FINE_GAIN_ROWS))
-    vis = corrections.correct_passband_gains(vis, fine_gains, gated=True)
-    vis = vis.drop(corrections.GATE_COL)
-    if ssins_rfi:
-        # all-relational RFI where the reference runs AOFlagger
-        # (after passband, before geometry — src/preprocessing.rs:291-329);
-        # the (t, chan) mask is OR-ed in like re_apply_existing.
-        # The corrected fact feeds TWO consumers (the SSINS mask
-        # derivation and the join-back probe): materialize it once so
-        # the trig-heavy corrections chain doesn't execute twice per
-        # action (see fanout_materialize for the deployment-selected
-        # spelling). Rows unchanged — plan shape only.
-        from birli_spark.operators import ssins
-
-        vis = ssins.ssins_flag_vis(fanout_materialize(vis))
-    elif st_rfi:
-        # relational SumThreshold in the same slot: per-cell mask from
-        # the deterministic cell-unique reduction, OR-ed onto every row
-        from birli_spark.operators import rfi_sql
-
-        cols = tuple(vis.columns)
-        # the corrected fact feeds TWO consumers (the cell-unique image
-        # and the mask join-back): materialize it once so the upstream
-        # head (notably the relational Van Vleck chain in
-        # preprocess_full_rel) is not evaluated twice — the same
-        # persist-at-the-fan-out a cluster job would use
-        vis = vis.localCheckpoint(eager=True)
-        vis.createOrReplaceTempView("ppf_passbanded")
-        # the cell-unique image is (bl x t x chan)-sized — checkpoint it
-        # so the 24-layer window chain doesn't drag (and re-analyze) the
-        # whole upstream corrections plan behind each layer
-        spark.sql(rfi_sql.cell_dedup_select("ppf_passbanded", cols)) \
-             .localCheckpoint(eager=True) \
-             .createOrReplaceTempView("st_cell")
-        st_ctes, st_mask = rfi_sql.sumthreshold_parts(
-            "st_cell", median_fn="percentile")
-        rfid_cols = ", ".join(
-            "(p.flag OR m.det) AS flag" if c == "flag" else f"p.{c}"
-            for c in cols)
-        # mask side leaves the ladder (ant1, ant2)-partitioned; hash the
-        # checkpointed fact ONCE the same way so the cell-mask join-back
-        # is subset co-partitioned (guide §2.4/§3) — one fact exchange
-        # on the coarse key instead of a 4-key exchange of BOTH sides
-        vis = spark.sql(
-            f"WITH {st_ctes}, st_maskr AS ({st_mask})"
-            f" SELECT {rfid_cols} FROM"
-            f" (SELECT /*+ REPARTITION(ant1, ant2) */ *"
-            f" FROM ppf_passbanded) p"
-            f" JOIN st_maskr m ON p.ant1 = m.ant1 AND p.ant2 = m.ant2"
-            f" AND p.t = m.t AND p.chan = m.chan")
-    vis = corrections.correct_geometry(vis, syn.load_dim(spark, "part_uvw"))
-    vis = calibration.apply_di_calsol(vis, syn.load_dim(spark, "calsols"), CAL_RATIO)
-    return weights.bake_flags_into_weights(vis)
+    """:func:`cli.build_baked` over the oracle surface: the pipeline up to
+    (and including) flag→weight baking, before the averaging shuffle,
+    keeping the geometry stage's u/v/w. ``vis`` overrides the scan
+    (picket-fence ranges); the RFI slot (src/preprocessing.rs:291-329)
+    runs SSINS with ``ssins_rfi``, the relational SumThreshold with
+    ``st_rfi``, else nothing. ``gate`` supplies a precomputed (t, cc,
+    _caf) v0.18.0 gate (RELEASES.md:17-19): the full-relational pipeline
+    reuses its pre-Van-Vleck gate so the gate aggregate never
+    re-executes the Van Vleck chain."""
+    ctx = _context(sf_dir, no_rfi=not ssins_rfi, ssins=ssins_rfi)
+    return cli.build_baked(
+        spark, ctx, OracleObservation(spark, sf_dir, scan=vis, gate=gate),
+        rfi=relational_sumthreshold if st_rfi else None)
 
 
 def preprocess(spark: SparkSession, sf_dir: str,
@@ -203,33 +220,16 @@ def preprocess_full(spark: SparkSession, sf_dir: str,
     (C1–C5 under the v0.18.0 flag gate).
 
     Uses the legacy vis variant whose autos are sighat-encoded (the valid
-    Van Vleck domain). No SQL oracle — the islands are iterative; the
-    correctness of each island is pinned by golden unit tests.
+    Van Vleck domain); antenna 3, flagged in the metadata, is also the
+    Van Vleck pass-through antenna. No SQL oracle — the islands are
+    iterative; the correctness of each island is pinned by golden unit
+    tests.
     """
-    from birli_spark.operators import rfi, vanvleck
-
-    # flag rules precede the corrections so the v0.18.0 gate can read
-    # them — the reference initializes flag_array before its correction
-    # loop and gates every correction (incl. Van Vleck) on the cell's
-    # unflagged timestep ranges (src/preprocessing.rs:249-253)
-    vis = syn.load_vis_legacy(spark, sf_dir)
-    vis = rule_flags(spark, vis)
-    vis = corrections.attach_cell_gate(vis)
-    vis = vanvleck.correct_van_vleck(vis, syn.VV_SAMPLE_SCALE,
-                                     flagged_ants=[3],
-                                     gate_col=corrections.GATE_COL)
-    vis = corrections.correct_cable_lengths(
-        vis, syn.load_dim(spark, "antennas"), gated=True)
-    vis = corrections.correct_digital_gains(
-        vis, syn.load_dim(spark, "digital_gains"), gated=True)
-    fine_gains = spark.sql(corrections.fine_gains_values_sql(FINE_GAIN_ROWS))
-    vis = corrections.correct_passband_gains(vis, fine_gains, gated=True)
-    vis = vis.drop(corrections.GATE_COL)
-    vis = rfi.flag_rfi(vis)
-    vis = corrections.correct_geometry(vis, syn.load_dim(spark, "part_uvw"))
-    vis = calibration.apply_di_calsol(vis, syn.load_dim(spark, "calsols"), CAL_RATIO)
-    vis = weights.bake_flags_into_weights(vis)
-    return averaging.average_time_freq(vis, avg_time, avg_freq)
+    ctx = _context(sf_dir, van_vleck=True, flag_antennas=[3], no_rfi=False,
+                   rfi_strategy="sumthreshold")
+    baked = cli.build_baked(spark, ctx, OracleObservation(
+        spark, sf_dir, scan=syn.load_vis_legacy(spark, sf_dir)))
+    return averaging.average_time_freq(baked, avg_time, avg_freq)
 
 
 def preprocess_full_rel(spark: SparkSession, sf_dir: str,
@@ -345,9 +345,7 @@ def baked_oracle_ctes(vis_where: str = "", ssins_rfi: bool = False,
     # the passband select's output list
     cols_g = tuple(cols) + (corrections.GATE_COL,)
     gate = corrections.cell_gate_oracle_select("flagged")
-    flaggedg = (f"SELECT /*+ BROADCAST(g) */ f.*, g.{corrections.GATE_COL}"
-                f" FROM flagged f"
-                f" JOIN cell_gate g ON f.t = g.t AND f.cc = g.cc")
+    flaggedg = corrections.attach_cell_gate_oracle_select("flagged")
     cable = corrections.cable_oracle_select("flaggedg", "antennas", cols_g,
                                             gated=True)
     digital = corrections.digital_oracle_select("cabled", "digital_gains",
@@ -358,28 +356,12 @@ def baked_oracle_ctes(vis_where: str = "", ssins_rfi: bool = False,
     geom_in = "rfid" if (ssins_rfi or st_rfi) else "passbanded"
     geom = corrections.geom_oracle_select(geom_in, "part_uvw", cols)
     cal = calibration.calibration_oracle_select("geomed", "calsols", CAL_RATIO, cols_uvw)
-    baked_cols = ", ".join(
-        "CASE WHEN flag THEN -ABS(weight) ELSE ABS(weight) END AS weight"
-        if c == "weight" else c
-        for c in cols_uvw
-    )
+    baked_cols = weights.bake_oracle_columns(cols_uvw)
     rfi_ctes = ""
     if ssins_rfi:
         from birli_spark.operators import ssins
 
-        ss_ctes, ss_final = ssins.ssins_parts(
-            "passbanded", median_fn="quantile_cont")
-        rfid_cols = ", ".join(
-            "(p.flag OR COALESCE(m.rfi_flag, FALSE)) AS flag"
-            if c == "flag" else f"p.{c}"
-            for c in cols
-        )
-        rfi_ctes = (
-            f" {ss_ctes},"
-            f" ssins_mask AS ({ss_final}),"
-            f" rfid AS (SELECT {rfid_cols} FROM passbanded p"
-            f" LEFT JOIN ssins_mask m ON p.t = m.t AND p.chan = m.chan),"
-        )
+        rfi_ctes = ssins.ssins_flag_vis_oracle_ctes("passbanded", cols)
     elif st_rfi:
         from birli_spark.operators import rfi_sql
 

@@ -1,8 +1,9 @@
-"""End-to-end REAL-FORMAT pipeline (s1h): gpubox FITS files on disk ->
-distributed binary scan -> rule flags -> v0.18-gated cable correction ->
-RFI in the AOFlagger slot -> geometry -> flag baking -> time/frequency
-averaging -> UVFITS group rows + the PHYSICAL executor-parallel
-random-groups write.
+"""End-to-end REAL-FORMAT composition (s1h): :func:`cli.build_baked`
+over :class:`E2EObservation` (gpubox FITS files -> distributed binary
+scan) under :data:`CONTEXT` — rule flags -> v0.18-gated cable
+correction -> RFI in the AOFlagger slot -> geometry -> flag baking —
+then :func:`cli.write_uvfits`: time/frequency averaging -> UVFITS group
+rows + the PHYSICAL executor-parallel random-groups write.
 
 This is the stage composition of the reference's end-to-end wall-clock
 benchmark (obs 1090008640: read + cable + AOFlagger RFI + geometry +
@@ -12,7 +13,9 @@ files, 835k cube rows), so BENCH carries a literally-shaped comparable
 number instead of only per-stage queries. The RFI slot runs the
 all-relational SSINS flagger (the engine's JVM-side answer to the
 AOFlagger FFI; the mwa-default orchestration itself is gated separately
-as f9e) so the WHOLE composition stays one hash-checkable plan.
+as f9e) so the WHOLE composition stays one hash-checkable plan. The
+v0.18 gate comes from the rule dims, so the SSINS fan-out
+(cli.stage_rfi) is the one materialization: each file decodes once.
 
 Everything is deterministic and the oracle is one DuckDB text: the scan
 content re-derives closed-form (sources/gpubox.py::expected_grid_sql),
@@ -28,6 +31,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from birli_spark import cli
 from birli_spark.operators import corrections, flags, ssins, weights
 from birli_spark.sinks import uvfits
 from birli_spark.sources import gpubox
@@ -121,65 +125,56 @@ def derived_columns() -> dict:
             "weight": F.lit(WEIGHT).cast("double")}
 
 
+class E2EObservation(cli.Observation):
+    """The s1g observation: the 24-file scan through
+    :func:`gpubox.vis_relation`, literal antenna / timestep / partial-UVW
+    dims, the v0.18 gate from the rule dims like every archive's."""
+
+    gps_start = uvfits_gps = GPS0
+    int_time_s = INT_TIME_S
+    n_ants = NUM_ANTS
+    n_fine = NUM_FINE
+    n_chan = N_CHAN
+    uvfits_object = "e2e_bench"
+
+    def __init__(self, spark: SparkSession, num_t: int = NUM_T) -> None:
+        self.spark, self.n_scans = spark, num_t
+        self.obs_end_gps = GPS0 + num_t * INT_TIME_S
+        self.antennas = spark.sql(antennas_values_sql())
+        self.timesteps = spark.sql(timesteps_values_sql(num_t))
+
+    def scan(self) -> DataFrame:
+        return gpubox.vis_relation(
+            gpubox.read_gpubox(self.spark,
+                               scan_dir(self.n_scans) + "/*.fits"),
+            derived_columns())
+
+    derived_columns = staticmethod(derived_columns)
+
+    def part_uvw(self, spark: SparkSession, ctx) -> DataFrame:
+        return spark.sql(part_uvw_values_sql(self.n_scans))
+
+
+#: the composition's options: rule flags (quack, edges, DC), the gated
+#: cable correction, SSINS in the AOFlagger slot, geometry, 2x2 averaging
+CONTEXT = cli.Context(sf_dir=None, quack_time=QUACK_S, flag_edge_chans=N_EDGE,
+                      flag_dc=True, no_digital_gains=True, no_rfi=False,
+                      ssins=True, avg_time=AVG_TIME, avg_freq=AVG_FREQ,
+                      no_draw_progress=True)
+
+
 def e2e_rows(spark: SparkSession, write_path: str | None = None,
              num_t: int = NUM_T) -> DataFrame:
-    """The full composition; when ``write_path`` is given, also performs
-    the PHYSICAL executor-parallel random-groups write (the reference
-    e2e's write stage — byte-gated separately as o1b/mo4). ``num_t``
-    scales the observation 4x/16x for the scale-slope probe."""
-    vis = gpubox.vis_relation(
-        gpubox.read_gpubox(spark, scan_dir(num_t) + "/*.fits"),
-        derived_columns())
-    ants = spark.sql(antennas_values_sql())
-    ts = spark.sql(timesteps_values_sql(num_t))
-    part_uvw = spark.sql(part_uvw_values_sql(num_t))
-    ts_f = flags.flag_timesteps_quack(
-        ts, GPS0, GPS0 + num_t * INT_TIME_S, quack_s=QUACK_S)
-    bl_f = flags.baseline_flags(ants)
-    fc_pred = flags.flag_fine_channels(NUM_FINE, n_edge=N_EDGE,
-                                       is_legacy=True)
-    vis = flags.set_flags(vis, ts_f, bl_f, fc_pred)
-    # materialize the decoded+flagged fact ONCE: three downstream
-    # consumers (the v0.18 cell-gate aggregate, the SSINS mask
-    # derivation, and the main corrected pass) would otherwise each
-    # drag the whole gpubox mapInPandas decode behind them — an opaque
-    # scan Spark can neither column-prune nor share, so every action
-    # paid THREE full archive decodes (guide §5: persist at the
-    # fan-out). Rows are unchanged; only the plan shape is. The
-    # materialization spelling follows the fact's size — see
-    # pipeline.fanout_materialize. The small one, localCheckpoint
-    # (eager=False), is lazy: the first action computes each partition
-    # once and every other consumer reads the stored block. The big
-    # one, the reliable checkpoint(eager=True), is eager: it writes the
-    # checkpoint files here, in this call, and every consumer reads
-    # them back. Bench timing covers the materialization either way:
-    # this call and the forcing action both run inside the timer.
-    from birli_spark.pipeline import fanout_materialize
-    # big above ~4M rows: the x4 probe (3.3M) still favors executor
-    # blocks (6.0-7.3 s vs 7.7-8.2 s), the x16 one (13.4M) clearly
-    # favors the reliable checkpoint (17-33 s vs 27-77 s)
-    n_bl = NUM_ANTS * (NUM_ANTS + 1) // 2
-    vis = fanout_materialize(
-        vis, big=num_t * n_bl * N_CHAN > 4_000_000)
-    vis = corrections.attach_cell_gate(vis)
-    vis = corrections.correct_cable_lengths(vis, ants, gated=True)
-    vis = vis.drop(corrections.GATE_COL)
-    vis = ssins.ssins_flag_vis(vis)          # the AOFlagger slot
-    vis = corrections.correct_geometry(vis, part_uvw)
-    baked = weights.bake_flags_into_weights(vis)
-    rows = uvfits.uvfits_group_rows(baked, AVG_TIME, AVG_FREQ,
-                                    GPS0, INT_TIME_S)
-    if write_path is not None:
-        # the o1b pattern: checkpoint the relation FIRST so the writer's
-        # grid probes + the write action run off one materialization,
-        # then the returned relation is that same checkpoint
-        rows = rows.localCheckpoint(eager=True)
-        # .count() forces the executor-parallel pwrite job (the writer
-        # returns a lazy per-group confirmation relation)
-        uvfits.write_uvfits_distributed(
-            rows, write_path, N_CHAN // AVG_FREQ, object_name="e2e_bench",
-            jd_zero=uvfits.obs_jd_zero(GPS0)).count()
-    return rows
+    """The full composition as UVFITS group rows; when ``write_path`` is
+    given, also performs the PHYSICAL executor-parallel random-groups
+    write (the reference e2e's write stage — byte-gated separately as
+    o1b/mo4) and returns the rows it wrote. ``num_t`` scales the
+    observation 4x/16x for the scale-slope probe."""
+    obs = E2EObservation(spark, num_t)
+    baked = cli.build_baked(spark, CONTEXT, obs)
+    if write_path is None:
+        return cli.uvfits_rows(CONTEXT, obs, baked)
+    return cli.write_uvfits(spark, CONTEXT, obs, baked, write_path)[0]
 
 
 def e2e_oracle_sql() -> str:
@@ -189,24 +184,14 @@ def e2e_oracle_sql() -> str:
     flagged = flags.set_flags_oracle_select(
         "vis", "ts_flags", "bl_flags", fc_pred, _COLS)
     gate = corrections.cell_gate_oracle_select("flagged")
-    flaggedg = (f"SELECT /*+ BROADCAST(g) */ f.*, g.{corrections.GATE_COL}"
-                f" FROM flagged f"
-                f" JOIN cell_gate g ON f.t = g.t AND f.cc = g.cc")
+    flaggedg = corrections.attach_cell_gate_oracle_select("flagged")
     cols_g = tuple(_COLS) + (corrections.GATE_COL,)
     cable = corrections.cable_oracle_select("flaggedg", "antennas",
                                             cols_g, gated=True)
     # drop the gate column on the way into the RFI slot
     cabled_cols = ", ".join(_COLS)
-    ss_ctes, ss_final = ssins.ssins_parts("cabled2",
-                                          median_fn="quantile_cont")
-    rfid_cols = ", ".join(
-        "(p.flag OR COALESCE(m.rfi_flag, FALSE)) AS flag"
-        if c == "flag" else f"p.{c}" for c in _COLS)
     geom = corrections.geom_oracle_select("rfid", "part_uvw", _COLS)
-    cols_uvw = tuple(_COLS) + ("u", "v", "w")
-    baked_cols = ", ".join(
-        "CASE WHEN flag THEN -ABS(weight) ELSE ABS(weight) END AS weight"
-        if c == "weight" else c for c in cols_uvw)
+    baked_cols = weights.bake_oracle_columns(tuple(_COLS) + ("u", "v", "w"))
     content = gpubox.expected_grid_sql(NUM_CC, NUM_ANTS, NUM_FINE, NUM_T)
     pol_cols = ", ".join(c for c in _COLS
                          if c.endswith("_re") or c.endswith("_im"))
@@ -230,10 +215,7 @@ def e2e_oracle_sql() -> str:
         f" flaggedg AS ({flaggedg}),"
         f" cabled AS ({cable}),"
         f" cabled2 AS (SELECT {cabled_cols} FROM cabled),"
-        f" {ss_ctes},"
-        f" ssins_mask AS ({ss_final}),"
-        f" rfid AS (SELECT {rfid_cols} FROM cabled2 p"
-        f" LEFT JOIN ssins_mask m ON p.t = m.t AND p.chan = m.chan),"
+        f"{ssins.ssins_flag_vis_oracle_ctes('cabled2', _COLS)}"
         f" geomed AS ({geom}),"
         f" baked AS (SELECT {baked_cols} FROM geomed)"
         f" {rows_sel}")

@@ -316,6 +316,7 @@ class ArchiveObservation(cli.Observation):
         self.anchor = a = grid_anchor(gpubox_glob, m.gps_start,
                                       m.int_time_s, m.num_t)
         self.gps_start, self.int_time_s = m.gps_start, m.int_time_s
+        self.n_ants, self.n_scans = m.n_ants, m.num_t
         self.n_fine, self.n_chan = m.n_fine_per_coarse, m.n_chan_total
         self.quack_s = m.quack_s
         # the timestep flag dim covers every CAPTURED scan: a capture
@@ -355,42 +356,6 @@ class ArchiveObservation(cli.Observation):
 
     def derived_columns(self) -> dict:
         return derived_columns(self.meta, self.anchor["offset_s"])
-
-    def cell_gate(self, spark: SparkSession, rules, bl_pred) -> DataFrame:
-        """The v0.18 gate from the RULE DIMS, not an aggregate over the
-        fact: before RFI, flag is the star-schema disjunction
-        ts | bl | chan over separable axes, so
-          bool_and(flag) over (bl, fc) = ts_flag OR bool_and(bl_flag)
-                                         OR bool_and(chan flag within cc),
-        with the baseline pool restricted to the SELECTED baselines by
-        the vis side's own predicate. An aggregate over the fact would
-        be a SECOND FULL DECODE of the archive, whose scan is a binary
-        mapInPandas with no column pruning (measured: it doubled the
-        scale-e2e read cost)."""
-        from birli_spark.operators import corrections
-
-        sel_bl = rules.bl
-        if bl_pred is not None:
-            # the archive's baseline index: upper triangle incl. autos
-            # in (ant1, ant2) order, as every gpubox reader numbers it
-            n = self.meta.n_ants
-            sel_bl = (sel_bl.filter("ant1 <= ant2").withColumn(
-                "bl", F.expr(f"CAST(ant1 * {n} - ant1 * (ant1 - 1) DIV 2"
-                             f" + ant2 - ant1 AS INT)")).filter(bl_pred))
-        all_bl = sel_bl.agg(F.expr("bool_and(bl_flag)").alias("_all_bl"))
-        fc_grid = spark.range(0, len(self.meta.coarse_channels), 1, 1) \
-            .selectExpr("CAST(id AS INT) AS cc").crossJoin(
-                spark.range(0, self.n_fine, 1, 1).selectExpr(
-                    "CAST(id AS INT) AS fc"))
-        cc_all = (fc_grid.select("cc", rules.chan_pred.alias("_fcf"))
-                  .groupBy("cc").agg(F.expr("bool_and(_fcf)").alias("_all_fc")))
-        return (rules.ts.select("t", "ts_flag")
-                .crossJoin(F.broadcast(cc_all))
-                .crossJoin(F.broadcast(all_bl))
-                .select("t", "cc",
-                        (F.col("ts_flag") | F.coalesce(F.col("_all_bl"),
-                                                       F.lit(True))
-                         | F.col("_all_fc")).alias(corrections.GATE_COL)))
 
     def part_uvw(self, spark: SparkSession, ctx) -> DataFrame | None:
         """Precessed partial UVWs spanning every CAPTURED scan on the

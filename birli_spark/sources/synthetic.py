@@ -101,11 +101,6 @@ DIGITAL_GAINS_SQL = (
 #: src/passband_gains.rs): 16 ultrafine per coarse → scrunch ratio 2 onto
 #: NUM_FC=8 fine channels.
 NUM_UFC = 16
-PASSBAND_GAINS_SQL = (
-    "SELECT CAST(ufc AS INT) AS ufc,"
-    " CAST(50 + ufc AS DOUBLE) / 100 AS gain"
-    " FROM (VALUES " + ", ".join(f"({u})" for u in range(NUM_UFC)) + ") AS u(ufc)"
-)
 
 #: per-(t, ant) partial UVWs — stands in for the erfa/precession table the
 #: driver would precompute (src/corrections.rs:652-676); closed-form values
@@ -149,7 +144,6 @@ DIM_SQL = {
     "antennas": ANTENNAS_SQL,
     "timesteps": TIMESTEPS_SQL,
     "digital_gains": DIGITAL_GAINS_SQL,
-    "passband_gains": PASSBAND_GAINS_SQL,
     "part_uvw": PART_UVW_SQL,
     "calsols": CALSOLS_SQL,
 }

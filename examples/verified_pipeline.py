@@ -14,12 +14,13 @@ Usage: python examples/verified_pipeline.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from birli_spark import pipeline  # noqa: E402
 from birli_spark.session import get_spark  # noqa: E402

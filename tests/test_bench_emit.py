@@ -11,6 +11,9 @@ import os
 import subprocess
 import sys
 
+#: this checkout, whose bench.py the test runs
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_bench_last_stdout_line_is_json():
     env = dict(os.environ)
@@ -21,9 +24,8 @@ def test_bench_last_stdout_line_is_json():
     # thread whose post-JSON WARN broke the round-7 artifact)
     env["SPARK_GRAFT_QUERIES"] = "s1_vis_scan,st13_stream_calsol_drift"
     proc = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
-        capture_output=True, text=True, timeout=900, env=env,
-        cwd="/root/repo")
+        [sys.executable, os.path.join(ROOT, "bench.py")],
+        capture_output=True, text=True, timeout=900, env=env, cwd=ROOT)
     assert proc.returncode == 0, proc.stderr[-2000:]
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert lines, "bench printed nothing to stdout"

@@ -76,35 +76,29 @@ def test_cli_max_memory_equals_time_chunk(spark, sf_dir, tmp_path):
     assert filecmp.cmp(a, b, shallow=False)
 
 
-def test_selected_dims_real_metafits():
+@pytest.mark.needs_reference("1254670392_avg")
+def test_selected_dims_real_metafits(spark, gpubox_dir):
     """--max-memory's metadata sizing on a REAL metafits: dims from the
     header narrowed by plain selections, None for selections the
-    helper cannot size (falls back to the scan)."""
-    from birli_spark import cli
+    observation cannot size (falls back to the scan)."""
+    from birli_spark import cli, real_input
 
     meta = ("/root/reference/tests/data/1254670392_avg/"
             "1254670392.fixed.metafits")
-    base = dict(metafits=meta, gpubox="x*.fits", sel_time=None,
-                sel_ants=None, no_sel_autos=False,
-                no_sel_flagged_ants=False, timestep_limit=None,
-                baseline_limit=None, sel_chan_ranges=None,
-                provided_chan_ranges=None)
+    obs = real_input.ArchiveObservation(spark, meta, gpubox_dir["glob"])
 
-    class Ctx:
-        def __init__(self, **kw):
-            self.__dict__.update(base, **kw)
+    def dims(*opts):
+        return obs.selected_dims(cli.parse_args(
+            ["-m", meta, "--gpubox", gpubox_dir["glob"], *opts]))
 
-    n_t, n_bl, n_chan = cli._selected_dims(Ctx())
-    assert (n_t, n_bl, n_chan) == (2, 128 * 129 // 2, 768)
-    n_t, n_bl, _ = cli._selected_dims(
-        Ctx(sel_time=(0, 0), sel_ants=[0, 1, 2], no_sel_autos=True))
+    assert dims() == (2, 128 * 129 // 2, 768)
+    n_t, n_bl, _ = dims("--sel-time", "0", "0", "--sel-ants", "0", "1", "2",
+                        "--no-sel-autos")
     assert (n_t, n_bl) == (1, 3)
-    assert cli._selected_dims(Ctx(no_sel_flagged_ants=True)) is None
-    assert cli._selected_dims(Ctx(sel_chan_ranges="0-2")) is None
+    assert dims("--no-sel-flagged-ants") is None
+    assert dims("--sel-chan-ranges", "0-2") is None
     # the window clamps to the observation (the reference sizes from
     # the clamped vis_sel.timestep_range): --sel-time 1 5 on this
     # 2-scan obs selects ONE timestep, not hi-lo+1 = 5
-    n_t, _, _ = cli._selected_dims(Ctx(sel_time=(1, 5)))
-    assert n_t == 1
-    n_t, _, _ = cli._selected_dims(Ctx(sel_time=(0, 99)))
-    assert n_t == 2
+    assert dims("--sel-time", "1", "5")[0] == 1
+    assert dims("--sel-time", "0", "99")[0] == 2

@@ -3,11 +3,16 @@ flag combinations, dry run, and an end-to-end invocation."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from birli_spark import cli
 from birli_spark.sources import synthetic as syn
+
+#: this checkout (the subprocess CLI runs its package)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_parse_defaults():
@@ -285,7 +290,7 @@ def test_cli_pfb_gains_cotter_uses_real_table(spark, sf_dir, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "birli_spark.cli", sf_dir,
          "-u", str(out), "--pfb-gains", "cotter", "--no-rfi"],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
 
 
@@ -398,7 +403,7 @@ def test_cli_surface_covers_every_reference_option():
     """CLI-surface completeness: every long option the reference's
     parser defines (src/cli.rs:636-812) parses here too — a user can
     paste a reference invocation (plus the input-shape flags) and run
-    it. Extras (--ssins, --rfi-impl, --dump-csv, --flag-parquet, ...)
+    it. Extras (--ssins, --dump-csv, --flag-parquet, ...)
     are beyond-reference additions, allowed to be ours-only."""
     p = cli.build_parser()
     ours = {o[2:] for a in p._actions
@@ -432,6 +437,7 @@ def test_rows_agree_between_plan_and_uvfits_groups(
     assert out_n == groups_n
 
 
+@pytest.mark.needs_reference("1297526432_mwax")
 @pytest.mark.parametrize("avg_t,avg_f", [(1, 1), (2, 1), (2, 2)])
 def test_rows_agree_real_input(spark, avg_t, avg_f):
     """Same invariant on a REAL observation (one row per (t, bl, chan)

@@ -209,26 +209,35 @@ def test_archive_gate_pool_honours_baseline_limit(spark, obs):
         aggregated.sort_values(keys, ignore_index=True))
 
 
-def test_archive_ssins_decodes_once(spark, obs, tmp_path, monkeypatch):
+def test_archive_selected_dims(spark, obs):
+    """--max-memory and the SSINS fan-out size a selection from the
+    archive's metadata: scheduled scans, upper-triangle baselines, every
+    fine channel; None where only a scan can tell."""
+    from birli_spark import real_input
+    from perfbench import inputs
+
+    arc = real_input.ArchiveObservation(spark, obs["metafits"], obs["glob"])
+
+    def dims(*opts):
+        return arc.selected_dims(_arc(obs, *opts))
+
+    n_chan = inputs.N_CC * 8
+    assert dims() == (8, 4 * 5 // 2, n_chan)
+    assert dims("--sel-time", "1", "99", "--sel-ants", "0", "1", "2",
+                "--no-sel-autos") == (7, 3, n_chan)
+    assert dims("--no-sel-flagged-ants") is None
+    assert dims("--baseline-limit", "3") is None
+
+
+def test_archive_ssins_decodes_once(spark, obs, tmp_path, decoded_files):
     """--ssins feeds the decoded fact to the SSINS mask aggregate and to
     the join-back probe; the archive decode still runs once per file."""
     import glob
 
     from birli_spark import cli
-    from birli_spark.sources import gpubox
 
-    decoded = spark.sparkContext.accumulator(0)
-    decode_file = gpubox.decode_file
-
-    def counted(path, decode):
-        decoded.add(1)
-        return decode_file(path, decode)
-
-    # the scan task pickles the module global it calls, so the count
-    # travels to the Python workers with it
-    monkeypatch.setattr(gpubox, "decode_file", counted)
     cli.run(_argv("arc/ssins", str(tmp_path), obs, ""), spark=spark)
-    assert decoded.value / len(glob.glob(obs["glob"])) == 1.0
+    assert decoded_files.value / len(glob.glob(obs["glob"])) == 1.0
 
 
 def test_archive_file_uri_matches_bare_path(spark, obs, tmp_path):

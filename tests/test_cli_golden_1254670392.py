@@ -39,7 +39,6 @@ unmatchable by either engine.
 from __future__ import annotations
 
 import csv
-import os
 
 import numpy as np
 import pytest
@@ -47,8 +46,7 @@ import pytest
 REF_DIR = "/root/reference/tests/data/1254670392_avg"
 META = f"{REF_DIR}/1254670392.fixed.metafits"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_DIR), reason="reference test data not present")
+pytestmark = pytest.mark.needs_reference(REF_DIR)
 
 #: UVFITS pol axis order — ours and the reference comparator's
 POL_ORDER = ("xx", "yy", "xy", "yx")

@@ -42,7 +42,6 @@ non-finite precisely where the golden's are.
 from __future__ import annotations
 
 import csv
-import os
 
 import numpy as np
 import pytest
@@ -50,8 +49,7 @@ import pytest
 from test_cli_golden_1254670392 import (  # noqa: F401  (module import)
     REF_DIR, META, compare_ms_with_csv)
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_DIR), reason="reference test data not present")
+pytestmark = pytest.mark.needs_reference(REF_DIR)
 
 POLS = ("xx", "xy", "yx", "yy")
 N_CHAN = 768

@@ -12,8 +12,7 @@ import pytest
 
 MWAX_DIR = "/root/reference/tests/data/1297526432_mwax"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(MWAX_DIR), reason="reference test data not present")
+pytestmark = pytest.mark.needs_reference(MWAX_DIR)
 
 META = f"{MWAX_DIR}/1297526432.metafits"
 GLOB = f"{MWAX_DIR}/1297526432_*ch11*.fits"
@@ -100,8 +99,7 @@ def test_cli_requires_input():
 LEGACY_DIR = "/root/reference/tests/data/1196175296_mwa_ord"
 
 
-@pytest.mark.skipif(not os.path.isdir(LEGACY_DIR),
-                    reason="reference test data not present")
+@pytest.mark.needs_reference(LEGACY_DIR)
 def test_real_input_legacy_format(spark, tmp_path):
     """The legacy Ord format through the same real-input path: the
     format auto-detects from the gpuboxNN filename and the CLI runs
@@ -295,8 +293,7 @@ def test_quack_time_must_be_timestep_multiple():
         cli.parse_args(["/root/testdata/sf0.001", "--flag-end", "1.3"])
 
 
-@pytest.mark.skipif(not os.path.isdir(LEGACY_DIR),
-                    reason="reference test data not present")
+@pytest.mark.needs_reference(LEGACY_DIR)
 def test_real_mode_flag_end_flags_last_captured_scan(spark):
     """1196175296's capture starts 2 s AFTER the scheduled obs start:
     the data occupies t=4..7 against a 4-scan schedule. The timestep
@@ -324,6 +321,7 @@ def test_real_mode_flag_end_flags_last_captured_scan(spark):
     assert flagged_t == [7], flagged_t
 
 
+@pytest.mark.needs_reference("1439922144_deripple", "1254670392_avg")
 def test_pfb_auto_resolves_from_metafits():
     """--passband-gains auto resolves against the METAFITS correlator
     facts in real mode (reference test_no_pfb_when_deripple_applied,

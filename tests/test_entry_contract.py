@@ -3,12 +3,13 @@ cross-check of every query at sf0.001 using DuckDB locally."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from tools.oracle_check import TABLES, compare  # noqa: E402
@@ -35,7 +36,18 @@ def duck(sf_dir):
     return con
 
 
-@pytest.mark.parametrize("name", sorted(entrymod.queries()))
+#: queries over the reference's own files (S1d MWAX scan, S1e legacy scan,
+#: S3b metafits dims) and the inputs they read
+_REFERENCE_INPUTS = {
+    "s1d_mwax_gpubox_scan": os.path.dirname(entrymod._MWAX_GLOB),
+    "s1e_legacy_gpubox_scan": entrymod._ORD_DIR,
+    "s3b_metafits_dims": entrymod._METAFITS,
+}
+
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.needs_reference(_REFERENCE_INPUTS[n]))
+    if n in _REFERENCE_INPUTS else n for n in sorted(entrymod.queries())])
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     sdf = qs[name](spark, sf_dir).toPandas()

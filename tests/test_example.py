@@ -7,6 +7,7 @@ import runpy
 import sys
 
 import numpy as np
+import pytest
 
 
 def test_example_end_to_end(tmp_path, monkeypatch):
@@ -94,15 +95,11 @@ def test_events_example_end_to_end(tmp_path):
     assert result["stream_parity"] is True
 
 
+@pytest.mark.needs_reference("1196175296_mwa_ord")
 def test_real_obs_pipeline_example(tmp_path, spark):
     """The all-real-inputs pipeline (reference metafits + legacy gpubox
     -> flags -> cable -> average -> sinks) runs end-to-end with sane
     shapes and a readable mwaf set."""
-    import os
-
-    import pytest
-    if not os.path.isdir("/root/reference/tests/data/1196175296_mwa_ord"):
-        pytest.skip("reference test data not present")
     mod = runpy.run_path("examples/real_obs_pipeline.py")
     result = mod["run"](str(tmp_path / "real_obs"), spark=spark)
     assert result["obsid"] == 1196175296

@@ -20,6 +20,8 @@ AVG_CSV = f"{DIR}/1254670392.cotter.none.avg_4s_160khz.uvfits.csv"
 CABLE_CSV = f"{DIR}/1254670392.cotter.cable.uvfits.csv"
 META = f"{DIR}/1254670392.metafits"
 
+pytestmark = pytest.mark.needs_reference(DIR)
+
 VIS_COLS = ["xx_re", "xx_im", "xy_re", "xy_im",
             "yx_re", "yx_im", "yy_re", "yy_im"]
 

@@ -83,8 +83,7 @@ GOLDEN_CSV = pathlib.Path(
     "/root/reference/tests/data/1254670392_avg/"
     "1254670392.cotter.none.uvfits.csv")
 
-needs_golden = pytest.mark.skipif(not GOLDEN_CSV.exists(),
-                                  reason="reference fixture not present")
+needs_golden = pytest.mark.needs_reference(GOLDEN_CSV)
 
 
 def load_golden():
@@ -223,8 +222,7 @@ def test_mwa_strategy_autos_residual_confined_to_subband_edges():
 
 MWA_ORD = pathlib.Path("/root/reference/tests/data/1196175296_mwa_ord")
 
-needs_1196 = pytest.mark.skipif(not MWA_ORD.exists(),
-                                reason="reference fixture not present")
+needs_1196 = pytest.mark.needs_reference(MWA_ORD)
 
 
 def _cotter_mwaf_flags_1196():

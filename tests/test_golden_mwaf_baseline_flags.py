@@ -22,8 +22,7 @@ from birli_spark.sources import metafits as mf
 
 ORD = pathlib.Path("/root/reference/tests/data/1196175296_mwa_ord")
 
-needs_ref = pytest.mark.skipif(not ORD.exists(),
-                               reason="reference fixtures not present")
+needs_ref = pytest.mark.needs_reference(ORD)
 
 
 @needs_ref

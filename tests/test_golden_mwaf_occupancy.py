@@ -35,8 +35,7 @@ from birli_spark.sources import fitscore as fc
 
 DATA = pathlib.Path("/root/reference/tests/data/1247842824_flags")
 
-needs_fixtures = pytest.mark.skipif(not DATA.exists(),
-                                    reason="reference fixtures not present")
+needs_fixtures = pytest.mark.needs_reference(DATA)
 
 
 def read_v2_mwaf_with_occupancy(path: pathlib.Path):
@@ -140,8 +139,7 @@ GOLDEN_CSV = pathlib.Path("/root/reference/tests/data/1254670392_avg/"
                           "1254670392.cotter.none.uvfits.csv")
 
 
-@pytest.mark.skipif(not GOLDEN_CSV.exists(),
-                    reason="reference fixture not present")
+@pytest.mark.needs_reference(GOLDEN_CSV)
 def test_f9e_channel_occupancy_vs_cotter_golden():
     """Per-channel occupancy of the f9e float detector vs the occupancy
     of cotter's own flags on the real 1254670392 visibilities. Margins

@@ -3,14 +3,11 @@ own pyuvdata golden CSV and unit-level PFB-order/sky-order checks."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 ORD = "/root/reference/tests/data/1196175296_mwa_ord"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(ORD), reason="reference test data not present")
+pytestmark = pytest.mark.needs_reference(ORD)
 
 
 def test_pfb_position_order():

@@ -5,14 +5,12 @@ gpubox visibilities -> cable-length correction."""
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
 
 MWAX_DIR = "/root/reference/tests/data/1297526432_mwax"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(MWAX_DIR), reason="reference test data not present")
+pytestmark = pytest.mark.needs_reference(MWAX_DIR)
 
 
 def test_obs_context_fields():
@@ -93,20 +91,21 @@ def test_real_pipeline_slice_cable_correction(spark):
 
 
 @pytest.mark.parametrize("rel,ants,scans,fpc,quack,first_cc,n_cc", [
-    ("1254670392_avg/1254670392.metafits", 128, 4, 32, 4.0, 131, 24),
-    ("1119683928_picket/1119683928.metafits", 128, 224, 32, 3.0, 62, 24),
-    ("1439922144_deripple/1439922144.metafits", 128, 60, 128, 2.0, 131, 24),
-    ("1196175296_mwa_ord/1196175296.metafits", 128, 4, 2, 2.5, 157, 2),
-    ("1247842824_flags/1247842824.metafits", 128, 2, 128, 1.0, 104, 1),
-])
+    pytest.param(*case, marks=pytest.mark.needs_reference(case[0]))
+    for case in [
+        ("1254670392_avg/1254670392.metafits", 128, 4, 32, 4.0, 131, 24),
+        ("1119683928_picket/1119683928.metafits", 128, 224, 32, 3.0, 62, 24),
+        ("1439922144_deripple/1439922144.metafits", 128, 60, 128, 2.0, 131,
+         24),
+        ("1196175296_mwa_ord/1196175296.metafits", 128, 4, 2, 2.5, 157, 2),
+        ("1247842824_flags/1247842824.metafits", 128, 2, 128, 1.0, 104, 1),
+    ]])
 def test_all_reference_metafits_parse(rel, ants, scans, fpc, quack,
                                       first_cc, n_cc):
     """Every real metafits the reference ships parses to a sane obs
     context — including the non-contiguous picket-fence channel list."""
     from birli_spark.sources import metafits as mf
     path = f"/root/reference/tests/data/{rel}"
-    if not os.path.exists(path):
-        pytest.skip("fixture missing")
     primary, td = mf.read_metafits(path)
     ctx = mf.obs_context(primary)
     assert ctx["n_ants"] == ants

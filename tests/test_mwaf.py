@@ -148,6 +148,7 @@ def test_bl_occ_hdu_roundtrip(spark, sf_dir, tmp_path):
         assert ch2.Count.tolist() == ch_occ.Count.tolist()
 
 
+@pytest.mark.needs_reference("1196175296_mwa_ord")
 def test_read_cotter_mwaf_reference_files():
     """Read the reference's own Cotter-written flag files
     (tests/data/1196175296_mwa_ord/FlagfileCotter*.mwaf) and verify the
@@ -156,16 +157,12 @@ def test_read_cotter_mwaf_reference_files():
     the dump ('#' = flagged), confirming the (timestep, baseline)-major
     row order the reference's open_cotter assumes
     (src/io/mwaf.rs:719-795)."""
-    import os
     import re
 
     import numpy as np
-    import pytest
 
     from birli_spark.sinks import mwaf
     base = "/root/reference/tests/data/1196175296_mwa_ord"
-    if not os.path.isdir(base):
-        pytest.skip("reference test data not present")
     for name in ("FlagfileCotterMWA01", "FlagfileCotterGeneric02"):
         hdr, mat = mwaf.read_cotter_mwaf(f"{base}/{name}.mwaf")
         n_ants = int(hdr["NANTENNA"])
@@ -201,20 +198,16 @@ def test_read_cotter_mwaf_rejects_birli_format(tmp_path, spark):
         mwaf.read_cotter_mwaf(paths[0])
 
 
+@pytest.mark.needs_reference("1119683928_picket/1119683928_flags.zip")
 def test_read_cotter_mwaf_picket_archive(tmp_path):
     """The picket-fence obs ships 24 real Cotter-4.2 flag files
     (1119683928_flags.zip): our cotter reader decodes them at full scale
     (224 scans x 8256 baselines x 32 chans)."""
-    import os
     import zipfile
-
-    import pytest
 
     from birli_spark.sinks import mwaf
     zpath = ("/root/reference/tests/data/1119683928_picket/"
              "1119683928_flags.zip")
-    if not os.path.exists(zpath):
-        pytest.skip("reference test data not present")
     with zipfile.ZipFile(zpath) as z:
         name = "1119683928_01.mwaf"
         z.extract(name, tmp_path)
@@ -227,6 +220,7 @@ def test_read_cotter_mwaf_picket_archive(tmp_path):
     assert 0.0 < frac < 1.0
 
 
+@pytest.mark.needs_reference("1247842824_flags")
 def test_read_reference_birli_written_mwaf(spark):
     """Read-back of mwaf files the REFERENCE ITSELF wrote (its own test
     fixtures tests/data/1247842824_flags/FlagfileBirli01*.mwaf) — the

@@ -30,8 +30,7 @@ from birli_spark.sources import metafits as mf
 
 ARCHIVE = pathlib.Path("/root/reference/tests/data/1119683928_picket")
 
-needs_archive = pytest.mark.skipif(not ARCHIVE.exists(),
-                                   reason="reference fixture not present")
+needs_archive = pytest.mark.needs_reference(ARCHIVE)
 
 #: the known receiver-channel layout of the real picket obs
 PICKET_CHANNELS = [62, 63, 69, 70, 76, 77, 84, 85, 93, 94, 103, 104,

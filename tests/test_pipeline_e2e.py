@@ -119,6 +119,16 @@ def test_rerun_compiles_no_new_class(rows, spark, tmp_path):
         rows[0].sort_values(key, ignore_index=True))
 
 
+def test_decodes_each_file_once(spark, tmp_path, monkeypatch,
+                                decoded_files):
+    """The v0.18 gate comes from the rule dims, so the SSINS fan-out is
+    the composition's one materialization: at the default spelling each
+    of the archive's files is decoded exactly once per run."""
+    monkeypatch.delenv("SPARK_GRAFT_FANOUT_PERSIST", raising=False)
+    E.e2e_rows(spark, write_path=str(tmp_path / "once.uvfits"))
+    assert decoded_files.value / E.NUM_CC == 1.0
+
+
 @pytest.mark.parametrize("spelling", ["disk", "memory", "LOCAL"])
 def test_fanout_persist_rejects_unknown_spelling(spark, monkeypatch,
                                                  spelling):

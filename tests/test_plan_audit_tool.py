@@ -8,11 +8,15 @@ import os
 import subprocess
 import sys
 
+#: this checkout: its tools/plan_audit.py and committed PLANS.md
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOL = os.path.join(ROOT, "tools", "plan_audit.py")
+PLANS = os.path.join(ROOT, "PLANS.md")
+
 
 def _load_tool():
     import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "plan_audit", "/root/repo/tools/plan_audit.py")
+    spec = importlib.util.spec_from_file_location("plan_audit", TOOL)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -60,14 +64,13 @@ def test_unknown_query_arg_rejected():
     """`plan_audit.py not_a_query` must exit non-zero WITHOUT touching
     PLANS.md (previously: silently audited nothing and truncated the
     artifact to a 3-line header)."""
-    before = open("/root/repo/PLANS.md").read()
+    before = open(PLANS).read()
     res = subprocess.run(
-        [sys.executable, "/root/repo/tools/plan_audit.py",
-         "definitely_not_a_query_name"],
+        [sys.executable, TOOL, "definitely_not_a_query_name"],
         capture_output=True, text=True, timeout=300)
     assert res.returncode == 2
     assert "unknown query name" in res.stderr
-    assert open("/root/repo/PLANS.md").read() == before
+    assert open(PLANS).read() == before
 
 
 def test_gps_utc_leap_table():

@@ -57,8 +57,10 @@ def test_plan_audit_has_no_warnings(spark, sf_dir):
     dims, partial-aggregated, and free of unbounded nested-loop joins
     (tools/plan_audit.py is the full auditor; this pins a representative
     subset so regressions fail CI)."""
+    import os
     import sys
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
     import plan_audit
     import __spark_entry__ as entrymod
     qs = entrymod.queries()

@@ -12,13 +12,15 @@ Usage: python tools/exp_parity_probe.py [n]
 
 from __future__ import annotations
 
+import os
 import struct
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from birli_spark.session import get_spark  # noqa: E402
 
