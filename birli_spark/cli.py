@@ -1012,8 +1012,7 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
 
         if ctx.mwaf_out:
             from birli_spark.sinks import mwaf
-            # distributed writer: one executor task per coarse channel
-            # (byte-identical to the driver-loop writer)
+            # one executor task per coarse channel
             with _stage(spark, ctx, "write mwaf"):
                 result["mwaf_files"] = mwaf.write_mwaf_set_distributed(
                     run_flags("t", "bl", "cc", "fc"), ctx.mwaf_out,

@@ -7,12 +7,13 @@ directories (``casa_tables``), with the MAIN bulk data written
 Why that parallel write is sound: every MAIN column under StManAipsIO
 stores fixed-size cells (no string columns), so a row's byte offset in
 each column section is ``section_base + row_idx * cell_size`` — the
-same fixed-record argument the distributed UVFITS writer uses
-(sinks/uvfits.py:216). Row order is (time block, ant1, ant2), the
-order the reference's own MS writer appends in (``write_ms``,
-src/io/mod.rs:542-595: chunked by timestep, baseline-major inside);
-each Spark task owns one time block's contiguous row range and
-``pwrite``s each column slice once.
+same fixed-record argument the UVFITS writer uses
+(sinks/uvfits.py::_write_group_files). Row order is (time block, ant1,
+ant2), the order the reference's own MS writer appends in
+(``write_ms``, src/io/mod.rs:542-595: chunked by timestep,
+baseline-major inside); each Spark task owns one time block's
+contiguous row range and ``pwrite``s each column slice once
+(:func:`_write_ms_trees`).
 
 Array-axis note: casacore arrays are column-major; a casacore cell
 ``Array<Complex>(IPosition(2, n_corr, n_chan))`` is byte-identical to
@@ -172,79 +173,21 @@ def write_ms_casa(spark: SparkSession, baked: DataFrame, out_dir: str,
                   avg_time: int, avg_freq: int, gps_start: float,
                   int_time_s: float) -> int:
     """Write ``out_dir`` as a casacore-layout MS: MAIN at the root
-    (executor-parallel bulk write), one subdirectory per subtable,
-    TpTable keywords binding the tree. Returns MAIN row count."""
-    # fail the avg_freq divisibility check BEFORE the expensive
-    # distributed MAIN write (it otherwise surfaces only in
-    # _write_subtables, after the bulk job, leaving a partial MS)
-    ms_subtables.subtable_sqls(avg_freq=avg_freq)
-
+    (executor-parallel bulk write, :func:`_write_ms_trees`), one
+    subdirectory per subtable, TpTable keywords binding the tree. One
+    observation: time block ``tb`` is scan ``tb + 1``. Returns MAIN row
+    count."""
     rows = ms_main.ms_main_rows(baked, avg_time, avg_freq,
                                 gps_start, int_time_s)
-    rows = rows.localCheckpoint(eager=True)  # one fact-pipeline run
-    chan_dim = sorted(r[0] for r in
-                      rows.select("chan").distinct().collect())
-    n_chan = len(chan_dim)
-    # (time_block, n_baseline_pairs) -> contiguous row ranges, via a
-    # driver-side cumsum over the tiny block dimension (the scale axis
-    # is rows WITHIN a block, not block count); distinct pairs, not
-    # row/n_chan, so channel-ragged blocks still size correctly
-    counts = {r["time_block"]: r["n"] for r in
-              rows.selectExpr("time_block", "antenna1", "antenna2")
-                  .distinct().groupBy("time_block").count()
-                  .withColumnRenamed("count", "n").collect()}
-    offsets: dict[int, int] = {}
-    nrow = 0
-    for tb in sorted(counts):
-        offsets[tb] = nrow
-        nrow += counts[tb]
-
-    meta = _main_columns_meta(n_chan)
-    total, sections, header_map = plan_f0_layout(meta, nrow)
-
-    os.makedirs(out_dir, exist_ok=True)
-    # ---- driver: table.dat/info via the shared writer (zero rows of
-    # data involved), then the pre-sized f0 skeleton
-    keywords = {"MS_VERSION": ("float", 2.0)}
-    for name in ms_subtables.subtable_sqls():
-        keywords[name] = ("table", name)
-    _write_main_dat(out_dir, meta, nrow, keywords)
-    f0 = os.path.join(out_dir, "table.f0")
-    with open(f0, "wb") as f:
-        f.truncate(total)
-        _replay_blobs(f, header_map)
-
-    # ---- executors: one task per time block fills its row range
-    offsets_b = spark.sparkContext.broadcast(offsets)
-    chan_b = spark.sparkContext.broadcast(chan_dim)
-    interval = avg_time * int_time_s
-
-    import pandas as pd
-
-    def write_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tb = int(key[0])
-        vals, g = _block_vals(pdf, chan_b.value, interval, scan=tb + 1)
-        _pwrite_block(f0, meta, sections, offsets_b.value[tb], vals)
-        return pd.DataFrame([{"time_block": tb, "rows": g}])
-
-    written = (rows.groupBy("time_block")
-               .applyInPandas(write_block,
-                              schema="time_block int, rows int")
-               .agg({"rows": "sum"}).collect()[0][0])
-    if written != nrow:
-        raise ValueError(f"wrote {written} MAIN rows, planned {nrow}")
-
-    # ---- subtables: tiny dims, driver-side through the shared writer
-    # (SPECTRAL_WINDOW declared at the AVERAGED channelization so it
-    # matches MAIN's DATA axis)
-    _write_subtables(spark, out_dir, avg_freq)
+    (_, nrow), = _write_ms_trees(spark, rows, out_dir, avg_freq,
+                                 avg_time * int_time_s).values()
     return nrow
 
 
 def _block_vals(pdf, chans, interval: float, scan: int):
     """One time block's MAIN cells from its relation rows: the dense
     (pair, chan) grid with zero-weight/flagged fill for absent cells —
-    shared by the single-obs writer and the catalogue fan-out.
+    the body of :func:`_write_ms_trees`' write task.
 
     Vectorized (guide §4.2): pair ids via np.unique on a packed
     (antenna1, antenna2) key, channel ranks via searchsorted, and the
@@ -327,107 +270,119 @@ def write_ms_casa_catalogue(spark: SparkSession, rows: DataFrame,
                             blocks_per_obs: int,
                             interval: float) -> dict[int, str]:
     """MO5 — one casacore-layout MS PER OBSERVATION, all MAIN bulk
-    written in a single distributed job: each (global time block) task
-    resolves its obs, and pwrites its contiguous row range into THAT
-    obs's pre-sized ``table.f0`` (the per-file fixed-offset argument of
-    :func:`write_ms_casa`, fanned out across files exactly like the
-    UVFITS catalogue sink, sinks/uvfits.py::write_uvfits_catalogue).
+    written in a single distributed job of :func:`_write_ms_trees`:
+    global time block ``tb`` belongs to ``obs_{tb // blocks_per_obs}.ms``.
     Scan numbers restart at 1 inside every obs's MS, as a per-obs
     casacore reader expects. Returns {obs_id: path}.
 
     ``rows`` is the mo MS MAIN relation (operators/multiobs.py::
     mo_ms_rows_sql): obs_id + global time_block + the o2 column set."""
+    trees = _write_ms_trees(spark, rows, out_dir, avg_freq, interval,
+                            blocks_per_obs)
+    return {o: path for o, (path, _) in trees.items()}
+
+
+def _write_ms_trees(spark: SparkSession, rows: DataFrame, out_dir: str,
+                    avg_freq: int, interval: float,
+                    blocks_per_obs: int | None = None
+                    ) -> dict[int, tuple[str, int]]:
+    """The one executor-side MS write. ``rows`` is an MS MAIN relation
+    (sinks/ms.py column set) keyed by ``time_block``. With
+    ``blocks_per_obs`` None the whole relation is one tree at
+    ``out_dir`` and block ``tb`` is scan ``tb + 1``; otherwise ``rows``
+    carries ``obs_id``, block ``tb`` belongs to observation
+    ``tb // blocks_per_obs`` and its tree ``out_dir/obs_{o}.ms``, with
+    scans restarting at 1 per observation.
+
+    One probe job sizes every block (distinct baseline pairs, not
+    rows / n_chan, so channel-ragged blocks still size correctly) and
+    lists the channels; the driver plans each tree's contiguous row
+    ranges over the tiny block dimension, writes its table.dat/f0
+    skeleton and subtables, then one task per time block ``pwrite``s
+    its rows into its tree's shared ``table.f0``. The written rows are
+    checked per tree. Returns {obs: (path, MAIN rows)}."""
+    import pandas as pd
+
+    # subtables are obs-invariant: materialize the frames ONCE (not
+    # n_obs x 10 dim jobs), and first, so a bad avg_freq fails before
+    # the fact pipeline runs
+    subtables = _collect_subtables(spark, avg_freq)
+    # the probe and the write each read rows: one fact-pipeline run
     rows = rows.localCheckpoint(eager=True)
-    chan_dim = sorted(r[0] for r in
-                      rows.select("chan").distinct().collect())
-    n_chan = len(chan_dim)
-    blocks = rows.selectExpr("time_block", "obs_id", "antenna1",
-                             "antenna2").distinct() \
-        .groupBy("time_block").agg(
-            F.count("*").alias("n"),
-            F.min("obs_id").alias("o_lo"), F.max("obs_id").alias("o_hi")) \
-        .collect()
-    counts = {r["time_block"]: r["n"] for r in blocks}
-    # block→file routing below recomputes obs as tb // blocks_per_obs —
-    # valid only when the relation's obs_id IS that value (dense 0..N-1
-    # ids, obs-major global blocks). Validate up front instead of
-    # silently pwriting rows into the wrong obs's file.
+    obs_col = F.lit(0) if blocks_per_obs is None else F.col("obs_id")
+    blocks = (rows.groupBy("time_block")
+              .agg(F.count_distinct("antenna1", "antenna2").alias("n"),
+                   F.collect_set("chan").alias("chans"),
+                   F.min(obs_col).alias("o_lo"),
+                   F.max(obs_col).alias("o_hi"))
+              .collect())
+    chan_dim = sorted({c for r in blocks for c in r["chans"]})
+    bpo = blocks_per_obs
+    block0 = {}  # tb -> (obs, its tree's first block)
     for r in blocks:
-        want = r["time_block"] // blocks_per_obs
-        if r["o_lo"] != want or r["o_hi"] != want:
+        tb = r["time_block"]
+        o = 0 if bpo is None else tb // bpo
+        # routing recomputes obs from tb: valid only when the relation's
+        # obs_id IS that value (dense 0..N-1 ids, obs-major global
+        # blocks) — never pwrite rows into the wrong obs's tree
+        if r["o_lo"] != o or r["o_hi"] != o:
             raise ValueError(
-                f"time_block {r['time_block']} carries obs_id "
-                f"{r['o_lo']}..{r['o_hi']}, expected dense obs-major "
-                f"{want} (= time_block // {blocks_per_obs})")
-    meta = _main_columns_meta(n_chan)
-    obs_ids = sorted({tb // blocks_per_obs for tb in counts})
-    offsets: dict[int, int] = {}
-    paths: dict[int, str] = {}
-    sections_by_obs: dict[int, dict] = {}
-    os.makedirs(out_dir, exist_ok=True)
+                f"time_block {tb} carries obs_id {r['o_lo']}..{r['o_hi']},"
+                f" expected dense obs-major {o} (= time_block // {bpo})")
+        block0[tb] = (o, 0 if bpo is None else o * bpo)
+    counts = {r["time_block"]: r["n"] for r in blocks}
+    meta = _main_columns_meta(len(chan_dim))
     keywords = {"MS_VERSION": ("float", 2.0)}
-    for name in ms_subtables.subtable_sqls(avg_freq=avg_freq):
+    for name, *_ in subtables:
         keywords[name] = ("table", name)
-    for o in obs_ids:
-        tbs = sorted(tb for tb in counts if tb // blocks_per_obs == o)
-        nrow_o = 0
-        for tb in tbs:
-            offsets[tb] = nrow_o
-            nrow_o += counts[tb]
-        path = os.path.join(out_dir, f"obs_{o}.ms")
-        paths[o] = path
-        total, sections, header_map = plan_f0_layout(meta, nrow_o)
-        sections_by_obs[o] = sections
-        _write_main_dat(path, meta, nrow_o, keywords)
+    offsets: dict[int, int] = {}
+    trees: dict[int, tuple[str, int]] = {}
+    sections: dict[int, dict] = {}
+    for o in sorted({o for o, _ in block0.values()}):
+        nrow = 0
+        for tb in sorted(tb for tb in counts if block0[tb][0] == o):
+            offsets[tb] = nrow
+            nrow += counts[tb]
+        path = out_dir if bpo is None else os.path.join(out_dir,
+                                                        f"obs_{o}.ms")
+        trees[o] = (path, nrow)
+        total, sections[o], header_map = plan_f0_layout(meta, nrow)
+        os.makedirs(path, exist_ok=True)
+        _write_main_dat(path, meta, nrow, keywords)
         with open(os.path.join(path, "table.f0"), "wb") as f:
             f.truncate(total)
             _replay_blobs(f, header_map)
-
-    # subtables are obs-invariant: materialize the frames ONCE and
-    # stamp them into every obs directory (not n_obs x 10 dim jobs)
-    subtables = _collect_subtables(spark, avg_freq)
-    for o in obs_ids:
         for name, columns, nrow_s, info_type, readme in subtables:
             casa_tables.write_table(
-                os.path.join(paths[o], name), name, columns, nrow_s,
+                os.path.join(path, name), name, columns, nrow_s,
                 info_type=info_type, readme=readme)
 
-    import pandas as pd
-
-    offsets_b = spark.sparkContext.broadcast(offsets)
-    chan_b = spark.sparkContext.broadcast(chan_dim)
-    paths_b = spark.sparkContext.broadcast(paths)
-    sections_b = spark.sparkContext.broadcast(sections_by_obs)
+    ctx = spark.sparkContext
+    offsets_b, chan_b = ctx.broadcast(offsets), ctx.broadcast(chan_dim)
+    block0_b, sections_b = ctx.broadcast(block0), ctx.broadcast(sections)
+    f0s = {o: os.path.join(path, "table.f0")
+           for o, (path, _) in trees.items()}
 
     def write_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tb = int(key[0])
-        obs = tb // blocks_per_obs
-        scan = tb - obs * blocks_per_obs + 1
-        vals, g = _block_vals(pdf, chan_b.value, interval, scan=scan)
-        _pwrite_block(os.path.join(paths_b.value[obs], "table.f0"),
-                      meta, sections_b.value[obs],
+        o, first = block0_b.value[tb]
+        vals, g = _block_vals(pdf, chan_b.value, interval,
+                              scan=tb - first + 1)
+        _pwrite_block(f0s[o], meta, sections_b.value[o],
                       offsets_b.value[tb], vals)
-        return pd.DataFrame([{"time_block": tb, "rows": g}])
+        return pd.DataFrame([{"obs_id": o, "rows": g}])
 
-    # per-obs distributed validation: n_obs summary rows to the driver
-    per_obs = (rows.groupBy("time_block")
-               .applyInPandas(write_block,
-                              schema="time_block int, rows int")
-               .groupBy((F.col("time_block") / blocks_per_obs)
-                        .cast("int").alias("obs_id"))
-               .agg(F.sum("rows").alias("rows"),
-                    F.count("*").alias("blocks"))
-               .collect())
-    planned = {o: sum(counts[tb] for tb in counts
-                      if tb // blocks_per_obs == o) for o in obs_ids}
-    got = {r["obs_id"]: r for r in per_obs}
-    for o in obs_ids:
-        r = got.get(o)
-        if r is None or r["rows"] != planned[o]:
-            raise ValueError(
-                f"obs {o}: wrote {0 if r is None else r['rows']} MAIN "
-                f"rows, planned {planned[o]}")
-    return paths
+    # per-tree validation: one summary row per tree reaches the driver
+    written = {r["obs_id"]: r["rows"] for r in
+               rows.groupBy("time_block")
+               .applyInPandas(write_block, schema="obs_id int, rows int")
+               .groupBy("obs_id").agg(F.sum("rows").alias("rows"))
+               .collect()}
+    for o, (_, nrow) in trees.items():
+        if written.get(o, 0) != nrow:
+            raise ValueError(f"obs {o}: wrote {written.get(o, 0)} MAIN "
+                             f"rows, planned {nrow}")
+    return trees
 
 
 def _write_main_dat(out_dir: str, meta: list[dict], nrow: int,
@@ -459,24 +414,12 @@ _SUB_ARRAY_AXES = {
 }
 
 
-def _write_subtables(spark: SparkSession, out_dir: str,
-                     avg_freq: int = 1) -> None:
-    """Pivot the long-format subtable relations (ms_subtables) into
-    per-row array cells and emit each as a casacore-layout directory."""
-    for name, columns, nrow, info_type, readme in _collect_subtables(
-            spark, avg_freq):
-        casa_tables.write_table(
-            os.path.join(out_dir, name), name, columns, nrow,
-            info_type=info_type, readme=readme)
-
-
-def _collect_subtables(spark: SparkSession, avg_freq: int = 1
-                       ) -> list[tuple]:
+def _collect_subtables(spark: SparkSession, avg_freq: int) -> list[tuple]:
     """Materialize every subtable ONCE as (name, columns, nrow,
-    info_type, readme) — the subtables are obs-invariant, so the
-    catalogue fan-out (write_ms_casa_catalogue) collects here a single
-    time and stamps the same frames into every obs directory instead of
-    re-running the dim jobs per observation."""
+    info_type, readme) — the subtables are obs-invariant, so
+    :func:`_write_ms_trees` collects here a single time and stamps the
+    same frames into every tree instead of re-running the dim jobs per
+    observation."""
     out = []
     for name, sql in ms_subtables.subtable_sqls(avg_freq=avg_freq).items():
         pdf = spark.sql(sql).toPandas()

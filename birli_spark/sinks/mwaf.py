@@ -9,11 +9,10 @@ read back via :func:`read_occupancy`).
 
 This complements the parquet flag sink (sinks/flagsink.py — the
 cluster-native form): the mwaf writer is the interchange format so
-downstream reference-ecosystem tools can consume our flags. Flag volumes
-are 1 bit/cell (≈ 0.4% of vis bytes), so the per-coarse-channel
-driver-side packing loop is not a scale concern; rows stream through
-``toPandas`` per channel in (t, bl) order like the reference's
-sequential cfitsio appends (SURVEY.md §3.4).
+downstream reference-ecosystem tools can consume our flags. One writer,
+:func:`write_mwaf_set_distributed`: each coarse channel's file is packed
+and written by its own executor task (:func:`write_mwaf_set` is the
+same write, returning the paths).
 
 Bit order: FITS ``X`` columns are MSB-first within each byte —
 ``np.packbits(bitorder='big')``.
@@ -91,54 +90,19 @@ def write_mwaf_set(flags: DataFrame, out_dir: str,
                    software: str = "birli_spark",
                    n_chans: int | None = None, nscans: int | None = None,
                    nbl: int | None = None) -> list[str]:
-    """Write one .mwaf FITS per coarse channel. ``flags`` needs columns
-    (t, bl, cc, fc, flag); duplicate cells OR together.
-
-    Grid dimensions come from observation metadata when given (the
-    reference's FlagFileSet carries them in its header context,
-    src/io/mwaf.rs:263-349) so every per-coarse-channel file shares one
-    (nscans, nbl, n_chans) grid even when a channel's trailing timesteps
-    or baselines have no rows. When omitted they are inferred from the
-    GLOBAL index maxima (+1) across all coarse channels — never
-    per-channel, and never from distinct counts, so sparse fine-channel
-    indices can't mispack."""
-    os.makedirs(out_dir, exist_ok=True)
-    from pyspark.storagelevel import StorageLevel
-    # the loop below reads cell once per coarse channel (plus the dims
-    # and cc-list probes); persist so the upstream flag lineage — often
-    # the whole preprocessing pipeline — executes once, not ~cc+2 times
-    cell = (flags.groupBy("t", "bl", "cc", "fc")
-            .agg(F.max("flag").alias("flag"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        if n_chans is None or nscans is None or nbl is None:
-            mx = cell.agg(F.max("fc"), F.max("t"), F.max("bl")).collect()[0]
-            n_chans = n_chans if n_chans is not None else int(mx[0]) + 1
-            nscans = nscans if nscans is not None else int(mx[1]) + 1
-            nbl = nbl if nbl is not None else int(mx[2]) + 1
-        paths = []
-        for cc_row in sorted(
-                r.cc for r in cell.select("cc").distinct().collect()):
-            pdf = (cell.filter(F.col("cc") == cc_row)
-                   .select("t", "bl", "fc", "flag").toPandas())
-            blob = _mwaf_file_bytes(pdf, cc_row, n_chans, nscans, nbl,
-                                    obsid, gps_start, software)
-            path = os.path.join(out_dir,
-                                expand_template(template, cc_row, digits))
-            with open(path, "wb") as f:
-                f.write(blob)
-            paths.append(path)
-        return paths
-    finally:
-        cell.unpersist()
+    """Write one .mwaf FITS per coarse channel through
+    :func:`write_mwaf_set_distributed`; → the file paths in coarse
+    channel order."""
+    manifest = write_mwaf_set_distributed(
+        flags, out_dir, template, digits, obsid, gps_start, software,
+        n_chans, nscans, nbl).collect()
+    return [r.path for r in sorted(manifest, key=lambda r: r.cc)]
 
 
 def _mwaf_file_bytes(pdf: pd.DataFrame, cc: int, n_chans: int, nscans: int,
                      nbl: int, obsid: int, gps_start: float,
                      software: str) -> bytes:
-    """The complete FITS byte image of one coarse channel's flag file —
-    shared by the driver-loop writer and the distributed writer, so the
-    two produce byte-identical files."""
+    """The complete FITS byte image of one coarse channel's flag file."""
     mat = _dense_flags(pdf, n_chans, nscans, nbl)
     packed = np.packbits(mat, axis=1, bitorder="big")
     primary = fc.pad_block(b"".join([
@@ -206,46 +170,62 @@ def write_mwaf_set_distributed(flags: DataFrame, out_dir: str,
                                n_chans: int | None = None,
                                nscans: int | None = None,
                                nbl: int | None = None) -> DataFrame:
-    """Distributed mwaf writer: one **executor-side** task per coarse
-    channel packs and writes its own FITS file (the reference itself
-    writes gpubox files in parallel, src/io/mwaf.rs:399-407) — no
-    per-channel ``toPandas`` round-trips through the driver, so write
+    """The mwaf writer: one **executor-side** task per coarse channel
+    packs and writes its own FITS file (the reference itself writes
+    gpubox files in parallel, src/io/mwaf.rs:399-407), so write
     bandwidth scales with channels × executors against a shared
-    filesystem. Produces byte-identical files to :func:`write_mwaf_set`
-    (same :func:`_mwaf_file_bytes`); returns the manifest DataFrame
-    (cc, path, n_rows, file_md5) — an action on it performs the write.
+    filesystem. ``flags`` needs columns (t, bl, cc, fc, flag); duplicate
+    cells OR together. The write runs INSIDE this call; returns the
+    materialized manifest DataFrame (cc, path, n_rows, file_md5).
 
-    Grid dimensions must be supplied for a fully single-pass plan; when
-    omitted they cost one extra aggregate over the cell table, like the
-    driver-loop writer."""
+    Grid dimensions come from observation metadata when given (the
+    reference's FlagFileSet carries them in its header context,
+    src/io/mwaf.rs:263-349) so every per-coarse-channel file shares one
+    (nscans, nbl, n_chans) grid even when a channel's trailing timesteps
+    or baselines have no rows; the plan is then one job. When omitted
+    they are inferred from the GLOBAL index maxima (+1) across all
+    coarse channels — never per-channel, and never from distinct
+    counts, so sparse fine-channel indices can't mispack — by a probe
+    over the same persisted cell table the write reads, released after
+    the write: the upstream (often a whole archive decode) runs once."""
     import hashlib
+
+    from pyspark.storagelevel import StorageLevel
 
     os.makedirs(out_dir, exist_ok=True)
     cell = (flags.groupBy("t", "bl", "cc", "fc")
             .agg(F.max("flag").alias("flag")))
-    if n_chans is None or nscans is None or nbl is None:
-        mx = cell.agg(F.max("fc"), F.max("t"), F.max("bl")).collect()[0]
-        n_chans = n_chans if n_chans is not None else int(mx[0]) + 1
-        nscans = nscans if nscans is not None else int(mx[1]) + 1
-        nbl = nbl if nbl is not None else int(mx[2]) + 1
-    nch, nsc, nb = n_chans, nscans, nbl
+    probe = n_chans is None or nscans is None or nbl is None
+    if probe:
+        cell = cell.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if probe:
+            mx = cell.agg(F.max("fc"), F.max("t"), F.max("bl")).collect()[0]
+            n_chans = n_chans if n_chans is not None else int(mx[0]) + 1
+            nscans = nscans if nscans is not None else int(mx[1]) + 1
+            nbl = nbl if nbl is not None else int(mx[2]) + 1
+        nch, nsc, nb = n_chans, nscans, nbl
 
-    def write_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        (cc,) = key
-        blob = _mwaf_file_bytes(pdf, int(cc), nch, nsc, nb,
-                                obsid, gps_start, software)
-        path = os.path.join(out_dir, expand_template(template, int(cc),
-                                                     digits))
-        with open(path, "wb") as f:
-            f.write(blob)
-        return pd.DataFrame([{
-            "cc": int(cc), "path": path, "n_rows": nsc * nb,
-            "file_md5": hashlib.md5(blob).hexdigest(),
-        }])
+        def write_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            (cc,) = key
+            blob = _mwaf_file_bytes(pdf, int(cc), nch, nsc, nb,
+                                    obsid, gps_start, software)
+            path = os.path.join(out_dir, expand_template(template, int(cc),
+                                                         digits))
+            with open(path, "wb") as f:
+                f.write(blob)
+            return pd.DataFrame([{
+                "cc": int(cc), "path": path, "n_rows": nsc * nb,
+                "file_md5": hashlib.md5(blob).hexdigest(),
+            }])
 
-    return (cell.groupBy("cc").applyInPandas(
-        write_one, schema="cc int, path string, n_rows long, "
-                          "file_md5 string"))
+        schema = "cc int, path string, n_rows long, file_md5 string"
+        manifest = (cell.groupBy("cc").applyInPandas(write_one, schema)
+                    .collect())
+    finally:
+        if probe:
+            cell.unpersist()
+    return flags.sparkSession.createDataFrame(manifest, schema)
 
 
 def read_mwaf(path: str) -> tuple[dict, np.ndarray, pd.DataFrame]:

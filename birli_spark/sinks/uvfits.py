@@ -1,7 +1,7 @@
 """O1 — UVFITS sink (SURVEY.md §2.7; reference ``write_uvfits``,
 src/io/mod.rs:392-467, and the marlu random-groups writer it drives).
 
-Two layers:
+Three layers:
 
 1. :func:`uvfits_group_rows` — the **relational form** of the
    random-groups content: one row per (averaged time block, baseline,
@@ -14,13 +14,19 @@ Two layers:
    Baseline code: 256*(ant1+1) + (ant2+1) (reference
    src/test_common.rs:195-205); JD from GPS seconds on the fixed GPS
    epoch (JD 2444244.5), leap seconds ignored like the fixtures.
-2. :func:`write_uvfits` / :func:`read_uvfits` — a minimal pure-numpy
-   random-groups FITS writer/reader (no astropy in this environment):
-   2880-byte header blocks of 80-char cards, big-endian f32 groups of
-   PCOUNT=5 params (UU, VV, WW, BASELINE, DATE) + a (chan × pol ×
-   [re, im, wt]) data cube. Single-writer by design — the reference's
-   UVFITS append is sequential too (SURVEY.md §3.4); rows stream through
-   ``toLocalIterator`` in (t, bl) order so driver memory stays O(row).
+2. The physical file: a minimal pure-numpy random-groups FITS layout
+   (no astropy in this environment) — 2880-byte header blocks of
+   80-char cards, big-endian f32 groups of PCOUNT=5 params (UU, VV, WW,
+   BASELINE, DATE) + a (chan × pol × [re, im, wt]) data cube. Records
+   are fixed size, so :func:`_write_group_files` writes them
+   executor-parallel: each Spark task ``pwrite``s its groups at their
+   computed offsets. :func:`write_uvfits_distributed` (one file, the
+   CLI's ``-u``) and :func:`write_uvfits_catalogue` (one file per
+   observation, MO4) are its two routings.
+3. :func:`write_uvfits` / :func:`read_uvfits` — the sequential
+   reference writer (the reference's own UVFITS append is sequential,
+   SURVEY.md §3.4) that tests compare the parallel writer's bytes
+   against, and the reader every read-back gate uses.
 """
 
 from __future__ import annotations
@@ -216,18 +222,6 @@ def _pack_group_records(pdf, starts, ends, chan_arr: np.ndarray,
     return rec
 
 
-def _pwrite_contiguous(fd: int, rec: np.ndarray, gidx: np.ndarray,
-                       header_len: int, rec_size: int) -> None:
-    """pwrite the packed records, coalescing gidx-contiguous runs into
-    single syscalls (sorted partitions make long contiguous stretches)."""
-    cut = np.flatnonzero(np.diff(gidx) != 1) + 1
-    seg_s = np.concatenate(([0], cut))
-    seg_e = np.concatenate((cut, [len(gidx)]))
-    for a, b in zip(seg_s, seg_e):
-        os.pwrite(fd, rec[a:b].tobytes(),
-                  header_len + int(gidx[a]) * rec_size)
-
-
 def write_uvfits_distributed(rows: DataFrame, path: str,
                              n_chan: int | None = None,
                              object_name: str = "synthetic",
@@ -236,88 +230,161 @@ def write_uvfits_distributed(rows: DataFrame, path: str,
     SIZE, so every (t_out, bl) group's byte offset is computable from
     its dense grid index and each task ``pwrite``s its own disjoint
     slice of the shared pre-sized file — write bandwidth scales with
-    executors (the mwaf sink's distributed pattern, sinks/mwaf.py:200,
-    applied to the single-file format). Requires a COMPLETE
-    (t_out × bl) group grid (the averaged pipeline output is one);
-    validated against GCOUNT. Byte-identical to :func:`write_uvfits`
-    (tests/test_sources_sinks.py).
+    executors. Requires a COMPLETE (t_out × bl) group grid (the averaged
+    pipeline output is one); validated against GCOUNT. Byte-identical to
+    :func:`write_uvfits` (tests/test_sources_sinks.py).
 
-    ``rows`` is :func:`uvfits_group_rows` output. The (t_out, bl,
-    chan_out) grid comes from ONE aggregate job over ``rows``; ``n_chan``
-    defaults to its distinct chan_out count, and a caller that knows the
-    expected count passes it to have the grid checked against it.
+    ``rows`` is :func:`uvfits_group_rows` output. ``n_chan`` defaults to
+    the probed distinct chan_out count; a caller that knows the expected
+    count passes it to have the grid checked against it. The write runs
+    INSIDE this call (:func:`_write_group_files`); the returned summary
+    DataFrame (one row per t_out: n_groups + gidx bounds) is already
+    materialized — further actions on it never re-run the write tasks."""
+    dims = _probe_grid(rows)
+    t_dim = dims["t_out"]
+    summary = _write_group_files(
+        rows, dims, n_chan, [(path, object_name, jd_zero)],
+        t_file=np.zeros(len(t_dim), dtype=np.int64),
+        t_rank=np.arange(len(t_dim)))
+    return rows.sparkSession.createDataFrame(
+        summary, schema="t_out int, n_groups long, n_distinct long, "
+                        "g_lo long, g_hi long")
 
-    The write action runs INSIDE this call and the written groups are validated against the
-    declared GCOUNT (a missing (t_out, bl) group would otherwise ship
-    as a silent all-zero record) — DISTRIBUTEDLY: a per-t_out
-    aggregation proves every t_out wrote exactly its contiguous
-    [t_rank*n_bl, t_rank*n_bl + n_bl) gidx range, so only the t_out-dim
-    summary ever reaches the driver (never the t_out x bl manifest).
-    The returned summary DataFrame (one row per t_out: n_groups +
-    gidx bounds) is already materialized — further actions on it are
-    free and never re-run the write tasks."""
-    import os
 
+def write_uvfits_catalogue(rows: DataFrame, out_dir: str, n_chan: int,
+                           gps_start: float, stride_s: float,
+                           blocks_per_obs: int) -> dict[int, str]:
+    """MO4 — one random-groups UVFITS file PER OBSERVATION, all written
+    by one distributed job of :func:`_write_group_files`: global block
+    ``t_out`` lands in file ``obs_{t_out // blocks_per_obs}.uvfits`` at
+    rank ``t_out % blocks_per_obs``. Each file's DATE PZERO anchors at
+    its own obs start (:func:`obs_jd_zero`), keeping per-timestep f32
+    resolution for every obs in the catalogue. Returns {obs_id: path}.
+
+    ``rows`` is the mo_uvfits_rows relation (operators/multiobs.py):
+    obs_id, global t_out, bl/chan_out grid, group params, pol values."""
+    # the grid probe and the write each read rows: materialize it once
+    rows = rows.localCheckpoint(eager=True)
+    dims = _probe_grid(rows, "obs_id")
+    obs_dim, t_dim = dims["obs_id"], dims["t_out"]
+    # routing recovers obs as t_out // blocks_per_obs — valid only for
+    # dense 0..N-1 obs ids with obs-major dense global block indices;
+    # fail here rather than pwrite into the wrong file
+    if len(t_dim) != len(obs_dim) * blocks_per_obs:
+        raise ValueError("ragged catalogue grid: "
+                         f"{len(t_dim)} blocks != {len(obs_dim)} obs"
+                         f" x {blocks_per_obs}")
+    if obs_dim != list(range(len(obs_dim))):
+        raise ValueError(f"obs ids must be dense 0..N-1, got {obs_dim[:8]}…")
+    if t_dim != list(range(len(t_dim))):
+        raise ValueError("t_out must be obs-major dense 0..N*blocks-1, "
+                         f"got {t_dim[:8]}…")
+    os.makedirs(out_dir, exist_ok=True)
+    paths = {o: os.path.join(out_dir, f"obs_{o}.uvfits") for o in obs_dim}
+    t_arr = np.asarray(t_dim)
+    _write_group_files(
+        rows, dims, n_chan,
+        [(paths[o], f"obs_{o}", obs_jd_zero(gps_start + o * stride_s))
+         for o in obs_dim],
+        t_file=t_arr // blocks_per_obs, t_rank=t_arr % blocks_per_obs)
+    return paths
+
+
+def _probe_grid(rows: DataFrame, *extra: str) -> dict[str, list]:
+    """The sorted distinct values of the (t_out, bl, chan_out) grid axes
+    (plus ``extra`` columns), from ONE aggregate job over ``rows``."""
+    cols = ("t_out", "bl", "chan_out", *extra)
+    dims = rows.agg(*[F.collect_set(c).alias(c) for c in cols]).first()
+    return {c: sorted(dims[c]) for c in cols}
+
+
+def _write_group_files(rows: DataFrame, dims: dict[str, list],
+                       n_chan: int | None,
+                       files: list[tuple[str, str, float]],
+                       t_file: np.ndarray, t_rank: np.ndarray) -> list:
+    """The one executor-side random-groups write: pre-size every file
+    in ``files`` ((path, OBJECT, DATE PZERO) each) with its header, then
+    one job ``pwrite``s every (t_out, bl) group record into its file.
+    ``dims`` is the :func:`_probe_grid` result; the i-th value of
+    ``dims["t_out"]`` routes to file ``t_file[i]`` at block rank
+    ``t_rank[i]``, so its groups fill the contiguous gidx range
+    ``[t_rank[i]*n_bl, t_rank[i]*n_bl + n_bl)`` of that file.
+
+    The written groups are validated DISTRIBUTEDLY (a missing group
+    would otherwise ship as a silent all-zero record): a per-t_out
+    aggregation proves every t_out wrote exactly its contiguous range,
+    so only the t_out-dim summary ever reaches the driver (never the
+    t_out x bl manifest). Returns those summary rows."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    dims = rows.agg(*[F.collect_set(c).alias(c)
-                      for c in ("t_out", "bl", "chan_out")]).first()
-    t_dim, bl_dim, chan_dim = (
-        sorted(dims[c]) for c in ("t_out", "bl", "chan_out"))
+    t_dim, bl_dim, chan_dim = dims["t_out"], dims["bl"], dims["chan_out"]
     if n_chan is None:
         n_chan = len(chan_dim)
     elif len(chan_dim) != n_chan:
         raise ValueError(
             f"{len(chan_dim)} distinct chan_out vs n_chan={n_chan}")
-    n_groups = len(t_dim) * len(bl_dim)
-    rec_floats = 5 + n_chan * 4 * 3
-    rec_size = rec_floats * 4
-    header = uvfits_header_bytes(n_chan, n_groups, object_name, jd_zero)
-    total = len(header) + n_groups * rec_size
-    if total % _BLOCK:
-        total += _BLOCK - total % _BLOCK
-    with open(path, "wb") as f:
-        f.write(header)
-        f.truncate(total)
+    n_bl = len(bl_dim)
+    rec_size = (5 + n_chan * 4 * 3) * 4
+    file_groups = np.bincount(t_file, minlength=len(files)) * n_bl
+    header_len = 0
+    for (path, object_name, jd_zero), n_groups in zip(files, file_groups):
+        # one card set for every file: the header length is shared
+        header = uvfits_header_bytes(n_chan, int(n_groups), object_name,
+                                     jd_zero)
+        header_len = len(header)
+        total = header_len + int(n_groups) * rec_size
+        if total % _BLOCK:
+            total += _BLOCK - total % _BLOCK
+        with open(path, "wb") as f:
+            f.write(header)
+            f.truncate(total)
     spark = rows.sparkSession
     t_arr_b = spark.sparkContext.broadcast(np.asarray(t_dim))
     bl_arr_b = spark.sparkContext.broadcast(np.asarray(bl_dim))
     chan_arr_b = spark.sparkContext.broadcast(np.asarray(chan_dim))
-    n_bl = len(bl_dim)
-    header_len = len(header)
-    t_rank = {v: i for i, v in enumerate(t_dim)}
+    paths = [f[0] for f in files]
+    jd_zeros = np.asarray([f[2] for f in files])
 
     val_cols = [f"{pol}_{c}" for pol in UVFITS_POLS for c in ("re", "im")]
 
     def write_partition(batches):
-        """One task = one file handle + a stream of sorted Arrow
-        batches holding whole (t_out, bl) group runs (hash-partitioned
-        on the keys, sorted within the partition), buffered across
-        batch boundaries so a group split over two batches writes
-        once. Record packing is one vectorized numpy pass per batch
-        (:func:`_pack_group_records`); pwrites coalesce gidx-contiguous
-        stretches into single syscalls.
+        """One task = a stream of sorted Arrow batches holding whole
+        (t_out, bl) group runs (hash-partitioned on the keys, sorted
+        within the partition), buffered across batch boundaries so a
+        group split over two batches writes once, and one fd per file
+        it touches. Record packing is one vectorized numpy pass per
+        batch (:func:`_pack_group_records`); pwrites coalesce stretches
+        contiguous in (file, gidx) into single syscalls.
 
-        Semantics identical to the old per-group path: absent output
-        channels become zero-weight cells; PRESENT cells keep their
-        values verbatim — including NaN data (NaN-solution channels of
-        --apply-di-cal), which the reference writes as NaN with a
-        negated weight, like the MS sink."""
-        fd = os.open(path, os.O_WRONLY)
+        Absent output channels become zero-weight cells; PRESENT cells
+        keep their values verbatim — including NaN data (NaN-solution
+        channels of --apply-di-cal), which the reference writes as NaN
+        with a negated weight, like the MS sink."""
+        fds: dict[int, int] = {}
         t_arr, bl_arr = t_arr_b.value, bl_arr_b.value
         chan_arr = chan_arr_b.value
         pend: pd.DataFrame | None = None
         try:
             def flush_runs(pdf: pd.DataFrame, starts: np.ndarray,
                            ends: np.ndarray) -> pd.DataFrame:
-                rec = _pack_group_records(pdf, starts, ends, chan_arr,
-                                          n_chan, jd_zero)
                 t_vals = pdf["t_out"].to_numpy()[starts]
                 bl_vals = pdf["bl"].to_numpy()[starts]
-                gidx = (np.searchsorted(t_arr, t_vals) * n_bl
+                t_i = np.searchsorted(t_arr, t_vals)
+                fi = t_file[t_i]
+                gidx = (t_rank[t_i] * n_bl
                         + np.searchsorted(bl_arr, bl_vals))
-                _pwrite_contiguous(fd, rec, gidx, header_len, rec_size)
+                rec = _pack_group_records(pdf, starts, ends, chan_arr,
+                                          n_chan, jd_zeros[fi])
+                cut = np.flatnonzero((np.diff(fi) != 0)
+                                     | (np.diff(gidx) != 1)) + 1
+                seg_s = np.concatenate(([0], cut))
+                seg_e = np.concatenate((cut, [len(gidx)]))
+                for a, b in zip(seg_s, seg_e):
+                    f = int(fi[a])
+                    if f not in fds:
+                        fds[f] = os.open(paths[f], os.O_WRONLY)
+                    os.pwrite(fds[f], rec[a:b].tobytes(),
+                              header_len + int(gidx[a]) * rec_size)
                 return pd.DataFrame({"gidx": gidx.astype(np.int64),
                                      "t_out": t_vals, "bl": bl_vals})
 
@@ -340,9 +407,10 @@ def write_uvfits_distributed(rows: DataFrame, path: str,
                 yield flush_runs(pend,
                                  np.array([0]), np.array([len(pend)]))
         finally:
-            os.close(fd)
+            for fd in fds.values():
+                os.close(fd)
 
-    n_part = max(rows.sparkSession.sparkContext.defaultParallelism,
+    n_part = max(spark.sparkContext.defaultParallelism,
                  rows.rdd.getNumPartitions())
     ordered = (rows.select("t_out", "bl", "chan_out", "u", "v", "w",
                            "bl_code", "jd", "weight", *val_cols)
@@ -361,14 +429,15 @@ def write_uvfits_distributed(rows: DataFrame, path: str,
              F.max("gidx").alias("g_hi"))
         .collect())
     written = sum(r["n_groups"] for r in summary)
-    if written != n_groups:
+    if written != len(t_dim) * n_bl:
         raise ValueError(
             f"uvfits grid incomplete: wrote {written} groups, "
-            f"declared GCOUNT {n_groups} ({len(t_dim)} t_out x "
+            f"declared GCOUNT {len(t_dim) * n_bl} ({len(t_dim)} t_out x "
             f"{n_bl} bl) — never hand external FITS readers a file "
             "whose declared GCOUNT includes never-written groups")
+    t_index = {v: i for i, v in enumerate(t_dim)}
     for r in summary:
-        lo = t_rank[r["t_out"]] * n_bl
+        lo = int(t_rank[t_index[r["t_out"]]]) * n_bl
         if (r["n_groups"] != n_bl or r["n_distinct"] != n_bl
                 or r["g_lo"] != lo or r["g_hi"] != lo + n_bl - 1):
             raise ValueError(
@@ -376,166 +445,7 @@ def write_uvfits_distributed(rows: DataFrame, path: str,
                 f"({r['n_distinct']} distinct gidx, range "
                 f"[{r['g_lo']}, {r['g_hi']}]), expected the contiguous "
                 f"{n_bl}-group range [{lo}, {lo + n_bl - 1}]")
-    return spark.createDataFrame(
-        summary, schema="t_out int, n_groups long, n_distinct long, "
-                        "g_lo long, g_hi long")
-
-
-def write_uvfits_catalogue(rows: DataFrame, out_dir: str, n_chan: int,
-                           gps_start: float, stride_s: float,
-                           blocks_per_obs: int) -> dict[int, str]:
-    """MO4 — one random-groups UVFITS file PER OBSERVATION, written in
-    one distributed job: the catalogue's (obs, block, bl) group grid is
-    uniform, so every group's byte offset inside ITS OBS'S file is
-    computable (the :func:`write_uvfits_distributed` fixed-record
-    argument, fanned out across files). Each file's DATE PZERO anchors
-    at its own obs start (:func:`obs_jd_zero`), keeping per-timestep f32
-    resolution for every obs in the catalogue. Returns
-    {obs_id: path}; the write happens on the executors (one task per
-    (t_out, bl) group, ~n_obs x blocks x baselines tasks).
-
-    ``rows`` is the mo_uvfits_rows relation (operators/multiobs.py):
-    obs_id, global t_out, bl/chan_out grid, group params, pol values."""
-    import os
-
-    import pandas as pd
-
-    rows = rows.localCheckpoint(eager=True)
-    obs_dim = sorted(r[0] for r in rows.select("obs_id").distinct().collect())
-    t_dim = sorted(r[0] for r in rows.select("t_out").distinct().collect())
-    bl_dim = sorted(r[0] for r in rows.select("bl").distinct().collect())
-    chan_dim = sorted(
-        r[0] for r in rows.select("chan_out").distinct().collect())
-    if len(chan_dim) != n_chan:
-        raise ValueError(
-            f"{len(chan_dim)} distinct chan_out vs n_chan={n_chan}")
-    if len(t_dim) != len(obs_dim) * blocks_per_obs:
-        raise ValueError("ragged catalogue grid: "
-                         f"{len(t_dim)} blocks != {len(obs_dim)} obs"
-                         f" x {blocks_per_obs}")
-    # write_group recovers obs as t_out // blocks_per_obs — valid only
-    # for dense 0..N-1 obs ids with obs-major dense global block indices.
-    # Validate up front rather than KeyError (or wrong-file pwrite) later.
-    if obs_dim != list(range(len(obs_dim))):
-        raise ValueError(f"obs ids must be dense 0..N-1, got {obs_dim[:8]}…")
-    if t_dim != list(range(len(t_dim))):
-        raise ValueError("t_out must be obs-major dense 0..N*blocks-1, "
-                         f"got {t_dim[:8]}…")
-    n_bl = len(bl_dim)
-    rec_floats = 5 + n_chan * 4 * 3
-    rec_size = rec_floats * 4
-    n_groups = blocks_per_obs * n_bl
-    os.makedirs(out_dir, exist_ok=True)
-    paths: dict[int, str] = {}
-    jd_zeros: dict[int, float] = {}
-    for o in obs_dim:
-        jd_zeros[o] = obs_jd_zero(gps_start + o * stride_s)
-        paths[o] = os.path.join(out_dir, f"obs_{o}.uvfits")
-        header = uvfits_header_bytes(n_chan, n_groups,
-                                     object_name=f"obs_{o}",
-                                     jd_zero=jd_zeros[o])
-        total = len(header) + n_groups * rec_size
-        if total % _BLOCK:
-            total += _BLOCK - total % _BLOCK
-        with open(paths[o], "wb") as f:
-            f.write(header)
-            f.truncate(total)
-        header_len = len(header)  # identical across obs (same card set)
-
-    spark = rows.sparkSession
-    bl_arr_b = spark.sparkContext.broadcast(np.asarray(bl_dim))
-    chan_arr_b = spark.sparkContext.broadcast(np.asarray(chan_dim))
-    paths_b = spark.sparkContext.broadcast(paths)
-    # obs ids are validated dense 0..N-1 above: ship PZEROs as an array
-    jz_arr_b = spark.sparkContext.broadcast(
-        np.asarray([jd_zeros[o] for o in obs_dim]))
-
-    val_cols = [f"{pol}_{c}" for pol in UVFITS_POLS for c in ("re", "im")]
-
-    def write_partition(batches):
-        """Partition-streaming writer (the single-file writer's round-7
-        shape): one task holds ONE open fd per obs it touches and
-        streams sorted (t_out, bl) group runs, buffering the last run
-        across Arrow batch boundaries. Record packing is one vectorized
-        numpy pass per batch (:func:`_pack_group_records`); pwrites
-        coalesce stretches contiguous in (obs, gidx). Absent cells ->
-        zero-weight fill; present NaN stays NaN (see the single-obs
-        writer)."""
-        fds: dict[int, int] = {}
-        bl_arr, chan_arr = bl_arr_b.value, chan_arr_b.value
-        jz_arr = jz_arr_b.value
-        pend: pd.DataFrame | None = None
-        try:
-            def flush_runs(pdf: pd.DataFrame, starts: np.ndarray,
-                           ends: np.ndarray) -> pd.DataFrame:
-                t_vals = pdf["t_out"].to_numpy()[starts].astype(np.int64)
-                bl_vals = pdf["bl"].to_numpy()[starts]
-                obs = t_vals // blocks_per_obs
-                gidx = ((t_vals - obs * blocks_per_obs) * n_bl
-                        + np.searchsorted(bl_arr, bl_vals))
-                rec = _pack_group_records(pdf, starts, ends, chan_arr,
-                                          n_chan, jz_arr[obs])
-                cut = np.flatnonzero((np.diff(obs) != 0)
-                                     | (np.diff(gidx) != 1)) + 1
-                seg_s = np.concatenate(([0], cut))
-                seg_e = np.concatenate((cut, [len(gidx)]))
-                for a, b in zip(seg_s, seg_e):
-                    o = int(obs[a])
-                    if o not in fds:
-                        fds[o] = os.open(paths_b.value[o], os.O_WRONLY)
-                    os.pwrite(fds[o], rec[a:b].tobytes(),
-                              header_len + int(gidx[a]) * rec_size)
-                return pd.DataFrame({"obs_id": obs.astype(np.int32),
-                                     "gidx": gidx.astype(np.int64)})
-
-            for pdf in batches:
-                if pend is not None:
-                    pdf = pd.concat([pend, pdf], ignore_index=True)
-                    pend = None
-                if not len(pdf):
-                    continue
-                key = (pdf["t_out"].to_numpy().astype(np.int64) << 32 |
-                       pdf["bl"].to_numpy().astype(np.int64))
-                bounds = np.flatnonzero(np.diff(key)) + 1
-                starts = np.concatenate(([0], bounds))
-                ends = np.concatenate((bounds, [len(pdf)]))
-                pend = pdf.iloc[starts[-1]:].copy()
-                if len(starts) > 1:
-                    yield flush_runs(pdf, starts[:-1], ends[:-1])
-            if pend is not None and len(pend):
-                yield flush_runs(pend,
-                                 np.array([0]), np.array([len(pend)]))
-        finally:
-            for fd in fds.values():
-                os.close(fd)
-
-    n_part = max(spark.sparkContext.defaultParallelism,
-                 rows.rdd.getNumPartitions())
-    ordered = (rows.select("t_out", "bl", "chan_out", "u", "v", "w",
-                           "bl_code", "jd", "weight", *val_cols)
-               .repartition(n_part, "t_out", "bl")
-               .sortWithinPartitions("t_out", "bl", "chan_out"))
-
-    # per-obs distributed validation: n_obs summary rows to the driver,
-    # never the obs x blocks x bl manifest
-    per_obs = (ordered.mapInPandas(
-                   write_partition, schema="obs_id int, gidx long")
-               .groupBy("obs_id")
-               .agg(F.count("*").alias("n"),
-                    F.count_distinct("gidx").alias("n_distinct"),
-                    F.min("gidx").alias("g_lo"),
-                    F.max("gidx").alias("g_hi"))
-               .collect())
-    got = {r["obs_id"]: r for r in per_obs}
-    for o in obs_dim:
-        r = got.get(o)
-        if (r is None or r["n"] != n_groups or r["n_distinct"] != n_groups
-                or r["g_lo"] != 0 or r["g_hi"] != n_groups - 1):
-            raise ValueError(
-                f"obs {o}: wrote {0 if r is None else r['n']} groups "
-                f"({0 if r is None else r['n_distinct']} distinct), "
-                f"planned the full [0, {n_groups - 1}] gidx range")
-    return paths
+    return summary
 
 
 def obs_jd_zero(gps_start: float) -> float:
@@ -563,15 +473,16 @@ def uvfits_file_rows(spark, rows: DataFrame, path: str,
     The read-back is driver-side over the AVERAGED output (groups x
     chans, orders of magnitude below the fact scan); the write itself
     is executor-parallel."""
-    # materialize the averaged relation ONCE: the dim probe below plus
-    # write_uvfits_distributed's own grid probe and the write action
-    # would otherwise each re-run the whole upstream pipeline (3
-    # executions of the fact plan for one file)
+    # materialize the averaged relation ONCE: the writer's grid probe
+    # and its write action would otherwise each re-run the whole
+    # upstream pipeline
     rows = rows.localCheckpoint(eager=True)
-    n_chan = rows.select("chan_out").distinct().count()
-    write_uvfits_distributed(rows, path, n_chan, jd_zero=jd_zero).count()
+    write_uvfits_distributed(rows, path, jd_zero=jd_zero)
+    # n_chan is the written header's NAXIS4 (the data cube's axis 1)
+    _, params, data = read_uvfits(path)
     return spark.createDataFrame(
-        file_cells_frame(path, n_chan).reset_index(drop=True))
+        cells_frame_from_arrays(params, data, data.shape[1])
+        .reset_index(drop=True))
 
 
 def cells_frame_from_arrays(params: np.ndarray, data: np.ndarray,

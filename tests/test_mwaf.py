@@ -260,3 +260,22 @@ def test_dense_flags_duplicate_cells_or_together():
     mat = _dense_flags(pdf, n_chans=4, nscans=1, nbl=2)
     assert mat[1, 2]          # 0*nbl+1 row, fc 2: True survives
     assert mat.sum() == 1
+
+
+def test_writer_without_dims_decodes_once(spark, tmp_path, decoded_files):
+    """Without grid dims the writer probes the grid and writes from ONE
+    materialization of the flag cells: over an archive scan, each
+    gpubox file decodes once."""
+    import glob
+
+    from test_cli_flowchart import legacy_obs
+
+    from birli_spark import real_input
+
+    obs = legacy_obs(str(tmp_path / "obs"))
+    vis = real_input.ArchiveObservation(spark, obs["metafits"],
+                                        obs["glob"]).scan()
+    manifest = mwaf.write_mwaf_set_distributed(
+        vis.select("t", "bl", "cc", "fc", "flag"), str(tmp_path / "mwaf"))
+    assert manifest.count() > 0
+    assert decoded_files.value / len(glob.glob(obs["glob"])) == 1.0
