@@ -13,6 +13,7 @@ pattern) so Spark and DuckDB hash identically.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -574,6 +575,23 @@ def _q_antenna_dim(spark, sf_dir):
     return syn.load_dim(spark, "antennas")
 
 
+@functools.cache
+def _out_dir() -> str:
+    """This process's directory for the files the writing queries
+    produce (the flag and mwaf round trips, the UVFITS and MS writers):
+    one ``tempfile.mkdtemp`` per process, removed at exit, so two
+    sessions on one host never write over each other's outputs.
+    Generated INPUTS (gpubox sets, calsols, the partitioned layout)
+    keep their shared caches."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix="birli_spark_out_")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 _GPUBOX_SHAPE = dict(num_cc=3, num_ants=4, num_fine=8, num_timesteps=8)
 
 
@@ -618,10 +636,9 @@ def _q_real_format_e2e(spark, sf_dir):
     -> average -> UVFITS rows + the PHYSICAL executor-parallel write
     (birli_spark/pipeline_e2e.py). One hash-gated plan end to end."""
     import os
-    import tempfile
 
     from birli_spark import pipeline_e2e
-    out = os.path.join(tempfile.gettempdir(), "birli_e2e_bench.uvfits")
+    out = os.path.join(_out_dir(), "birli_e2e_bench.uvfits")
     return pipeline_e2e.e2e_rows(spark, write_path=out)
 
 
@@ -651,18 +668,18 @@ def _q_aocal_scan(spark, sf_dir):
 
 
 def _q_flag_roundtrip(spark, sf_dir):
-    import tempfile
+    import os
     from birli_spark.sinks import flagsink
-    out = f"{tempfile.gettempdir()}/birli_spark_flagsink"
+    out = os.path.join(_out_dir(), "flagsink")
     vis = pipeline.rule_flags(spark, syn.load_vis(spark, sf_dir))
     flagsink.write_flags(vis, out, obsid=1254670392, gps_start=syn.GPS_START)
     return flagsink.read_flags(spark, out)
 
 
 def _q_mwaf_roundtrip(spark, sf_dir):
-    import tempfile
+    import os
     from birli_spark.sinks import mwaf
-    out = f"{tempfile.gettempdir()}/birli_spark_mwaf"
+    out = os.path.join(_out_dir(), "mwaf")
     vis = pipeline.rule_flags(spark, syn.load_vis(spark, sf_dir))
     mwaf.write_mwaf_set(vis, out, obsid=1254670392, gps_start=syn.GPS_START)
     return mwaf.read_mwaf_set(spark, out)
@@ -671,9 +688,9 @@ def _q_mwaf_roundtrip(spark, sf_dir):
 def _q_mwaf_datasource(spark, sf_dir):
     """Same read-back through the registered Python DataSource
     (spark.read.format('mwaf')) — shares o3b's oracle."""
-    import tempfile
+    import os
     from birli_spark.sinks import mwaf
-    out = f"{tempfile.gettempdir()}/birli_spark_mwaf"
+    out = os.path.join(_out_dir(), "mwaf")
     vis = pipeline.rule_flags(spark, syn.load_vis(spark, sf_dir))
     mwaf.write_mwaf_set(vis, out, obsid=1254670392, gps_start=syn.GPS_START)
     mwaf.register_mwaf_source(spark)
@@ -699,15 +716,13 @@ def _q_uvfits_file(spark, sf_dir):
     double as the write-stage bench mirroring the reference's uvfits
     write criterion benchmark (doc/benchmark_results.md)."""
     import os
-    import tempfile
     from birli_spark.sinks import uvfits
     baked = pipeline.preprocess_baked(spark, sf_dir)
     rows = uvfits.uvfits_group_rows(
         baked, pipeline.AVG_TIME, pipeline.AVG_FREQ,
         syn.GPS_START, syn.INT_TIME_S)
     path = os.path.join(
-        tempfile.gettempdir(),
-        f"birli_spark_o1b_{os.path.basename(sf_dir.rstrip('/'))}.uvfits")
+        _out_dir(), f"o1b_{os.path.basename(sf_dir.rstrip('/'))}.uvfits")
     return uvfits.uvfits_file_rows(
         spark, rows, path, jd_zero=uvfits.obs_jd_zero(syn.GPS_START))
 
@@ -721,14 +736,12 @@ def _q_uvfits_scan(spark, sf_dir):
     arithmetic in reverse. Shares o1b's oracle verbatim (the scan's row
     convention IS the byte-gate read-back)."""
     import os
-    import tempfile
 
     from birli_spark.sinks import uvfits
     from birli_spark.sources.uvfits_source import register_uvfits_source
 
     path = os.path.join(
-        tempfile.gettempdir(),
-        f"birli_spark_s1j_{os.path.basename(sf_dir.rstrip('/'))}.uvfits")
+        _out_dir(), f"s1j_{os.path.basename(sf_dir.rstrip('/'))}.uvfits")
     # the s1g '.complete' pattern: the writer pre-sizes the file BEFORE
     # the executor job, so a killed run leaves a zeros-only file — gate
     # the cache on a marker written after the job finishes. The marker
@@ -765,12 +778,10 @@ def _q_ms_file(spark, sf_dir):
     parse the bytes back with the independent reader, and hash-gate
     every stored value against the f32-demoted oracle."""
     import os
-    import tempfile
     from birli_spark.sinks import ms_file
     baked = pipeline.preprocess_baked(spark, sf_dir)
     path = os.path.join(
-        tempfile.gettempdir(),
-        f"birli_spark_o2c_{os.path.basename(sf_dir.rstrip('/'))}.ms")
+        _out_dir(), f"o2c_{os.path.basename(sf_dir.rstrip('/'))}.ms")
     return ms_file.ms_file_rows(
         spark, baked, path, pipeline.AVG_TIME, pipeline.AVG_FREQ,
         syn.GPS_START, syn.INT_TIME_S)
@@ -785,14 +796,12 @@ def _q_casams_scan(spark, sf_dir):
     reverse, with PHYSICAL column pruning (untouched columns' regions
     are never read). Shares o2c's oracle verbatim."""
     import os
-    import tempfile
 
     from birli_spark.sinks import ms_file
     from birli_spark.sources.casams_source import register_casams_source
 
     path = os.path.join(
-        tempfile.gettempdir(),
-        f"birli_spark_s1k_{os.path.basename(sf_dir.rstrip('/'))}.ms")
+        _out_dir(), f"s1k_{os.path.basename(sf_dir.rstrip('/'))}.ms")
     # marker AFTER the executor bulk write (the writer pre-sizes
     # table.f0 first — a killed run must not poison the cache); embeds
     # the code fingerprint like s1j (stale-checkout invalidation)
@@ -842,11 +851,9 @@ def _q_multi_obs_uvfits(spark, sf_dir):
     OBSERVATION, written executor-parallel in one job (per-obs
     obs-anchored DATE PZERO), bytes read back and hash-gated."""
     import os
-    import tempfile
     from birli_spark.operators import multiobs
     out = os.path.join(
-        tempfile.gettempdir(),
-        f"birli_spark_mo4_{os.path.basename(sf_dir.rstrip('/'))}")
+        _out_dir(), f"mo4_{os.path.basename(sf_dir.rstrip('/'))}")
     return multiobs.mo_uvfits_gate_rows(spark, sf_dir, out)
 
 
@@ -856,11 +863,9 @@ def _q_multi_obs_ms(spark, sf_dir):
     written in a single distributed job; trees parsed back and every
     stored value hash-gated."""
     import os
-    import tempfile
     from birli_spark.operators import multiobs
     out = os.path.join(
-        tempfile.gettempdir(),
-        f"birli_spark_mo5_{os.path.basename(sf_dir.rstrip('/'))}")
+        _out_dir(), f"mo5_{os.path.basename(sf_dir.rstrip('/'))}")
     return multiobs.mo_ms_gate_rows(spark, sf_dir, out)
 
 

@@ -813,6 +813,19 @@ def stage_correct(spark: SparkSession, ctx: Context, obs: Observation,
 FANOUT_BIG_ROWS = 4_000_000
 
 
+def fanout(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
+    """``vis`` materialized once for several consumers
+    (:func:`pipeline.fanout_materialize`), so its upstream — archive
+    decode included — runs once per action, in the spelling the
+    selection's metadata size calls for (reliable above
+    :data:`FANOUT_BIG_ROWS` cells, local otherwise or when unsized)."""
+    from birli_spark import pipeline
+
+    dims = obs.selected_dims(ctx)
+    big = dims is not None and math.prod(dims) > FANOUT_BIG_ROWS
+    return pipeline.fanout_materialize(vis, big=big)
+
+
 def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
     """F9: SSINS, the iterative/generic strategy, the mwa-default
     orchestration (the reference's default, FindStrategyFileMWA,
@@ -823,17 +836,11 @@ def stage_rfi(ctx: Context, obs: Observation, vis: DataFrame) -> DataFrame:
     from birli_spark.operators import rfi
     eta = ctx.sir_eta if ctx.sir_eta is not None else 0.2
     if ctx.ssins:
-        from birli_spark import pipeline
         from birli_spark.operators import ssins
 
-        # the mask aggregate and the join-back probe both consume vis:
-        # materialize it once so the input decodes once per action, in
-        # the spelling the selection's size calls for
-        dims = obs.selected_dims(ctx)
-        big = dims is not None and math.prod(dims) > FANOUT_BIG_ROWS
-        return ssins.ssins_flag_vis(
-            pipeline.fanout_materialize(vis, big=big),
-            threshold=ctx.ssins_threshold)
+        # the mask aggregate and the join-back probe both consume vis
+        return ssins.ssins_flag_vis(fanout(ctx, obs, vis),
+                                    threshold=ctx.ssins_threshold)
     if ctx.rfi_iterative or ctx.rfi_strategy == "generic":
         return rfi.flag_rfi_strategy(
             vis, base_sensitivity=ctx.rfi_sensitivity, eta=eta)
@@ -1003,6 +1010,21 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
         # every sink shares ONE context-built baked plan, so CLI options
         # reach every file
         baked = build_baked(spark, ctx, obs)
+        # the physical uvfits sink counts its own checkpoint of the SAME
+        # averaged relation (write_uvfits), so the count is deferred to
+        # that branch (validate_chunk_size pins chunk length to a
+        # multiple of avg_time, so build_plan's output and
+        # uvfits_group_rows agree on the output grid)
+        physical_uvfits = bool(
+            ctx.uvfits_out and ctx.uvfits_out.rstrip("/")
+            .endswith(".uvfits"))
+        readers = (ctx.mwaf_out, ctx.flag_parquet_out,
+                   not physical_uvfits,  # the row count below
+                   ctx.dump_csv, ctx.ms_out, ctx.uvfits_out)
+        if sum(map(bool, readers)) > 1:
+            # each reader's action would re-run the whole flowchart,
+            # archive decode and RFI island included
+            baked = fanout(ctx, obs, baked)
         out = build_plan(spark, ctx, baked, obs)
         result: dict = {}
 
@@ -1024,14 +1046,6 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
                     run_flags("t", "bl", "ant1", "ant2", "cc", "fc", "chan"),
                     ctx.flag_parquet_out, gps_start=obs.gps_start)
             result["flag_parquet"] = ctx.flag_parquet_out
-        # the physical uvfits sink counts its own checkpoint of the SAME
-        # averaged relation (write_uvfits), so the count is deferred to
-        # that branch (validate_chunk_size pins chunk length to a
-        # multiple of avg_time, so build_plan's output and
-        # uvfits_group_rows agree on the output grid)
-        physical_uvfits = bool(
-            ctx.uvfits_out and ctx.uvfits_out.rstrip("/")
-            .endswith(".uvfits"))
         if not physical_uvfits:
             with _stage(spark, ctx, "preprocess"):
                 result["rows"] = out.count()

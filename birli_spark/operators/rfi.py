@@ -3,7 +3,7 @@
 The reference marshals each baseline's visibilities into 8 time×chan float
 images and runs AOFlagger's Lua strategy (SumThreshold et al., external
 C++); the resulting mask is OR-ed into the existing flags
-(``re_apply_existing``, src/flags.rs:414-418).
+(src/flags.rs:414-418).
 
 Byte-identical AOFlagger output is out of scope (the strategy is an
 external Lua+C++ artifact, SURVEY.md §7 "What's hard"); we pin the
@@ -14,9 +14,10 @@ frequency directions with window lengths M = 1, 2, 4, ..., thresholds
 ``chi_M = chi_1 / rho^log2(M)`` (rho = 1.5), noise estimated by MAD.
 
 Spark shape: ``groupBy(ant1, ant2).applyInPandas`` — the one
-image-forming shuffle of the pipeline. At 100 TB this is why the fact
-table should be written bucketed by baseline: the groupBy then reuses the
-bucketing and the shuffle disappears.
+image-forming shuffle of the pipeline, written once
+(:func:`_flag_per_baseline`) for the three detectors. At 100 TB this is
+why the fact table should be written bucketed by baseline: the groupBy
+then reuses the bucketing and the shuffle disappears.
 """
 
 from __future__ import annotations
@@ -94,20 +95,23 @@ def sumthreshold_mask(img: np.ndarray, base_sensitivity: float = 6.0,
     return (work & present) | prior
 
 
-def flag_rfi(vis: DataFrame, base_sensitivity: float = 6.0,
-             re_apply_existing: bool = True,
-             sir_eta: float | None = None) -> DataFrame:
-    """Detect RFI per baseline and OR it into ``flag``.
+def _flag_per_baseline(vis: DataFrame, detect) -> DataFrame:
+    """The per-baseline image island every ``flag_rfi*`` detector runs:
+    ONE ``groupBy(ant1, ant2).applyInPandas`` shuffle; per group, the
+    (t, chan) grid of the baseline's sorted distinct timesteps and
+    channels, the ``present`` image (cells holding a row) and the
+    ``prior`` image (their incoming ``flag``); then
+    ``detect(pdf, image, present, prior)`` returns the (t, chan) mask,
+    which ORs into every row's ``flag``. ``image(values)`` scatters one
+    value per row into a float64 grid (absent cells 0.0).
 
-    The per-baseline image is the Stokes-I amplitude
-    ``|(xx + yy)| / 2`` over (t, chan) — the same reduction AOFlagger's MWA
-    strategy feeds SumThreshold. ``re_apply_existing=True`` ORs with prior
-    flags (reference src/flags.rs:414-418); False overwrites.
-    ``sir_eta`` appends the SIR morphological dilation (aoflagger's
-    post-pass; :func:`sir_mask`) to the detected mask.
-    """
+    A duplicate (t, ant1, ant2, chan) cell keeps its LAST row in every
+    image, so the detector's decision there — and, through the window
+    sums, its neighbours' — depends on the row order inside the group;
+    each row then ORs that one cell decision into its own flag. The
+    synthetic fact has such cells; archives have one row per cell and
+    are unaffected."""
     cols = list(vis.columns)
-    schema = vis.schema
 
     def per_baseline(pdf: pd.DataFrame) -> pd.DataFrame:
         ts = np.sort(pdf["t"].unique())
@@ -117,27 +121,52 @@ def flag_rfi(vis: DataFrame, base_sensitivity: float = 6.0,
         # run's 43k-row groups that alone dominated the island's CPU
         rows = np.searchsorted(ts, pdf["t"].to_numpy())
         cs = np.searchsorted(chans, pdf["chan"].to_numpy())
-        img = np.zeros((len(ts), len(chans)), dtype=np.float64)
-        re = (pdf["xx_re"].to_numpy() + pdf["yy_re"].to_numpy()) / 2.0
-        im = (pdf["xx_im"].to_numpy() + pdf["yy_im"].to_numpy()) / 2.0
-        img[rows, cs] = np.hypot(re, im)
-        present = np.zeros(img.shape, dtype=bool)
+        shape = (len(ts), len(chans))
+
+        def image(values: np.ndarray) -> np.ndarray:
+            img = np.zeros(shape, dtype=np.float64)
+            img[rows, cs] = values
+            return img
+
+        flag = pdf["flag"].to_numpy(dtype=bool)
+        present = np.zeros(shape, dtype=bool)
         present[rows, cs] = True
-        prior = np.zeros(img.shape, dtype=bool)
-        prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        mask = sumthreshold_mask(
-            img, base_sensitivity,
-            existing=prior if re_apply_existing else None,
-            valid=present)
-        if sir_eta is not None:
-            mask = sir_mask(mask, sir_eta)
+        prior = np.zeros(shape, dtype=bool)
+        prior[rows, cs] = flag
+        mask = detect(pdf, image, present, prior)
         out = pdf.copy()
-        detected = mask[rows, cs]
-        out["flag"] = (pdf["flag"].to_numpy(dtype=bool) | detected) \
-            if re_apply_existing else detected
+        out["flag"] = flag | mask[rows, cs]
         return out[cols]
 
-    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline, schema=schema)
+    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline,
+                                                     schema=vis.schema)
+
+
+def _stokes_i_amp(pdf: pd.DataFrame) -> np.ndarray:
+    """Per-row Stokes-I amplitude ``|(xx + yy)| / 2`` — the reduction
+    AOFlagger's MWA strategy feeds SumThreshold."""
+    re = (pdf["xx_re"].to_numpy() + pdf["yy_re"].to_numpy()) / 2.0
+    im = (pdf["xx_im"].to_numpy() + pdf["yy_im"].to_numpy()) / 2.0
+    return np.hypot(re, im)
+
+
+def flag_rfi(vis: DataFrame, base_sensitivity: float = 6.0,
+             sir_eta: float | None = None) -> DataFrame:
+    """Detect RFI per baseline and OR it into ``flag`` (reference
+    src/flags.rs:414-418).
+
+    The per-baseline image is the Stokes-I amplitude over (t, chan);
+    prior flags are treated as already-flagged samples.
+    ``sir_eta`` appends the SIR morphological dilation (aoflagger's
+    post-pass; :func:`sir_mask`) to the detected mask.
+    """
+    def detect(pdf, image, present, prior):
+        mask = sumthreshold_mask(image(_stokes_i_amp(pdf)),
+                                 base_sensitivity, existing=prior,
+                                 valid=present)
+        return mask if sir_eta is None else sir_mask(mask, sir_eta)
+
+    return _flag_per_baseline(vis, detect)
 
 
 # ------------------------------------- iterative AOFlagger strategy ---
@@ -303,12 +332,10 @@ def aoflagger_strategy_mask(img: np.ndarray,
                             base_sensitivity: float = 6.0,
                             existing: np.ndarray | None = None,
                             valid: np.ndarray | None = None,
-                            iterations: int = AOF_ITERS,
-                            step: float = AOF_STEP,
                             eta: float | None = 0.2) -> np.ndarray:
     """F9d — the iterative strategy over a (time x chan) amplitude
     image: standardize to ticks once, then for each non-final iteration
-    SumThreshold at ``base_sensitivity * step^(iterations - i)`` and
+    SumThreshold at ``base_sensitivity * AOF_STEP^(AOF_ITERS - i)`` and
     re-fit the residual (original ticks minus the masked Gaussian fit);
     final iteration at full sensitivity, then SIR (``eta=None`` skips).
     Returns the mask for present cells (absent never reported)."""
@@ -320,8 +347,8 @@ def aoflagger_strategy_mask(img: np.ndarray,
     x = standardize_ticks(img, present)
     work = prior | ~present
     resid = x
-    for i in range(1, iterations):
-        factor = step ** (iterations - i)
+    for i in range(1, AOF_ITERS):
+        factor = AOF_STEP ** (AOF_ITERS - i)
         work = sumthreshold_ticks(resid, work, present,
                                   base_sensitivity * factor)
         bg = lowpass_ticks(x, ~work & present)
@@ -339,34 +366,12 @@ def flag_rfi_strategy(vis: DataFrame, base_sensitivity: float = 6.0,
     ``groupBy(ant1, ant2).applyInPandas`` shuffle (bucketing by baseline
     removes it), each image run through the iterative strategy
     (:func:`aoflagger_strategy_mask`); the mask ORs into ``flag``."""
-    cols = list(vis.columns)
-    schema = vis.schema
+    def detect(pdf, image, present, prior):
+        return aoflagger_strategy_mask(
+            image(_stokes_i_amp(pdf)), base_sensitivity, existing=prior,
+            valid=present, eta=eta)
 
-    def per_baseline(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = np.sort(pdf["t"].unique())
-        chans = np.sort(pdf["chan"].unique())
-        # vectorized rank lookup (ts/chans are sorted unique): a dict
-        # .map here is a Python-level lookup PER CELL — at the scale
-        # run's 43k-row groups that alone dominated the island's CPU
-        rows = np.searchsorted(ts, pdf["t"].to_numpy())
-        cs = np.searchsorted(chans, pdf["chan"].to_numpy())
-        img = np.zeros((len(ts), len(chans)), dtype=np.float64)
-        re = (pdf["xx_re"].to_numpy() + pdf["yy_re"].to_numpy()) / 2.0
-        im = (pdf["xx_im"].to_numpy() + pdf["yy_im"].to_numpy()) / 2.0
-        img[rows, cs] = np.hypot(re, im)
-        present = np.zeros(img.shape, dtype=bool)
-        present[rows, cs] = True
-        prior = np.zeros(img.shape, dtype=bool)
-        prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        mask = aoflagger_strategy_mask(
-            img, base_sensitivity, existing=prior, valid=present,
-            eta=eta)
-        out = pdf.copy()
-        out["flag"] = pdf["flag"].to_numpy(dtype=bool) | mask[rows, cs]
-        return out[cols]
-
-    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline,
-                                                     schema=schema)
+    return _flag_per_baseline(vis, detect)
 
 
 # ------------------------------------------------- SIR morphology ---
@@ -417,8 +422,8 @@ def sir_mask(flags: np.ndarray, eta: float = 0.2) -> np.ndarray:
 # data/strategies/*.lua):
 #
 #   per polarization (amplitude representation):
-#     for i in 1..iterations-1:
-#       factor = step^(iterations - i)
+#     for i in 1..AOF_ITERS-1:
+#       factor = AOF_STEP^(AOF_ITERS - i)
 #       SumThreshold at base_sensitivity * factor (time + freq)
 #       threshold_timestep_rms(3.5)   | computed from the same mask,
 #       threshold_channel_rms(3*factor, both sides) | then OR-joined
@@ -447,25 +452,22 @@ MWA_POLS = ("xx", "xy", "yx", "yy")
 
 
 def lowpass_resized_ticks(x: np.ndarray, unflagged: np.ndarray,
-                          rf: int = MWA_FREQ_RESIZE,
                           chan_values: np.ndarray | None = None
                           ) -> np.ndarray:
-    """:func:`lowpass_ticks` on the (time, chan // rf)-downsampled grid,
-    replicated back (aoflagger downsample(1, rf, masked) ->
-    low_pass_filter -> upsample): per block, the masked mean in half-up
-    integer ticks; the separable kernels then run at group resolution
-    with the group-occupancy mask.
+    """:func:`lowpass_ticks` on the (time, chan // rf)-downsampled grid
+    (rf = :data:`MWA_FREQ_RESIZE`), replicated back (aoflagger
+    downsample(1, rf, masked) -> low_pass_filter -> upsample): per
+    block, the masked mean in half-up integer ticks; the separable
+    kernels then run at group resolution with the group-occupancy mask.
 
     ``chan_values`` are the actual channel numbers of the image columns
     — blocks group by VALUE (chan // rf), exactly like the SQL twin's
     ``chan DIV rf``, so a gappy channel domain (picket-fence selection)
     groups identically in both engines; None means columns 0..nc-1."""
-    if rf <= 1:
-        return lowpass_ticks(x, unflagged)
     nt, nc = x.shape
     vals = (np.arange(nc, dtype=np.int64) if chan_values is None
             else np.asarray(chan_values, dtype=np.int64))
-    gid = vals // rf
+    gid = vals // MWA_FREQ_RESIZE
     groups = np.unique(gid)
     ng = len(groups)
     gix = {int(g): i for i, g in enumerate(groups)}
@@ -560,11 +562,6 @@ def mwa_strategy_mask(img: np.ndarray,
                       base_sensitivity: float = 6.0,
                       existing: np.ndarray | None = None,
                       valid: np.ndarray | None = None,
-                      iterations: int = AOF_ITERS,
-                      step: float = AOF_STEP,
-                      rf: int = MWA_FREQ_RESIZE,
-                      ch_rms: float | None = MWA_CH_RMS,
-                      ts_rms: float | None = MWA_TS_RMS,
                       chan_values: np.ndarray | None = None) -> np.ndarray:
     """The single-polarization mwa-default iteration ladder (NO SIR and
     no final timestep-RMS — those run once on the joined pol masks,
@@ -578,18 +575,15 @@ def mwa_strategy_mask(img: np.ndarray,
     x = standardize_ticks(img, present)
     work = prior | ~present
     resid = x
-    for i in range(1, iterations):
-        factor = step ** (iterations - i)
+    for i in range(1, AOF_ITERS):
+        factor = AOF_STEP ** (AOF_ITERS - i)
         work = sumthreshold_ticks(resid, work, present,
                                   base_sensitivity * factor)
-        if ts_rms is not None:
-            tm = timestep_rms_ticks(resid, work, present, ts_rms)
-            work = work | tm[:, None]
-        if ch_rms is not None:
-            cm = channel_rms_ticks(resid, work, present, ch_rms * factor)
-            work = work | cm[None, :]
-        bg = lowpass_resized_ticks(x, ~work & present, rf,
-                                   chan_values=chan_values)
+        tm = timestep_rms_ticks(resid, work, present, MWA_TS_RMS)
+        work = work | tm[:, None]
+        cm = channel_rms_ticks(resid, work, present, MWA_CH_RMS * factor)
+        work = work | cm[None, :]
+        bg = lowpass_resized_ticks(x, ~work & present, chan_values)
         resid = x - bg
     work = sumthreshold_ticks(resid, work, present, base_sensitivity)
     return (work & present) | prior
@@ -599,12 +593,6 @@ def mwa_strategy_mask_pols(pol_imgs: dict, *,
                            base_sensitivity: float = 6.0,
                            existing: np.ndarray | None = None,
                            valid: np.ndarray | None = None,
-                           iterations: int = AOF_ITERS,
-                           step: float = AOF_STEP,
-                           rf: int = MWA_FREQ_RESIZE,
-                           ch_rms: float | None = MWA_CH_RMS,
-                           ts_rms: float | None = MWA_TS_RMS,
-                           final_ts_rms: float | None = MWA_FINAL_TS_RMS,
                            eta: float | None = 0.2,
                            chan_values: np.ndarray | None = None
                            ) -> np.ndarray:
@@ -623,30 +611,28 @@ def mwa_strategy_mask_pols(pol_imgs: dict, *,
     for p in MWA_POLS:
         det |= mwa_strategy_mask(
             pol_imgs[p], base_sensitivity, existing=prior, valid=present,
-            iterations=iterations, step=step, rf=rf, ch_rms=ch_rms,
-            ts_rms=ts_rms, chan_values=chan_values)
+            chan_values=chan_values)
     zeros = np.ones(shape, dtype=bool)
     for p in MWA_POLS:
         zeros &= np.asarray(pol_imgs[p], dtype=np.float64) == 0.0
     det |= zeros & present
     if eta is not None:
         det = sir_mask(det, eta)
-    if final_ts_rms is not None:
-        # joint RMS per timestep over every (chan, pol) unflagged cell
-        ok = ~det & ~prior & present
-        sumsq = np.zeros(shape[0], dtype=np.int64)
-        n = np.zeros(shape[0], dtype=np.int64)
-        for p in MWA_POLS:
-            xp = standardize_ticks(
-                np.asarray(pol_imgs[p], dtype=np.float64), present)
-            sumsq += np.where(ok, xp * xp, np.int64(0)).sum(axis=1)
-            n += ok.sum(axis=1)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            rms = _f32(np.sqrt(sumsq.astype(np.float64)
-                               / np.where(n > 0, n, 1)))
-        tm = _rms_outliers(np.where(n > 0, rms, np.nan),
-                           final_ts_rms, False)
-        det = det | tm[:, None]
+    # joint RMS per timestep over every (chan, pol) unflagged cell
+    ok = ~det & ~prior & present
+    sumsq = np.zeros(shape[0], dtype=np.int64)
+    n = np.zeros(shape[0], dtype=np.int64)
+    for p in MWA_POLS:
+        xp = standardize_ticks(
+            np.asarray(pol_imgs[p], dtype=np.float64), present)
+        sumsq += np.where(ok, xp * xp, np.int64(0)).sum(axis=1)
+        n += ok.sum(axis=1)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        rms = _f32(np.sqrt(sumsq.astype(np.float64)
+                           / np.where(n > 0, n, 1)))
+    tm = _rms_outliers(np.where(n > 0, rms, np.nan),
+                       MWA_FINAL_TS_RMS, False)
+    det = det | tm[:, None]
     return (det & present) | (prior & present)
 
 
@@ -665,18 +651,42 @@ def mwa_strategy_mask_pols(pol_imgs: dict, *,
 #    the unflagged samples: winsorize at the 10%/90% order statistics,
 #    sqrt(sum(x^2) / (2N)) * 1.0541 (the Rayleigh-mode estimator with
 #    the winsorization correction factor).
-#  - The window pass EXCLUDES flagged samples and compares the window
-#    MEAN of the remaining samples against chi_M (sum > chi_M * count),
-#    rather than the paper's substitute-chi form.
-#  - The full default window ladder runs 1..256, not 1..32.
+#  - The per-length thresholds decay as chi_1 * 1.5^log2(M) / M
+#    (= chi_1 * 0.75^log2(M)) over the full default window ladder
+#    1..256, not 1..32.
 #  - threshold_timestep_rms / threshold_channel_rms deviate lines by
 #    ThresholdTools::WinsorizedMeanAndStdDev: 10% winsorized mean and
 #    stddev * 1.54 (the Gaussian winsorization correction).
 #  - The background fit is the float Gaussian kernel (no integer
 #    quantization), masked separable sliding mean.
+#
+# The one setting below is the MEASURED-best configuration against the
+# reference's own cotter mwa-default golden (tests/test_golden_mwa_
+# flags.py, real 1254670392 visibilities): Winsorized-mode noise, the
+# paper's substitute-chi window passes (not the C++ exclude-and-average
+# form), time-then-frequency per window length, the threshold decay
+# above, and NO frequency downsample before the Gaussian fit. No
+# downsample vs the Lua text's resize of 3 is an empirical finding:
+# the cotter-era strategy the golden was made with evidently fits the
+# background at full frequency resolution.
+#
+# Round 7 (the STRUCTURAL grid beyond the round-6 knob grid):
+# thresholding the residual uncentered is the literal C++ semantics
+# (ThresholdConfig::Execute thresholds the residual as-is), and
+# chaining the polarizations (later pols see earlier pols' detections
+# as priors) measures strictly closer to the golden — agreement
+# 0.9824 -> 0.9837 at recall 0.9195, fp 263 -> 240. The full 2^4
+# structural space (pass order x centering x window form x
+# channel-RMS dataflow) x pol sequencing x iteration schedule contains
+# NO config with agreement >= 0.99 at recall >= 0.90 (front: 0.9864 @
+# 0.883 / 0.9837 @ 0.9195). The sweeps were tools/tune_mwa_float.py
+# (knobs) and tools/aof_port_probe.py (structure), deleted with the
+# settings they swept once this one was built in; see git history.
 
 #: AOFlagger ThresholdConfig::InitializeLengthsDefault — 9 lengths
 AOF_WINDOWS_FULL = (1, 2, 4, 8, 16, 32, 64, 128, 256)
+#: per-doubling threshold decay: chi_M = chi_1 * 1.5^log2(M) / M
+AOF_DECAY = 0.75
 #: winsorization correction factors (ThresholdTools, public source)
 WINSORIZED_RAYLEIGH_CORR = 1.0541
 WINSORIZED_GAUSS_CORR = 1.54
@@ -714,51 +724,23 @@ def winsorized_mean_std(vals: np.ndarray) -> tuple[float, float]:
 
 
 def _st_1d_float(img: np.ndarray, work: np.ndarray, m: int,
-                 chi: float, form: str = "subst",
-                 two_sided: bool = False) -> None:
-    """One float SumThreshold pass along axis 1 (in place).
-
-    ``form='subst'`` — the paper form: flagged samples contribute the
-    threshold chi, window flags when sum > chi * m. Self-limiting under
-    iteration (a heavily-flagged window still needs its remaining
-    samples above chi on average).
-    ``form='exclude'`` — flagged samples excluded, remaining mean
-    compared (sum > chi * count). ``two_sided`` compares |mean|.
-    """
+                 chi: float) -> None:
+    """One float SumThreshold pass along axis 1 (in place), the paper
+    form: flagged samples contribute the threshold chi, a window flags
+    when its sum > chi * m. Self-limiting under iteration (a
+    heavily-flagged window still needs its remaining samples above chi
+    on average)."""
     n = img.shape[1]
     if n < m:
         return
     if m == 1:
-        v = np.where(work, 0.0, img)
-        hit = (np.abs(v) > chi) if two_sided else (v > chi)
-        work |= hit & ~work
+        work |= img > chi
         return
-    if form == "exclude":
-        x = np.where(work, 0.0, img)
-        c = (~work).astype(np.int64)
-        csum = np.cumsum(x, axis=1)
-        ccnt = np.cumsum(c, axis=1)
-        wsum = csum[:, m - 1:].copy()
-        wsum[:, 1:] -= csum[:, :n - m]
-        wcnt = ccnt[:, m - 1:].copy()
-        wcnt[:, 1:] -= ccnt[:, :n - m]
-        lim = chi * wcnt
-        exceed = (wcnt > 0) & ((np.abs(wsum) > lim) if two_sided
-                               else (wsum > lim))
-    else:
-        adj = np.where(work, chi, img)
-        csum = np.cumsum(adj, axis=1)
-        wsum = csum[:, m - 1:].copy()
-        wsum[:, 1:] -= csum[:, :n - m]
-        lim = chi * m
-        if two_sided:
-            adj_lo = np.where(work, -chi, img)
-            cl = np.cumsum(adj_lo, axis=1)
-            wlo = cl[:, m - 1:].copy()
-            wlo[:, 1:] -= cl[:, :n - m]
-            exceed = (wsum > lim) | (wlo < -lim)
-        else:
-            exceed = wsum > lim
+    adj = np.where(work, chi, img)
+    csum = np.cumsum(adj, axis=1)
+    wsum = csum[:, m - 1:].copy()
+    wsum[:, 1:] -= csum[:, :n - m]
+    exceed = wsum > chi * m
     # spread each window hit over its m columns with a difference
     # array + running sum — O(n) instead of the O(n*m) shift loop
     # (m reaches 256 in the full AOFlagger ladder)
@@ -770,67 +752,31 @@ def _st_1d_float(img: np.ndarray, work: np.ndarray, m: int,
 
 
 def sumthreshold_float(resid: np.ndarray, work0: np.ndarray,
-                       present: np.ndarray, sensitivity: float,
-                       windows: tuple = AOF_WINDOWS_FULL,
-                       form: str = "subst",
-                       two_sided: bool = False,
-                       noise_est: str = "wmode",
-                       decay: float = 0.75,
-                       noise_over: str = "unflagged",
-                       order: str = "interleave",
-                       center: bool = True) -> np.ndarray:
-    """AOFlagger ThresholdConfig::Execute over a float residual image:
-    chi_1 = sensitivity * WinsorizedMode(unflagged), per-length mean
-    thresholds chi_M = chi_1 / rho^log2(M). Returns the accumulated
-    mask (absent cells stay flagged).
-
-    ``center=True`` subtracts the unflagged median first (the
-    long-window mean test needs a zero-centered residual — on a raw
-    amplitude image every 256-window mean exceeds a sub-mode
-    threshold); ``center=False`` is the literal C++ semantics
-    (ThresholdConfig::Execute thresholds the image as-is — workable
-    there because the strategy only reaches long windows on post-
-    high-pass residuals, whose mean is near zero by construction).
-
-    ``order='interleave'`` runs time-then-frequency per window length;
-    ``order='dirs'`` is the C++ loop structure (thresholdconfig.cpp:
-    every horizontal/time length first, then every vertical/frequency
-    length)."""
+                       present: np.ndarray, sensitivity: float
+                       ) -> np.ndarray:
+    """AOFlagger ThresholdConfig::Execute over a float residual image,
+    thresholded as-is (uncentered): chi_1 = sensitivity *
+    WinsorizedMode(unflagged), per-length thresholds chi_M = chi_1 *
+    AOF_DECAY^log2(M) over :data:`AOF_WINDOWS_FULL`, time then
+    frequency per length. Returns the accumulated mask (absent cells
+    stay flagged); a zero-noise image flags its off-median cells."""
     img = np.asarray(resid, dtype=np.float64)
     prior = work0 | ~present
-    pool = img[present] if noise_over == "present" else img[~prior]
     vals = img[~prior]
     if vals.size == 0:
         return prior.copy()
-    med = float(np.median(vals))
-    if noise_est == "wmode":
-        mode = winsorized_mode(pool)
-    elif noise_est == "wstd":
-        mode = winsorized_mean_std(pool)[1]
-    else:  # median/MAD, the tick twin's estimator
-        mode = 1.4826 * float(np.median(np.abs(pool - np.median(pool))))
+    mode = winsorized_mode(vals)
     if not (mode > 0.0 and np.isfinite(mode)):
-        return ((img != med) & present) | prior
-    if center:
-        img = img - med
+        return ((img != float(np.median(vals))) & present) | prior
     chi1 = sensitivity * mode
+    img_t = img.T.copy()
     work = prior.copy()
-    if order == "dirs":
-        for m in windows:                                        # time
-            chi = chi1 * (decay ** np.log2(m))
-            tw = work.T.copy()
-            _st_1d_float(img.T.copy(), tw, m, chi, form, two_sided)
-            work = tw.T.copy()
-        for m in windows:                                        # freq
-            chi = chi1 * (decay ** np.log2(m))
-            _st_1d_float(img, work, m, chi, form, two_sided)
-        return work
-    for m in windows:
-        chi = chi1 * (decay ** np.log2(m))
-        tw = work.T.copy()
-        _st_1d_float(img.T.copy(), tw, m, chi, form, two_sided)  # time
-        work = tw.T.copy()
-        _st_1d_float(img, work, m, chi, form, two_sided)         # freq
+    for m in AOF_WINDOWS_FULL:
+        chi = chi1 * (AOF_DECAY ** np.log2(m))
+        work_t = work.T.copy()
+        _st_1d_float(img_t, work_t, m, chi)                    # time
+        work = work_t.T.copy()
+        _st_1d_float(img, work, m, chi)                        # freq
     return work
 
 
@@ -839,61 +785,32 @@ def _gauss_kernel_f(radius: int, sigma: float) -> np.ndarray:
     return np.exp(-(d * d) / (2.0 * sigma * sigma))
 
 
-def lowpass_resized_float(x: np.ndarray, unflagged: np.ndarray,
-                          rf: int = MWA_FREQ_RESIZE,
-                          chan_values: np.ndarray | None = None
-                          ) -> np.ndarray:
-    """Float twin of :func:`lowpass_resized_ticks`: masked mean
-    downsample by ``rf`` along frequency, separable masked float
-    Gaussian sliding fit (windows truncate at edges), replicate back."""
+def lowpass_float(x: np.ndarray, unflagged: np.ndarray) -> np.ndarray:
+    """Float twin of :func:`lowpass_ticks` at full resolution: separable
+    masked float Gaussian sliding fit (windows truncate at the edges);
+    a fully-flagged window fits 0."""
     nt, nc = x.shape
-    x = np.asarray(x, dtype=np.float64)
-    vals = (np.arange(nc, dtype=np.int64) if chan_values is None
-            else np.asarray(chan_values, dtype=np.int64))
-    gid = vals // max(rf, 1)
-    groups = np.unique(gid)
-    ng = len(groups)
-    gix = {int(g): i for i, g in enumerate(groups)}
-    col_g = np.array([gix[int(g)] for g in gid])
-    xm = np.where(unflagged, x, 0.0)
+    xm = np.where(unflagged, np.asarray(x, dtype=np.float64), 0.0)
     mi = unflagged.astype(np.float64)
-    if ng == nc:
-        # rf <= 1 (the shipped MWA_FLOAT_KW): every column is its own
-        # group — the downsample is the identity. The general path
-        # below cost O(nc^2 * nt) in boolean indexing and was the
-        # single hottest line of the whole f9f island (scale profile
-        # r8: ~57% of strategy CPU).
-        xg = xm
-        mg = mi
-    else:
-        # chan_values is sorted, so col_g is nondecreasing and groups
-        # are contiguous runs: one O(nt * nc) reduceat per plane
-        starts = np.concatenate(
-            ([0], np.flatnonzero(np.diff(col_g)) + 1))
-        s = np.add.reduceat(xm, starts, axis=1)
-        m = np.add.reduceat(mi, starts, axis=1)
-        xg = np.where(m > 0, s / np.where(m > 0, m, 1.0), 0.0)
-        mg = (m > 0).astype(np.float64)
     gt = _gauss_kernel_f(LP_RADIUS_T, LP_SIGMA_T)
     gf = _gauss_kernel_f(LP_RADIUS_F, LP_SIGMA_F)
-    num1 = np.zeros_like(xg)
-    den1 = np.zeros_like(xg)
+    num1 = np.zeros_like(xm)
+    den1 = np.zeros_like(xm)
     for k, d in enumerate(range(-LP_RADIUS_T, LP_RADIUS_T + 1)):
         lo, hi = max(0, -d), min(nt, nt - d)
         if hi <= lo:
             continue
-        num1[lo:hi] += gt[k] * (xg * mg)[lo + d:hi + d]
-        den1[lo:hi] += gt[k] * mg[lo + d:hi + d]
-    num = np.zeros_like(xg)
-    den = np.zeros_like(xg)
+        num1[lo:hi] += gt[k] * xm[lo + d:hi + d]
+        den1[lo:hi] += gt[k] * mi[lo + d:hi + d]
+    num = np.zeros_like(xm)
+    den = np.zeros_like(xm)
     for k, d in enumerate(range(-LP_RADIUS_F, LP_RADIUS_F + 1)):
-        lo, hi = max(0, -d), min(ng, ng - d)
+        lo, hi = max(0, -d), min(nc, nc - d)
         if hi <= lo:
             continue
         num[:, lo:hi] += gf[k] * num1[:, lo + d:hi + d]
         den[:, lo:hi] += gf[k] * den1[:, lo + d:hi + d]
-    bg_g = np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
-    return bg_g[:, col_g]
+    return np.where(den > 0, num / np.where(den > 0, den, 1.0), 0.0)
 
 
 def _rms_outliers_w(rms: np.ndarray, thr: float, both: bool) -> np.ndarray:
@@ -922,36 +839,13 @@ def _rms_lines_f(x: np.ndarray, ok: np.ndarray, axis: int) -> np.ndarray:
 def mwa_strategy_mask_float(img: np.ndarray,
                             base_sensitivity: float = 6.0,
                             existing: np.ndarray | None = None,
-                            valid: np.ndarray | None = None,
-                            iterations: int = AOF_ITERS,
-                            step: float = AOF_STEP,
-                            rf: int = MWA_FREQ_RESIZE,
-                            ch_rms: float | None = MWA_CH_RMS,
-                            ts_rms: float | None = MWA_TS_RMS,
-                            chan_values: np.ndarray | None = None,
-                            windows: tuple = AOF_WINDOWS_FULL,
-                            form: str = "subst",
-                            two_sided: bool = False,
-                            noise_est: str = "wmode",
-                            decay: float = 0.75,
-                            noise_over: str = "unflagged",
-                            bg_over: str = "unflagged",
-                            order: str = "interleave",
-                            center: bool = True,
-                            ch_on_copy: bool = False
+                            valid: np.ndarray | None = None
                             ) -> np.ndarray:
     """Float-mode single-polarization mwa-default iteration ladder
     (pre-SIR; the joined-pols pass lives in
-    :func:`mwa_strategy_mask_pols_float`).
-
-    ``bg_over``: which cells feed the background fit — 'unflagged'
-    (masked fit, flags excluded) or 'present' (every valid cell,
-    letting narrow persistent features like the legacy DC spike
-    partly self-subtract, as a plain kernel smoother would).
-    ``ch_on_copy=True`` is the Lua strategy's literal dataflow
-    (chdata = data:copy() BEFORE threshold_timestep_rms, so the
-    channel-RMS test sees the pre-timestep-RMS mask and the two masks
-    join afterwards); False applies them sequentially."""
+    :func:`mwa_strategy_mask_pols_float`): per non-final iteration,
+    SumThreshold, then timestep-RMS and channel-RMS applied in turn,
+    then the background fit over the unflagged cells."""
     img = np.asarray(img, dtype=np.float64)
     present = (np.ones(img.shape, dtype=bool) if valid is None
                else np.asarray(valid, dtype=bool))
@@ -959,30 +853,19 @@ def mwa_strategy_mask_float(img: np.ndarray,
              else np.asarray(existing, dtype=bool))
     work = prior | ~present
     resid = img
-    for i in range(1, iterations):
-        factor = step ** (iterations - i)
+    for i in range(1, AOF_ITERS):
+        factor = AOF_STEP ** (AOF_ITERS - i)
         work = sumthreshold_float(resid, work, present,
-                                  base_sensitivity * factor, windows,
-                                  form, two_sided, noise_est, decay,
-                                  noise_over, order, center)
-        pre_ts = work
-        if ts_rms is not None:
-            tm = _rms_outliers_w(
-                _rms_lines_f(resid, ~work & present, 1), ts_rms, False)
-            work = work | tm[:, None]
-        if ch_rms is not None:
-            ch_base = pre_ts if ch_on_copy else work
-            cm = _rms_outliers_w(
-                _rms_lines_f(resid, ~ch_base & present, 0),
-                ch_rms * factor, True)
-            work = work | cm[None, :]
-        bg_ok = present if bg_over == "present" else (~work & present)
-        bg = lowpass_resized_float(img, bg_ok, rf,
-                                   chan_values=chan_values)
-        resid = img - bg
-    work = sumthreshold_float(resid, work, present, base_sensitivity,
-                              windows, form, two_sided, noise_est, decay,
-                              noise_over, order, center)
+                                  base_sensitivity * factor)
+        tm = _rms_outliers_w(
+            _rms_lines_f(resid, ~work & present, 1), MWA_TS_RMS, False)
+        work = work | tm[:, None]
+        cm = _rms_outliers_w(
+            _rms_lines_f(resid, ~work & present, 0),
+            MWA_CH_RMS * factor, True)
+        work = work | cm[None, :]
+        resid = img - lowpass_float(img, ~work & present)
+    work = sumthreshold_float(resid, work, present, base_sensitivity)
     return (work & present) | prior
 
 
@@ -990,40 +873,15 @@ def mwa_strategy_mask_pols_float(pol_imgs: dict, *,
                                  base_sensitivity: float = 6.0,
                                  existing: np.ndarray | None = None,
                                  valid: np.ndarray | None = None,
-                                 iterations: int = AOF_ITERS,
-                                 step: float = AOF_STEP,
-                                 rf: int = MWA_FREQ_RESIZE,
-                                 ch_rms: float | None = MWA_CH_RMS,
-                                 ts_rms: float | None = MWA_TS_RMS,
-                                 final_ts_rms: float | None =
-                                 MWA_FINAL_TS_RMS,
-                                 eta: float | None = 0.2,
-                                 chan_values: np.ndarray | None = None,
-                                 windows: tuple = AOF_WINDOWS_FULL,
-                                 form: str = "subst",
-                                 two_sided: bool = False,
-                                 noise_est: str = "wmode",
-                                 decay: float = 0.75,
-                                 noise_over: str = "unflagged",
-                                 bg_over: str = "unflagged",
-                                 order: str = "interleave",
-                                 center: bool = True,
-                                 ch_on_copy: bool = False,
-                                 pol_chain: bool = False
+                                 eta: float | None = 0.2
                                  ) -> np.ndarray:
     """F9e float mode — the full mwa-default orchestration with
     AOFlagger's own statistics (see module section comment). Per-pol
-    ladders OR-joined, all-pol-zero samples flagged, SIR once, final
+    ladders, each seeing the earlier pols' detections as priors (so
+    later pols estimate noise and fit the background with them masked),
+    OR-joined; all-pol-zero samples flagged, SIR once, final
     threshold_timestep_rms(4.0) over all (chan, pol) cells pooled in
-    raw amplitude units.
-
-    ``pol_chain=True`` threads each polarization's accumulated mask
-    into the next pol's ladder as its prior (so later pols estimate
-    noise and fit the background with earlier pols' detections
-    masked); False runs the pols independently and ORs. The Lua
-    strategy's dataflow reads as independent, but chaining measures
-    STRICTLY closer to the cotter golden (tools/aof_port_probe.py) —
-    kept as a measured, documented choice."""
+    raw amplitude units."""
     shapes = {im.shape for im in pol_imgs.values()}
     assert len(shapes) == 1
     shape = shapes.pop()
@@ -1033,104 +891,50 @@ def mwa_strategy_mask_pols_float(pol_imgs: dict, *,
              else np.asarray(existing, dtype=bool))
     det = np.zeros(shape, dtype=bool)
     for p in MWA_POLS:
-        pol_prior = (prior | det) if pol_chain else prior
         det |= mwa_strategy_mask_float(
-            pol_imgs[p], base_sensitivity, existing=pol_prior,
-            valid=present,
-            iterations=iterations, step=step, rf=rf, ch_rms=ch_rms,
-            ts_rms=ts_rms, chan_values=chan_values, windows=windows,
-            form=form, two_sided=two_sided, noise_est=noise_est,
-            decay=decay, noise_over=noise_over, bg_over=bg_over,
-            order=order, center=center, ch_on_copy=ch_on_copy)
+            pol_imgs[p], base_sensitivity, existing=prior | det,
+            valid=present)
     zeros = np.ones(shape, dtype=bool)
     for p in MWA_POLS:
         zeros &= np.asarray(pol_imgs[p], dtype=np.float64) == 0.0
     det |= zeros & present
     if eta is not None:
         det = sir_mask(det, eta)
-    if final_ts_rms is not None:
-        ok = ~det & ~prior & present
-        sumsq = np.zeros(shape[0])
-        n = np.zeros(shape[0], dtype=np.int64)
-        for p in MWA_POLS:
-            xp = np.asarray(pol_imgs[p], dtype=np.float64)
-            sumsq += np.where(ok, xp * xp, 0.0).sum(axis=1)
-            n += ok.sum(axis=1)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            rms = np.sqrt(sumsq / np.where(n > 0, n, 1))
-        tm = _rms_outliers_w(np.where(n > 0, rms, np.nan),
-                             final_ts_rms, False)
-        det = det | tm[:, None]
+    ok = ~det & ~prior & present
+    sumsq = np.zeros(shape[0])
+    n = np.zeros(shape[0], dtype=np.int64)
+    for p in MWA_POLS:
+        xp = np.asarray(pol_imgs[p], dtype=np.float64)
+        sumsq += np.where(ok, xp * xp, 0.0).sum(axis=1)
+        n += ok.sum(axis=1)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        rms = np.sqrt(sumsq / np.where(n > 0, n, 1))
+    tm = _rms_outliers_w(np.where(n > 0, rms, np.nan),
+                         MWA_FINAL_TS_RMS, False)
+    det = det | tm[:, None]
     return (det & present) | (prior & present)
-
-
-#: the MEASURED-best float configuration against the reference's own
-#: cotter mwa-default golden (tests/test_golden_mwa_flags.py, real
-#: 1254670392 visibilities): Winsorized-mode noise, substitute-chi
-#: passes, the AOFlagger threshold decay (chi_1 * 1.5^log2(M) / M), the
-#: full 1..256 window ladder, and NO frequency downsample before the
-#: Gaussian fit. rf=1 vs the Lua text's 3 is an empirical finding:
-#: the cotter-era strategy the golden was made with evidently fits the
-#: background at full frequency resolution.
-#:
-#: Round 7 (tools/aof_port_probe.py, the STRUCTURAL grid beyond the
-#: round-6 knob grid): center=False is the literal C++ semantics
-#: (ThresholdConfig::Execute thresholds the residual as-is), and
-#: pol_chain=True (later pols see earlier pols' detections as priors)
-#: measures strictly closer to the golden — agreement 0.9824 -> 0.9837
-#: at recall 0.9195, fp 263 -> 240. The full 2^4 structural space
-#: (pass order x centering x window form x channel-RMS dataflow) x pol
-#: sequencing x iteration schedule contains NO config with agreement
-#: >= 0.99 at recall >= 0.90 (front: 0.9864 @ 0.883 / 0.9837 @ 0.9195).
-MWA_FLOAT_KW = dict(rf=1, windows=AOF_WINDOWS_FULL, form="subst",
-                    two_sided=False, noise_est="wmode", decay=0.75,
-                    center=False, pol_chain=True)
 
 
 def flag_rfi_mwa(vis: DataFrame, base_sensitivity: float = 6.0,
                  eta: float | None = 0.2) -> DataFrame:
-    """F9e as the 100 TB UDF island (same shape as
-    :func:`flag_rfi_strategy`): per-baseline polarization images via ONE
-    ``groupBy(ant1, ant2).applyInPandas`` shuffle, each run through the
-    mwa-default orchestration; the joined mask ORs into ``flag``.
+    """F9e as the 100 TB UDF island (:func:`_flag_per_baseline`, like
+    :func:`flag_rfi_strategy`): per-baseline polarization amplitude
+    images run through the mwa-default orchestration; the joined mask
+    ORs into ``flag``.
 
     The island runs the AOFlagger-statistics float mode
-    (:func:`mwa_strategy_mask_pols_float` with :data:`MWA_FLOAT_KW`) —
-    measured at 0.9837 cell agreement / 0.9195 recall against the
-    reference's own cotter mwa-default golden, with every disagreeing
-    cell within 2x of the decision threshold
-    (tests/test_golden_mwa_flags.py), which compare it against the
-    integer-tick twin :func:`mwa_strategy_mask_pols`."""
-    cols = list(vis.columns)
-    schema = vis.schema
+    (:func:`mwa_strategy_mask_pols_float`) — measured at 0.9837 cell
+    agreement / 0.9195 recall against the reference's own cotter
+    mwa-default golden, with every disagreeing cell within 2x of the
+    decision threshold (tests/test_golden_mwa_flags.py, which also
+    compares the integer-tick twin :func:`mwa_strategy_mask_pols`)."""
+    def detect(pdf, image, present, prior):
+        pol_imgs = {p: image(np.hypot(
+            pdf[f"{p}_re"].to_numpy(dtype=np.float64),
+            pdf[f"{p}_im"].to_numpy(dtype=np.float64)))
+            for p in MWA_POLS}
+        return mwa_strategy_mask_pols_float(
+            pol_imgs, base_sensitivity=base_sensitivity, existing=prior,
+            valid=present, eta=eta)
 
-    def per_baseline(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = np.sort(pdf["t"].unique())
-        chans = np.sort(pdf["chan"].unique())
-        # vectorized rank lookup (ts/chans are sorted unique): a dict
-        # .map here is a Python-level lookup PER CELL — at the scale
-        # run's 43k-row groups that alone dominated the island's CPU
-        rows = np.searchsorted(ts, pdf["t"].to_numpy())
-        cs = np.searchsorted(chans, pdf["chan"].to_numpy())
-        shape = (len(ts), len(chans))
-        pol_imgs = {}
-        for p in MWA_POLS:
-            re = pdf[f"{p}_re"].to_numpy(dtype=np.float64)
-            im = pdf[f"{p}_im"].to_numpy(dtype=np.float64)
-            img = np.zeros(shape, dtype=np.float64)
-            img[rows, cs] = np.hypot(re, im)
-            pol_imgs[p] = img
-        present = np.zeros(shape, dtype=bool)
-        present[rows, cs] = True
-        prior = np.zeros(shape, dtype=bool)
-        prior[rows, cs] = pdf["flag"].to_numpy(dtype=bool)
-        mask = mwa_strategy_mask_pols_float(
-            pol_imgs, base_sensitivity=base_sensitivity,
-            existing=prior, valid=present, eta=eta,
-            chan_values=chans, **MWA_FLOAT_KW)
-        out = pdf.copy()
-        out["flag"] = pdf["flag"].to_numpy(dtype=bool) | mask[rows, cs]
-        return out[cols]
-
-    return vis.groupBy("ant1", "ant2").applyInPandas(per_baseline,
-                                                     schema=schema)
+    return _flag_per_baseline(vis, detect)

@@ -361,8 +361,6 @@ def _lp_sum(col: str, kernel: tuple[int, ...], radius: int,
 def aoflagger_strategy_steps(vis: str = "flagged",
                              median_fn: str = "percentile",
                              base_sensitivity: float = 6.0,
-                             iterations: int | None = None,
-                             step: float | None = None,
                              eta: float | None = 0.2,
                              prefix: str = "aof",
                              ) -> tuple[list[tuple[str, str]], str,
@@ -372,12 +370,12 @@ def aoflagger_strategy_steps(vis: str = "flagged",
     the derived mwa-default via FFI, src/flags.rs:368-437) as ordered
     relational steps: standardize the Stokes-I image to integer ticks
     once, then iterate {SumThreshold at ``base_sensitivity *
-    step^(iterations-i)`` -> subtract the flag-masked separable Gaussian
-    sliding-window fit of the ORIGINAL tick image}, final SumThreshold
-    at full sensitivity, then SIR. All arithmetic after the one f32
-    median/MAD standardization is exact BIGINT (integer kernel weights,
-    half-up integer division), so both engines build identical residual
-    images; tick semantics mirror operators/rfi.py::
+    AOF_STEP^(AOF_ITERS-i)`` -> subtract the flag-masked separable
+    Gaussian sliding-window fit of the ORIGINAL tick image}, final
+    SumThreshold at full sensitivity, then SIR. All arithmetic after
+    the one f32 median/MAD standardization is exact BIGINT (integer
+    kernel weights, half-up integer division), so both engines build
+    identical residual images; tick semantics mirror operators/rfi.py::
     aoflagger_strategy_mask cell for cell.
 
     Returns ``(steps, final_select, barrier_names)``; barriers mark the
@@ -391,8 +389,6 @@ def aoflagger_strategy_steps(vis: str = "flagged",
         AOF_ITERS, AOF_STEP, LP_CLAMP_SIGMA, LP_RADIUS_F, LP_RADIUS_T,
         LP_SIGMA_F, LP_SIGMA_T, LP_TICKS, lp_kernel)
 
-    iterations = AOF_ITERS if iterations is None else iterations
-    step = AOF_STEP if step is None else step
     idiv = "DIV" if median_fn == "percentile" else "//"
     p = prefix
     clampt = int(LP_CLAMP_SIGMA) * LP_TICKS
@@ -449,8 +445,8 @@ def aoflagger_strategy_steps(vis: str = "flagged",
     ]
     barriers = {f"{p}_x0"}
     cur = f"{p}_in0"
-    for i in range(1, iterations):
-        factor = step ** (iterations - i)
+    for i in range(1, AOF_ITERS):
+        factor = AOF_STEP ** (AOF_ITERS - i)
         sp = f"{p}s{i}"
         st, _ = sumthreshold_steps(cur, median_fn,
                                    base_sensitivity * factor,
@@ -625,8 +621,6 @@ def _rms_line_ctes(p: str, tag: str, src: str, line: str, other: str,
 def mwa_strategy_steps(vis: str = "flagged",
                        median_fn: str = "percentile",
                        base_sensitivity: float = 6.0,
-                       iterations: int | None = None,
-                       step: float | None = None,
                        eta: float | None = 0.2,
                        prefix: str = "mwa",
                        ) -> tuple[list[tuple[str, str]], str, set[str]]:
@@ -638,7 +632,7 @@ def mwa_strategy_steps(vis: str = "flagged",
       per polarization (melted into the partition key: ant2 <- ant2*4+p
       so every f9d window layer runs unchanged on per-pol images):
         standardize to ticks, then per non-final iteration
-        { SumThreshold at base * step^(iters-i) ->
+        { SumThreshold at base * AOF_STEP^(AOF_ITERS-i) ->
           threshold_timestep_rms(3.5) -> threshold_channel_rms(3*factor,
           both sides) -> masked Gaussian fit of the ORIGINAL ticks on
           the (t, chan DIV 3) downsampled grid, replicated back ->
@@ -657,8 +651,6 @@ def mwa_strategy_steps(vis: str = "flagged",
         LP_SIGMA_F, LP_SIGMA_T, LP_TICKS, MWA_CH_RMS, MWA_FINAL_TS_RMS,
         MWA_FREQ_RESIZE, MWA_POLS, MWA_TS_RMS, lp_kernel)
 
-    iterations = AOF_ITERS if iterations is None else iterations
-    step = AOF_STEP if step is None else step
     idiv = "DIV" if median_fn == "percentile" else "//"
     p = prefix
     rf = MWA_FREQ_RESIZE
@@ -727,8 +719,8 @@ def mwa_strategy_steps(vis: str = "flagged",
     def lp_sum(col, kernel, radius, over):
         return _lp_sum(col, kernel, radius, over)
 
-    for i in range(1, iterations):
-        factor = step ** (iterations - i)
+    for i in range(1, AOF_ITERS):
+        factor = AOF_STEP ** (AOF_ITERS - i)
         sp = f"{p}s{i}"
         st, _ = sumthreshold_steps(cur, median_fn,
                                    base_sensitivity * factor,

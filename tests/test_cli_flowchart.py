@@ -240,6 +240,32 @@ def test_archive_ssins_decodes_once(spark, obs, tmp_path, decoded_files):
     assert decoded_files.value / len(glob.glob(obs["glob"])) == 1.0
 
 
+def test_archive_sinks_decode_once(spark, obs, tmp_path, decoded_files):
+    """-M, -f and the row count all read the baked plan; it is
+    materialized once, so the archive decode still runs once per
+    file."""
+    import glob
+
+    from birli_spark import cli
+
+    cli.run(_argv("arc/sinks_averaged", str(tmp_path), obs, ""),
+            spark=spark)
+    assert decoded_files.value / len(glob.glob(obs["glob"])) == 1.0
+
+
+def test_archive_uvfits_alone_is_not_materialized(spark, obs, tmp_path,
+                                                  monkeypatch):
+    """A lone physical -u has one reader (its own checkpoint of the
+    group rows), so the baked plan is not materialized."""
+    from birli_spark import cli, pipeline
+
+    def forbidden(*a, **k):
+        raise AssertionError("the baked plan was materialized")
+
+    monkeypatch.setattr(pipeline, "fanout_materialize", forbidden)
+    cli.run(_argv("arc/default", str(tmp_path), obs, ""), spark=spark)
+
+
 def test_archive_file_uri_matches_bare_path(spark, obs, tmp_path):
     """--gpubox accepts a file: URI and writes the same UVFITS bytes as
     the bare path."""

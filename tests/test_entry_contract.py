@@ -27,6 +27,24 @@ def test_queries_and_oracles_align():
     assert not missing, f"oracles without queries: {missing}"
 
 
+def test_output_dir_is_per_process():
+    """The writing queries' output root is one fresh directory per
+    process (stable within it, removed at exit), so two sessions on one
+    host never write over each other's files."""
+    import subprocess
+
+    code = ("import os, __spark_entry__ as e; d = e._out_dir(); "
+            "print(d, d == e._out_dir() and os.path.isdir(d))")
+    roots = [subprocess.run(
+        [sys.executable, "-c", code], check=True, capture_output=True,
+        text=True, cwd=os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__)))).stdout.split()
+        for _ in range(2)]
+    assert [r[1] for r in roots] == ["True", "True"]
+    assert roots[0][0] != roots[1][0]
+    assert not any(os.path.exists(r[0]) for r in roots)
+
+
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()

@@ -13,16 +13,16 @@ baselines x 2 timesteps x 768 channels of real-data golden flags.
 
 Two implementations are gated:
 
-FLOAT MODE (the CLI / 100 TB path, rfi.mwa_strategy_mask_pols_float
-with rfi.MWA_FLOAT_KW — AOFlagger's own statistics: Winsorized-mode
+FLOAT MODE (the CLI / 100 TB path, rfi.mwa_strategy_mask_pols_float,
+whose one built-in setting is AOFlagger's own statistics: Winsorized-mode
 noise, the 1.5^log2(M)/M threshold decay, the full 1..256 window
 ladder, float Gaussian background fit at full frequency resolution,
 uncentered thresholds per the C++ semantics, pol-chained priors).
 Measured 2026-08 (round 7) at the published defaults (sensitivity 6):
   agreement 0.9837, recall 0.9195, precision 0.625
   (tp=400, fp=240, fn=35 of 16896 cells)
-Residual breakdown (tools/margin_mwa_float.py, replayed at the SHIPPED
-MWA_FLOAT_KW configuration — center=False, interleave, wmode —
+Residual breakdown (tools/margin_mwa_float.py, replaying the shipped
+ladder — uncentered, time-then-frequency per length, Winsorized mode —
 regenerated round 8): EVERY disagreeing cell — fp and fn both — sits
 within 2x of the final-pass decision threshold (fp quartiles
 0.72/0.87/1.01, p95 1.18; fn 0.67/0.73/0.85, p95 0.92);
@@ -31,23 +31,24 @@ the largest coherent block is the legacy DC-spike channel
 the rest are isolated single-cell margins spread over
 chan % 32 = 3..28.
 
-IRREDUCIBILITY, knobs (round 6, tools/tune_mwa_float.py::pareto_grid):
+IRREDUCIBILITY, knobs (round 6, tools/tune_mwa_float.py::pareto_grid;
+the tool and the settings it swept are deleted, see git history):
 the full grid over the plausible published-default knobs — sensitivity
 6/6.2/6.35/6.5 x final_ts_rms 3.5/4/4.5 x SIR eta 0.1/0.2 x
 background-fit scope (masked vs self-subtracting) x noise estimator
 (wmode/wstd/mad) — contains NO configuration with agreement >= 0.99 at
 recall >= 0.90, and eta/final_ts_rms are inert here.
 
-IRREDUCIBILITY, structure (round 7, tools/aof_port_probe.py): the
-DISCRETE structural space of the public AOFlagger source — C++ pass
-order (all time lengths then all frequency lengths,
-thresholdconfig.cpp) vs interleaved; uncentered vs median-centered
-thresholds; the C++ exclude-form window mean vs the paper's
-substitute-chi form; the Lua channel-RMS-on-copy dataflow vs
-sequential; independent vs chained polarization masks; iteration
-count 2/3/4 x step 1.5/2.0; resize 1/3 — ALSO contains no config at
-agreement >= 0.99 with recall >= 0.90. Front: 0.9864 @ recall 0.883;
-best at recall >= 0.90 is the shipped 0.9837 @ 0.9195.
+IRREDUCIBILITY, structure (round 7, tools/aof_port_probe.py, likewise
+deleted — see git history): the DISCRETE structural space of the
+public AOFlagger source — C++ pass order (all time lengths then all
+frequency lengths, thresholdconfig.cpp) vs interleaved; uncentered
+vs median-centered thresholds; the C++ exclude-form window mean vs
+the paper's substitute-chi form; the Lua channel-RMS-on-copy
+dataflow vs sequential; independent vs chained polarization masks;
+iteration count 2/3/4 x step 1.5/2.0; resize 1/3 — ALSO contains no
+config at agreement >= 0.99 with recall >= 0.90. Front: 0.9864 @
+recall 0.883; best at recall >= 0.90 is the shipped 0.9837 @ 0.9195.
 
 FIRST DIVERGING INTERMEDIATE (round 7 cell-level trace): at the DC
 column, cotter's 352-of-528 flag pattern is NON-MONOTONE in the
@@ -136,8 +137,7 @@ def test_mwa_float_agreement_vs_cotter_golden():
     """The CLI-default float mode: the round-5 recall gate (the round-4
     residual 0.726 -> measured 0.9218)."""
     data = load_golden()
-    tp, fp, fn, tn = _confusion(rfi.mwa_strategy_mask_pols_float, data,
-                                **rfi.MWA_FLOAT_KW)
+    tp, fp, fn, tn = _confusion(rfi.mwa_strategy_mask_pols_float, data)
     n = tp + fp + fn + tn
     agree = (tp + tn) / n
     recall = tp / (tp + fn)
@@ -179,7 +179,7 @@ def test_mwa_float_autos_stay_clean_in_band_body():
     data = load_golden()
     pol_imgs, fl = data[(1, 1)]
     assert fl.sum() == 0
-    det = rfi.mwa_strategy_mask_pols_float(pol_imgs, **rfi.MWA_FLOAT_KW)
+    det = rfi.mwa_strategy_mask_pols_float(pol_imgs)
     edgeish = {0, 1, 2, 3, 16, 28, 29, 30, 31}
     body = np.array([c % 32 not in edgeish for c in range(768)])
     assert det[:, body].mean() < 0.01, det[:, body].mean()
@@ -283,9 +283,7 @@ def test_mwa_float_second_golden_1196175296(spark):
             img[rows, cs] = np.hypot(g[f"{p}_re"].to_numpy(),
                                      g[f"{p}_im"].to_numpy())
             pol_imgs[p] = img
-        det = rfi.mwa_strategy_mask_pols_float(pol_imgs,
-                                               chan_values=chans,
-                                               **rfi.MWA_FLOAT_KW)
+        det = rfi.mwa_strategy_mask_pols_float(pol_imgs)
         n_detected += int(det.sum())
         n_cells += det.size
         n_bl += 1

@@ -157,8 +157,7 @@ def test_f9e_channel_occupancy_vs_cotter_golden():
     for (a1, a2), (pol_imgs, fl) in data.items():
         if a1 == a2:
             continue
-        det = rfi.mwa_strategy_mask_pols_float(pol_imgs,
-                                               **rfi.MWA_FLOAT_KW)
+        det = rfi.mwa_strategy_mask_pols_float(pol_imgs)
         det_cnt += det.sum(axis=0)
         gold_cnt += fl.sum(axis=0)
         rows += fl.shape[0]

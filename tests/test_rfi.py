@@ -88,8 +88,8 @@ def test_spark_operator_minimal(spark):
 
 
 def test_existing_flags_preserved(spark):
-    """re_apply_existing=True ORs detection with prior flags
-    (src/flags.rs:414-418)."""
+    """Detection ORs into the prior flags, the reference's
+    re_apply_existing=True (src/flags.rs:414-418)."""
     rows = [Row(t=t, ant1=0, ant2=1, chan=c,
                 xx_re=1.0, xx_im=0.0, xy_re=0.0, xy_im=0.0,
                 yx_re=0.0, yx_im=0.0, yy_re=1.0, yy_im=0.0,

@@ -21,16 +21,12 @@ def cell_margins(pol_imgs, present=None):
     """Max over pols of (final-pass residual / chi_1) per cell — the
     m=1 decision margin of the FINAL full-sensitivity pass (>1 flags).
 
-    The ladder replay uses the SHIPPED production configuration
-    (rfi.MWA_FLOAT_KW), not sumthreshold_float's defaults — ADVICE r7:
-    a replay at center=True while production ships center=False would
-    quote margins for a configuration that no longer runs."""
+    The replay runs the shipped ladder's own functions
+    (rfi.sumthreshold_float, rfi.lowpass_float) with no settings of
+    its own, so the margins are those of the configuration that runs;
+    the residual is thresholded uncentered, as the ladder does."""
     shape = next(iter(pol_imgs.values())).shape
     present = np.ones(shape, bool) if present is None else present
-    # the subset of MWA_FLOAT_KW that parameterizes the ladder itself
-    st_kw = {k: v for k, v in rfi.MWA_FLOAT_KW.items()
-             if k in ("windows", "form", "two_sided", "noise_est",
-                      "decay", "center")}
     best = np.full(shape, -np.inf)
     for p in rfi.MWA_POLS:
         img = np.asarray(pol_imgs[p], dtype=np.float64)
@@ -40,18 +36,12 @@ def cell_margins(pol_imgs, present=None):
         for i in range(1, rfi.AOF_ITERS):
             factor = rfi.AOF_STEP ** (rfi.AOF_ITERS - i)
             work = rfi.sumthreshold_float(resid, work, present,
-                                          6.0 * factor, **st_kw)
-            bg = rfi.lowpass_resized_float(img, ~work & present,
-                                           rf=rfi.MWA_FLOAT_KW["rf"])
-            resid = img - bg
-        vals = resid[~work]
-        mode = rfi.winsorized_mode(vals)
+                                          6.0 * factor)
+            resid = img - rfi.lowpass_float(img, ~work & present)
+        mode = rfi.winsorized_mode(resid[~work])
         if mode <= 0:
             continue
-        if st_kw.get("center", True):
-            resid = resid - float(np.median(vals))
-        ratio = resid / (6.0 * mode)
-        best = np.maximum(best, ratio)
+        best = np.maximum(best, resid / (6.0 * mode))
     return best
 
 
@@ -61,8 +51,7 @@ def main():
     for (a1, a2), (pol_imgs, fl) in data.items():
         if a1 == a2:
             continue
-        det = rfi.mwa_strategy_mask_pols_float(pol_imgs,
-                                               **rfi.MWA_FLOAT_KW)
+        det = rfi.mwa_strategy_mask_pols_float(pol_imgs)
         marg = cell_margins(pol_imgs)
         fp = det & ~fl
         fn = ~det & fl
