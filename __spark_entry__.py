@@ -595,7 +595,9 @@ def _out_dir() -> str:
 _GPUBOX_SHAPE = dict(num_cc=3, num_ants=4, num_fine=8, num_timesteps=8)
 
 
-def _q_gpubox_scan(spark, sf_dir):
+def _gpubox_fixture_glob() -> str:
+    """Write the s1b/s1c synthetic gpubox set (``_GPUBOX_SHAPE``) and
+    return its glob."""
     import os
     import tempfile
     from birli_spark.sources import gpubox
@@ -606,7 +608,12 @@ def _q_gpubox_scan(spark, sf_dir):
             os.path.join(d, f"gpubox_{cc:02d}.fits"), cc,
             _GPUBOX_SHAPE["num_ants"], _GPUBOX_SHAPE["num_fine"],
             _GPUBOX_SHAPE["num_timesteps"], obsid=1297526432)
-    return gpubox.read_gpubox(spark, d + "/*.fits")
+    return d + "/*.fits"
+
+
+def _q_gpubox_scan(spark, sf_dir):
+    from birli_spark.sources import gpubox
+    return gpubox.read_gpubox(spark, _gpubox_fixture_glob())
 
 
 #: bench-scale gpubox set: 24 coarse channels (the real MWA count),
@@ -645,18 +652,10 @@ def _q_real_format_e2e(spark, sf_dir):
 def _q_gpubox_datasource(spark, sf_dir):
     """Same scan through the registered Python DataSource
     (spark.read.format('gpubox')) — shares s1b's oracle."""
-    import os
-    import tempfile
     from birli_spark.sources import gpubox
-    d = os.path.join(tempfile.gettempdir(), "birli_spark_gpubox")
-    os.makedirs(d, exist_ok=True)
-    for cc in range(_GPUBOX_SHAPE["num_cc"]):
-        gpubox.write_gpubox(
-            os.path.join(d, f"gpubox_{cc:02d}.fits"), cc,
-            _GPUBOX_SHAPE["num_ants"], _GPUBOX_SHAPE["num_fine"],
-            _GPUBOX_SHAPE["num_timesteps"], obsid=1297526432)
+    path_glob = _gpubox_fixture_glob()
     gpubox.register_gpubox_source(spark)
-    return spark.read.format("gpubox").load(d + "/*.fits")
+    return spark.read.format("gpubox").load(path_glob)
 
 
 def _q_aocal_scan(spark, sf_dir):

@@ -55,24 +55,6 @@ def rot_im(re: str, im: str, cos_t: str, sin_t: str) -> str:
     return f"(({re}) * ({sin_t}) + ({im}) * ({cos_t}))"
 
 
-def phasor_rotation(angle_expr: str, pols: tuple[str, ...] = POLS,
-                    prefix: str = "") -> dict[str, str]:
-    """All-pol phasor rotation v' = v * e^{i*angle} as a col→fragment map.
-
-    Used by the cable-length correction (per-pol angle; reference
-    src/corrections.rs:129-139) and the geometric correction (shared angle
-    for all pols; src/corrections.rs:279-284). ``angle_expr`` may reference
-    per-pol columns via ``{pol}`` format placeholders.
-    """
-    out: dict[str, str] = {}
-    for p in pols:
-        a = angle_expr.format(pol=p)
-        cos_t, sin_t = f"COS({a})", f"SIN({a})"
-        out[f"{p}_re"] = f32(rot_re(f"{prefix}{p}_re", f"{prefix}{p}_im", cos_t, sin_t))
-        out[f"{p}_im"] = f32(rot_im(f"{prefix}{p}_re", f"{prefix}{p}_im", cos_t, sin_t))
-    return out
-
-
 def jones_sandwich(v: dict[str, str], j1: dict[str, str], j2: dict[str, str]) -> dict[str, str]:
     """V' = J1 · V · J2^H — the DI-calibration 2x2 complex matrix sandwich
     (reference src/calibration.rs:111-115), expanded to 8 real fragments.

@@ -925,9 +925,12 @@ def flag_rfi_mwa(vis: DataFrame, base_sensitivity: float = 6.0,
     The island runs the AOFlagger-statistics float mode
     (:func:`mwa_strategy_mask_pols_float`) — measured at 0.9837 cell
     agreement / 0.9195 recall against the reference's own cotter
-    mwa-default golden, with every disagreeing cell within 2x of the
-    decision threshold (tests/test_golden_mwa_flags.py, which also
-    compares the integer-tick twin :func:`mwa_strategy_mask_pols`)."""
+    mwa-default golden (tests/test_golden_mwa_flags.py, which also
+    compares the integer-tick twin :func:`mwa_strategy_mask_pols`).
+    The earlier claim that every disagreeing cell sits within 2x of the
+    decision threshold is unverified: the margin replay behind it
+    skipped the timestep/channel-RMS steps and the polarization
+    chaining, and it cannot be re-measured without the cotter golden."""
     def detect(pdf, image, present, prior):
         pol_imgs = {p: image(np.hypot(
             pdf[f"{p}_re"].to_numpy(dtype=np.float64),

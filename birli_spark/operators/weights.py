@@ -13,11 +13,6 @@ def weight_factor(fine_chan_width_hz: float, int_time_s: float) -> float:
     return (fine_chan_width_hz / 10_000.0) * int_time_s
 
 
-def fill_weights(vis: DataFrame, w0: float) -> DataFrame:
-    """W3 — constant weight fill per chunk (reference src/cli.rs:1853)."""
-    return vis.withColumn("weight", F.lit(float(w0)))
-
-
 def bake_flags_into_weights(vis: DataFrame) -> DataFrame:
     """F10/W2 — encode the flag as the weight's sign just before
     averaging/write: ``weight = flag ? -|w| : |w|``

@@ -111,7 +111,7 @@ def scan_dir(num_t: int = NUM_T) -> str:
     if not _session.marker_valid(marker):
         os.makedirs(d, exist_ok=True)
         for cc in range(NUM_CC):
-            gpubox.write_gpubox_fast(
+            gpubox.write_gpubox(
                 os.path.join(d, f"gpubox_{cc:02d}.fits"), cc,
                 NUM_ANTS, NUM_FINE, num_t, obsid=int(GPS0))
         _session.write_marker(marker)

@@ -111,12 +111,9 @@ def get_spark(app_name: str = "birli_spark", cpus: int | None = None,
         # planner relaxation — results unchanged. Safe here because the
         # shared subset keys are high-cardinality (baselines), so
         # subset co-partitioning cannot concentrate a join onto few
-        # partitions; flip SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS=1 to
-        # restore the default on a cluster where a skewed-subset join
-        # ever appears.
-        .config("spark.sql.requireAllClusterKeysForCoPartition",
-                os.environ.get("SPARK_GRAFT_REQUIRE_ALL_CLUSTER_KEYS",
-                               "0") == "1" and "true" or "false")
+        # partitions; a cluster where a skewed-subset join ever appears
+        # restores the default through get_spark(extra_conf=...).
+        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # warehouse for saveAsTable (the bucketed tables of
         # tests/test_bucketing.py): a tmp path, never the caller's cwd —
         # a fact-sized table would otherwise land as a spark-warehouse
@@ -159,10 +156,9 @@ def _tune_malloc() -> None:
     to the OS — the right trade on any long-lived reused worker
     (spark.python.worker.reuse is Spark's default), not just here.
     Exported to the child tree (JVM -> Python workers) before the JVM
-    launches, and applied to the current process via mallopt.
-    Set SPARK_GRAFT_MALLOC_TUNE=0 to disable."""
+    launches, and applied to the current process via mallopt."""
     global _MALLOC_TUNED
-    if _MALLOC_TUNED or os.environ.get("SPARK_GRAFT_MALLOC_TUNE") == "0":
+    if _MALLOC_TUNED:
         return
     _MALLOC_TUNED = True
     os.environ.setdefault("MALLOC_MMAP_MAX_", "0")

@@ -93,6 +93,3 @@ def read_header(out_dir: str) -> dict:
 def read_channel_occupancy(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, "ch_occ"))
 
-
-def read_baseline_occupancy(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "bl_occ"))

@@ -363,7 +363,7 @@ def _write_ms_trees(spark: SparkSession, rows: DataFrame, out_dir: str,
     f0s = {o: os.path.join(path, "table.f0")
            for o, (path, _) in trees.items()}
 
-    def write_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tb = int(key[0])
         o, first = block0_b.value[tb]
         vals, g = _block_vals(pdf, chan_b.value, interval,

@@ -206,7 +206,7 @@ def write_mwaf_set_distributed(flags: DataFrame, out_dir: str,
             nbl = nbl if nbl is not None else int(mx[2]) + 1
         nch, nsc, nb = n_chans, nscans, nbl
 
-        def write_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def write_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             (cc,) = key
             blob = _mwaf_file_bytes(pdf, int(cc), nch, nsc, nb,
                                     obsid, gps_start, software)

@@ -153,10 +153,6 @@ def read_uvfits(path: str) -> tuple[dict, np.ndarray, np.ndarray]:
         arr[:, 5:].reshape(g, n_chan, 4, 3).astype(np.float64))
 
 
-def f32_expr(e: str) -> str:  # re-export for sink callers
-    return f32(e)
-
-
 #: pol order in the UVFITS data cube (reference/marlu write XX YY XY YX)
 UVFITS_POLS = ("xx", "yy", "xy", "yx")
 assert set(UVFITS_POLS) == set(POLS)

@@ -1,11 +1,15 @@
 """Minimal FITS primitives shared by the UVFITS sink and the gpubox
-source: 80-char header cards, 2880-byte block padding, and a header
-parser. Pure numpy/bytes — no astropy in this environment; the subset
-implemented (SIMPLE/IMAGE HDUs, BITPIX=-32, random groups) follows the
-published FITS 4.0 standard.
+source: 80-char header cards, 2880-byte block padding, IMAGE HDUs and
+a header parser. Pure numpy/bytes — no astropy in this environment; the
+subset implemented (SIMPLE/IMAGE HDUs, BITPIX=-32, random groups)
+follows the published FITS 4.0 standard.
 """
 
 from __future__ import annotations
+
+import re as _re
+
+import numpy as _np
 
 BLOCK = 2880
 
@@ -34,6 +38,19 @@ def end_card() -> bytes:
 def pad_block(b: bytes, fill: bytes = b" ") -> bytes:
     rem = len(b) % BLOCK
     return b if rem == 0 else b + fill * (BLOCK - rem)
+
+
+def image_hdu(data: _np.ndarray, *cards: bytes) -> bytes:
+    """One IMAGE extension HDU: the XTENSION..GCOUNT cards for ``data``
+    (BITPIX from its dtype, NAXIS1 its last axis), then ``cards``, then
+    the big-endian payload padded to a block."""
+    bitpix = {"f": -8, "i": 8}[data.dtype.kind] * data.dtype.itemsize
+    head = [card("XTENSION", "IMAGE"), card("BITPIX", bitpix),
+            card("NAXIS", data.ndim)]
+    head += [card(f"NAXIS{i}", n) for i, n in enumerate(data.shape[::-1], 1)]
+    head += [card("PCOUNT", 0), card("GCOUNT", 1), *cards, end_card()]
+    payload = data.astype(data.dtype.newbyteorder(">")).tobytes()
+    return pad_block(b"".join(head)) + pad_block(payload, b"\x00")
 
 
 def _card_value(text: str):
@@ -130,10 +147,6 @@ def skip_data(off: int, header: dict) -> int:
 
 
 # ------------------------------------------------- binary table parsing ---
-
-import re as _re
-
-import numpy as _np
 
 _TFORM_BYTES = {"L": 1, "B": 1, "I": 2, "J": 4, "K": 8,
                 "E": 4, "D": 8, "A": 1}

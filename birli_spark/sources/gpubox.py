@@ -62,7 +62,8 @@ def write_gpubox(path: str, cc_idx: int, num_ants: int, num_fine: int,
                  burst: tuple[int, int, float] | None = None) -> None:
     """Write a synthetic gpubox file: primary metadata HDU + one IMAGE HDU
     per timestep of shape (n_baselines, num_fine*8) f32, coordinate-
-    encoded values. ``skip_timesteps`` omits HDUs to exercise the
+    encoded values (:func:`encoded_value` of the GLOBAL channel, so files
+    differ per cc). ``skip_timesteps`` omits HDUs to exercise the
     missing-slab path (S2). ``t_start`` offsets the TSIDX cards — a
     later time *segment* of the same observation (the correlator's
     batch-01, batch-02, … files). ``burst`` = (t_global, chan_global,
@@ -70,6 +71,9 @@ def write_gpubox(path: str, cc_idx: int, num_ants: int, num_fine: int,
     every baseline — an injected RFI event for the live-monitoring
     example."""
     n_bl = len(baseline_pairs(num_ants))
+    chan = cc_idx * num_fine + np.arange(num_fine)
+    base = (np.arange(n_bl)[:, None, None] * 256 + chan[None, :, None] * 16
+            + np.arange(FLOATS_PER_CHAN)[None, None, :]).astype(np.float64)
     blobs = [fc.pad_block(b"".join([
         fc.card("SIMPLE", True), fc.card("BITPIX", 8), fc.card("NAXIS", 0),
         fc.card("OBSID", obsid), fc.card("CC_IDX", cc_idx),
@@ -80,26 +84,13 @@ def write_gpubox(path: str, cc_idx: int, num_ants: int, num_fine: int,
         if t in skip_timesteps:
             continue
         tg = t_start + t
-        hdr = fc.pad_block(b"".join([
-            fc.card("XTENSION", "IMAGE"), fc.card("BITPIX", -32),
-            fc.card("NAXIS", 2), fc.card("NAXIS1", num_fine * FLOATS_PER_CHAN),
-            fc.card("NAXIS2", n_bl), fc.card("PCOUNT", 0),
-            fc.card("GCOUNT", 1),
+        data = base + tg * 4096
+        if burst is not None and tg == burst[0]:
+            data[:, chan == burst[1], :] += burst[2]
+        blobs.append(fc.image_hdu(
+            data.reshape(n_bl, num_fine * FLOATS_PER_CHAN).astype(">f4"),
             fc.card("MWATIME", int(gps_start + tg * int_time_s)),
-            fc.card("TSIDX", tg), fc.end_card()]))
-        data = np.empty((n_bl, num_fine * FLOATS_PER_CHAN), dtype=">f4")
-        for bl in range(n_bl):
-            for chan in range(num_fine):
-                for k in range(FLOATS_PER_CHAN):
-                    # encode the GLOBAL channel so files differ per cc
-                    v = encoded_value(
-                        tg, bl, cc_idx * num_fine + chan, k)
-                    if (burst is not None and tg == burst[0]
-                            and cc_idx * num_fine + chan == burst[1]):
-                        v += burst[2]
-                    data[bl, chan * FLOATS_PER_CHAN + k] = v
-        blobs.append(hdr)
-        blobs.append(fc.pad_block(data.tobytes(), b"\x00"))
+            fc.card("TSIDX", tg)))
     with open(path, "wb") as f:
         f.write(b"".join(blobs))
 
@@ -586,37 +577,3 @@ try:
 
 except ImportError:  # pragma: no cover — pyspark < 4
     GpuboxStreamReader = None
-
-
-def write_gpubox_fast(path: str, cc_idx: int, num_ants: int, num_fine: int,
-                      num_timesteps: int, obsid: int = 0,
-                      gps_start: float = 0.0,
-                      int_time_s: float = 1.0) -> None:
-    """Vectorized synthetic gpubox writer for bench-scale files (same
-    coordinate encoding as :func:`write_gpubox`, numpy-broadcast fill —
-    no per-cell Python)."""
-    n_bl = len(baseline_pairs(num_ants))
-    blobs = [fc.pad_block(b"".join([
-        fc.card("SIMPLE", True), fc.card("BITPIX", 8), fc.card("NAXIS", 0),
-        fc.card("OBSID", obsid), fc.card("CC_IDX", cc_idx),
-        fc.card("NANTS", num_ants), fc.card("NCHANS", num_fine),
-        fc.card("NSCANS", num_timesteps), fc.card("INTTIME", int_time_s),
-        fc.card("GPSSTART", gps_start), fc.end_card()]))]
-    bl = np.arange(n_bl)[:, None, None]
-    ch = cc_idx * num_fine + np.arange(num_fine)[None, :, None]
-    k = np.arange(FLOATS_PER_CHAN)[None, None, :]
-    base = (bl * 256 + ch * 16 + k).astype(np.float64)
-    for t in range(num_timesteps):
-        hdr = fc.pad_block(b"".join([
-            fc.card("XTENSION", "IMAGE"), fc.card("BITPIX", -32),
-            fc.card("NAXIS", 2), fc.card("NAXIS1", num_fine * FLOATS_PER_CHAN),
-            fc.card("NAXIS2", n_bl), fc.card("PCOUNT", 0),
-            fc.card("GCOUNT", 1),
-            fc.card("MWATIME", int(gps_start + t * int_time_s)),
-            fc.card("TSIDX", t), fc.end_card()]))
-        data = (base + t * 4096).reshape(
-            n_bl, num_fine * FLOATS_PER_CHAN).astype(">f4")
-        blobs.append(hdr)
-        blobs.append(fc.pad_block(data.tobytes(), b"\x00"))
-    with open(path, "wb") as f:
-        f.write(b"".join(blobs))

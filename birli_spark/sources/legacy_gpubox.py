@@ -197,6 +197,47 @@ def iter_legacy_scans(content: bytes):
         off = fc.skip_data(off2, hdr)
 
 
+def scan_hdu(scan: np.ndarray, unix_s: int, millitim: int = 0) -> bytes:
+    """One legacy scan HDU, the container :func:`iter_legacy_scans`
+    reads: a ZIMAGE bintable of GZIP f64 tiles, one per fine channel of
+    ``scan[fine_chan][slot][re, im]``, with an empty COMPRESSED_DATA
+    column as cfitsio writes float tiles. BSCALE carries the real
+    archive's 0.125 count grid, which the reference's Van Vleck scale
+    derivation multiplies by (src/van_vleck.rs:318-329)."""
+    nf, n_slots, _ = scan.shape
+    znaxis1 = n_slots * 2
+    heap_chunks = []
+    rows = np.zeros((nf, 16), dtype=np.uint8)
+    off = 0
+    for r in range(nf):
+        comp = zlib.compress(scan[r].astype(">f8").tobytes(), 1)
+        heap_chunks.append(comp)
+        rows[r, 8:16] = np.frombuffer(
+            np.array([len(comp), off], dtype=">u4").tobytes(),
+            dtype=np.uint8)
+        off += len(comp)
+    heap = b"".join(heap_chunks)
+    cards = [
+        fc.card("XTENSION", "BINTABLE"), fc.card("BITPIX", 8),
+        fc.card("NAXIS", 2), fc.card("NAXIS1", 16),
+        fc.card("NAXIS2", nf), fc.card("PCOUNT", len(heap)),
+        fc.card("GCOUNT", 1), fc.card("TFIELDS", 2),
+        fc.card("TTYPE1", "COMPRESSED_DATA"),
+        fc.card("TFORM1", "1PB(0)"),
+        fc.card("TTYPE2", "GZIP_COMPRESSED_DATA"),
+        fc.card("TFORM2", f"1PB({max(map(len, heap_chunks))})"),
+        fc.card("ZIMAGE", True), fc.card("ZCMPTYPE", "GZIP_1"),
+        fc.card("ZBITPIX", -64), fc.card("ZNAXIS", 2),
+        fc.card("ZNAXIS1", znaxis1), fc.card("ZNAXIS2", nf),
+        fc.card("ZTILE1", znaxis1), fc.card("ZTILE2", 1),
+        fc.card("BSCALE", 0.125), fc.card("BZERO", 0.0),
+        fc.card("TIME", unix_s), fc.card("MILLITIM", millitim),
+        fc.end_card(),
+    ]
+    return (fc.pad_block(b"".join(cards))
+            + fc.pad_block(rows.tobytes() + heap, fill=b"\x00"))
+
+
 _LEGACY_SCHEMA = ("chan int, gpubox int, unix_ms bigint, ant1 int, "
                   "ant2 int, bl int, fc int, "
                   "xx_re double, xx_im double, xy_re double, xy_im double, "

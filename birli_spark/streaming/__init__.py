@@ -22,18 +22,15 @@ def state_partitions_scope(spark):
     the st14 probe (tools/st14_probe.py, sf0.1) measured steady-state
     24.4 s at 32 partitions vs 14.0/15.9/11.4 s at 16/8/4 — so size
     the count by STATE VOLUME, not core count. These finite-feed
-    harnesses carry <1 MB of state (hundreds-to-thousands of keys):
-    local default 8. Real deployments size by keys x bytes per key /
-    target state per store via SPARK_GRAFT_STREAM_PARTITIONS.
+    harnesses carry <1 MB of state (hundreds-to-thousands of keys), so
+    the count is fixed at 8.
     """
-    import os
     from contextlib import contextmanager
 
     @contextmanager
     def scope():
-        n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
         old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n)
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             yield
         finally:

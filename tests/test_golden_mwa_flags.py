@@ -21,15 +21,15 @@ uncentered thresholds per the C++ semantics, pol-chained priors).
 Measured 2026-08 (round 7) at the published defaults (sensitivity 6):
   agreement 0.9837, recall 0.9195, precision 0.625
   (tp=400, fp=240, fn=35 of 16896 cells)
-Residual breakdown (tools/margin_mwa_float.py, replaying the shipped
-ladder — uncentered, time-then-frequency per length, Winsorized mode —
-regenerated round 8): EVERY disagreeing cell — fp and fn both — sits
-within 2x of the final-pass decision threshold (fp quartiles
-0.72/0.87/1.01, p95 1.18; fn 0.67/0.73/0.85, p95 0.92);
-the largest coherent block is the legacy DC-spike channel
-(chan % 32 == 16) where cotter itself flags only 352 of 528 cells, and
-the rest are isolated single-cell margins spread over
-chan % 32 = 3..28.
+Residual breakdown: the largest coherent block of disagreeing cells is
+the legacy DC-spike channel (chan % 32 == 16), where cotter itself
+flags only 352 of 528 cells; the rest are isolated single cells spread
+over chan % 32 = 3..28. An earlier margin replay reported every
+disagreeing cell within 2x of the final-pass decision threshold. That
+claim is UNVERIFIED: the replay skipped the ladder's timestep-RMS and
+channel-RMS steps and its polarization chaining, so its residuals
+belonged to a ladder that does not run (the replay tool is deleted),
+and it cannot be re-measured without the cotter golden.
 
 IRREDUCIBILITY, knobs (round 6, tools/tune_mwa_float.py::pareto_grid;
 the tool and the settings it swept are deleted, see git history):
@@ -58,8 +58,8 @@ left unflagged by cotter while 1.03x spikes are flagged). No per-cell
 statistic can reproduce a non-monotone decision set, so the divergence
 enters BEFORE the threshold compare: in the iteration-1 mask state
 that feeds the iteration-2 masked background fit and noise pool.
-Those early decisions are themselves threshold-marginal (within 2x),
-so exact agreement requires bit-level replication of the FFI'd C++
+If those early decisions are threshold-marginal (unverified, see
+above), exact agreement requires bit-level replication of the FFI'd C++
 float pipeline's early-pass arithmetic — the published structure and
 knobs are exhausted above. This is the committed arithmetic-level
 closure of the round-6 ask.

@@ -200,22 +200,15 @@ def write_mwax(path: str, hdu0: int, n_scans: int = 2, num_ants: int = 2,
         fc.card("CORR_VER", 2), fc.card("NFINECHS", num_fine),
         fc.card("NINPUTS", 2 * num_ants), fc.end_card()]))]
 
-    def hdu(bitpix, naxis1, data, s):
-        blobs.append(fc.pad_block(b"".join([
-            fc.card("XTENSION", "IMAGE"), fc.card("BITPIX", bitpix),
-            fc.card("NAXIS", 2), fc.card("NAXIS1", naxis1),
-            fc.card("NAXIS2", n_bl), fc.card("PCOUNT", 0),
-            fc.card("GCOUNT", 1), fc.card("TIME", obs_unix),
-            fc.card("MILLITIM", s * 500), fc.end_card()])))
-        blobs.append(fc.pad_block(data.tobytes(), b"\x00"))
-
     offset = (np.arange(n_bl)[:, None] * 16
               + np.arange(num_fine * 8)[None, :])
     for s in range(n_scans):
-        hdu(32, num_fine * 8,
-            ((0x41 << 16) + (hdu0 + s) * 256 + offset).astype(">i4"), s)
+        cards = (fc.card("TIME", obs_unix), fc.card("MILLITIM", s * 500))
+        blobs.append(fc.image_hdu(
+            ((0x41 << 16) + (hdu0 + s) * 256 + offset).astype(">i4"), *cards))
         if not (truncate and s == n_scans - 1):
-            hdu(-32, 4, np.ones((n_bl, 4), dtype=">f4"), s)
+            blobs.append(fc.image_hdu(np.ones((n_bl, 4), dtype=">f4"),
+                                      *cards))
     with open(path, "wb") as f:
         f.write(b"".join(blobs))
 

@@ -21,8 +21,8 @@ Construction:
   is itself validated bit-exactly against the reference's pyuvdata
   golden for 1196175296,
 - container: tile-compressed FITS (ZIMAGE bintable, GZIP f64 tiles,
-  one tile per fine channel) — the same physical shape as the real
-  legacy files our reader decodes,
+  one tile per fine channel, written by legacy_gpubox.scan_hdu) — the
+  same physical shape as the real legacy files our reader decodes,
 - times: TIME/MILLITIM per scan from the obs GPS schedule
   (leap-corrected to unix),
 - cells not covered by the (partial) dump are zero; corrections are
@@ -37,7 +37,6 @@ from __future__ import annotations
 import csv
 import os
 import sys
-import zlib
 
 import numpy as np
 
@@ -60,10 +59,6 @@ PYUV_NONE_CSV = f"{REF_DIR}/pyuvdata_1254670392.none.csv"
 #: value-matching the pyuvdata dump against the Cotter dump's chan
 #: blocks (and consistent with sky_channel_order)
 PYUV_SKY_CC = 23
-#: the real archive's gpubox BSCALE: the dumps' values sit on an exact
-#: 0.125 grid (int counts x 1/8), and the reference's Van Vleck scale
-#: derivation multiplies by it (src/van_vleck.rs:318-329)
-GPUBOX_BSCALE = 0.125
 
 #: UVFITS DATE group params are UTC JDs; GPS second 0 is JD 2444244.5
 GPS_EPOCH_JD = 2444244.5
@@ -177,7 +172,7 @@ def build(dest_dir: str) -> dict:
         for t in range(n_scans):
             unix_s = int(timeutil.gps_to_unix_s(
                 obsid + offset_s + t * int_s))
-            parts.append(_scan_hdu(tiles[(t, gp)], unix_s))
+            parts.append(lg.scan_hdu(tiles[(t, gp)], unix_s))
         path = os.path.join(
             dest_dir, f"{obsid}_{stamp}_gpubox{gp:02d}_00.fits")
         with open(path, "wb") as f:
@@ -194,44 +189,6 @@ def _primary_hdu(obsid: int) -> bytes:
              fc.card("COMMENT", None),
              fc.end_card()]
     return fc.pad_block(b"".join(cards))
-
-
-def _scan_hdu(scan: np.ndarray, unix_s: int) -> bytes:
-    """One ZIMAGE bintable HDU: GZIP f64 tiles, one per fine channel."""
-    nf, n_slots, _ = scan.shape
-    znaxis1 = n_slots * 2
-    heap_chunks = []
-    rows = np.zeros((nf, 16), dtype=np.uint8)
-    off = 0
-    for r in range(nf):
-        comp = zlib.compress(
-            scan[r].astype(">f8").tobytes(), 1)
-        heap_chunks.append(comp)
-        rows[r, 8:16] = np.frombuffer(
-            np.array([len(comp), off], dtype=">u4").tobytes(),
-            dtype=np.uint8)
-        off += len(comp)
-    heap = b"".join(heap_chunks)
-    cards = [
-        fc.card("XTENSION", "BINTABLE"), fc.card("BITPIX", 8),
-        fc.card("NAXIS", 2), fc.card("NAXIS1", 16),
-        fc.card("NAXIS2", nf), fc.card("PCOUNT", len(heap)),
-        fc.card("GCOUNT", 1), fc.card("TFIELDS", 2),
-        fc.card("TTYPE1", "COMPRESSED_DATA"),
-        fc.card("TFORM1", "1PB(0)"),
-        fc.card("TTYPE2", "GZIP_COMPRESSED_DATA"),
-        fc.card("TFORM2", f"1PB({max(map(len, heap_chunks))})"),
-        fc.card("ZIMAGE", True), fc.card("ZCMPTYPE", "GZIP_1"),
-        fc.card("ZBITPIX", -64), fc.card("ZNAXIS", 2),
-        fc.card("ZNAXIS1", znaxis1), fc.card("ZNAXIS2", nf),
-        fc.card("ZTILE1", znaxis1), fc.card("ZTILE2", 1),
-        fc.card("BSCALE", GPUBOX_BSCALE), fc.card("BZERO", 0.0),
-        fc.card("TIME", unix_s), fc.card("MILLITIM", 0),
-        fc.end_card(),
-    ]
-    header = fc.pad_block(b"".join(cards))
-    data = fc.pad_block(rows.tobytes() + heap, fill=b"\x00")
-    return header + data
 
 
 if __name__ == "__main__":

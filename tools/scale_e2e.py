@@ -47,7 +47,6 @@ import os
 import sys
 import threading
 import time
-import zlib
 
 import numpy as np
 
@@ -55,6 +54,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from birli_spark.functions import timeutil  # noqa: E402
 from birli_spark.sources import fitscore as fc  # noqa: E402
+from birli_spark.sources import legacy_gpubox  # noqa: E402
 
 REF_METAFITS = ("/root/reference/tests/data/1196175296_mwa_ord/"
                 "1196175296.metafits")
@@ -149,43 +149,8 @@ def patched_metafits(dest_dir: str, n_scans: int) -> str:
     return out
 
 
-def _scan_hdu(scan_f64: np.ndarray, unix_s: int, millitim: int) -> bytes:
-    """One ZIMAGE bintable scan HDU (GZIP f64 tiles, one per fine
-    channel) — the container shape of tools/make_1254670392_fixture
-    and the reference's own shipped legacy fixtures."""
-    nf, n_slots, _ = scan_f64.shape
-    znaxis1 = n_slots * 2
-    heap_chunks = []
-    rows = np.zeros((nf, 16), dtype=np.uint8)
-    off = 0
-    for r in range(nf):
-        comp = zlib.compress(scan_f64[r].astype(">f8").tobytes(), 1)
-        heap_chunks.append(comp)
-        rows[r, 8:16] = np.frombuffer(
-            np.array([len(comp), off], dtype=">u4").tobytes(),
-            dtype=np.uint8)
-        off += len(comp)
-    heap = b"".join(heap_chunks)
-    cards = [
-        fc.card("XTENSION", "BINTABLE"), fc.card("BITPIX", 8),
-        fc.card("NAXIS", 2), fc.card("NAXIS1", 16),
-        fc.card("NAXIS2", nf), fc.card("PCOUNT", len(heap)),
-        fc.card("GCOUNT", 1), fc.card("TFIELDS", 2),
-        fc.card("TTYPE1", "COMPRESSED_DATA"),
-        fc.card("TFORM1", "1PB(0)"),
-        fc.card("TTYPE2", "GZIP_COMPRESSED_DATA"),
-        fc.card("TFORM2", f"1PB({max(map(len, heap_chunks))})"),
-        fc.card("ZIMAGE", True), fc.card("ZCMPTYPE", "GZIP_1"),
-        fc.card("ZBITPIX", -64), fc.card("ZNAXIS", 2),
-        fc.card("ZNAXIS1", znaxis1), fc.card("ZNAXIS2", nf),
-        fc.card("ZTILE1", znaxis1), fc.card("ZTILE2", 1),
-        fc.card("BSCALE", 0.125), fc.card("BZERO", 0.0),
-        fc.card("TIME", unix_s), fc.card("MILLITIM", millitim),
-        fc.end_card(),
-    ]
-    header = fc.pad_block(b"".join(cards))
-    data = fc.pad_block(rows.tobytes() + heap, fill=b"\x00")
-    return header + data
+#: the legacy scan HDU writer, under the name ``perfbench.inputs`` uses
+_scan_hdu = legacy_gpubox.scan_hdu
 
 
 def _write_gpubox(args) -> int:
@@ -207,8 +172,8 @@ def _write_gpubox(args) -> int:
                                  size=(N_FINE, N_SLOTS, 2))
                     .astype(np.float64) * 0.125)
             unix = unix0 + t * INT_S
-            f.write(_scan_hdu(scan, int(unix),
-                              int(round((unix % 1.0) * 1000))))
+            f.write(legacy_gpubox.scan_hdu(
+                scan, int(unix), int(round((unix % 1.0) * 1000))))
     return os.path.getsize(path)
 
 
@@ -263,18 +228,10 @@ def _write_mwax_file(args) -> int:
                                size=(n_bl, N_FINE * 8)).astype(">f4")
             vis *= np.float32(0.125)
             unix = unix0 + t * INT_S
-            for arr, naxis1 in ((vis, N_FINE * 8),
-                                (np.ones((n_bl, 4), dtype=">f4"), 4)):
-                f.write(fc.pad_block(b"".join([
-                    fc.card("XTENSION", "IMAGE"),
-                    fc.card("BITPIX", -32), fc.card("NAXIS", 2),
-                    fc.card("NAXIS1", naxis1), fc.card("NAXIS2", n_bl),
-                    fc.card("PCOUNT", 0), fc.card("GCOUNT", 1),
-                    fc.card("TIME", int(unix)),
-                    fc.card("MILLITIM",
-                            int(round((unix % 1.0) * 1000))),
-                    fc.end_card()])))
-                f.write(fc.pad_block(arr.tobytes(), fill=b"\x00"))
+            for arr in (vis, np.ones((n_bl, 4), dtype=">f4")):
+                f.write(fc.image_hdu(
+                    arr, fc.card("TIME", int(unix)),
+                    fc.card("MILLITIM", int(round((unix % 1.0) * 1000)))))
     return os.path.getsize(path)
 
 
