@@ -338,20 +338,21 @@ def _q_part_uvw_precessed(spark, sf_dir):
     from birli_spark.operators import precession
     spark.sql(f"CREATE OR REPLACE TEMP VIEW c3c_antennas AS "
               f"{syn.ANTENNAS_SQL}")
-    return spark.sql(precession.part_uvw_precessed_sql(
+    steps, final, _ = precession.part_uvw_precessed_steps(
         textsql.SPARK, gps_start=float(syn.GPS_START),
         int_time_s=syn.INT_TIME_S, num_t=syn.NUM_T,
-        antennas="c3c_antennas", **_PREC_PC))
+        antennas="c3c_antennas", **_PREC_PC)
+    return spark.sql(f"WITH {textsql.ctes(steps)}\n{final}")
 
 
 def _prec_oracle_sql() -> str:
     from birli_spark.operators import precession
-    steps, final = precession.part_uvw_precessed_steps(
+    steps, final, _ = precession.part_uvw_precessed_steps(
         textsql.DUCK, gps_start=float(syn.GPS_START),
         int_time_s=syn.INT_TIME_S, num_t=syn.NUM_T,
         antennas="ante", **_PREC_PC)
-    ctes = ",\n".join(f"{n} AS ({b})" for n, b in steps)
-    return f"WITH ante AS ({syn.ANTENNAS_SQL}),\n{ctes}\n{final}"
+    return (f"WITH ante AS ({syn.ANTENNAS_SQL}),\n"
+            f"{textsql.ctes(steps)}\n{final}")
 
 
 def _q_calibration(spark, sf_dir):
@@ -418,6 +419,13 @@ def _q_van_vleck(spark, sf_dir):
         spark, sf_dir, syn.VV_SAMPLE_SCALE, (3,))
 
 
+def _c1_oracle_sql() -> str:
+    steps, final, _ = vanvleck_sql.van_vleck_wide_steps(
+        textsql.DUCK, syn.VV_SAMPLE_SCALE, (3,))
+    return (f"WITH {textsql.ctes(steps, vanvleck_sql.DUCK_MATERIALIZED)}\n"
+            f"{final}")
+
+
 def _q_van_vleck_udf(spark, sf_dir):
     from birli_spark.operators import vanvleck
     vis = syn.load_vis_legacy(spark, sf_dir)
@@ -428,19 +436,20 @@ def _st10_oracle_sql() -> str:
     """Batch twin of the streaming SumThreshold mask: cell-unique
     reduction of the RAW vis (the stream folds raw samples, rule flags
     are a batch-pipeline stage) -> the relational mask."""
-    st_ctes, st_mask = rfi_sql.sumthreshold_parts(
+    steps, final, _ = rfi_sql.sumthreshold_steps(
         "cellv", "quantile_cont", prefix="st10")
     return (f"WITH vis AS ({syn.vis_sql()}),\n"
             f"cellv AS ({rfi_sql.cell_dedup_select('vis', _COLS)}),\n"
-            f"{st_ctes}\n{st_mask}")
+            f"{textsql.ctes(steps)}\n{final}")
 
 
-def _f9_oracle_sql() -> str:
-    ctes, final = rfi_sql.flag_rfi_parts("cellv", "quantile_cont",
-                                         columns=_COLS)
+def _rfi_oracle_sql(steps, final, materialized=frozenset()) -> str:
+    """DuckDB text of an RFI chain over ``cellv``, the cell-unique
+    rule-flagged vis (the oracle twin of :func:`_rfi_cell_view`), with
+    the ``materialized`` steps MATERIALIZED."""
     return (f"WITH {pipeline.flagged_vis_oracle_cte()},\n"
             f"cellv AS ({rfi_sql.cell_dedup_select('flagged', _COLS)}),\n"
-            f"{ctes}\n{final}")
+            f"{textsql.ctes(steps, materialized)}\n{final}")
 
 
 def _rfi_cell_view(spark, sf_dir):
@@ -462,22 +471,26 @@ def _q_rfi(spark, sf_dir):
     stays the pipeline/CLI path, gated as f9b_rfi_sumthreshold_udf."""
     cell, cols = _rfi_cell_view(spark, sf_dir)
     cell.createOrReplaceTempView("f9_cell")
-    ctes, final = rfi_sql.flag_rfi_parts("f9_cell", "percentile",
-                                         columns=cols)
-    return spark.sql(f"WITH {ctes} {final}")
+    steps, final, _ = rfi_sql.flag_rfi_steps("f9_cell", "percentile", cols)
+    return spark.sql(f"WITH {textsql.ctes(steps)} {final}")
+
+
+def _f9c_steps(cell: str, median_fn: str):
+    """F9c's chain: the SumThreshold mask ``f9c_mask`` of ``cell``, then
+    SIR over it."""
+    st, mask, _ = rfi_sql.sumthreshold_steps(cell, median_fn, prefix="f9c")
+    sir, final, _ = rfi_sql.sir_steps("f9c_mask")
+    return [*st, ("f9c_mask", mask), *sir], final, frozenset()
 
 
 def _q_rfi_sir(spark, sf_dir):
     """F9c: SumThreshold -> SIR morphological dilation (Offringa & van
     de Gronde 2012) — the two halves of AOFlagger's actual strategy
-    composed relationally (operators/rfi_sql.py::sir_parts)."""
+    composed relationally (operators/rfi_sql.py::sir_steps)."""
     cell, cols = _rfi_cell_view(spark, sf_dir)
     cell.createOrReplaceTempView("f9c_cell")
-    st_ctes, st_mask = rfi_sql.sumthreshold_parts(
-        "f9c_cell", "percentile", prefix="f9c")
-    sir_ctes, sir_final = rfi_sql.sir_parts("f9c_mask")
-    return spark.sql(
-        f"WITH {st_ctes}, f9c_mask AS ({st_mask}), {sir_ctes} {sir_final}")
+    steps, final, _ = _f9c_steps("f9c_cell", "percentile")
+    return spark.sql(f"WITH {textsql.ctes(steps)} {final}")
 
 
 def _q_rfi_strategy(spark, sf_dir):
@@ -489,16 +502,8 @@ def _q_rfi_strategy(spark, sf_dir):
     aoflagger_strategy_mask)."""
     cell, cols = _rfi_cell_view(spark, sf_dir)
     cell.createOrReplaceTempView("f9d_cell")
-    return rfi_sql.aoflagger_strategy_spark(spark, "f9d_cell",
-                                            prefix="f9d")
-
-
-def _f9d_oracle_sql() -> str:
-    ctes, final = rfi_sql.aoflagger_strategy_sql(
-        "cellv", "quantile_cont", prefix="f9d")
-    return (f"WITH {pipeline.flagged_vis_oracle_cte()},\n"
-            f"cellv AS ({rfi_sql.cell_dedup_select('flagged', _COLS)}),\n"
-            f"{ctes}\n{final}")
+    return textsql.run_steps(spark, *rfi_sql.aoflagger_strategy_steps(
+        "f9d_cell", "percentile", prefix="f9d"))
 
 
 def _q_rfi_mwa(spark, sf_dir):
@@ -513,24 +518,8 @@ def _q_rfi_mwa(spark, sf_dir):
     tests/test_golden_mwa_flags.py)."""
     cell, cols = _rfi_cell_view(spark, sf_dir)
     cell.createOrReplaceTempView("f9e_cell")
-    return rfi_sql.mwa_strategy_spark(spark, "f9e_cell", prefix="f9e")
-
-
-def _f9e_oracle_sql() -> str:
-    ctes, final = rfi_sql.mwa_strategy_sql(
-        "cellv", "quantile_cont", prefix="f9e")
-    return (f"WITH {pipeline.flagged_vis_oracle_cte()},\n"
-            f"cellv AS ({rfi_sql.cell_dedup_select('flagged', _COLS)}),\n"
-            f"{ctes}\n{final}")
-
-
-def _f9c_oracle_sql() -> str:
-    st_ctes, st_mask = rfi_sql.sumthreshold_parts(
-        "cellv", "quantile_cont", prefix="f9c")
-    sir_ctes, sir_final = rfi_sql.sir_parts("f9c_mask")
-    return (f"WITH {pipeline.flagged_vis_oracle_cte()},\n"
-            f"cellv AS ({rfi_sql.cell_dedup_select('flagged', _COLS)}),\n"
-            f"{st_ctes}, f9c_mask AS ({st_mask}), {sir_ctes}\n{sir_final}")
+    return textsql.run_steps(spark, *rfi_sql.mwa_strategy_steps(
+        "f9e_cell", "percentile", prefix="f9e"))
 
 
 def _q_rfi_udf(spark, sf_dir):
@@ -2316,14 +2305,20 @@ def oracle_sql() -> dict[str, str]:
             + " FROM flagged"),
         # F9 relational SumThreshold: same window-function plan as the
         # Spark query, integer-tick windows (operators/rfi_sql.py)
-        "f9_rfi_sumthreshold": _f9_oracle_sql(),
-        "f9c_rfi_sir": _f9c_oracle_sql(),
-        "f9d_aoflagger_strategy": _f9d_oracle_sql(),
-        "f9e_rfi_mwa_strategy": _f9e_oracle_sql(),
+        "f9_rfi_sumthreshold": _rfi_oracle_sql(*rfi_sql.flag_rfi_steps(
+            "cellv", "quantile_cont", _COLS)),
+        "f9c_rfi_sir": _rfi_oracle_sql(*_f9c_steps("cellv", "quantile_cont")),
+        # F9d's barriers are Spark-only; F9e's are MATERIALIZED in DuckDB
+        # too (rfi_sql.mwa_strategy_steps)
+        "f9d_aoflagger_strategy": _rfi_oracle_sql(
+            *rfi_sql.aoflagger_strategy_steps(
+                "cellv", "quantile_cont", prefix="f9d")[:2]),
+        "f9e_rfi_mwa_strategy": _rfi_oracle_sql(
+            *rfi_sql.mwa_strategy_steps(
+                "cellv", "quantile_cont", prefix="f9e")),
         # C1 relational Newton: the DuckDB one-text form of the exact
         # plan the Spark query executes (operators/vanvleck_sql.py)
-        "c1_van_vleck": vanvleck_sql.van_vleck_wide_sql(
-            textsql.DUCK, syn.VV_SAMPLE_SCALE, (3,)),
+        "c1_van_vleck": _c1_oracle_sql(),
         "c2_cable_correction": _with_vis(
             corrections.cable_oracle_select("vis", "antennas", _COLS),
             extra_ctes=f"antennas AS ({syn.ANTENNAS_SQL})"),

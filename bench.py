@@ -299,7 +299,7 @@ def main() -> None:
         for _ in batches:
             yield pd_.DataFrame({"id": [int(a[0] > 0)]})
 
-    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ncpu = spark.sparkContext.defaultParallelism
     (spark.range(ncpu * 4, numPartitions=ncpu)
          .mapInPandas(_warm, schema="id long")
          .write.format("noop").mode("overwrite").save())

@@ -691,12 +691,13 @@ def precessed_part_uvw(spark: SparkSession, antennas: DataFrame,
     from birli_spark.operators import precession as prc
 
     antennas.createOrReplaceTempView("flowchart_antennas")
-    return spark.sql(prc.part_uvw_precessed_sql(
+    steps, final, _ = prc.part_uvw_precessed_steps(
         X.SPARK, ra_rad=math.radians(ra_deg),
         dec_rad=math.radians(dec_deg), gps_start=gps_start,
         int_time_s=int_time_s, num_t=num_t,
         antennas="flowchart_antennas", dut1_s=dut1_s,
-        lon_rad=lon_rad, lat_rad=lat_rad))
+        lon_rad=lon_rad, lat_rad=lat_rad)
+    return spark.sql(f"WITH {X.ctes(steps)}\n{final}")
 
 
 class RuleDims(NamedTuple):

@@ -1,4 +1,5 @@
-"""Cross-dialect SQL fragments for the text / dedup / similarity operators.
+"""Cross-dialect SQL fragments for the text / dedup / similarity operators,
+and the one form of a stepwise relational chain.
 
 Every helper emits an expression string for one of two dialects —
 ``"spark"`` (used via ``F.expr`` inside DataFrame plans) or ``"duck"``
@@ -22,6 +23,13 @@ Design rules that make cross-engine hashing work:
 
 All per-row fragments here are pure narrow projections: at 100 TB they
 whole-stage-codegen over the scan with zero shuffle.
+
+A stepwise operator (Van Vleck, the RFI ladders, precession) is built as
+``(steps, final, barriers)``: an ordered list of ``(name, select_body)``
+steps, the closing SELECT over them, and the names of the steps Spark
+must materialize. :func:`ctes` renders the steps as one WITH list (the
+DuckDB oracle, or one Spark text) and :func:`run_steps` runs them on
+Spark, one temp view per step.
 """
 
 from __future__ import annotations
@@ -215,3 +223,36 @@ def dot(d: str, a: str, b: str) -> str:
 
 def norm(d: str, a: str) -> str:
     return f"SQRT({dot(d, a, a)})"
+
+
+def ctes(steps: list[tuple[str, str]],
+         materialized: frozenset[str] | set[str] = frozenset()) -> str:
+    """The CTE list of a chain: ``name AS [MATERIALIZED ](body)`` per step,
+    joined by ``",\n"``. ``materialized`` names the steps DuckDB must
+    compute once although several later steps read them (it inlines a
+    multi-consumer CTE into each consumer otherwise)."""
+    return ",\n".join(
+        f"{n} AS {'MATERIALIZED ' if n in materialized else ''}({b})"
+        for n, b in steps)
+
+
+def run_steps(spark, steps: list[tuple[str, str]], final: str,
+              barriers: frozenset[str] | set[str] = frozenset()):
+    """Run a chain on Spark: one temp view per step, then ``final``.
+
+    Spark inlines every view into its readers, so an unbroken chain is
+    analyzed as one tree that grows with each step (an iterative chain
+    can grow it exponentially). Each step named in ``barriers`` is
+    materialized behind ``localCheckpoint(eager=True)`` before the next
+    step reads it: later steps analyze against its rows, and a step that
+    several consumers read is computed once. A chain with no barriers
+    runs as one text instead, ``spark.sql(f"WITH {ctes(steps)} {final}")``:
+    Spark analyzes its CTE references as fresh relations, whereas views
+    made from DataFrames share their attribute ids, which a self-join over
+    a streaming memory-sink view cannot tell apart."""
+    for name, body in steps:
+        df = spark.sql(body)
+        if name in barriers:
+            df = df.localCheckpoint(eager=True)
+        df.createOrReplaceTempView(name)
+    return spark.sql(final)

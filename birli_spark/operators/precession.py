@@ -213,8 +213,9 @@ def part_uvw_precessed_steps(d: str, ra_rad: float, dec_rad: float,
                              dut1_s: float = 0.0,
                              lon_rad: float = MWA_LON_RAD,
                              lat_rad: float = MWA_LAT_RAD,
-                             ) -> tuple[list[tuple[str, str]], str]:
-    """(CTE steps, final SELECT) of the (t, ant, u, v, w) precessed
+                             ) -> tuple[list[tuple[str, str]], str,
+                                        frozenset[str]]:
+    """(steps, final SELECT, no barriers) of the (t, ant, u, v, w) precessed
     partial-UVW dim over relation ``antennas`` (ant, east_m, north_m,
     height_m) — identical plan text modulo dialect. Timestep centroids
     mirror the reference (gps_start + (t + 1/2) * int_time,
@@ -329,18 +330,4 @@ def part_uvw_precessed_steps(d: str, ra_rad: float, dec_rad: float,
         f" CAST(CAST({_rp(cd_ * cr)} * vx + {_rp(cd_ * sr)} * vy"
         f" + {_rp(sd)} * vz AS FLOAT) AS DOUBLE) AS w"
         f" FROM prc_v4")
-    return steps, final
-
-
-def part_uvw_precessed_sql(d: str, ra_rad: float, dec_rad: float,
-                           gps_start: float, int_time_s: float,
-                           num_t: int, antennas: str = "antennas",
-                           dut1_s: float = 0.0,
-                           lon_rad: float = MWA_LON_RAD,
-                           lat_rad: float = MWA_LAT_RAD) -> str:
-    """One-text WITH form (the DuckDB oracle / composable Spark text)."""
-    steps, final = part_uvw_precessed_steps(
-        d, ra_rad, dec_rad, gps_start, int_time_s, num_t, antennas,
-        dut1_s=dut1_s, lon_rad=lon_rad, lat_rad=lat_rad)
-    ctes = ",\n".join(f"{n} AS ({b})" for n, b in steps)
-    return f"WITH {ctes}\n{final}"
+    return steps, final, frozenset()

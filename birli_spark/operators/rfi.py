@@ -261,7 +261,7 @@ def sumthreshold_ticks(x: np.ndarray, work0: np.ndarray,
                        present: np.ndarray,
                        sensitivity: float) -> np.ndarray:
     """Tick-exact SumThreshold over an INTEGER image — the numpy mirror
-    of rfi_sql.sumthreshold_parts on a dense tick relation. Returns the
+    of rfi_sql.sumthreshold_steps on a dense tick relation. Returns the
     accumulated mask for ALL grid cells (absent cells stay flagged).
     The call re-standardizes its input by the f32-demoted median/MAD of
     the integer image and re-quantizes at TICKS per sigma, exactly as
@@ -406,7 +406,7 @@ def sir_mask(flags: np.ndarray, eta: float = 0.2) -> np.ndarray:
     """SIR in both directions — time (axis 0) first, then frequency
     (axis 1) on the time-dilated mask, OR-combined (aoflagger's
     two-pass application; same direction order as the relational
-    spelling, rfi_sql.py::sir_parts)."""
+    spelling, rfi_sql.py::sir_steps)."""
     t_pass = sir_1d(np.asarray(flags, dtype=bool).T, eta).T
     f_pass = sir_1d(t_pass, eta)
     return t_pass | f_pass

@@ -70,7 +70,7 @@ def _frame(lo: str, hi: str) -> str:
 def last_work_cte(prefix: str) -> str:
     """Name of the CTE holding the post-ladder ``work`` column (all grid
     cells, before the present-only final SELECT) — the chaining point
-    the iterative strategy (:func:`aoflagger_strategy_parts`) reads."""
+    the iterative strategy (:func:`aoflagger_strategy_steps`) reads."""
     return f"{prefix}_p{2 * len(WINDOWS)}b"
 
 
@@ -80,9 +80,11 @@ def sumthreshold_steps(vis: str = "flagged",
                        prefix: str = "st",
                        vis_is_base: bool = False,
                        dense_base: bool = False,
-                       extra: tuple[str, ...] = ()) -> tuple[str, str]:
-    """(CTE chain, final mask SELECT) of SumThreshold over relation
-    ``vis`` (the standard vis columns incl. ``flag``). The final SELECT
+                       extra: tuple[str, ...] = (),
+                       ) -> tuple[list[tuple[str, str]], str, frozenset[str]]:
+    """(steps, final mask SELECT, no barriers) of SumThreshold over
+    relation ``vis`` (the standard vis columns incl. ``flag``) — the
+    :mod:`~birli_spark.functions.textsql` chain form. The final SELECT
     yields (ant1, ant2, t, chan, det) for every PRESENT cell, where
     ``det`` is the post-SumThreshold mask (prior flags OR-ed in) —
     callers join it back onto the fact rows and OR into ``flag``.
@@ -215,22 +217,7 @@ def sumthreshold_steps(vis: str = "flagged",
         f" ELSE (amp <> med) OR prior END AS det"
         f" FROM {prev} WHERE present"
     )
-    return ctes, final
-
-
-def sumthreshold_parts(vis: str = "flagged",
-                       median_fn: str = "percentile",
-                       base_sensitivity: float = 6.0,
-                       prefix: str = "st",
-                       vis_is_base: bool = False,
-                       dense_base: bool = False,
-                       extra: tuple[str, ...] = ()) -> tuple[str, str]:
-    """One-text form of :func:`sumthreshold_steps` (CTE chain, final
-    mask SELECT) — the shape every existing caller splices into WITH."""
-    ctes, final = sumthreshold_steps(vis, median_fn, base_sensitivity,
-                                     prefix, vis_is_base, dense_base,
-                                     extra)
-    return ",\n".join(f"{n} AS ({b})" for n, b in ctes), final
+    return ctes, final, frozenset()
 
 
 def cell_dedup_select(vis: str = "flagged",
@@ -252,42 +239,56 @@ def cell_dedup_select(vis: str = "flagged",
     return f"SELECT {agg} FROM {vis} GROUP BY ant1, ant2, t, chan"
 
 
-def flag_rfi_parts(vis: str = "flagged",
+def flag_rfi_steps(vis: str = "flagged",
                    median_fn: str = "percentile",
-                   base_sensitivity: float = 6.0,
                    columns: tuple[str, ...] = (),
-                   prefix: str = "st") -> tuple[str, str]:
-    """(CTE chain incl. the mask, final SELECT) yielding ``vis`` with the
-    SumThreshold mask OR-ed into ``flag`` (the F9 operator's output
-    contract, rfi.py:93-130). Splice the chain into a WITH that already
-    binds ``vis``."""
-    ctes, mask = sumthreshold_parts(vis, median_fn, base_sensitivity,
-                                    prefix)
+                   dedup: bool = False,
+                   ) -> tuple[list[tuple[str, str]], str, frozenset[str]]:
+    """(steps incl. the mask ``st_mask``, final SELECT, barriers) yielding
+    ``vis`` with the SumThreshold mask OR-ed into ``flag`` (the F9
+    operator's output contract, rfi.py:93-130), over a chain that already
+    binds ``vis``.
+
+    ``dedup``: ``vis`` may hold several rows per image cell (the
+    flowchart's RFI slot) — the image is the cell-unique reduction
+    :func:`cell_dedup_select` (step ``st_cell``, a barrier: it is
+    (bl x t x chan)-sized, and the 24-layer ladder then analyzes against
+    its rows instead of the whole upstream plan), and the mask is OR-ed
+    onto every row of its cell. Without it ``vis`` is the image itself."""
+    steps: list[tuple[str, str]] = []
+    image = vis
+    if dedup:
+        image = "st_cell"
+        steps.append((image, cell_dedup_select(vis, columns)))
+    ladder, mask, _ = sumthreshold_steps(image, median_fn)
+    steps += [*ladder, ("st_mask", mask)]
     out_cols = ", ".join(
         "(v.flag OR m.det) AS flag" if c == "flag" else f"v.{c}"
         for c in columns)
     # the mask side leaves the ladder (ant1, ant2)-partitioned; hashing
     # the vis side the same way makes the join-back subset
-    # co-partitioned (one vis exchange, zero mask exchanges) — and the
-    # hinted vis scan is the SAME exchange subtree the ladder's base
-    # uses, so ReuseExchange computes it once (guide §2.4/§3)
+    # co-partitioned (one vis exchange, zero mask exchanges) — and, over
+    # the image itself, the hinted vis scan is the SAME exchange subtree
+    # the ladder's base uses, so ReuseExchange computes it once (guide
+    # §2.4/§3)
     final = (
         f"SELECT {out_cols} FROM"
         f" (SELECT /*+ REPARTITION(ant1, ant2) */ * FROM {vis}) v"
-        f" JOIN {prefix}_mask m"
+        f" JOIN st_mask m"
         f" ON v.ant1 = m.ant1 AND v.ant2 = m.ant2"
         f" AND v.t = m.t AND v.chan = m.chan"
     )
-    return f"{ctes},\n{prefix}_mask AS ({mask})", final
+    return steps, final, frozenset({image} if dedup else ())
 
 
 # ------------------------------------------------- SIR morphology ---
 
-def sir_parts(mask: str = "st_mask", eta: float = 0.2,
+def sir_steps(mask: str = "st_mask", eta: float = 0.2,
               prefix: str = "sir",
               extra: tuple[str, ...] = (),
-              repartition_head: bool = False) -> tuple[str, str]:
-    """(CTE chain, final SELECT) of the scale-invariant-rank dilation
+              repartition_head: bool = False,
+              ) -> tuple[list[tuple[str, str]], str, frozenset[str]]:
+    """(steps, final SELECT, no barriers) of the scale-invariant-rank dilation
     (Offringa & van de Gronde 2012 — the morphological post-pass of
     AOFlagger's strategy, reference src/flags.rs:368-437 via FFI) over a
     mask relation (ant1, ant2, t, chan, det): time direction, then
@@ -333,11 +334,10 @@ def sir_parts(mask: str = "st_mask", eta: float = 0.2,
 
     head = (f"(SELECT /*+ REPARTITION(ant1, ant2) */ * FROM {mask})"
             if repartition_head else mask)
-    ctes = (pass_ctes(head, "chan", "t", "t")
-            + pass_ctes(f"{p}_to", "t", "chan", "f"))
-    cte_text = ",\n".join(f"{n} AS ({b})" for n, b in ctes)
-    final = f"SELECT ant1, ant2, t, chan, det{ex} FROM {p}_fo"
-    return cte_text, final
+    steps = (pass_ctes(head, "chan", "t", "t")
+             + pass_ctes(f"{p}_to", "t", "chan", "f"))
+    return steps, f"SELECT ant1, ant2, t, chan, det{ex} FROM {p}_fo", \
+        frozenset()
 
 
 # ------------------------------------ F9d: iterative AOFlagger strategy ---
@@ -378,10 +378,10 @@ def aoflagger_strategy_steps(vis: str = "flagged",
     identical residual images; tick semantics mirror operators/rfi.py::
     aoflagger_strategy_mask cell for cell.
 
-    Returns ``(steps, final_select, barrier_names)``; barriers mark the
-    grid-sized relations the Spark runner should ``localCheckpoint`` so
-    each iteration's ~30 window layers analyze against a materialized
-    input instead of the whole upstream chain. The one dialect split is
+    Returns ``(steps, final_select, barriers)``; barriers mark the
+    grid-sized relations :func:`textsql.run_steps` checkpoints, so each
+    iteration's ~30 window layers analyze against a materialized input
+    instead of the whole upstream chain. The one dialect split is
     ``median_fn`` ("percentile" -> Spark, "quantile_cont" -> DuckDB);
     integer division spells DIV / // accordingly.
     """
@@ -448,10 +448,10 @@ def aoflagger_strategy_steps(vis: str = "flagged",
     for i in range(1, AOF_ITERS):
         factor = AOF_STEP ** (AOF_ITERS - i)
         sp = f"{p}s{i}"
-        st, _ = sumthreshold_steps(cur, median_fn,
-                                   base_sensitivity * factor,
-                                   prefix=sp, dense_base=True,
-                                   extra=("x",))
+        st, _, _ = sumthreshold_steps(cur, median_fn,
+                                      base_sensitivity * factor,
+                                      prefix=sp, dense_base=True,
+                                      extra=("x",))
         steps.extend(st)
         last = last_work_cte(sp)
         over_t = "PARTITION BY ant1, ant2, chan ORDER BY t"
@@ -497,16 +497,14 @@ def aoflagger_strategy_steps(vis: str = "flagged",
              f" ELSE CAST(0 AS BIGINT) END) AS DOUBLE) AS amp, x"
              f" FROM {p}_l{i}c"),
         ])
-        # w/wt/wb/l{i}a each feed TWO consumers (an rms GROUP BY or
-        # block aggregate AND a join-back) — barrier them so the
-        # 24-layer ladder behind each executes once, not once per
-        # consumer (Spark: localCheckpoint; DuckDB: MATERIALIZED)
-        barriers.update({f"{p}_w{i}", f"{p}_wt{i}", f"{p}_wb{i}",
-                         f"{p}_l{i}a", f"{p}_r{i}"})
+        # each iteration's folded mask, fit input and residual are
+        # barriers: the next ~30 window layers analyze against
+        # materialized rows instead of the whole upstream ladder
+        barriers.update({f"{p}_w{i}", f"{p}_l{i}a", f"{p}_r{i}"})
         cur = f"{p}_r{i}"
     sf_ = f"{p}sf"
-    st, _ = sumthreshold_steps(cur, median_fn, base_sensitivity,
-                               prefix=sf_, dense_base=True)
+    st, _, _ = sumthreshold_steps(cur, median_fn, base_sensitivity,
+                                  prefix=sf_, dense_base=True)
     steps.extend(st)
     last = last_work_cte(sf_)
     steps.append(
@@ -523,46 +521,11 @@ def aoflagger_strategy_steps(vis: str = "flagged",
     # SIR over the DENSE grid (absent cells block dilation as
     # unflagged=False cells, mirroring the numpy twin's image shape);
     # det is a barrier — re-establish (ant1, ant2) once for both passes
-    sir_ctes, _ = sir_parts(f"{p}_det", eta, prefix=f"{p}r",
-                            extra=("present",), repartition_head=True)
-    for part in sir_ctes.split(",\n"):
-        name, body = part.split(" AS (", 1)
-        steps.append((name.strip(), body[:-1]))
+    steps += sir_steps(f"{p}_det", eta, prefix=f"{p}r",
+                       extra=("present",), repartition_head=True)[0]
     final = (f"SELECT ant1, ant2, t, chan, det FROM {p}r_fo"
              f" WHERE present")
     return steps, final, barriers
-
-
-def aoflagger_strategy_sql(vis: str = "flagged",
-                           median_fn: str = "quantile_cont",
-                           base_sensitivity: float = 6.0,
-                           eta: float | None = 0.2,
-                           prefix: str = "aof") -> tuple[str, str]:
-    """One-text WITH form of :func:`aoflagger_strategy_steps` (the
-    DuckDB oracle spelling)."""
-    steps, final, _ = aoflagger_strategy_steps(
-        vis, median_fn, base_sensitivity, eta=eta, prefix=prefix)
-    return ",\n".join(f"{n} AS ({b})" for n, b in steps), final
-
-
-def aoflagger_strategy_spark(spark, cell_view: str,
-                             base_sensitivity: float = 6.0,
-                             eta: float | None = 0.2,
-                             prefix: str = "aof"):
-    """Execute F9d on Spark: temp-view steps with ``localCheckpoint``
-    barriers at the grid-sized relations (standardized image, each
-    iteration's residual, the pre-SIR mask) so every ladder segment
-    analyzes against a materialized input. One (ant1, ant2)-prefix
-    partitioning serves every window in the chain."""
-    steps, final, barriers = aoflagger_strategy_steps(
-        cell_view, "percentile", base_sensitivity, eta=eta,
-        prefix=prefix)
-    for name, body in steps:
-        df = spark.sql(body)
-        if name in barriers:
-            df = df.localCheckpoint(eager=True)
-        df.createOrReplaceTempView(name)
-    return spark.sql(final)
 
 
 # ------------------------------ F9e: the mwa-default orchestration ---
@@ -645,7 +608,11 @@ def mwa_strategy_steps(vis: str = "flagged",
     (tests/test_mwa_strategy.py); the measured flag agreement against
     the reference's own cotter mwa-default golden lives in
     tests/test_golden_mwa_flags.py. Same return contract as
-    :func:`aoflagger_strategy_steps`."""
+    :func:`aoflagger_strategy_steps`; the DuckDB oracle renders the
+    barriers MATERIALIZED — DuckDB inlines a multi-consumer CTE into each
+    consumer, and the melted chain's fan-outs (w/wt/wb/l{i}a) would
+    otherwise re-execute the whole upstream ladder per consumer
+    (measured 73 s -> ~3 s at sf0.01)."""
     from birli_spark.operators.rfi import (
         AOF_ITERS, AOF_STEP, LP_CLAMP_SIGMA, LP_RADIUS_F, LP_RADIUS_T,
         LP_SIGMA_F, LP_SIGMA_T, LP_TICKS, MWA_CH_RMS, MWA_FINAL_TS_RMS,
@@ -722,10 +689,10 @@ def mwa_strategy_steps(vis: str = "flagged",
     for i in range(1, AOF_ITERS):
         factor = AOF_STEP ** (AOF_ITERS - i)
         sp = f"{p}s{i}"
-        st, _ = sumthreshold_steps(cur, median_fn,
-                                   base_sensitivity * factor,
-                                   prefix=sp, dense_base=True,
-                                   extra=("x",))
+        st, _, _ = sumthreshold_steps(cur, median_fn,
+                                      base_sensitivity * factor,
+                                      prefix=sp, dense_base=True,
+                                      extra=("x",))
         steps.extend(st)
         last = last_work_cte(sp)
         steps.append(
@@ -824,8 +791,8 @@ def mwa_strategy_steps(vis: str = "flagged",
                          f"{p}_l{i}a", f"{p}_r{i}"})
         cur = f"{p}_r{i}"
     sf_ = f"{p}sf"
-    st, _ = sumthreshold_steps(cur, median_fn, base_sensitivity,
-                               prefix=sf_, dense_base=True)
+    st, _, _ = sumthreshold_steps(cur, median_fn, base_sensitivity,
+                                  prefix=sf_, dense_base=True)
     steps.extend(st)
     last = last_work_cte(sf_)
     steps.append(
@@ -856,12 +823,8 @@ def mwa_strategy_steps(vis: str = "flagged",
     barriers.add(f"{p}_j")
     post = f"{p}_j"
     if eta is not None:
-        sir_ctes, _ = sir_parts(f"{p}_j", eta, prefix=f"{p}r",
-                                extra=("present",),
-                                repartition_head=True)
-        for part in sir_ctes.split(",\n"):
-            name, body = part.split(" AS (", 1)
-            steps.append((name.strip(), body[:-1]))
+        steps += sir_steps(f"{p}_j", eta, prefix=f"{p}r",
+                           extra=("present",), repartition_head=True)[0]
         post = f"{p}r_fo"
         # the post-SIR mask feeds both the final ts-rms aggregate and
         # the closing join
@@ -917,40 +880,3 @@ def mwa_strategy_steps(vis: str = "flagged",
              f" AND m.ant2 = r.ant2 AND m.t = r.t"
              f" WHERE m.present")
     return steps, final, barriers
-
-
-def mwa_strategy_sql(vis: str = "flagged",
-                     median_fn: str = "quantile_cont",
-                     base_sensitivity: float = 6.0,
-                     eta: float | None = 0.2,
-                     prefix: str = "mwa") -> tuple[str, str]:
-    """One-text WITH form of :func:`mwa_strategy_steps` (the DuckDB
-    oracle spelling of f9e). The barrier relations are marked
-    MATERIALIZED: DuckDB inlines multi-consumer CTEs, and the melted
-    chain's fan-outs (w/wt/wb/l{i}a) would otherwise re-execute the
-    whole upstream ladder per consumer — measured 73s -> ~3s at
-    sf0.01."""
-    steps, final, barriers = mwa_strategy_steps(
-        vis, median_fn, base_sensitivity, eta=eta, prefix=prefix)
-    return ",\n".join(
-        f"{n} AS {'MATERIALIZED ' if n in barriers else ''}({b})"
-        for n, b in steps), final
-
-
-def mwa_strategy_spark(spark, vis_view: str,
-                       base_sensitivity: float = 6.0,
-                       eta: float | None = 0.2,
-                       prefix: str = "mwa"):
-    """Execute F9e on Spark (the barrier strategy of
-    :func:`aoflagger_strategy_spark`: localCheckpoint the grid-sized
-    relations so each ~30-layer window segment analyzes against a
-    materialized input; one (ant1, ant2)-prefix partitioning serves
-    every window in the chain)."""
-    steps, final, barriers = mwa_strategy_steps(
-        vis_view, "percentile", base_sensitivity, eta=eta, prefix=prefix)
-    for name, body in steps:
-        df = spark.sql(body)
-        if name in barriers:
-            df = df.localCheckpoint(eager=True)
-        df.createOrReplaceTempView(name)
-    return spark.sql(final)

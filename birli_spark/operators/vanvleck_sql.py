@@ -43,9 +43,16 @@ Scale shape: the solves run on the **distinct solve inputs**, not the
 fact rows — sighat values and (|khat|, sigma1, sigma2) triples live on
 the correlator's quantization lattice, so the Newton chains iterate over
 a dimension-sized relation and broadcast-join back onto the fact scan.
-The fact-side work is one narrow melt (8 components via a literal
-comp dimension) and two broadcast joins; nothing fact-sized crosses a
-shuffle except the final aggregate-free projection.
+The fact-side work is one narrow melt (8 components via a literal comp
+dimension) feeding the distinct triples, and broadcast joins back onto
+the wide vis rows; nothing fact-sized crosses a shuffle.
+
+There is one plan, :func:`van_vleck_wide_steps`, in the standard wide
+vis layout: the ``c1_van_vleck`` query, its DuckDB oracle and the
+relational pipeline head all run it. The lattice-sized relations Spark
+checkpoints are single-partition by a ``COALESCE(1)`` hint in their own
+SELECT (:data:`_ONE`), so :func:`textsql.run_steps` runs the chain with
+no per-operator option.
 """
 
 from __future__ import annotations
@@ -173,13 +180,34 @@ def _sh_guard(acc: str) -> str:
             f" ELSE SQRT(49E0 - ({acc})) END")
 
 
+#: single-partition hint on the lattice-sized barrier relations (a few
+#: hundred rows): Spark plans it as ``coalesce(1)``, so each Newton
+#: checkpoint is one task instead of a round trip over every core;
+#: DuckDB reads it as a comment
+_ONE = "/*+ COALESCE(1) */ "
+
+
+def _closers(prefix: str, n: int) -> set[str]:
+    """The barrier iteration closers of an ``n``-step Newton chain: every
+    OTHER one from ``s0``, so one analyzed tree holds two inlined
+    iterations (bounded — measured no blowup and identical output),
+    halving the chain's job count. A chain with no barriers is NOT faster
+    (analyzing the fully inlined tree costs more than the jobs it saves)
+    and risks the exponential-substitution OOM (see
+    :func:`van_vleck_wide_steps`)."""
+    return {f"{prefix}_s{i}" for i in range(0, n + 1, 2)}
+
+
 def sigma_chain_steps(d: str, src: str, n: int = N_AUTO,
-                      prefix: str = "vva") -> tuple[list[tuple[str, str]], str]:
+                      prefix: str = "vva",
+                      ) -> tuple[list[tuple[str, str]], str, set[str]]:
     """Newton chain inverting sighat over relation ``src`` (one DOUBLE
     column ``s`` of distinct sighat values, NaN-free). Returns
-    ``(steps, final_name)`` where ``steps`` is an ordered list of
-    (name, select_body) — CTE entries for DuckDB, temp-view steps for the
-    Spark executor; the final relation is (s, sigma).
+    ``(steps, final_name, barriers)`` where ``steps`` is an ordered list
+    of (name, select_body) — CTE entries for DuckDB, temp-view steps for
+    the Spark executor; the final relation is (s, sigma). ``barriers``
+    (every other iteration closer and the final relation) are
+    single-partition relations (:data:`_ONE`).
 
     State per iteration mirrors the UDF loop (vanvleck.py:160-176):
     guess starts at s; sticky-inactive on convergence, guess <= 0.5, or a
@@ -190,12 +218,13 @@ def sigma_chain_steps(d: str, src: str, n: int = N_AUTO,
     the same downstream row-passthrough the UDF's inf/NaN wander ends in.
     """
     tol = f"(1E-12 + {TOL_AUTO_REL} * ABS(s))"
+    closers = _closers(prefix, n)
     parts: list[tuple[str, str]] = [
         (f"{prefix}_b0",
          f"SELECT s, s AS g, {_sighat_acc(d, 's')} AS acc"
          f" FROM {src}"),
         (f"{prefix}_s0",
-         f"SELECT s, g, sh, sh - s AS delta,"
+         f"SELECT {_ONE}s, g, sh, sh - s AS delta,"
          f" (ABS(sh - s) > {tol}) AND (g > 5E-1) AND {_fin('sh - s')} AS active"
          f" FROM (SELECT s, g, {_sh_guard('acc')} AS sh FROM {prefix}_b0)"),
     ]
@@ -221,7 +250,7 @@ def sigma_chain_steps(d: str, src: str, n: int = N_AUTO,
              f" AS acc FROM {bq}"))
         parts.append(
             (s_,
-             f"SELECT s, g,"
+             f"SELECT {_ONE if s_ in closers else ''}s, g,"
              f" CASE WHEN active THEN sh2 ELSE sh_old END AS sh,"
              f" CASE WHEN active THEN sh2 - s ELSE delta END AS delta,"
              f" active AND ABS(sh2 - s) > {tol} AND g > 5E-1"
@@ -233,9 +262,9 @@ def sigma_chain_steps(d: str, src: str, n: int = N_AUTO,
     final = f"{prefix}_out"
     parts.append(
         (final,
-         f"SELECT s,"
+         f"SELECT {_ONE}s,"
          f" CASE WHEN active THEN s ELSE g END AS sigma FROM {prev}"))
-    return parts, final
+    return parts, final, closers | {final}
 
 
 # --------------------------------------------------------- cross chain ---
@@ -281,17 +310,19 @@ def _cross_eval(d: str, g: str) -> tuple[str, str]:
 
 
 def cross_chain_steps(d: str, src: str, n: int = N_CROSS,
-                      prefix: str = "vvc") -> tuple[list[tuple[str, str]], str]:
+                      prefix: str = "vvc",
+                      ) -> tuple[list[tuple[str, str]], str, set[str]]:
     """Newton chain for the cross Van Vleck integral over relation
     ``src`` with columns (ka, sa, sb) — ka = |khat| — distinct rows.
-    Returns (steps, final_name); final relation is
-    (ka, sa, sb, rho, accepted).
+    Returns (steps, final_name, barriers) as :func:`sigma_chain_steps`;
+    the final relation is (ka, sa, sb, rho, accepted).
 
     Mirrors van_vleck_crosses (vanvleck.py:229-309): solvable gate on the
     initial guess, delta/derivative from one Simpson evaluation per step
     (the derivative is the integrand at the last Simpson point), sticky
     ``bad`` on a zero derivative or non-finite delta -> passthrough."""
     tol = f"(1E-12 + {TOL_CROSS_REL} * ka)"
+    closers = _closers(prefix, n)
     d10 = "GREATEST(1E0 - g * g, 1E-20)"
     integ = "(((fp + gp) * (g / 1E1)) / 3E0)"
     foldp, fold10 = _cross_eval(d, "g")
@@ -311,7 +342,7 @@ def cross_chain_steps(d: str, src: str, n: int = N_CROSS,
          f" CASE WHEN solvable THEN {fold10} ELSE 0E0 END AS f10"
          f" FROM {prefix}_x0"),
         (f"{prefix}_s0",
-         f"SELECT ka, sa, sb, solvable, g, delta, gp,"
+         f"SELECT {_ONE}ka, sa, sb, solvable, g, delta, gp,"
          f" solvable AND NOT {_fin('delta')} AS bad,"
          f" solvable AND ABS(delta) > {tol} AND {_fin('delta')} AS active"
          f" FROM (SELECT ka, sa, sb, solvable, g,"
@@ -338,7 +369,8 @@ def cross_chain_steps(d: str, src: str, n: int = N_CROSS,
              f" FROM {y}"))
         parts.append(
             (s_,
-             f"SELECT ka, sa, sb, solvable, g, delta, gp,"
+             f"SELECT {_ONE if s_ in closers else ''}ka, sa, sb, solvable, g,"
+             f" delta, gp,"
              f" bad OR (active AND NOT {_fin('delta')}) AS bad,"
              f" active AND ABS(delta) > {tol} AND {_fin('delta')} AS active"
              f" FROM (SELECT ka, sa, sb, solvable, g, bad, active,"
@@ -350,11 +382,11 @@ def cross_chain_steps(d: str, src: str, n: int = N_CROSS,
     final = f"{prefix}_out"
     parts.append(
         (final,
-         f"SELECT ka, sa, sb, g AS rho,"
+         f"SELECT {_ONE}ka, sa, sb, g AS rho,"
          f" solvable AND NOT bad AND NOT active"
          f" AND ABS(delta) <= (1E-12 + {ACCEPT_CROSS_REL} * ka) AS accepted"
          f" FROM {prev}"))
-    return parts, final
+    return parts, final, closers | {final}
 
 
 # ------------------------------------------------- full C1 assembly ---
@@ -362,214 +394,46 @@ def cross_chain_steps(d: str, src: str, n: int = N_CROSS,
 _COMPS = ("xx_re", "xx_im", "xy_re", "xy_im",
           "yx_re", "yx_im", "yy_re", "yy_im")
 
-
-def van_vleck_steps(d: str, scale: float,
-                    flagged_ants: tuple[int, ...] = (3,),
-                    lineitem: str = "lineitem",
-                    ) -> tuple[list[tuple[str, str]], str, set[str]]:
-    """The complete C1 query over the synthetic legacy-encoded vis
-    (sources/synthetic.py::load_vis_legacy spelled as shared SQL), in
-    long form: one row per (vis row, pol component) with the corrected,
-    f32-demoted value — (rk, t, chan, ant1, ant2, comp, val).
-
-    Returns ``(steps, final_select, barrier_names)``: ``steps`` is the
-    ordered (name, select_body) list, ``final_select`` the closing query.
-    ``barrier_names`` marks the **dimension-sized** solve relations (the
-    distinct sighat/triple inputs and every Newton-iteration closer) that
-    the Spark executor must materialize behind ``localCheckpoint``:
-    Spark inlines single-consumer CTEs, so a lazy 6-step Newton chain
-    substitutes each step's expression into the next and the Catalyst
-    tree grows exponentially (measured: OOM at sf0.001). The barriers
-    cap every analyzed tree at one iteration's expressions while keeping
-    the fact-side lazy and fully pushed down. DuckDB materializes CTEs
-    by cost, so its text form needs no barriers.
-
-    Mirrors correct_van_vleck (operators/vanvleck.py:346-446) stage for
-    stage: sigma table from unflagged autos (distinct-sighat Newton,
-    broadcast back), double sigma join, per-component melt via a literal
-    comp dimension, distinct-triple cross Newton, guarded assembly with
-    the reference's auto/cross/passthrough arms."""
-    from birli_spark.sources import synthetic as syn
-
-    sc = repr(float(scale)) + "E0" if "e" not in repr(float(scale)) else repr(float(scale))
-    flg = ", ".join(str(a) for a in flagged_ants)
-    not_flagged = f" AND ant1 NOT IN ({flg})" if flagged_ants else ""
-    sig_steps, sig_out = sigma_chain_steps(d, "sigs")
-    tri_steps, tri_out = cross_chain_steps(d, "tris")
-    comps_vals = ", ".join(f"('{c}')" for c in _COMPS)
-    v_case = " ".join(f"WHEN '{c}' THEN {c}" for c in _COMPS)
-    legacy_cols = ", ".join(
-        f"CASE WHEN ant1 = ant2 THEN (bb * bb) * {sc} ELSE kh0 * {sc} END"
-        f" AS {c}" if c in ("xx_re", "yy_re") else f"kh0 * {sc} AS {c}"
-        for c in _COMPS)
-    steps: list[tuple[str, str]] = [
-        ("visr",
-         f"SELECT {syn.vis_select_list()},"
-         f" ((l_orderkey * 100000 + l_partkey) * 10000 + l_suppkey) * 10"
-         f" + l_linenumber AS rk FROM {lineitem}"),
-        ("visb",
-         "SELECT rk, t, chan, ant1, ant2,"
-         " 13E-1 + CAST(kk % 650 AS DOUBLE) / 1E3 AS bb,"
-         " CAST(kk % 200 - 100 AS DOUBLE) / 2E3 AS kh0"
-         " FROM (SELECT *, (t * 31 + chan * 7 + ant1 * 3 + ant2) AS kk"
-         " FROM visr)"),
-        ("vvvis", f"SELECT rk, t, chan, ant1, ant2, {legacy_cols} FROM visb"),
-        ("sigk",
-         f"SELECT t, chan, ant1 AS ant,"
-         f" CASE WHEN pxx / {sc} < 0E0 THEN {_NAN}"
-         f" ELSE SQRT(pxx / {sc}) END AS shx,"
-         f" CASE WHEN pyy / {sc} < 0E0 THEN {_NAN}"
-         f" ELSE SQRT(pyy / {sc}) END AS shy"
-         f" FROM (SELECT t, chan, ant1, MIN(xx_re) AS pxx, MIN(yy_re) AS pyy"
-         f" FROM vvvis WHERE ant1 = ant2{not_flagged} GROUP BY t, chan, ant1)"),
-        ("sigs",
-         "SELECT DISTINCT s FROM ("
-         "SELECT shx AS s FROM sigk UNION ALL SELECT shy AS s FROM sigk) u"
-         " WHERE NOT ISNAN(s)"),
-        *sig_steps,
-        ("sig",
-         # the Newton-out relations are lattice-sized but checkpointed
-         # (no stats) — hint the broadcast Spark can't infer; DuckDB
-         # reads /*+ */ as a comment
-         f"SELECT /*+ BROADCAST(a, b) */"
-         f" k.t, k.chan, k.ant, a.sigma AS sx, b.sigma AS sy"
-         f" FROM sigk k LEFT JOIN {sig_out} a ON k.shx = a.s"
-         f" LEFT JOIN {sig_out} b ON k.shy = b.s"),
-        ("j",
-         "SELECT /*+ BROADCAST(s1, s2) */"
-         " v.*, s1.sx AS s1x, s1.sy AS s1y, s2.sx AS s2x, s2.sy AS s2y"
-         " FROM vvvis v"
-         " LEFT JOIN sig s1 ON v.t = s1.t AND v.chan = s1.chan"
-         " AND v.ant1 = s1.ant"
-         " LEFT JOIN sig s2 ON v.t = s2.t AND v.chan = s2.chan"
-         " AND v.ant2 = s2.ant"),
-        ("m1",
-         f"SELECT rk, t, chan, ant1, ant2, comp, v, s1x, s1y, is_auto,"
-         f" have1, kh,"
-         f" CASE WHEN is_auto THEN s1x"
-         f" WHEN comp LIKE 'x%' THEN s1x ELSE s1y END AS sa_j,"
-         f" CASE WHEN is_auto THEN s1y"
-         f" WHEN comp IN ('xx_re', 'xx_im', 'yx_re', 'yx_im') THEN s2x"
-         f" ELSE s2y END AS sb_j,"
-         f" (is_auto AND have1 AND aok"
-         f" AND comp IN ('xy_re', 'xy_im', 'yx_re', 'yx_im'))"
-         f" OR (NOT is_auto AND have1 AND have2) AS solve_row"
-         f" FROM ("
-         f"SELECT *,"
-         f" CASE WHEN is_auto THEN"
-         f" CASE WHEN comp IN ('xy_re', 'yx_re') THEN khr ELSE khi END"
-         f" ELSE v / {sc} END AS kh,"
-         f" COALESCE(NOT (khr > s1x * s1y OR khi > s1x * s1y), FALSE) AS aok"
-         f" FROM ("
-         f"SELECT rk, t, chan, ant1, ant2, comp,"
-         f" CASE comp {v_case} END AS v,"
-         f" s1x, s1y, s2x, s2y,"
-         f" ant1 = ant2 AS is_auto,"
-         f" {_fin('s1x')} AS have1, {_fin('s2x')} AS have2,"
-         f" xy_re / {sc} AS khr, xy_im / {sc} AS khi"
-         f" FROM j CROSS JOIN (SELECT comp FROM (VALUES {comps_vals})"
-         f" AS c(comp)) cd) i1) i2"),
-        ("tris",
-         "SELECT DISTINCT ABS(kh) AS ka, sa_j AS sa, sb_j AS sb FROM m1"
-         " WHERE solve_row AND kh IS NOT NULL AND NOT ISNAN(kh)"
-         " AND sa_j IS NOT NULL AND NOT ISNAN(sa_j)"
-         " AND sb_j IS NOT NULL AND NOT ISNAN(sb_j)"),
-        *tri_steps,
-    ]
-    final = f"""
-SELECT rk, t, chan, ant1, ant2, comp,
-  CAST(CAST((CASE
-    WHEN is_auto AND have1 AND comp = 'xx_re' THEN {sc} * (s1x * s1x)
-    WHEN is_auto AND have1 AND comp = 'yy_re' THEN {sc} * (s1y * s1y)
-    WHEN is_auto AND have1 AND comp IN ('xx_im', 'yy_im') THEN 0E0
-    WHEN solve_row THEN {sc} * (CASE WHEN is_auto AND comp = 'yx_im'
-         THEN 0E0 - kval ELSE kval END)
-    ELSE v END) AS FLOAT) AS DOUBLE) AS val
-FROM (
-  SELECT /*+ BROADCAST(sv) */ m1.*,
-    CASE WHEN COALESCE(sv.accepted, FALSE)
-         THEN ((SIGN(m1.kh) * sv.rho) * m1.sa_j) * m1.sb_j
-         ELSE m1.kh END AS kval
-  FROM m1 LEFT JOIN {tri_out} sv
-    ON ABS(m1.kh) = sv.ka AND m1.sa_j = sv.sa AND m1.sb_j = sv.sb) f
-"""
-    # sigk/sig are (t, chan, ant)-sized and consumed twice by the double
-    # sigma join — barrier them too so the auto aggregation runs once.
-    barriers = {"sigk", "sigs", "sig", "tris", sig_out, tri_out}
-    # barrier every OTHER Newton closer: one analyzed tree then holds two
-    # inlined iterations (bounded — measured no blowup and identical
-    # output), halving the lattice-chain job count; a full no-barrier
-    # chain is NOT faster (analysis cost of the fully-inlined tree eats
-    # the job savings) and risks the exponential-substitution OOM
-    import re as _re
-
-    def _odd_s(n: str) -> bool:
-        m = _re.fullmatch(r"vv[ac]_s(\d+)", n)
-        return bool(m) and int(m.group(1)) % 2 == 1
-
-    barriers.update(n for n, _ in sig_steps
-                    if n.startswith("vva_s") and not _odd_s(n))
-    barriers.update(n for n, _ in tri_steps
-                    if n.startswith("vvc_s") and not _odd_s(n))
-    return steps, final, barriers
-
-
-def van_vleck_full_sql(d: str, scale: float,
-                       flagged_ants: tuple[int, ...] = (3,),
-                       lineitem: str = "lineitem") -> str:
-    """One-text WITH form of :func:`van_vleck_steps` — the DuckDB oracle
-    (and documentation of the whole plan). ``m1`` (the fact-side melt,
-    consumed by both the triple-distinct and the final assembly) is
-    MATERIALIZED so DuckDB computes the melt once."""
-    steps, final, _ = van_vleck_steps(d, scale, flagged_ants, lineitem)
-    ctes = ",\n".join(
-        f"{name} AS {'MATERIALIZED ' if d == X.DUCK and name == 'm1' else ''}"
-        f"({body})"
-        for name, body in steps)
-    return f"WITH {ctes}\n{final}"
-
-
-def van_vleck_spark(spark, sf_dir: str, scale: float,
-                    flagged_ants: tuple[int, ...] = (3,)):
-    """Execute the relational C1 on Spark: lazy temp views for the
-    fact-side steps (scan→melt→join stays one pushed-down plan), eager
-    ``localCheckpoint`` barriers for the dim-sized Newton-chain closers
-    (see :func:`van_vleck_steps`). The checkpointed relations are a few
-    hundred rows (the correlator's sighat lattice / distinct solve
-    triples), so the barrier cost is O(dimension), never O(fact)."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
-         .createOrReplaceTempView("c1rel_lineitem")
-    steps, final, barriers = van_vleck_steps(
-        X.SPARK, scale, flagged_ants, "c1rel_lineitem")
-    for name, body in steps:
-        df = spark.sql(body)
-        if name in barriers:
-            # chain relations are lattice-bounded (hundreds of rows):
-            # single-partition checkpoints make every Newton step one
-            # task instead of a 32-task round-trip
-            if name.startswith(("vva_", "vvc_", "sigs", "tris")):
-                df = df.coalesce(1)
-            df = df.localCheckpoint(eager=True)
-        df.createOrReplaceTempView(name)
-    return spark.sql(final)
-
-# ------------------------------------------------- wide (pipeline) form ---
+#: the steps a DuckDB rendering of :func:`van_vleck_wide_steps` marks
+#: MATERIALIZED: the fact-side melt, computed once
+DUCK_MATERIALIZED = frozenset({"m1"})
 
 
 def van_vleck_wide_steps(d: str, scale: float,
                          flagged_ants: tuple[int, ...] = (3,),
                          lineitem: str = "lineitem",
-                         out: str = "vvwide",
                          gate: str | None = None,
                          gate_ctes: tuple[tuple[str, str], ...] = (),
-                         ) -> tuple[list[tuple[str, str]], set[str]]:
-    """:func:`van_vleck_steps` extended back to the WIDE vis layout for
-    pipeline composition: the per-component melt is pivoted on the row
-    key (MAX over exactly-one-non-null — order-free exact) and joined
-    back to the scan-side ``visr`` for the carried dimension columns
-    (bl, cc, fc, freq_hz, ts_gps, weight, flag). The closing relation
-    ``out`` has the standard vis schema with Van-Vleck-corrected,
-    f32-demoted pol values — the drop-in head of the preprocess chain.
+                         ) -> tuple[list[tuple[str, str]], str, set[str]]:
+    """The complete C1 query over the synthetic legacy-encoded vis
+    (sources/synthetic.py::load_vis_legacy spelled as shared SQL), in the
+    standard WIDE vis layout: the closing relation ``vvwide`` has the vis
+    schema with Van-Vleck-corrected, f32-demoted pol values — the
+    drop-in head of the preprocess chain.
+
+    Returns ``(steps, final, barriers)`` (the :mod:`textsql` chain form).
+    ``barriers`` marks the **dimension-sized** solve relations (the
+    distinct sighat/triple inputs, the sigma tables and every other
+    Newton-iteration closer) that the Spark executor materializes behind
+    ``localCheckpoint``: Spark inlines single-consumer views, so a lazy
+    6-step Newton chain substitutes each step's expression into the next
+    and the Catalyst tree grows exponentially (measured: OOM at
+    sf0.001). The barriers cap every analyzed tree at two iterations'
+    expressions while keeping the fact side lazy and fully pushed down.
+    The lattice-sized ones (``sigs``, ``tris`` and the chain closers)
+    carry the :data:`_ONE` hint, so each is one single-partition
+    checkpoint. DuckDB materializes CTEs by cost, so its text form needs
+    no barriers; only the melt is MATERIALIZED there
+    (:data:`DUCK_MATERIALIZED`).
+
+    Mirrors correct_van_vleck (operators/vanvleck.py:346-446) stage for
+    stage: sigma table from unflagged autos (distinct-sighat Newton,
+    broadcast back), double sigma join, per-component melt via a literal
+    comp dimension (the input of the distinct-triple cross Newton only),
+    then the guarded assembly with the reference's auto/cross/passthrough
+    arms straight from the wide join ``j``: EIGHT per-component broadcast
+    joins to the lattice-sized solve table, so no melt-pivot fact shuffle
+    is on the output path.
 
     ``gate`` names a (t, cc, _caf) relation (plus any ``gate_ctes``
     defining it, spliced before the assembly): when set, rows of
@@ -578,34 +442,31 @@ def van_vleck_wide_steps(d: str, scale: float,
     (src/preprocessing.rs:249-253, RELEASES.md:17-19)."""
     from birli_spark.sources import synthetic as syn
 
-    steps, final, barriers = van_vleck_steps(d, scale, flagged_ants,
-                                             lineitem)
-    tri_out = "vvc_out"
-    sc = repr(float(scale)) + "E0" if "e" not in repr(float(scale)) \
-        else repr(float(scale))
+    sc = repr(float(scale))
+    if "e" not in sc:
+        sc += "E0"
+    flg = ", ".join(str(a) for a in flagged_ants)
+    not_flagged = f" AND ant1 NOT IN ({flg})" if flagged_ants else ""
+    sig_steps, sig_out, sig_barriers = sigma_chain_steps(d, "sigs")
+    tri_steps, tri_out, tri_barriers = cross_chain_steps(d, "tris")
+    comps_vals = ", ".join(f"('{c}')" for c in _COMPS)
+    v_case = " ".join(f"WHEN '{c}' THEN {c}" for c in _COMPS)
+    legacy_cols = ", ".join(
+        f"CASE WHEN ant1 = ant2 THEN (bb * bb) * {sc} ELSE kh0 * {sc} END"
+        f" AS {c}" if c in ("xx_re", "yy_re") else f"kh0 * {sc} AS {c}"
+        for c in _COMPS)
+    # the dimension columns (bl, cc, fc, freq_hz, ts_gps, weight, flag)
+    # ride along from the scan, so the assembly needs NO rejoin to it
     other = [c for c in syn.VIS_COLUMNS if c not in _COMPS]
     other_list = ", ".join(other)
-    # widen the narrow chain (visb -> vvvis) to carry the dim columns so
-    # the assembly needs NO rejoin to the scan
-    widened = []
-    for name, body in steps:
-        if name in ("visb", "vvvis"):
-            body = body.replace("SELECT rk, t, chan, ant1, ant2,",
-                                f"SELECT rk, t, chan, ant1, ant2,"
-                                f" {other_list},", 1)
-        widened.append((name, body))
-    steps = widened
-    # the melt (m1) stays ONLY as the input of the distinct-triples
-    # build; the wide output assembles from `j` directly with EIGHT
-    # per-component broadcast joins to the lattice-sized solve table —
-    # no melt-pivot fact shuffle on the output path
-    hint = "/*+ BROADCAST(" + ", ".join(
-        [f"sv_{c}" for c in _COMPS] + (["g"] if gate else [])) + ") */ "
+    # the assembly reads each component's (kh, sa, sb) solve key from
+    # the wide join; it references the INPUT pol columns (never the v_*
+    # aliases defined in the same SELECT — lateral alias resolution
+    # differs between the engines)
     jw_cols = []
     joins = []
+    val_cols = []
     for c in _COMPS:
-        # reference the INPUT pol columns (never the v_* aliases defined
-        # in the same SELECT — lateral alias resolution differs)
         if c in ("xy_re", "yx_re"):
             kh = f"CASE WHEN is_auto THEN khr ELSE {c} / {sc} END"
         elif c in ("xy_im", "yx_im"):
@@ -622,8 +483,6 @@ def van_vleck_wide_steps(d: str, scale: float,
             f" LEFT JOIN {tri_out} sv_{c}"
             f" ON ABS(jw.kh_{c}) = sv_{c}.ka AND jw.sa_{c} = sv_{c}.sa"
             f" AND jw.sb_{c} = sv_{c}.sb")
-    val_cols = []
-    for c in _COMPS:
         solve = (f"((jw.is_auto AND jw.have1 AND jw.aok"
                  f" AND '{c}' IN ('xy_re', 'xy_im', 'yx_re', 'yx_im'))"
                  f" OR (NOT jw.is_auto AND jw.have1 AND jw.have2))")
@@ -644,56 +503,112 @@ def van_vleck_wide_steps(d: str, scale: float,
             f" ELSE {kval} END)"
             f" ELSE jw.v_{c} END) AS FLOAT) AS DOUBLE) AS {c}")
     v_keep = ", ".join(f"{c} AS v_{c}" for c in _COMPS)
-    aok = ("COALESCE(NOT (khr > s1x * s1y OR khi > s1x * s1y), FALSE)"
-           " AS aok")
+    aok = "COALESCE(NOT (khr > s1x * s1y OR khi > s1x * s1y), FALSE)"
+    hint = "/*+ BROADCAST(" + ", ".join(
+        [f"sv_{c}" for c in _COMPS] + (["g"] if gate else [])) + ") */ "
     gate_join = (f" LEFT JOIN {gate} g ON jw.t = g.t AND jw.cc = g.cc"
                  if gate else "")
-    steps = steps + list(gate_ctes) + [
+    steps: list[tuple[str, str]] = [
+        ("visr", syn.vis_sql(lineitem)),
+        ("visb",
+         f"SELECT {other_list},"
+         " 13E-1 + CAST(kk % 650 AS DOUBLE) / 1E3 AS bb,"
+         " CAST(kk % 200 - 100 AS DOUBLE) / 2E3 AS kh0"
+         " FROM (SELECT *, (t * 31 + chan * 7 + ant1 * 3 + ant2) AS kk"
+         " FROM visr)"),
+        ("vvvis", f"SELECT {other_list}, {legacy_cols} FROM visb"),
+        ("sigk",
+         f"SELECT t, chan, ant1 AS ant,"
+         f" CASE WHEN pxx / {sc} < 0E0 THEN {_NAN}"
+         f" ELSE SQRT(pxx / {sc}) END AS shx,"
+         f" CASE WHEN pyy / {sc} < 0E0 THEN {_NAN}"
+         f" ELSE SQRT(pyy / {sc}) END AS shy"
+         f" FROM (SELECT t, chan, ant1, MIN(xx_re) AS pxx, MIN(yy_re) AS pyy"
+         f" FROM vvvis WHERE ant1 = ant2{not_flagged} GROUP BY t, chan, ant1)"),
+        ("sigs",
+         f"SELECT {_ONE}DISTINCT s FROM ("
+         "SELECT shx AS s FROM sigk UNION ALL SELECT shy AS s FROM sigk) u"
+         " WHERE NOT ISNAN(s)"),
+        *sig_steps,
+        ("sig",
+         # the Newton-out relations are lattice-sized but checkpointed
+         # (no stats) — hint the broadcast Spark can't infer; DuckDB
+         # reads /*+ */ as a comment
+         f"SELECT /*+ BROADCAST(a, b) */"
+         f" k.t, k.chan, k.ant, a.sigma AS sx, b.sigma AS sy"
+         f" FROM sigk k LEFT JOIN {sig_out} a ON k.shx = a.s"
+         f" LEFT JOIN {sig_out} b ON k.shy = b.s"),
+        ("j",
+         "SELECT /*+ BROADCAST(s1, s2) */"
+         " v.*, s1.sx AS s1x, s1.sy AS s1y, s2.sx AS s2x, s2.sy AS s2y"
+         " FROM vvvis v"
+         " LEFT JOIN sig s1 ON v.t = s1.t AND v.chan = s1.chan"
+         " AND v.ant1 = s1.ant"
+         " LEFT JOIN sig s2 ON v.t = s2.t AND v.chan = s2.chan"
+         " AND v.ant2 = s2.ant"),
+        ("m1",
+         f"SELECT kh,"
+         f" CASE WHEN is_auto THEN s1x"
+         f" WHEN comp LIKE 'x%' THEN s1x ELSE s1y END AS sa_j,"
+         f" CASE WHEN is_auto THEN s1y"
+         f" WHEN comp IN ('xx_re', 'xx_im', 'yx_re', 'yx_im') THEN s2x"
+         f" ELSE s2y END AS sb_j,"
+         f" (is_auto AND have1 AND aok"
+         f" AND comp IN ('xy_re', 'xy_im', 'yx_re', 'yx_im'))"
+         f" OR (NOT is_auto AND have1 AND have2) AS solve_row"
+         f" FROM ("
+         f"SELECT *,"
+         f" CASE WHEN is_auto THEN"
+         f" CASE WHEN comp IN ('xy_re', 'yx_re') THEN khr ELSE khi END"
+         f" ELSE v / {sc} END AS kh,"
+         f" {aok} AS aok"
+         f" FROM ("
+         f"SELECT comp,"
+         f" CASE comp {v_case} END AS v,"
+         f" s1x, s1y, s2x, s2y,"
+         f" ant1 = ant2 AS is_auto,"
+         f" {_fin('s1x')} AS have1, {_fin('s2x')} AS have2,"
+         f" xy_re / {sc} AS khr, xy_im / {sc} AS khi"
+         f" FROM j CROSS JOIN (SELECT comp FROM (VALUES {comps_vals})"
+         f" AS c(comp)) cd) i1) i2"),
+        ("tris",
+         f"SELECT {_ONE}DISTINCT ABS(kh) AS ka, sa_j AS sa, sb_j AS sb"
+         " FROM m1"
+         " WHERE solve_row AND kh IS NOT NULL AND NOT ISNAN(kh)"
+         " AND sa_j IS NOT NULL AND NOT ISNAN(sa_j)"
+         " AND sb_j IS NOT NULL AND NOT ISNAN(sb_j)"),
+        *tri_steps,
+        *gate_ctes,
         ("jw",
-         f"SELECT rk, t, chan, ant1, ant2, {other_list}, {v_keep},"
-         f" s1x, s1y, s2x, s2y, is_auto, have1, have2, {aok},"
+         f"SELECT {other_list}, {v_keep},"
+         f" s1x, s1y, s2x, s2y, is_auto, have1, have2, {aok} AS aok,"
          f" {', '.join(jw_cols)}"
          f" FROM (SELECT jj.*, jj.ant1 = jj.ant2 AS is_auto,"
          f" {_fin('jj.s1x')} AS have1, {_fin('jj.s2x')} AS have2,"
          f" jj.xy_re / {sc} AS khr, jj.xy_im / {sc} AS khi"
          f" FROM j jj) i"),
-        (out,
+        ("vvwide",
          f"SELECT {hint}"
          + ", ".join(f"jw.{c}" for c in other) + ", "
          + ", ".join(val_cols)
          + " FROM jw" + "".join(joins) + gate_join),
     ]
-    return steps, barriers
+    # sigk/sig are (t, chan, ant)-sized and consumed twice by the double
+    # sigma join — barrier them too so the auto aggregation runs once
+    barriers = {"sigk", "sigs", "sig", "tris"} | sig_barriers | tri_barriers
+    return steps, "SELECT * FROM vvwide", barriers
 
 
 def van_vleck_spark_wide(spark, sf_dir: str, scale: float,
                          flagged_ants: tuple[int, ...] = (3,),
                          gate: str | None = None):
-    """Wide-layout relational C1 on Spark (see :func:`van_vleck_spark`
-    for the barrier strategy) — returns the corrected vis DataFrame.
+    """Relational C1 on Spark over ``sf_dir``'s lineitem: lazy temp views
+    for the fact-side steps (scan→melt→join stays one pushed-down plan),
+    eager checkpoints for the dimension-sized barriers (see
+    :func:`van_vleck_wide_steps`) — returns the corrected vis DataFrame.
     ``gate`` names a pre-registered (t, cc, _caf) temp view (the caller
     checkpoints it — pipeline.preprocess_full_rel)."""
     spark.read.parquet(f"{sf_dir}/lineitem.parquet") \
          .createOrReplaceTempView("c1rel_lineitem")
-    steps, barriers = van_vleck_wide_steps(
-        X.SPARK, scale, flagged_ants, "c1rel_lineitem", gate=gate)
-    df = None
-    for name, body in steps:
-        df = spark.sql(body)
-        if name in barriers:
-            if name.startswith(("vva_", "vvc_", "sigs", "tris")):
-                df = df.coalesce(1)
-            df = df.localCheckpoint(eager=True)
-        df.createOrReplaceTempView(name)
-    return df
-
-
-def van_vleck_wide_sql(d: str, scale: float,
-                       flagged_ants: tuple[int, ...] = (3,),
-                       lineitem: str = "lineitem") -> str:
-    """One-text WITH form of the WIDE plan (the c1 DuckDB oracle)."""
-    steps, _ = van_vleck_wide_steps(d, scale, flagged_ants, lineitem)
-    ctes = ",\n".join(
-        f"{n} AS {'MATERIALIZED ' if d == X.DUCK and n == 'm1' else ''}"
-        f"({b})" for n, b in steps)
-    return f"WITH {ctes}\nSELECT * FROM vvwide"
+    return X.run_steps(spark, *van_vleck_wide_steps(
+        X.SPARK, scale, flagged_ants, "c1rel_lineitem", gate=gate))

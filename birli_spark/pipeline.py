@@ -138,41 +138,19 @@ def rule_flags(spark: SparkSession, vis: DataFrame) -> DataFrame:
 
 def relational_sumthreshold(vis: DataFrame) -> DataFrame:
     """F9 as one relational plan: the SumThreshold mask of the
-    cell-unique reduction (operators/rfi_sql.py), OR-ed onto every row
-    of its cell."""
+    cell-unique reduction (operators/rfi_sql.py::flag_rfi_steps), OR-ed
+    onto every row of its cell."""
+    from birli_spark.functions import textsql as X
     from birli_spark.operators import rfi_sql
 
-    spark = vis.sparkSession
-    cols = tuple(vis.columns)
     # the corrected fact feeds TWO consumers (the cell-unique image
     # and the mask join-back): materialize it once so the upstream
     # head (notably the relational Van Vleck chain in
     # preprocess_full_rel) is not evaluated twice — the same
     # persist-at-the-fan-out a cluster job would use
-    vis = vis.localCheckpoint(eager=True)
-    vis.createOrReplaceTempView("ppf_passbanded")
-    # the cell-unique image is (bl x t x chan)-sized — checkpoint it
-    # so the 24-layer window chain doesn't drag (and re-analyze) the
-    # whole upstream corrections plan behind each layer
-    spark.sql(rfi_sql.cell_dedup_select("ppf_passbanded", cols)) \
-         .localCheckpoint(eager=True) \
-         .createOrReplaceTempView("st_cell")
-    st_ctes, st_mask = rfi_sql.sumthreshold_parts(
-        "st_cell", median_fn="percentile")
-    rfid_cols = ", ".join(
-        "(p.flag OR m.det) AS flag" if c == "flag" else f"p.{c}"
-        for c in cols)
-    # mask side leaves the ladder (ant1, ant2)-partitioned; hash the
-    # checkpointed fact ONCE the same way so the cell-mask join-back
-    # is subset co-partitioned (guide §2.4/§3) — one fact exchange
-    # on the coarse key instead of a 4-key exchange of BOTH sides
-    return spark.sql(
-        f"WITH {st_ctes}, st_maskr AS ({st_mask})"
-        f" SELECT {rfid_cols} FROM"
-        f" (SELECT /*+ REPARTITION(ant1, ant2) */ *"
-        f" FROM ppf_passbanded) p"
-        f" JOIN st_maskr m ON p.ant1 = m.ant1 AND p.ant2 = m.ant2"
-        f" AND p.t = m.t AND p.chan = m.chan")
+    vis.localCheckpoint(eager=True).createOrReplaceTempView("ppf_passbanded")
+    return X.run_steps(vis.sparkSession, *rfi_sql.flag_rfi_steps(
+        "ppf_passbanded", "percentile", tuple(vis.columns), dedup=True))
 
 
 def preprocess_baked(spark: SparkSession, sf_dir: str,
@@ -277,14 +255,11 @@ def preprocess_full_oracle_sql(avg_time: int = AVG_TIME,
             "vvvis", "ts_flags", "bl_flags", fc_pred, ("t", "cc", "flag"))),
         ("vv_gate", corrections.cell_gate_oracle_select("vvgf")),
     )
-    steps, _ = vanvleck_sql.van_vleck_wide_steps(
+    steps, final, _ = vanvleck_sql.van_vleck_wide_steps(
         X.DUCK, syn.VV_SAMPLE_SCALE, (3,), gate="vv_gate",
         gate_ctes=gate_ctes)
-    pre = ",\n".join(
-        f"{n} AS {'MATERIALIZED ' if n == 'm1' else ''}({b})"
-        for n, b in steps)
-    baked = baked_oracle_ctes(pre_ctes=pre + ",",
-                              vis_cte="SELECT * FROM vvwide",
+    pre = X.ctes(steps, vanvleck_sql.DUCK_MATERIALIZED)
+    baked = baked_oracle_ctes(pre_ctes=pre + ",", vis_cte=final,
                               st_rfi=True, dims_before_pre=True)
     avg = averaging.averaging_oracle_select("baked", avg_time, avg_freq)
     return f"WITH {baked} {avg}"
@@ -363,22 +338,12 @@ def baked_oracle_ctes(vis_where: str = "", ssins_rfi: bool = False,
 
         rfi_ctes = ssins.ssins_flag_vis_oracle_ctes("passbanded", cols)
     elif st_rfi:
+        from birli_spark.functions import textsql as X
         from birli_spark.operators import rfi_sql
 
-        st_ctes, st_mask = rfi_sql.sumthreshold_parts(
-            "st_cell", median_fn="quantile_cont")
-        rfid_cols = ", ".join(
-            "(p.flag OR m.det) AS flag" if c == "flag" else f"p.{c}"
-            for c in cols
-        )
-        rfi_ctes = (
-            f" st_cell AS ({rfi_sql.cell_dedup_select('passbanded', cols)}),"
-            f" {st_ctes},"
-            f" st_maskr AS ({st_mask}),"
-            f" rfid AS (SELECT {rfid_cols} FROM passbanded p"
-            f" JOIN st_maskr m ON p.ant1 = m.ant1 AND p.ant2 = m.ant2"
-            f" AND p.t = m.t AND p.chan = m.chan),"
-        )
+        steps, final, _ = rfi_sql.flag_rfi_steps(
+            "passbanded", "quantile_cont", cols, dedup=True)
+        rfi_ctes = f" {X.ctes(steps)}, rfid AS ({final}),"
     dim_head = ""
     if dims_before_pre:
         # the pre-CTE chain (Van Vleck + its v0.18.0 gate) references

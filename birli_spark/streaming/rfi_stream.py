@@ -99,14 +99,15 @@ def mask_drained(image: DataFrame,
                  base_sensitivity: float = 6.0) -> DataFrame:
     """The relational SumThreshold mask over a drained image — the
     batch plan (operators/rfi_sql.py) run on the streaming output."""
+    from birli_spark.functions import textsql as X
     from birli_spark.operators import rfi_sql
 
     spark = image.sparkSession
     image.createOrReplaceTempView("st10_drained")
-    ctes, final = rfi_sql.sumthreshold_parts(
+    steps, final, _ = rfi_sql.sumthreshold_steps(
         "st10_drained", "percentile", base_sensitivity,
         prefix="st10", vis_is_base=True)
-    return spark.sql(f"WITH {ctes} {final}")
+    return spark.sql(f"WITH {X.ctes(steps)} {final}")
 
 
 def run_available_now(spark: SparkSession, sf_dir: str,

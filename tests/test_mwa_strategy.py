@@ -11,6 +11,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+from birli_spark.functions import textsql as X
 from birli_spark.operators import rfi, rfi_sql
 
 COLS = ("t", "ant1", "ant2", "chan",
@@ -40,8 +41,9 @@ def _mk_rows(values: dict, baselines, nt=32, nc=34, flags=(),
 def _run_duck(pdf: pd.DataFrame) -> pd.DataFrame:
     con = duckdb.connect()
     con.register("visin", pdf)
-    ctes, final = rfi_sql.mwa_strategy_sql("visin", "quantile_cont")
-    out = con.execute(f"WITH {ctes} {final}").df()
+    steps, final, barriers = rfi_sql.mwa_strategy_steps("visin",
+                                                        "quantile_cont")
+    out = con.execute(f"WITH {X.ctes(steps, barriers)} {final}").df()
     out["det"] = out["det"].astype(bool)
     return out.sort_values(["ant1", "ant2", "t", "chan"]) \
               .reset_index(drop=True)

@@ -39,17 +39,21 @@ def test_norm_preserved():
     assert abs(np.linalg.norm(p) - np.linalg.norm(xyz)) < 1e-9
 
 
+def _sql(d, **kw) -> str:
+    """The one-text chain of the synthetic antennas' precessed UVWs."""
+    steps, final, _ = PR.part_uvw_precessed_steps(
+        d, RA0, DEC0, float(syn.GPS_START), syn.INT_TIME_S, syn.NUM_T,
+        antennas="prc_ants", **kw)
+    return f"WITH {X.ctes(steps)}\n{final}"
+
+
 def test_sql_cross_engine_bitexact_and_matches_numpy(spark):
     spark.sql(f"CREATE OR REPLACE TEMP VIEW prc_ants AS "
               f"{syn.ANTENNAS_SQL}")
-    s = spark.sql(PR.part_uvw_precessed_sql(
-        X.SPARK, RA0, DEC0, float(syn.GPS_START), syn.INT_TIME_S,
-        syn.NUM_T, antennas="prc_ants")).toPandas()
+    s = spark.sql(_sql(X.SPARK)).toPandas()
     con = duckdb.connect()
     con.execute(f"CREATE VIEW prc_ants AS {syn.ANTENNAS_SQL}")
-    d = con.execute(PR.part_uvw_precessed_sql(
-        X.DUCK, RA0, DEC0, float(syn.GPS_START), syn.INT_TIME_S,
-        syn.NUM_T, antennas="prc_ants")).df()
+    d = con.execute(_sql(X.DUCK)).df()
     key = ["t", "ant"]
     s2 = s.sort_values(key).reset_index(drop=True)
     d2 = d.sort_values(key).reset_index(drop=True)
@@ -119,14 +123,10 @@ def test_dut1_sql_cross_engine_and_matches_numpy(spark):
     the c3c path the CLI's --dut1 feeds (cli.py::--dut1)."""
     spark.sql(f"CREATE OR REPLACE TEMP VIEW prc_ants AS "
               f"{syn.ANTENNAS_SQL}")
-    s = spark.sql(PR.part_uvw_precessed_sql(
-        X.SPARK, RA0, DEC0, float(syn.GPS_START), syn.INT_TIME_S,
-        syn.NUM_T, antennas="prc_ants", dut1_s=DUT1)).toPandas()
+    s = spark.sql(_sql(X.SPARK, dut1_s=DUT1)).toPandas()
     con = duckdb.connect()
     con.execute(f"CREATE VIEW prc_ants AS {syn.ANTENNAS_SQL}")
-    d = con.execute(PR.part_uvw_precessed_sql(
-        X.DUCK, RA0, DEC0, float(syn.GPS_START), syn.INT_TIME_S,
-        syn.NUM_T, antennas="prc_ants", dut1_s=DUT1)).df()
+    d = con.execute(_sql(X.DUCK, dut1_s=DUT1)).df()
     key = ["t", "ant"]
     s2 = s.sort_values(key).reset_index(drop=True)
     d2 = d.sort_values(key).reset_index(drop=True)
@@ -144,9 +144,7 @@ def test_dut1_sql_cross_engine_and_matches_numpy(spark):
     np.testing.assert_allclose(sub[["u", "v", "w"]].to_numpy(), ref,
                                atol=1e-4)
     # the DUT1=0 SQL result is materially DIFFERENT (the flag matters)
-    s0 = spark.sql(PR.part_uvw_precessed_sql(
-        X.SPARK, RA0, DEC0, float(syn.GPS_START), syn.INT_TIME_S,
-        syn.NUM_T, antennas="prc_ants")).toPandas() \
+    s0 = spark.sql(_sql(X.SPARK)).toPandas() \
         .sort_values(key).reset_index(drop=True)
     assert not np.allclose(s2[["u", "v", "w"]].to_numpy(),
                            s0[["u", "v", "w"]].to_numpy(), atol=1e-6)

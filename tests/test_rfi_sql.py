@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 
 from birli_spark import pipeline
+from birli_spark.functions import textsql as X
 from birli_spark.operators import rfi, rfi_sql
 from birli_spark.sources import synthetic as syn
 
@@ -22,9 +23,9 @@ COLS = ("t", "ant1", "ant2", "chan",
 def _run_duck(pdf: pd.DataFrame) -> pd.DataFrame:
     con = duckdb.connect()
     con.register("visin", pdf)
-    ctes, final = rfi_sql.flag_rfi_parts(
-        "visin", "quantile_cont", columns=tuple(pdf.columns))
-    return con.execute(f"WITH {ctes} {final}").df()
+    steps, final, _ = rfi_sql.flag_rfi_steps(
+        "visin", "quantile_cont", tuple(pdf.columns))
+    return con.execute(f"WITH {X.ctes(steps)} {final}").df()
 
 
 def _mk_rows(rng, baselines, nt=64, nc=64, spike=None):
@@ -103,9 +104,8 @@ def test_matches_udf_and_duckdb(spark, sf_dir):
     cell_sql = rfi_sql.cell_dedup_select("t_f9_flagged", cols)
     cell = spark.sql(cell_sql)
     cell.createOrReplaceTempView("t_f9_cell")
-    ctes, final = rfi_sql.flag_rfi_parts("t_f9_cell", "percentile",
-                                         columns=cols)
-    s = spark.sql(f"WITH {ctes} {final}").toPandas()
+    steps, final, _ = rfi_sql.flag_rfi_steps("t_f9_cell", "percentile", cols)
+    s = spark.sql(f"WITH {X.ctes(steps)} {final}").toPandas()
     u = rfi.flag_rfi(cell).toPandas()
     key = ["t", "chan", "ant1", "ant2"]
     s2 = s.sort_values(key).reset_index(drop=True)
@@ -115,9 +115,9 @@ def test_matches_udf_and_duckdb(spark, sf_dir):
 
     con = duckdb.connect()
     con.register("cellpd", cell.toPandas())
-    dctes, dfinal = rfi_sql.flag_rfi_parts("cellpd", "quantile_cont",
-                                           columns=cols)
-    d = con.execute(f"WITH {dctes} {dfinal}").df()
+    dsteps, dfinal, _ = rfi_sql.flag_rfi_steps("cellpd", "quantile_cont",
+                                               cols)
+    d = con.execute(f"WITH {X.ctes(dsteps)} {dfinal}").df()
     d2 = d.sort_values(key).reset_index(drop=True)
     assert len(d2) == len(s2)
     for c in s2.columns:
@@ -178,8 +178,8 @@ def test_sir_sql_matches_numpy():
         for t in range(nt) for c in range(nc)])
     con = duckdb.connect()
     con.register("m0", pdf)
-    ctes, final = rfi_sql.sir_parts("m0", 0.2)
-    out = con.execute(f"WITH {ctes} {final}").df()
+    steps, final, _ = rfi_sql.sir_steps("m0", 0.2)
+    out = con.execute(f"WITH {X.ctes(steps)} {final}").df()
     got = np.zeros((nt, nc), bool)
     for _, r in out.iterrows():
         got[int(r.t), int(r.chan)] = bool(r.det)

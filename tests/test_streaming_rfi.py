@@ -8,6 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from birli_spark.functions import textsql as X
 from birli_spark.operators import rfi_sql
 from birli_spark.sources import synthetic as syn
 from birli_spark.streaming import rfi_stream
@@ -21,9 +22,9 @@ def test_stream_mask_equals_batch(spark, sf_dir):
     vis.createOrReplaceTempView("t_st10_vis")
     cell = rfi_sql.cell_dedup_select("t_st10_vis", tuple(vis.columns))
     spark.sql(cell).createOrReplaceTempView("t_st10_cell")
-    ctes, mask = rfi_sql.sumthreshold_parts("t_st10_cell", "percentile",
-                                            prefix="st10b")
-    want = spark.sql(f"WITH {ctes} {mask}").toPandas()
+    steps, mask, _ = rfi_sql.sumthreshold_steps("t_st10_cell", "percentile",
+                                                prefix="st10b")
+    want = spark.sql(f"WITH {X.ctes(steps)} {mask}").toPandas()
 
     key = ["t", "chan", "ant1", "ant2"]
     g = got.sort_values(key).reset_index(drop=True)

@@ -26,8 +26,7 @@ GOLDEN = json.load(open(os.path.join(os.path.dirname(__file__),
 def _duck_chain(steps, final, src_df, src_name):
     con = duckdb.connect()
     con.register(src_name, src_df)
-    ctes = ",\n".join(f"{n} AS ({b})" for n, b in steps)
-    return con.execute(f"WITH {ctes} SELECT * FROM {final}").df()
+    return con.execute(f"WITH {X.ctes(steps)} SELECT * FROM {final}").df()
 
 
 def test_sigma_chain_golden_duckdb():
@@ -35,7 +34,7 @@ def test_sigma_chain_golden_duckdb():
     within the f32-transcendental tolerance (fixtures span sigma
     0.9 — 9.6, i.e. the whole real correlator range)."""
     src = pd.DataFrame({"s": np.array(GOLDEN["SIGHATS"], dtype=np.float64)})
-    steps, final = V.sigma_chain_steps(X.DUCK, "golden_sighats")
+    steps, final, _ = V.sigma_chain_steps(X.DUCK, "golden_sighats")
     out = _duck_chain(steps, final, src, "golden_sighats")
     got = out.set_index("s")["sigma"]
     for sh, sig in zip(GOLDEN["SIGHATS"], GOLDEN["SIGMAS"]):
@@ -51,7 +50,7 @@ def test_cross_chain_golden_duckdb():
         "sa": np.array(GOLDEN["SIGMAS1"], dtype=np.float64),
         "sb": np.array(GOLDEN["SIGMAS2"], dtype=np.float64),
     }).drop_duplicates()
-    steps, final = V.cross_chain_steps(X.DUCK, "golden_triples")
+    steps, final, _ = V.cross_chain_steps(X.DUCK, "golden_triples")
     out = _duck_chain(steps, final, src, "golden_triples")
     out = out.assign(kappa=out["rho"] * out["sa"] * out["sb"])
     # golden kappas are signed; the chain solves |khat| -> rho >= 0
@@ -76,7 +75,7 @@ def test_cross_chain_unsolvable_passthrough_duckdb():
         "sa": [0.3, 1.0, 0.0],
         "sb": [0.3, 1.0, 2.0],
     })
-    steps, final = V.cross_chain_steps(X.DUCK, "bad_triples")
+    steps, final, _ = V.cross_chain_steps(X.DUCK, "bad_triples")
     out = _duck_chain(steps, final, src, "bad_triples")
     m = src.merge(out, on=["ka", "sa", "sb"], how="left")
     # row 0: g0 = 0.9 -> solvable, but Newton wanders (reference
@@ -86,39 +85,52 @@ def test_cross_chain_unsolvable_passthrough_duckdb():
     assert not m.loc[2, "accepted"]          # sa = 0
 
 
+def _by_row(df: pd.DataFrame) -> pd.DataFrame:
+    """The wide plan's rows in one canonical order: sorted by every
+    non-pol column, then by the pol values (rows of one cell may repeat)."""
+    other = [c for c in df.columns if c not in V._COMPS]
+    return df.sort_values(other + list(V._COMPS)).reset_index(drop=True)
+
+
 def test_full_plan_cross_engine_bitexact(spark, sf_dir):
-    """Spark (stepwise + localCheckpoint barriers) and DuckDB (one WITH
-    text) produce value-identical doubles on every (row, component) —
-    the exact property the driver's hash compare requires."""
+    """Spark (``run_steps``: stepwise + localCheckpoint barriers) and
+    DuckDB (one WITH text over ``ctes``) produce value-identical doubles
+    on every (row, pol) — the exact property the driver's hash compare
+    requires."""
     scale = syn.VV_SAMPLE_SCALE
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW lineitem AS SELECT * FROM "
         f"read_parquet('{sf_dir}/lineitem.parquet')")
-    d = con.execute(V.van_vleck_full_sql(X.DUCK, scale, (3,))).df()
-    s = V.van_vleck_spark(spark, sf_dir, scale, (3,)).toPandas()
-    key = ["rk", "comp"]
-    d = d.sort_values(key).reset_index(drop=True)
-    s = s.sort_values(key).reset_index(drop=True)
+    steps, final, _ = V.van_vleck_wide_steps(X.DUCK, scale, (3,))
+    d = _by_row(con.execute(
+        f"WITH {X.ctes(steps, V.DUCK_MATERIALIZED)}\n{final}").df())
+    s = _by_row(V.van_vleck_spark_wide(spark, sf_dir, scale, (3,))
+                .toPandas())
     assert len(d) == len(s) and len(s) > 0
-    a = s["val"].to_numpy(np.float64)
-    b = d["val"].to_numpy(np.float64)
-    eq = (a.view(np.int64) == b.view(np.int64)) | (np.isnan(a) & np.isnan(b))
-    assert eq.all(), f"{(~eq).sum()} of {len(a)} values differ in bits"
+    other = [c for c in s.columns if c not in V._COMPS]
+    assert (s[other].to_numpy() == d[other].to_numpy()).all()
+    for c in V._COMPS:
+        a = s[c].to_numpy(np.float64)
+        b = d[c].to_numpy(np.float64)
+        eq = (a.view(np.int64) == b.view(np.int64)) | (
+            np.isnan(a) & np.isnan(b))
+        assert eq.all(), f"{c}: {(~eq).sum()} of {len(a)} values differ in bits"
 
 
 def test_full_plan_matches_udf(spark, sf_dir):
     """The relational plan agrees with the full-f64 UDF island within the
     documented f32-transcendental envelope (no NaN disagreements)."""
     scale = syn.VV_SAMPLE_SCALE
-    rel = V.van_vleck_spark(spark, sf_dir, scale, (3,)).toPandas()
+    key = ["t", "chan", "ant1", "ant2"]
+    rel = V.van_vleck_spark_wide(spark, sf_dir, scale, (3,)).toPandas() \
+        .melt(id_vars=key, value_vars=list(V._COMPS), var_name="comp",
+              value_name="val")
     vis = syn.load_vis_legacy(spark, sf_dir)
     u = vv.correct_van_vleck(vis, scale, flagged_ants=[3]).toPandas()
-    um = u.melt(id_vars=["t", "chan", "ant1", "ant2"],
-                value_vars=list(V._COMPS), var_name="comp",
-                value_name="uval").drop_duplicates(
-        subset=["t", "chan", "ant1", "ant2", "comp"])
-    m = rel.merge(um, on=["t", "chan", "ant1", "ant2", "comp"], how="left")
+    um = u.melt(id_vars=key, value_vars=list(V._COMPS), var_name="comp",
+                value_name="uval").drop_duplicates(subset=key + ["comp"])
+    m = rel.merge(um, on=key + ["comp"], how="left")
     assert len(m) == len(rel)
     a = m["val"].to_numpy(np.float64)
     b = m["uval"].to_numpy(np.float64)
