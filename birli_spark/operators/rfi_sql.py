@@ -288,10 +288,10 @@ def sir_steps(mask: str = "st_mask", eta: float = 0.2,
               extra: tuple[str, ...] = (),
               repartition_head: bool = False,
               ) -> tuple[list[tuple[str, str]], str, frozenset[str]]:
-    """(steps, final SELECT, no barriers) of the scale-invariant-rank dilation
-    (Offringa & van de Gronde 2012 — the morphological post-pass of
-    AOFlagger's strategy, reference src/flags.rs:368-437 via FFI) over a
-    mask relation (ant1, ant2, t, chan, det): time direction, then
+    """(steps, final SELECT, no barriers) of the scale-invariant-rank
+    dilation (Offringa & van de Gronde 2012 — the morphological post-pass
+    of AOFlagger's strategy, reference src/flags.rs:368-437 via FFI) over
+    a mask relation (ant1, ant2, t, chan, det): time direction, then
     frequency on the time-dilated mask (rfi.py::sir_mask).
 
     Per 1-D pass: with integer-tick weights w = eta*D (flagged) /
@@ -336,8 +336,8 @@ def sir_steps(mask: str = "st_mask", eta: float = 0.2,
             if repartition_head else mask)
     steps = (pass_ctes(head, "chan", "t", "t")
              + pass_ctes(f"{p}_to", "t", "chan", "f"))
-    return steps, f"SELECT ant1, ant2, t, chan, det{ex} FROM {p}_fo", \
-        frozenset()
+    final = f"SELECT ant1, ant2, t, chan, det{ex} FROM {p}_fo"
+    return steps, final, frozenset()
 
 
 # ------------------------------------ F9d: iterative AOFlagger strategy ---
