@@ -13,6 +13,7 @@ pattern) so Spark and DuckDB hash identically.
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 from collections.abc import Callable
 
@@ -2358,7 +2359,9 @@ def oracle_sql() -> dict[str, str]:
             + occupancy.occupancy_oracle_select("flagged", ("ant1", "ant2"))),
         "a4_rowcount_validation": _with_vis("SELECT COUNT(*) AS n_rows FROM vis"),
         "pipeline_preprocess": pipeline.preprocess_oracle_sql(),
-        "pipeline_preprocess_ssins": pipeline.preprocess_oracle_sql(ssins_rfi=True),
+        "pipeline_preprocess_ssins": pipeline.preprocess_oracle_sql(
+            surface=dataclasses.replace(pipeline.SURFACE,
+                                        rfi=ssins.ssins_flag_vis_oracle_ctes)),
         "pipeline_preprocess_full": pipeline.preprocess_full_oracle_sql(),
         "s3_antenna_dim": syn.ANTENNAS_SQL,
         "s1b_gpubox_fits_scan": gpubox.expected_grid_sql(**_GPUBOX_SHAPE),

@@ -1082,7 +1082,22 @@ def run(argv: list[str], spark: SparkSession | None = None) -> dict:
         return result
     finally:
         if own_session:
-            spark.stop()
+            try:
+                _delete_checkpoint_dir(spark)
+            finally:
+                spark.stop()
+
+
+def _delete_checkpoint_dir(spark: SparkSession) -> None:
+    """Delete the context's reliable-checkpoint directory
+    (``pipeline.fanout_materialize``): Spark keeps checkpoint files after
+    ``stop()``. The directory is this context's own ``<uuid>/``; it is
+    deleted through its Hadoop FileSystem, so a shared one is too."""
+    sc = spark.sparkContext
+    d = sc.getCheckpointDir()
+    if d is not None:
+        path = sc._jvm.org.apache.hadoop.fs.Path(d)
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def main() -> None:

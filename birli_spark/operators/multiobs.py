@@ -19,6 +19,10 @@ Everything here is ONE SQL text valid in both dialects — the Spark
 query and the DuckDB oracle run literally the same string, so the
 driver hash gate certifies the whole catalogue plan.
 
+The chain up to the bake is the single-observation flowchart
+composition (``pipeline.baked_oracle_ctes``) over the catalogue surface
+(:func:`mo_surface`); only the averaging closer is the catalogue's own.
+
 Per-obs realism knobs (all exact arithmetic, cross-engine-safe):
 observation o starts ``OBS_STRIDE_S`` after its predecessor (so quack
 re-triggers at each obs head), its partial UVWs drift by o/4 metres
@@ -28,14 +32,19 @@ drift) — making every observation's output distinguishable end to end.
 
 from __future__ import annotations
 
+from dataclasses import replace
+from functools import partial
+from typing import Callable
+
 from birli_spark import pipeline
 from birli_spark.functions.complex import VIS_COLS
-from birli_spark.operators import calibration, corrections, flags, weights
 from birli_spark.sources import synthetic as syn
 
 N_OBS = 3
 #: start-to-start stride: the obs span plus an 8 s slew gap
 OBS_STRIDE_S = syn.NUM_T * syn.INT_TIME_S + 8.0
+#: the observation index of a catalogue row, from its global timestep
+OBS_EXPR = f"CAST(FLOOR(t / {syn.NUM_T}) AS INT)"
 
 
 def _obs_values(n_obs: int = None) -> str:
@@ -92,7 +101,7 @@ def mo_ts_flags_cte() -> str:
     return (
         f"SELECT t, ts_gps, (ts_gps < CAST({quack_edge!r} AS DOUBLE)"
         f" + obs_id * CAST({OBS_STRIDE_S!r} AS DOUBLE)) AS ts_flag"
-        f" FROM mo_timesteps")
+        f" FROM timesteps")
 
 
 def mo_part_uvw_cte(n_obs: int | None = None) -> str:
@@ -107,8 +116,19 @@ def mo_part_uvw_cte(n_obs: int | None = None) -> str:
         f" FROM ({syn.PART_UVW_SQL}) p CROSS JOIN {_obs_values(n_obs)}")
 
 
-def mo_occupancy_sql(lineitem: str = "lineitem",
-                     n_obs: int | None = None) -> str:
+def mo_surface(n_obs: int | None = None,
+               rfi: Callable[[str, tuple], str] | None = None
+               ) -> pipeline.OracleSurface:
+    """The catalogue as a flowchart surface: the single-observation
+    surface with the catalogue fact and its three per-obs dims
+    (timesteps, quack flags, partial UVWs), and the RFI slot ``rfi``."""
+    return replace(pipeline.SURFACE, vis=multi_vis_cte(n_obs=n_obs),
+                   timesteps=mo_timesteps_cte(n_obs),
+                   ts_flags=mo_ts_flags_cte(),
+                   part_uvw=mo_part_uvw_cte(n_obs), rfi=rfi)
+
+
+def mo_occupancy_sql(n_obs: int | None = None) -> str:
     """MO3 — per-observation flag-occupancy QA (A2 keyed by obs): the
     archive-side acceptance check a catalogue run emits per obs. One
     dual-dialect query: catalogue vis → per-obs rule flags → one tiny
@@ -116,23 +136,11 @@ def mo_occupancy_sql(lineitem: str = "lineitem",
     cardinality = obs × channels, independent of fact size)."""
     from birli_spark.operators import occupancy
 
-    cols = syn.VIS_COLUMNS
-    fc_pred = flags.fine_channel_pred_sql(
-        syn.NUM_FC, n_edge=pipeline.N_EDGE, is_legacy=pipeline.IS_LEGACY)
-    flagged = flags.set_flags_oracle_select(
-        "vis", "ts_flags", "bl_flags", fc_pred, cols)
-    bl_f = flags.baseline_flags_oracle_select("antennas")
     occ = occupancy.occupancy_oracle_select(
         "mo_flagged", keys=("obs_id", "cc", "fc"))
     return (
-        f"WITH vis AS ({multi_vis_cte(lineitem, n_obs)}),"
-        f" antennas AS ({syn.ANTENNAS_SQL}),"
-        f" mo_timesteps AS ({mo_timesteps_cte(n_obs)}),"
-        f" ts_flags AS ({mo_ts_flags_cte()}),"
-        f" bl_flags AS ({bl_f}),"
-        f" flagged AS ({flagged}),"
-        f" mo_flagged AS (SELECT CAST(FLOOR(t / {syn.NUM_T}) AS INT)"
-        f" AS obs_id, f.* FROM flagged f)"
+        f"WITH {pipeline.flagged_vis_oracle_cte(mo_surface(n_obs))},"
+        f" mo_flagged AS (SELECT {OBS_EXPR} AS obs_id, f.* FROM flagged f)"
         f" {occ}")
 
 
@@ -192,16 +200,15 @@ def mo_averaging_select(vis: str, avg_time: int, avg_freq: int,
 
 def multi_obs_preprocess_sql(avg_time: int = pipeline.AVG_TIME,
                              avg_freq: int = pipeline.AVG_FREQ,
-                             lineitem: str = "lineitem",
                              ssins: bool = False,
                              median_fn: str = "percentile",
                              n_obs: int | None = None) -> str:
-    """The catalogue pipeline as one dual-dialect query: rule flags
-    (per-obs quack) → cable → digital → passband → [per-obs SSINS RFI]
-    → geometry (per-obs UVWs) → DI calibration → bake → average,
-    closing with the obs_id recovered from the global block index.
-    Stage fragments are the SAME builders the single-obs
-    pipeline/oracle uses — zero forked arithmetic.
+    """The catalogue pipeline as one dual-dialect query: the flowchart
+    (``pipeline.baked_oracle_ctes`` over :func:`mo_surface`: rule flags
+    with per-obs quack → cable → digital → passband → [per-obs SSINS
+    RFI] → geometry with per-obs UVWs → DI calibration → bake) →
+    average, closing with the obs_id recovered from the global block
+    index.
 
     ``ssins=True`` runs the SSINS flagger in the reference's RFI slot
     with PER-OBSERVATION statistics (operators/ssins.py ``obs_expr``):
@@ -210,103 +217,23 @@ def multi_obs_preprocess_sql(avg_time: int = pipeline.AVG_TIME,
     RFI storm cannot poison its neighbours' thresholds. ``median_fn``
     is the one dialect split ("percentile" Spark, "quantile_cont"
     DuckDB)."""
+    from birli_spark.operators import ssins as ssins_mod
+
     assert syn.NUM_T % avg_time == 0, \
         "averaging blocks must not straddle observation boundaries"
+    rfi = partial(ssins_mod.ssins_flag_vis_oracle_ctes,
+                  median_fn=median_fn, obs_expr=OBS_EXPR) if ssins else None
+    baked = pipeline.baked_oracle_ctes(mo_surface(n_obs, rfi))
     avg = mo_averaging_select("baked", avg_time, avg_freq)
     blocks_per_obs = syn.NUM_T // avg_time
     return (
-        f"WITH {mo_baked_ctes(lineitem, ssins, median_fn, n_obs)}"
+        f"WITH {baked}"
         f" SELECT CAST(FLOOR(t_out / {blocks_per_obs}) AS INT) AS obs_id,"
         f" a.* FROM ({avg}) a")
 
 
-def mo_baked_ctes(lineitem: str = "lineitem", ssins: bool = False,
-                  median_fn: str = "percentile",
-                  n_obs: int | None = None) -> str:
-    """The catalogue CTE chain ``vis → … → baked`` shared by the
-    pipeline closers (averaged output, UVFITS rows).
-
-    Deliberately parallel to ``pipeline.baked_oracle_ctes`` rather than
-    parameterizing it: the catalogue swaps three dims (timesteps,
-    ts_flags, part_uvw) and the RFI obs_expr, and the single-obs
-    builder's text is the established hash gate for 10+ queries —
-    threading overrides through it risks byte-drift there for little
-    sharing here (the stage FRAGMENTS, where the arithmetic lives, are
-    already the same builders). Divergence in stage order is caught by
-    both suites' oracles."""
-    cols = syn.VIS_COLUMNS
-    cols_uvw = tuple(cols) + ("u", "v", "w")
-    fc_pred = flags.fine_channel_pred_sql(
-        syn.NUM_FC, n_edge=pipeline.N_EDGE, is_legacy=pipeline.IS_LEGACY)
-    flagged = flags.set_flags_oracle_select(
-        "vis", "ts_flags", "bl_flags", fc_pred, cols)
-    bl_f = flags.baseline_flags_oracle_select("antennas")
-    # v0.18.0 flag gate (pipeline.baked_oracle_ctes pattern): C2/C4/C5
-    # leave fully-flagged (t, cc) cells raw. Global t is obs-unique, so
-    # the (t, cc) cell key needs no obs column; the gate is obs x T x CC
-    # rows — broadcast (hinted: the agg sits behind the multi-obs CTE
-    # fan-out, where Catalyst has no stats; DuckDB reads /*+ */ as a
-    # comment)
-    cols_g = tuple(cols) + (corrections.GATE_COL,)
-    gate = corrections.cell_gate_oracle_select("flagged")
-    flaggedg = corrections.attach_cell_gate_oracle_select("flagged")
-    cable = corrections.cable_oracle_select("flaggedg", "antennas", cols_g,
-                                            gated=True)
-    digital = corrections.digital_oracle_select(
-        "cabled", "digital_gains", cols_g, gated=True)
-    fine_gains = corrections.fine_gains_values_sql(pipeline.FINE_GAIN_ROWS)
-    passband = corrections.passband_oracle_select(
-        "digitald", "fine_gains", cols, gated=True)
-    rfi_ctes = ""
-    geom_in = "passbanded"
-    if ssins:
-        from birli_spark.operators import ssins as ssins_mod
-
-        ss_ctes, ss_final = ssins_mod.ssins_parts(
-            "passbanded", median_fn=median_fn,
-            obs_expr=f"CAST(FLOOR(t / {syn.NUM_T}) AS INT)")
-        rfid_cols = ", ".join(
-            "(p.flag OR COALESCE(m.rfi_flag, FALSE)) AS flag"
-            if c == "flag" else f"p.{c}" for c in cols)
-        # global t is obs-unique, so the mask joins back on (t, chan);
-        # the mask is obs x t x chan rows behind a window chain Catalyst
-        # can't size — hint the broadcast (a comment to DuckDB)
-        rfi_ctes = (
-            f" {ss_ctes},"
-            f" ssins_mask AS ({ss_final}),"
-            f" rfid AS (SELECT /*+ BROADCAST(m) */ {rfid_cols}"
-            f" FROM passbanded p"
-            f" LEFT JOIN ssins_mask m ON p.t = m.t AND p.chan = m.chan),")
-        geom_in = "rfid"
-    geom = corrections.geom_oracle_select(geom_in, "part_uvw", cols)
-    cal = calibration.calibration_oracle_select(
-        "geomed", "calsols", pipeline.CAL_RATIO, cols_uvw)
-    baked_cols = weights.bake_oracle_columns(cols_uvw)
-    return (
-        f"vis AS ({multi_vis_cte(lineitem, n_obs)}),"
-        f" antennas AS ({syn.ANTENNAS_SQL}),"
-        f" mo_timesteps AS ({mo_timesteps_cte(n_obs)}),"
-        f" ts_flags AS ({mo_ts_flags_cte()}),"
-        f" bl_flags AS ({bl_f}),"
-        f" digital_gains AS ({syn.DIGITAL_GAINS_SQL}),"
-        f" fine_gains AS ({fine_gains}),"
-        f" part_uvw AS ({mo_part_uvw_cte(n_obs)}),"
-        f" calsols AS ({syn.CALSOLS_SQL}),"
-        f" flagged AS ({flagged}),"
-        f" cell_gate AS ({gate}),"
-        f" flaggedg AS ({flaggedg}),"
-        f" cabled AS ({cable}),"
-        f" digitald AS ({digital}),"
-        f" passbanded AS ({passband}),"
-        f"{rfi_ctes}"
-        f" geomed AS ({geom}),"
-        f" caled AS ({cal}),"
-        f" baked AS (SELECT {baked_cols} FROM caled)")
-
-
 def mo_uvfits_rows_sql(avg_time: int = pipeline.AVG_TIME,
                        avg_freq: int = pipeline.AVG_FREQ,
-                       lineitem: str = "lineitem",
                        n_obs: int | None = None) -> str:
     """MO4 rows — the catalogue's UVFITS random-group relation: the
     averaged output (tick-stable means incl. per-block UVWs) plus the
@@ -325,7 +252,7 @@ def mo_uvfits_rows_sql(avg_time: int = pipeline.AVG_TIME,
     avg = mo_averaging_select("baked", avg_time, avg_freq,
                               extra_mean_cols=("u", "v", "w"))
     return (
-        f"WITH {mo_baked_ctes(lineitem, n_obs=n_obs)}"
+        f"WITH {pipeline.baked_oracle_ctes(mo_surface(n_obs))}"
         f" SELECT {obs} AS obs_id, t_out, chan_out, bl, ant1, ant2,"
         f" CAST(256 * (ant1 + 1) + (ant2 + 1) AS INT) AS bl_code,"
         f" ({d(GPS_EPOCH_JD)} + {centroid} / {d(86400.0)}) AS jd,"
@@ -356,7 +283,6 @@ def mo_centroid_exprs(avg_time: int) -> tuple[str, str]:
 
 def mo_ms_rows_sql(avg_time: int = pipeline.AVG_TIME,
                    avg_freq: int = pipeline.AVG_FREQ,
-                   lineitem: str = "lineitem",
                    n_obs: int | None = None) -> str:
     """MO5 rows — the catalogue's MS MAIN relation: the o2 column set
     (sinks/ms.py naming) with per-OBS epochs (MJD TAI seconds anchored
@@ -375,7 +301,7 @@ def mo_ms_rows_sql(avg_time: int = pipeline.AVG_TIME,
             f" + {d(GPS_TAI_OFFSET_S)})")
     data = ", ".join(f"{c} AS data_{c}" for c in VIS_COLS)
     return (
-        f"WITH {mo_baked_ctes(lineitem, n_obs=n_obs)}"
+        f"WITH {pipeline.baked_oracle_ctes(mo_surface(n_obs))}"
         f" SELECT {obs} AS obs_id, {time} AS time_mjd_s,"
         f" ant1 AS antenna1, ant2 AS antenna2, chan_out AS chan,"
         f" u AS uvw_u, v AS uvw_v, w AS uvw_w, {data}, weight, flag,"
@@ -415,13 +341,12 @@ def mo_ms_gate_rows(spark, sf_dir: str, out_dir: str,
 
 
 def mo_ms_files_oracle_sql(avg_time: int = pipeline.AVG_TIME,
-                           avg_freq: int = pipeline.AVG_FREQ,
-                           lineitem: str = "lineitem") -> str:
+                           avg_freq: int = pipeline.AVG_FREQ) -> str:
     """DuckDB twin of :func:`mo_ms_gate_rows`: the mo MS relation with
     the file's f32 round trip on DATA/WEIGHT (TIME/UVW stay f64)."""
     from birli_spark.functions.complex import f32
 
-    inner = mo_ms_rows_sql(avg_time, avg_freq, lineitem)
+    inner = mo_ms_rows_sql(avg_time, avg_freq)
     data = ", ".join(f"{f32(f'data_{c}')} AS data_{c}" for c in VIS_COLS)
     return (
         f"SELECT obs_id, time_mjd_s, CAST(antenna1 AS INT) AS antenna1,"
@@ -463,8 +388,7 @@ def mo_uvfits_gate_rows(spark, sf_dir: str, out_dir: str,
 
 
 def mo_uvfits_files_oracle_sql(avg_time: int = pipeline.AVG_TIME,
-                               avg_freq: int = pipeline.AVG_FREQ,
-                               lineitem: str = "lineitem") -> str:
+                               avg_freq: int = pipeline.AVG_FREQ) -> str:
     """DuckDB twin of :func:`mo_uvfits_gate_rows`: the mo rows relation
     with every file-stored value pushed through the f32 round trip —
     DATE relative to the PER-OBS PZERO (sinks/uvfits.py::obs_jd_zero
@@ -475,7 +399,7 @@ def mo_uvfits_files_oracle_sql(avg_time: int = pipeline.AVG_TIME,
     def d(x: float) -> str:
         return f"CAST({x!r} AS DOUBLE)"
 
-    rows = mo_uvfits_rows_sql(avg_time, avg_freq, lineitem)
+    rows = mo_uvfits_rows_sql(avg_time, avg_freq)
     jz = (f"(FLOOR({d(GPS_EPOCH_JD)} + ({d(syn.GPS_START)}"
           f" + CAST(obs_id AS DOUBLE) * {d(OBS_STRIDE_S)})"
           f" / {d(86400.0)} - 5E-1) + 5E-1)")
@@ -584,8 +508,7 @@ def mo7_label() -> str:
     recovered from the global timestep (t = obs_id * NUM_T + t_local,
     mo_timesteps_cte) since the catalogue fact does not carry a
     separate obs column."""
-    return (f"(CAST(FLOOR(t / {syn.NUM_T}) AS INT)"
-            f" * {syn.NUM_CC} + cc)")
+    return f"({OBS_EXPR} * {syn.NUM_CC} + cc)"
 
 
 def mo7_pairs_select(lineitem: str = "lineitem",

@@ -12,6 +12,8 @@ output-name suffix (the sink would ``partitionBy('range_id')``).
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -110,7 +112,9 @@ def picket_oracle_sql(spec: str,
                       avg_freq: int = pipeline.AVG_FREQ) -> str:
     parts = []
     for rid, (lo, hi) in enumerate(parse_ranges(spec)):
+        vis = (f"SELECT * FROM ({pipeline.SURFACE.vis})"
+               f" WHERE {_range_where(lo, hi)}")
         inner = pipeline.preprocess_oracle_sql(
-            avg_time, avg_freq, vis_where=_range_where(lo, hi))
+            avg_time, avg_freq, replace(pipeline.SURFACE, vis=vis))
         parts.append(f"SELECT *, {rid} AS range_id FROM ({inner})")
     return "\nUNION ALL\n".join(parts)

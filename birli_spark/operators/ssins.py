@@ -282,14 +282,21 @@ def ssins_flag_vis(vis: DataFrame,
     ).select(*vis.columns)
 
 
-def ssins_flag_vis_oracle_ctes(vis: str, vis_columns) -> str:
+def ssins_flag_vis_oracle_ctes(vis: str, vis_columns,
+                               median_fn: str = "quantile_cont",
+                               obs_expr: str | None = None) -> str:
     """Oracle CTE chain twin of :func:`ssins_flag_vis` over the ``vis``
-    CTE, ending in ``rfid`` (each CTE space-led and comma-terminated)."""
-    ctes, final = ssins_parts(vis, median_fn="quantile_cont")
+    CTE, ending in ``rfid`` (each CTE space-led and comma-terminated):
+    the flowchart's SSINS RFI slot. ``median_fn`` and ``obs_expr`` are
+    :func:`ssins_parts`'; with ``obs_expr`` (a catalogue's global t,
+    obs-unique) the mask still joins back on (t, chan). The mask sits
+    behind a window chain Catalyst cannot size, so its broadcast is
+    hinted for Spark (a comment to DuckDB)."""
+    ctes, final = ssins_parts(vis, median_fn=median_fn, obs_expr=obs_expr)
     rfid_cols = ", ".join(
         "(p.flag OR COALESCE(m.rfi_flag, FALSE)) AS flag"
         if c == "flag" else f"p.{c}" for c in vis_columns)
     return (f" {ctes},"
             f" ssins_mask AS ({final}),"
-            f" rfid AS (SELECT {rfid_cols} FROM {vis} p"
+            f" rfid AS (SELECT /*+ BROADCAST(m) */ {rfid_cols} FROM {vis} p"
             f" LEFT JOIN ssins_mask m ON p.t = m.t AND p.chan = m.chan),")

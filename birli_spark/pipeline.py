@@ -9,16 +9,24 @@ rule choices (:func:`_context`), in the README flowchart's order
 digital gains → passband → (RFI) → geometry → DI calibration → bake
 flags into weights → average.
 
-Each composition is also one DuckDB SQL text
-(:func:`preprocess_oracle_sql`, :func:`preprocess_full_oracle_sql`)
-built from the shared dual-dialect stage fragments; those texts are the
-spec the Spark plans are checked against. In Spark all per-cell
-corrections fuse into a single whole-stage-codegen projection over the
-scan + broadcast joins; the only fact-table shuffle is the final
-averaging groupBy.
+The same flowchart as SQL text is composed in one place,
+:func:`baked_oracle_ctes`, over an :class:`OracleSurface` (a surface's
+fact and dimension CTE bodies, fine-channel predicate and RFI slot;
+a stage whose dimension is absent does not run). Its surfaces are the
+synthetic observation (:data:`SURFACE`: :func:`preprocess_oracle_sql`,
+:func:`preprocess_full_oracle_sql` and the sink oracles), the
+catalogue (operators/multiobs.py, whose text Spark runs too) and the
+s1h real-format e2e (pipeline_e2e.py). Each stage is the shared
+dual-dialect fragment the Spark plan runs; those texts are the spec the
+Spark plans are checked against. In Spark all per-cell corrections fuse
+into a single whole-stage-codegen projection over the scan + broadcast
+joins; the only fact-table shuffle is the final averaging groupBy.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, replace
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,7 +58,9 @@ def fanout_materialize(df: DataFrame, big: bool = False) -> DataFrame:
       probe it also beats holding the fact as deserialized executor
       blocks (17-33 s vs 27-77 s wall across box states: the
       block-manager heap residency pays this host's page-fault tax,
-      files + page cache do not). This is the 100 TB spelling.
+      files + page cache do not). This is the 100 TB spelling. A CLI
+      run that owns its session deletes the checkpoint directory at
+      exit (``cli._delete_checkpoint_dir``).
 
     ``persist(DISK_ONLY)`` was measured the slowest spelling at every
     size (x16 71 s: the InMemoryRelation columnar encode plus a decode
@@ -241,142 +251,151 @@ def preprocess_full_rel(spark: SparkSession, sf_dir: str,
 
 def preprocess_full_oracle_sql(avg_time: int = AVG_TIME,
                                avg_freq: int = AVG_FREQ) -> str:
-    """DuckDB one-text twin of :func:`preprocess_full_rel`. The flag-dim
-    CTEs are hoisted BEFORE the Van Vleck chain so its v0.18.0 gate
+    """DuckDB one-text twin of :func:`preprocess_full_rel`: the
+    Van Vleck chain is the surface's head, its v0.18.0 gate
     (``vv_gate``, computed from the pre-correction flag state over the
-    legacy-encoded vis) can reference them."""
+    legacy-encoded vis) reading the flag dims hoisted before it."""
     from birli_spark.functions import textsql as X
     from birli_spark.operators import vanvleck_sql
 
-    fc_pred = flags.fine_channel_pred_sql(syn.NUM_FC, n_edge=N_EDGE,
-                                          is_legacy=IS_LEGACY)
     gate_ctes = (
         ("vvgf", flags.set_flags_oracle_select(
-            "vvvis", "ts_flags", "bl_flags", fc_pred, ("t", "cc", "flag"))),
+            "vvvis", "ts_flags", "bl_flags", SURFACE.fc_pred,
+            ("t", "cc", "flag"))),
         ("vv_gate", corrections.cell_gate_oracle_select("vvgf")),
     )
     steps, final, _ = vanvleck_sql.van_vleck_wide_steps(
         X.DUCK, syn.VV_SAMPLE_SCALE, (3,), gate="vv_gate",
         gate_ctes=gate_ctes)
-    pre = X.ctes(steps, vanvleck_sql.DUCK_MATERIALIZED)
-    baked = baked_oracle_ctes(pre_ctes=pre + ",", vis_cte=final,
-                              st_rfi=True, dims_before_pre=True)
+    surface = replace(SURFACE, vis=final, rfi=st_rfi_ctes,
+                      head=X.ctes(steps, vanvleck_sql.DUCK_MATERIALIZED))
     avg = averaging.averaging_oracle_select("baked", avg_time, avg_freq)
-    return f"WITH {baked} {avg}"
+    return f"WITH {baked_oracle_ctes(surface)} {avg}"
 
 
-def _flag_ctes() -> str:
-    ts_f = flags.quack_oracle_select("timesteps", syn.GPS_START, OBS_END_GPS,
-                                     quack_s=QUACK_S)
-    bl_f = flags.baseline_flags_oracle_select("antennas")
-    return f"ts_flags AS ({ts_f}), bl_flags AS ({bl_f})"
+@dataclass(frozen=True)
+class OracleSurface:
+    """What one observation feeds the SQL flowchart: the CTE bodies of
+    its fact (``vis``) and dimensions, its fine-channel flag predicate
+    and its RFI slot.
+
+    A stage whose dimension is ``None`` does not run, as
+    :func:`cli.build_baked` skips it: ``digital_gains`` (C4),
+    ``fine_gains`` (C5 passband) and ``calsols`` (C6, the body paired
+    with its fine channels per solution channel). ``rfi(vis, columns)``
+    renders the RFI slot over the relation ``vis``, ending in ``rfid``
+    (each CTE space-led and comma-terminated), or is ``None``: the SSINS
+    join-back (``ssins.ssins_flag_vis_oracle_ctes``) or
+    :func:`st_rfi_ctes`. ``head`` is a CTE
+    list that runs before ``vis`` (the Van Vleck chain); the flag dims
+    then lead, since its gate reads them."""
+
+    vis: str
+    antennas: str
+    timesteps: str
+    ts_flags: str
+    part_uvw: str
+    fc_pred: str
+    digital_gains: str | None
+    fine_gains: str | None
+    calsols: tuple[str, int] | None
+    rfi: Callable[[str, tuple], str] | None = None
+    head: str = ""
 
 
-def flagged_vis_oracle_cte(vis_columns=syn.VIS_COLUMNS, vis_where: str = "",
-                           vis_cte: str | None = None,
-                           include_dims: bool = True) -> str:
-    """CTE chain: vis → rule-flagged vis (shared by several oracles).
-    ``vis_where`` restricts the scan (picket-fence channel ranges);
-    ``vis_cte`` overrides the vis body (e.g. the Van-Vleck-corrected
-    relation for the full-pipeline oracle). ``include_dims=False`` omits
-    the antennas/timesteps/flag-dim CTEs (for callers that hoisted them
-    earlier in the WITH chain)."""
-    fc_pred = flags.fine_channel_pred_sql(syn.NUM_FC, n_edge=N_EDGE, is_legacy=IS_LEGACY)
+#: the synthetic observation (:class:`OracleObservation`) as a surface
+SURFACE = OracleSurface(
+    vis=syn.vis_sql(), antennas=syn.ANTENNAS_SQL,
+    timesteps=syn.TIMESTEPS_SQL,
+    ts_flags=flags.quack_oracle_select(
+        "timesteps", syn.GPS_START, OBS_END_GPS, quack_s=QUACK_S),
+    part_uvw=syn.PART_UVW_SQL,
+    fc_pred=flags.fine_channel_pred_sql(syn.NUM_FC, n_edge=N_EDGE,
+                                        is_legacy=IS_LEGACY),
+    digital_gains=syn.DIGITAL_GAINS_SQL,
+    fine_gains=corrections.fine_gains_values_sql(FINE_GAIN_ROWS),
+    calsols=(syn.CALSOLS_SQL, CAL_RATIO))
+
+
+def st_rfi_ctes(vis: str, vis_columns) -> str:
+    """RFI slot: the relational SumThreshold (operators/rfi_sql.py) over
+    the cell-unique reduction, its per-cell mask OR-ed onto every row of
+    the cell."""
+    from birli_spark.functions import textsql as X
+    from birli_spark.operators import rfi_sql
+
+    steps, final, _ = rfi_sql.flag_rfi_steps(
+        vis, "quantile_cont", vis_columns, dedup=True)
+    return f" {X.ctes(steps)}, rfid AS ({final}),"
+
+
+def _ctes(pairs) -> str:
+    """``name AS (body)`` for every pair whose body is given."""
+    return ", ".join(f"{n} AS ({b})" for n, b in pairs if b is not None)
+
+
+def flagged_vis_oracle_cte(s: OracleSurface = SURFACE) -> str:
+    """CTE chain over the surface ``s``: vis → rule-flagged vis
+    (``flagged``), shared by several oracles."""
+    vis = f"vis AS ({s.vis})"
+    dims = _ctes((("antennas", s.antennas), ("timesteps", s.timesteps),
+                  ("ts_flags", s.ts_flags),
+                  ("bl_flags", flags.baseline_flags_oracle_select(
+                      "antennas"))))
     flagged = flags.set_flags_oracle_select(
-        "vis", "ts_flags", "bl_flags", fc_pred, vis_columns)
-    if vis_cte is None:
-        vis_cte = syn.vis_sql()
-    if vis_where:
-        vis_cte = f"SELECT * FROM ({vis_cte}) WHERE {vis_where}"
-    dims = (
-        f" antennas AS ({syn.ANTENNAS_SQL}),"
-        f" timesteps AS ({syn.TIMESTEPS_SQL}),"
-        f" {_flag_ctes()},"
-    ) if include_dims else ""
-    return (
-        f"vis AS ({vis_cte}),"
-        f"{dims}"
-        f" flagged AS ({flagged})"
-    )
+        "vis", "ts_flags", "bl_flags", s.fc_pred, syn.VIS_COLUMNS)
+    # a head's v0.18.0 gate reads the flag dims, so they lead it
+    front = f"{dims}, {s.head},{vis}" if s.head else f"{vis}, {dims}"
+    return f"{front}, flagged AS ({flagged})"
 
 
-def baked_oracle_ctes(vis_where: str = "", ssins_rfi: bool = False,
-                      pre_ctes: str = "", vis_cte: str | None = None,
-                      st_rfi: bool = False,
-                      dims_before_pre: bool = False) -> str:
-    """CTE chain vis → … → ``baked`` (the pre-averaging pipeline state,
-    incl. u/v/w from the geometry stage). With ``ssins_rfi`` the SSINS
-    CTE chain (operators/ssins.py) is spliced in after the passband
-    stage — the reference's AOFlagger slot — and its (t, chan) mask is
-    OR-ed into the flags; with ``st_rfi`` that slot runs the relational
-    SumThreshold (operators/rfi_sql.py) over the cell-unique reduction
-    instead, its per-cell mask OR-ed onto every row of the cell.
-    ``pre_ctes``/``vis_cte`` splice a replacement head (the Van Vleck
-    chain) before the rule-flag stage."""
+def baked_oracle_ctes(s: OracleSurface = SURFACE) -> str:
+    """The one SQL flowchart composition: CTE chain vis → … → ``baked``
+    (the pre-averaging pipeline state, incl. u/v/w from the geometry
+    stage) over the surface ``s``, in the reference order: rule flags →
+    v0.18.0 gate → cable → digital → passband → RFI slot → geometry →
+    calibration → bake. Each stage reuses the dual-dialect fragment the
+    Spark plan runs; the single-observation oracles, the catalogue
+    (operators/multiobs.py, run as-is on Spark too) and the s1h
+    real-format e2e (pipeline_e2e.py) are surfaces of it."""
     cols = syn.VIS_COLUMNS
-    cols_uvw = tuple(cols) + ("u", "v", "w")
+    cols_uvw = cols + ("u", "v", "w")
     # v0.18.0 flag gate: C2/C4/C5 leave fully-flagged (t, cc) cells raw —
     # the gate column rides along through cable/digital and is dropped by
-    # the passband select's output list
-    cols_g = tuple(cols) + (corrections.GATE_COL,)
-    gate = corrections.cell_gate_oracle_select("flagged")
-    flaggedg = corrections.attach_cell_gate_oracle_select("flagged")
-    cable = corrections.cable_oracle_select("flaggedg", "antennas", cols_g,
-                                            gated=True)
-    digital = corrections.digital_oracle_select("cabled", "digital_gains",
-                                                cols_g, gated=True)
-    fine_gains = corrections.fine_gains_values_sql(FINE_GAIN_ROWS)
-    passband = corrections.passband_oracle_select("digitald", "fine_gains",
-                                                  cols, gated=True)
-    geom_in = "rfid" if (ssins_rfi or st_rfi) else "passbanded"
-    geom = corrections.geom_oracle_select(geom_in, "part_uvw", cols)
-    cal = calibration.calibration_oracle_select("geomed", "calsols", CAL_RATIO, cols_uvw)
-    baked_cols = weights.bake_oracle_columns(cols_uvw)
-    rfi_ctes = ""
-    if ssins_rfi:
-        from birli_spark.operators import ssins
-
-        rfi_ctes = ssins.ssins_flag_vis_oracle_ctes("passbanded", cols)
-    elif st_rfi:
-        from birli_spark.functions import textsql as X
-        from birli_spark.operators import rfi_sql
-
-        steps, final, _ = rfi_sql.flag_rfi_steps(
-            "passbanded", "quantile_cont", cols, dedup=True)
-        rfi_ctes = f" {X.ctes(steps)}, rfid AS ({final}),"
-    dim_head = ""
-    if dims_before_pre:
-        # the pre-CTE chain (Van Vleck + its v0.18.0 gate) references
-        # the flag dims — hoist them in front of it
-        dim_head = (f"antennas AS ({syn.ANTENNAS_SQL}),"
-                    f" timesteps AS ({syn.TIMESTEPS_SQL}),"
-                    f" {_flag_ctes()}, ")
-    return (
-        f"{dim_head}"
-        f"{pre_ctes}"
-        f"{flagged_vis_oracle_cte(vis_where=vis_where, vis_cte=vis_cte, include_dims=not dims_before_pre)},"
-        f" digital_gains AS ({syn.DIGITAL_GAINS_SQL}),"
-        f" fine_gains AS ({fine_gains}),"
-        f" part_uvw AS ({syn.PART_UVW_SQL}),"
-        f" calsols AS ({syn.CALSOLS_SQL}),"
-        f" cell_gate AS ({gate}),"
-        f" flaggedg AS ({flaggedg}),"
-        f" cabled AS ({cable}),"
-        f" digitald AS ({digital}),"
-        f" passbanded AS ({passband}),"
-        f"{rfi_ctes}"
-        f" geomed AS ({geom}),"
-        f" caled AS ({cal}),"
-        f" baked AS (SELECT {baked_cols} FROM caled)"
-    )
+    # the passband select's output list, else by one projection
+    cols_g = cols + (corrections.GATE_COL,)
+    dims = (("digital_gains", s.digital_gains),
+            ("fine_gains", s.fine_gains), ("part_uvw", s.part_uvw),
+            ("calsols", s.calsols and s.calsols[0]))
+    stages = [
+        ("cell_gate", corrections.cell_gate_oracle_select("flagged")),
+        ("flaggedg", corrections.attach_cell_gate_oracle_select("flagged")),
+        ("cabled", corrections.cable_oracle_select(
+            "flaggedg", "antennas", cols_g, gated=True))]
+    if s.digital_gains is not None:
+        stages.append(("digitald", corrections.digital_oracle_select(
+            stages[-1][0], "digital_gains", cols_g, gated=True)))
+    if s.fine_gains is not None:
+        stages.append(("passbanded", corrections.passband_oracle_select(
+            stages[-1][0], "fine_gains", cols, gated=True)))
+    else:
+        stages.append(("ungated",
+                       f"SELECT {', '.join(cols)} FROM {stages[-1][0]}"))
+    rfi = s.rfi(stages[-1][0], cols) if s.rfi else ""
+    post = [("geomed", corrections.geom_oracle_select(
+        "rfid" if s.rfi else stages[-1][0], "part_uvw", cols))]
+    if s.calsols is not None:
+        post.append(("caled", calibration.calibration_oracle_select(
+            "geomed", "calsols", s.calsols[1], cols_uvw)))
+    post.append(("baked", f"SELECT {weights.bake_oracle_columns(cols_uvw)}"
+                          f" FROM {post[-1][0]}"))
+    return (f"{flagged_vis_oracle_cte(s)}, {_ctes(dims + tuple(stages))},"
+            f"{rfi} {_ctes(post)}")
 
 
 def preprocess_oracle_sql(avg_time: int = AVG_TIME, avg_freq: int = AVG_FREQ,
-                          vis_where: str = "",
-                          extra_mean_cols: tuple[str, ...] = (),
-                          ssins_rfi: bool = False) -> str:
+                          surface: OracleSurface = SURFACE) -> str:
     """One DuckDB query equivalent to :func:`preprocess` — each stage a CTE
     reusing the exact scalar fragments the Spark plan uses."""
-    avg = averaging.averaging_oracle_select("baked", avg_time, avg_freq,
-                                            extra_mean_cols)
-    return f"WITH {baked_oracle_ctes(vis_where, ssins_rfi=ssins_rfi)} {avg}"
+    avg = averaging.averaging_oracle_select("baked", avg_time, avg_freq)
+    return f"WITH {baked_oracle_ctes(surface)} {avg}"

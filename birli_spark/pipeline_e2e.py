@@ -17,10 +17,12 @@ as f9e) so the WHOLE composition stays one hash-checkable plan. The
 v0.18 gate comes from the rule dims, so the SSINS fan-out
 (cli.stage_rfi) is the one materialization: each file decodes once.
 
-Everything is deterministic and the oracle is one DuckDB text: the scan
-content re-derives closed-form (sources/gpubox.py::expected_grid_sql),
-the dimension tables are VALUES literals (identical text in both
-engines), and every stage reuses the shared dual-dialect builders.
+Everything is deterministic and the oracle is one DuckDB text, the SQL
+flowchart ``pipeline.baked_oracle_ctes`` over this observation's
+surface: the scan content re-derives closed-form
+(sources/gpubox.py::expected_grid_sql), the dimension tables are VALUES
+literals (identical text in both engines), and the surface gives no
+digital gains, passband or calibration, as :data:`CONTEXT` runs none.
 """
 
 from __future__ import annotations
@@ -31,8 +33,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from birli_spark import cli
-from birli_spark.operators import corrections, flags, ssins, weights
+from birli_spark import cli, pipeline
+from birli_spark.operators import flags, ssins
 from birli_spark.sinks import uvfits
 from birli_spark.sources import gpubox
 from birli_spark.sources import synthetic as syn
@@ -178,44 +180,26 @@ def e2e_rows(spark: SparkSession, write_path: str | None = None,
 
 
 def e2e_oracle_sql() -> str:
-    """One DuckDB text of the whole composition."""
-    fc_pred = flags.fine_channel_pred_sql(NUM_FINE, n_edge=N_EDGE,
-                                          is_legacy=True)
-    flagged = flags.set_flags_oracle_select(
-        "vis", "ts_flags", "bl_flags", fc_pred, _COLS)
-    gate = corrections.cell_gate_oracle_select("flagged")
-    flaggedg = corrections.attach_cell_gate_oracle_select("flagged")
-    cols_g = tuple(_COLS) + (corrections.GATE_COL,)
-    cable = corrections.cable_oracle_select("flaggedg", "antennas",
-                                            cols_g, gated=True)
-    # drop the gate column on the way into the RFI slot
-    cabled_cols = ", ".join(_COLS)
-    geom = corrections.geom_oracle_select("rfid", "part_uvw", _COLS)
-    baked_cols = weights.bake_oracle_columns(tuple(_COLS) + ("u", "v", "w"))
+    """One DuckDB text of the whole composition: the SQL flowchart
+    (``pipeline.baked_oracle_ctes``) over this observation's surface —
+    no digital gains, passband or calibration, SSINS in the RFI slot —
+    closed by the UVFITS group rows."""
     content = gpubox.expected_grid_sql(NUM_CC, NUM_ANTS, NUM_FINE, NUM_T)
     pol_cols = ", ".join(c for c in _COLS
                          if c.endswith("_re") or c.endswith("_im"))
-    quack = flags.quack_oracle_select(
-        "timesteps", GPS0, GPS0 + NUM_T * INT_TIME_S, quack_s=QUACK_S)
-    bl_fo = flags.baseline_flags_oracle_select("antennas")
+    surface = pipeline.OracleSurface(
+        vis=(f"SELECT t, ant1, ant2, bl, cc, fc, chan,"
+             f" {FREQ_EXPR} AS freq_hz, {TS_EXPR} AS ts_gps,"
+             f" CAST({WEIGHT!r} AS DOUBLE) AS weight, FALSE AS flag,"
+             f" {pol_cols} FROM ({content}) g0"),
+        antennas=antennas_values_sql(), timesteps=timesteps_values_sql(),
+        ts_flags=flags.quack_oracle_select(
+            "timesteps", GPS0, GPS0 + NUM_T * INT_TIME_S, quack_s=QUACK_S),
+        part_uvw=part_uvw_values_sql(),
+        fc_pred=flags.fine_channel_pred_sql(NUM_FINE, n_edge=N_EDGE,
+                                            is_legacy=True),
+        digital_gains=None, fine_gains=None, calsols=None,
+        rfi=ssins.ssins_flag_vis_oracle_ctes)
     rows_sel = uvfits.uvfits_rows_oracle_select(
         "baked", AVG_TIME, AVG_FREQ, GPS0, INT_TIME_S)
-    return (
-        f"WITH vis AS (SELECT t, ant1, ant2, bl, cc, fc, chan,"
-        f" {FREQ_EXPR} AS freq_hz, {TS_EXPR} AS ts_gps,"
-        f" CAST({WEIGHT!r} AS DOUBLE) AS weight, FALSE AS flag,"
-        f" {pol_cols} FROM ({content}) g0),"
-        f" antennas AS ({antennas_values_sql()}),"
-        f" timesteps AS ({timesteps_values_sql()}),"
-        f" part_uvw AS ({part_uvw_values_sql()}),"
-        f" ts_flags AS ({quack}),"
-        f" bl_flags AS ({bl_fo}),"
-        f" flagged AS ({flagged}),"
-        f" cell_gate AS ({gate}),"
-        f" flaggedg AS ({flaggedg}),"
-        f" cabled AS ({cable}),"
-        f" cabled2 AS (SELECT {cabled_cols} FROM cabled),"
-        f"{ssins.ssins_flag_vis_oracle_ctes('cabled2', _COLS)}"
-        f" geomed AS ({geom}),"
-        f" baked AS (SELECT {baked_cols} FROM geomed)"
-        f" {rows_sel}")
+    return f"WITH {pipeline.baked_oracle_ctes(surface)} {rows_sel}"

@@ -294,6 +294,25 @@ def test_cli_pfb_gains_cotter_uses_real_table(spark, sf_dir, tmp_path):
     assert r.returncode == 0, r.stderr[-2000:]
 
 
+def test_cli_run_removes_its_checkpoints(sf_dir, tmp_path):
+    """A CLI run that owns its session deletes its reliable-checkpoint
+    fan-out (pipeline.fanout_materialize) at exit: Spark keeps
+    checkpoint files after stop."""
+    import subprocess
+    import sys
+
+    ckpt = tmp_path / "ckpt"
+    env = dict(os.environ, SPARK_GRAFT_FANOUT_PERSIST="reliable",
+               SPARK_GRAFT_CHECKPOINT_DIR=str(ckpt))
+    r = subprocess.run(
+        [sys.executable, "-m", "birli_spark.cli", sf_dir, "--ssins",
+         "-u", str(tmp_path / "out.uvfits"), "--no-draw-progress"],
+        capture_output=True, text=True, cwd=ROOT, env=env)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert ckpt.is_dir()  # the run did checkpoint
+    assert [f for _, _, fs in os.walk(ckpt) for f in fs] == []
+
+
 def test_cli_ssins_rfi_slot(spark, sf_dir):
     ctx = cli.parse_args([sf_dir, "--ssins", "--ssins-threshold", "3"])
     assert ctx.ssins and not ctx.no_rfi and ctx.ssins_threshold == 3.0

@@ -277,3 +277,25 @@ def test_matches_duckdb_oracle(spark, sf_dir):
     assert len(sdf) == len(ddf) > 0
     for c in key:
         assert (sdf[c].to_numpy() == ddf[c].to_numpy()).all(), c
+
+
+@pytest.mark.parametrize("relation", ["baked", "flagged"])
+def test_one_obs_catalogue_is_single_obs_chain(sf_dir, relation):
+    """A one-observation catalogue is the single-observation flowchart:
+    obs 0's global t, epochs and gain drift are the identity, so its
+    ``flagged`` and ``baked`` rows equal the single-obs text's in
+    DuckDB — the equivalence the shared composition relies on."""
+    import duckdb
+
+    from birli_spark import pipeline
+    from tools.oracle_check import compare
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM "
+                f"read_parquet('{sf_dir}/lineitem.parquet')")
+    surfaces = (multiobs.mo_surface(n_obs=1), pipeline.SURFACE)
+    cat, single = (con.execute(
+        f"WITH {pipeline.baked_oracle_ctes(s)} SELECT * FROM {relation}"
+    ).df() for s in surfaces)
+    assert len(single) > 0
+    assert compare(relation, cat, single) == []

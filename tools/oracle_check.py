@@ -3,6 +3,15 @@
 sf, compare row-count, column names, and values (order-insensitive).
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
+           [--json=FILE] [--save=DIR] [--against=DIR]
+
+``--save=DIR`` writes each run query's Spark and DuckDB frames as
+``DIR/<query>.spark.parquet`` / ``DIR/<query>.duckdb.parquet``.
+``--against=DIR`` also compares each frame with the one saved there
+(same :func:`compare`), so a refactor's identity check is: ``--save``
+on the parent checkout, ``--against`` on the change. A query whose
+frame differs from its saved twin fails; one with no saved twin is
+reported and not failed.
 """
 
 from __future__ import annotations
@@ -62,10 +71,42 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
     return problems
 
 
+def _frame_path(d: str, name: str, engine: str) -> str:
+    return os.path.join(d, f"{name}.{engine}.parquet")
+
+
+def save_frame(d: str, name: str, engine: str, df: pd.DataFrame) -> None:
+    """Parquet copy of ``df``; object columns are stored as the strings
+    :func:`canon` compares them by."""
+    df = df.copy()
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].astype(str)
+    df.to_parquet(_frame_path(d, name, engine), index=False)
+
+
+def against_saved(d: str, name: str, frames: dict) -> tuple[list[str], list[str]]:
+    """(problems, notes): each frame in ``frames`` (engine -> frame)
+    against the one :func:`save_frame` wrote for ``name``."""
+    problems, notes = [], []
+    for engine, df in frames.items():
+        path = _frame_path(d, name, engine)
+        if not os.path.exists(path):
+            notes.append(f"no saved {engine} frame")
+            continue
+        problems += [f"vs saved {engine}: {p}" for p in
+                     compare(name, df, pd.read_parquet(path))]
+    return problems, notes
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    json_out = next((a.split("=", 1)[1] for a in sys.argv[1:]
-                     if a.startswith("--json=")), None)
+    opts = dict(a[2:].split("=", 1) for a in sys.argv[1:]
+                if a.startswith("--") and "=" in a)
+    json_out, save_dir, against_dir = (
+        opts.get("json"), opts.get("save"), opts.get("against"))
+    if save_dir:
+        os.makedirs(save_dir, exist_ok=True)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
     results: dict[str, dict] = {}
@@ -83,48 +124,73 @@ def main() -> int:
     spark = get_spark("oracle_check")
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     n_pass = n_fail = n_skip = 0
+    n_same = n_diff = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            frames = {"spark": fn(spark, sf_dir).toPandas()}
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             results[name] = {"status": "fail", "err": f"spark: {e}"}
             n_fail += 1
             continue
+        sdf = frames["spark"]
         if name not in os_:
             print(f"SKIP {name}: no oracle (rows-only) rows={len(sdf)}")
             results[name] = {"status": "rows_only", "rows": len(sdf)}
             n_skip += 1
-            continue
-        try:
-            ddf = con.execute(os_[name]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            results[name] = {"status": "fail", "err": f"duckdb: {e}"}
-            n_fail += 1
-            continue
-        try:
-            problems = compare(name, sdf, ddf)
-        except Exception as e:  # noqa: BLE001 — a comparison-time
-            # exception (e.g. cross-engine dtype mismatch) must record
-            # a FAIL for this query, not abort the whole gate run and
-            # lose every prior result plus the --json report
-            problems = [f"compare error: {e}"]
-        dt = time.time() - t0
-        if problems:
-            print(f"FAIL {name} ({dt:.1f}s): " + "; ".join(problems))
-            results[name] = {"status": "fail", "rows": len(sdf),
-                             "problems": problems}
-            n_fail += 1
         else:
-            print(f"PASS {name} ({dt:.1f}s, rows={len(sdf)})")
-            results[name] = {"status": "pass", "rows": len(sdf),
-                             "sec": round(dt, 2)}
-            n_pass += 1
+            try:
+                frames["duckdb"] = ddf = con.execute(os_[name]).df()
+            except Exception as e:  # noqa: BLE001
+                print(f"FAIL {name}: duckdb error: {e}")
+                results[name] = {"status": "fail", "err": f"duckdb: {e}"}
+                n_fail += 1
+                continue
+            try:
+                problems = compare(name, sdf, ddf)
+            except Exception as e:  # noqa: BLE001 — a comparison-time
+                # exception (e.g. cross-engine dtype mismatch) must
+                # record a FAIL for this query, not abort the whole
+                # gate run and lose every prior result plus the --json
+                # report
+                problems = [f"compare error: {e}"]
+            dt = time.time() - t0
+            if problems:
+                print(f"FAIL {name} ({dt:.1f}s): " + "; ".join(problems))
+                results[name] = {"status": "fail", "rows": len(sdf),
+                                 "problems": problems}
+                n_fail += 1
+            else:
+                print(f"PASS {name} ({dt:.1f}s, rows={len(sdf)})")
+                results[name] = {"status": "pass", "rows": len(sdf),
+                                 "sec": round(dt, 2)}
+                n_pass += 1
+        if save_dir:
+            for engine, df in frames.items():
+                try:
+                    save_frame(save_dir, name, engine, df)
+                except Exception as e:  # noqa: BLE001 — an unsavable
+                    # frame must not abort the gate run
+                    print(f"UNSAVED {name} {engine}: {e}")
+        if against_dir:
+            try:
+                diffs, notes = against_saved(against_dir, name, frames)
+            except Exception as e:  # noqa: BLE001
+                diffs, notes = [f"compare error: {e}"], []
+            results[name]["against"] = diffs
+            if diffs:
+                print(f"DIFF {name}: " + "; ".join(diffs))
+                n_diff += 1
+            else:
+                print(f"SAME {name}"
+                      + (f" ({'; '.join(notes)})" if notes else ""))
+                n_same += 1
     print(f"== {n_pass} pass, {n_fail} fail, {n_skip} rows-only ==")
+    if against_dir:
+        print(f"== against {against_dir}: {n_same} same, {n_diff} differ ==")
     if json_out:
         import json
 
@@ -133,7 +199,7 @@ def main() -> int:
                        "n_fail": n_fail, "n_rows_only": n_skip,
                        "results": results}, f, indent=1, sort_keys=True)
     spark.stop()
-    return 1 if n_fail else 0
+    return 1 if n_fail or n_diff else 0
 
 
 if __name__ == "__main__":
